@@ -39,7 +39,6 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     // warmup (session init + codegen JIT, misattributed to the first query otherwise)
     try SparkEntry.queries("q_rollup_1m")(spark, sfDir).count()
     catch { case e: Throwable => System.err.println(s"[bench-extra] warmup failed: $e") }

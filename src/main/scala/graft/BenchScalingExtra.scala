@@ -4,6 +4,7 @@ import graft.core.Tier
 import graft.operators.Rollup
 import graft.sources.TokenTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.SparkInternals
 
 /** Scaling-gate diagnostic (NOT the driver contract — that is [[Bench]],
  * frozen): measures the fused 1m rollup at local[N] vs local[4N] over TWO
@@ -23,6 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Env: SPARK_GRAFT_BENCH_DOCS (default 4,000,000 → 1.024B points),
  * SPARK_GRAFT_SCALE_REPS (default 3). Prints one summary line per input
  * kind; appends nothing to BENCH.md (rows there stay Bench-authored).
+ * Each level reports the wall and task-CPU time of its fastest rep.
+ *
+ * Disk: the parquet copy goes to `/tmp/graft_scaling_points_<docs>` at
+ * ~4.2 bytes per point (snappy; measured at 16.4M points), so ~4.3 GB at
+ * the default docs. It is reused by later runs with the same docs and
+ * never deleted; remove it by hand.
  */
 object BenchScalingExtra {
 
@@ -70,19 +77,17 @@ object BenchScalingExtra {
       })
       // warmup / JIT on a small slice
       consumeAll(Rollup.rollupFromPoints(TokenTable.rangePoints(s, 50000, tokens, 64), Tier.OneMinute))
-      var bestWall = Double.MaxValue
-      var bestCpu = Double.MaxValue
-      for (_ <- 1 to reps) {
+      // wall and task CPU of the same rep: the one with the lowest wall
+      val best = (1 to reps).map { _ =>
         val c0 = cpuNs.get
         val t0 = System.nanoTime()
         consumeAll(Rollup.rollupFromPoints(input(s), Tier.OneMinute))
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        bestWall = math.min(bestWall, sec)
-        bestCpu = math.min(bestCpu, (cpuNs.get - c0) / 1e9)
-      }
+        SparkInternals.drainListeners(s.sparkContext) // every task-end counted
+        Level(sec, (cpuNs.get - c0) / 1e9)
+      }.minBy(_.wall)
       s.stop()
-      Level(bestWall, bestCpu)
+      best
     }
 
     val kinds: Seq[(String, SparkSession => DataFrame)] = Seq(
@@ -90,14 +95,9 @@ object BenchScalingExtra {
       "parquet" -> (s => s.read.parquet(dir)))
     for ((kind, input) <- kinds) {
       // interleave N / 4N like Bench (host-noise discipline)
-      var n = Level(Double.MaxValue, Double.MaxValue)
-      var n4 = Level(Double.MaxValue, Double.MaxValue)
-      for (_ <- 1 to 2) {
-        val a = level(4, input)
-        n = Level(math.min(n.wall, a.wall), math.min(n.cpu, a.cpu))
-        val b = level(16, input)
-        n4 = Level(math.min(n4.wall, b.wall), math.min(n4.cpu, b.cpu))
-      }
+      val (ns, n4s) = (1 to 2).map(_ => (level(4, input), level(16, input))).unzip
+      val n = ns.minBy(_.wall)
+      val n4 = n4s.minBy(_.wall)
       val eff = (pts / n4.wall) / (4.0 * (pts / n.wall))
       println(
         f"""{"kind":"$kind","points":$pts,"n_sec":${n.wall}%.3f,"4n_sec":${n4.wall}%.3f,""" +

@@ -1,131 +1,179 @@
 package graft.functions
 
 import graft.functions.expressions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.graftshim.SparkInternals
 
-/** Registration of the engine's custom Catalyst expressions into a session's
- * function registry, so they are callable from SQL and via
- * `functions.call_function` (SURVEY.md §2.11). Idempotent. */
+/** The engine's custom Catalyst expressions, declared once in [[builders]]
+ * (name → expression) and reachable two ways from that one table:
+ *
+ *  - engine code calls [[call]], which builds the expression straight from
+ *    the table, without reading or changing any session's function
+ *    registry;
+ *  - SQL resolves the same names in sessions started with
+ *    `spark.sql.extensions=graft.GraftExtensions` ([[injectInto]]).
+ *
+ * [[register]] (imperative, per session) remains only for the frozen
+ * [[graft.Bench]]. */
 object GraftFunctions {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "gorilla_encode" -> (args => GorillaEncode(args.head)),
-    "gorilla_decode" -> (args => GorillaDecode(args.head)),
-    "dod_encode" -> (args => DodEncode(args.head)),
-    "dod_decode" -> (args => DodDecode(args.head)),
-    "chimp_encode" -> (args => ChimpEncode(args.head)),
-    "chimp_decode" -> (args => ChimpDecode(args.head)),
-    "simhash64" -> (args => SimHash64(args.head)),
-    // fused single-buffer tier aggregate (TypedImperativeAggregate); the
-    // analyzer wraps the bare AggregateFunction into an AggregateExpression
-    "tier_stats" -> (args => TierStats(args.head)),
-    // codegen DeclarativeAggregate twin of tier_stats (same 128-bit-exact
-    // sum of squares; plain-expression update/merge in the hash-agg loop)
-    "tier_stats_decl" -> (args => TierStatsDecl(args.head)),
-    // bounded-state k-minimum-values sketch (TypedImperativeAggregate)
-    "kmv_kmin" -> (args => KmvKMin(args.head, foldInt(args(1)))),
-    "dot_q" -> (args => DotQ(args.head, args(1))),
-    "lsh_sig" -> (args => LshSig(args.head, foldInt(args(1)))),
-    "lsh_sig_affine" -> (args => LshSigAffine(args.head, foldInt(args(1)))),
-    // array kernels (typed JVM loops replacing interpreted HOF lambdas —
-    // see ArrayExpressions.scala)
-    // dedup-chain kernels (shingle/signature/band stages as codegen'd
-    // expressions — see DedupExpressions.scala)
-    "shingle_fnv" -> (args => ShingleFnv(args.head, foldInt(args(1)))),
-    "ngram_rep_stats" -> (args => NgramRepStats(args.head, foldInt(args(1)))),
-    "simhash_affine" -> (args => SimHashAffine(args.head, foldInt(args(1)))),
-    "minhash_affine" -> (args =>
-      MinHashAffine(args.head, foldInt(args(1)), foldInt(args(2)))),
-    "minhash_sig" -> (args => MinHashSig(args.head, foldInt(args(1)))),
-    "lsh_bands" -> (args => LshBands(args.head, foldInt(args(1)))),
-    "arr_sorted_inter_size" -> (args => SortedInterSize(args.head, args(1))),
-    "arr_pairs" -> (args => ArrPairs(args.head)),
-    "arr_sum" -> (args => ArrSum(args.head)),
-    "arr_sum_mod" -> (args => ArrSumMod(args.head, foldLong(args(1)))),
-    "arr_sum_q" -> (args => ArrSumQ(args.head, foldLong(args(1)))),
-    "bin_frame_sample" -> (args =>
-      BinFrameSample(args.head, foldInt(args(1)), foldInt(args(2)))),
-    "arr_null_count" -> (args => ArrNullCount(args.head)),
-    "arr_first_data_pos" -> (args => ArrFirstDataPos(args.head)),
-    "arr_pos_weighted_sum" -> (args => ArrPosWeightedSum(args.head, foldLong(args(1)))),
-    "arr_pos_weighted_sum_q" -> (args =>
-      ArrPosWeightedSumQ(args.head, foldLong(args(1)), foldLong(args(2)))),
-    "arr_abs_sum" -> (args => ArrAbsSum(args.head)),
-    "arr_abs_sum_q" -> (args => ArrAbsSumQ(args.head, foldLong(args(1)))),
-    "arr_abs_err_q_sum" -> (args =>
-      ArrErrQSum(args.head, args(1), foldLong(args(2)), squared = false)),
-    "arr_sq_err_q_sum" -> (args =>
-      ArrErrQSum(args.head, args(1), foldLong(args(2)), squared = true)),
-    "arr_seasonal_abs_sum" -> (args => ArrSeasonalAbsSum(args.head, foldInt(args(1)))),
-    "arr_interval_penalty_sum" -> (args =>
-      ArrIntervalPenaltySum(args.head, args(1), args(2), foldLong(args(3)))),
-    // ranged twins: evaluate over arr[start, start+len) in place (no
-    // slice materialization in the rolling-window hot path)
-    "arr_sum_range" -> (args => ArrSumRange(args.head, args(1), args(2))),
-    "arr_abs_sum_range" -> (args => ArrAbsSumRange(args.head, args(1), args(2))),
-    "arr_seasonal_abs_sum_range" -> (args =>
-      ArrSeasonalAbsSumRange(args.head, args(1), args(2), foldInt(args(3)))),
-    "arr_abs_err_q_sum_range" -> (args =>
-      ArrErrQSumRange(args.head, args(1), args(2), args(3), foldLong(args(4)), squared = false)),
-    "arr_sq_err_q_sum_range" -> (args =>
-      ArrErrQSumRange(args.head, args(1), args(2), args(3), foldLong(args(4)), squared = true)),
-    // eval_window_stats(tokens, m, ctx, hor, stride, scale): fused window
-    // enumeration + packed reductions, one compact struct per window
-    "window_slices" -> (args =>
-      WindowSlices(args.head, foldInt(args(1)), foldInt(args(2)), foldInt(args(3)))),
-    "window_slices_end" -> (args =>
-      WindowSlicesEnd(
-        args.head,
-        foldInt(args(1)),
-        foldInt(args(2)),
-        foldInt(args(3)),
-        foldInt(args(4)),
-        foldInt(args(5)))),
-    // lttb_select(pts, threshold): per-series LTTB selection kernel
-    "lttb_select" -> (args => LttbSelect(args.head, foldInt(args(1)))),
-    // eval_pinball_stats(tokens, ctx, hor, stride): fused per-window
-    // pinball / order-statistic reductions (q_eval_pinball/q_eval_extra)
-    "eval_pinball_stats" -> (args =>
-      EvalPinballStats(args.head, foldInt(args(1)), foldInt(args(2)), foldInt(args(3)))),
-    "eval_window_stats" -> (args =>
-      EvalWindowStats(
-        args.head,
-        args(1),
-        foldInt(args(2)),
-        foldInt(args(3)),
-        foldInt(args(4)),
-        foldLong(args(5)))),
-    "affine_mod_seq" -> (args =>
-      AffineModSeq(args.head, args(1), foldLong(args(2)), foldLong(args(3)), foldLong(args(4)))),
-    "arr_chunk" -> (args => ArrChunk(args.head, foldInt(args(1)))),
-    "arr_zscore_outliers" -> (args =>
-      ArrZscoreOutliers(args.head, foldInt(args(1)), foldDouble(args(2)))),
-    "arr_ewma_half" -> (args => ArrEwmaHalf(args.head)),
-    "arr_every_kth" -> (args => ArrEveryKth(args.head, foldInt(args(1)))),
-    "arr_blur4_every_kth" -> (args => ArrBlur4EveryKth(args.head, foldInt(args(1)))),
-    "arr_repeat_each" -> (args => ArrRepeatEach(args.head, foldInt(args(1)))),
-    // precond_forward(arr, degree, 'chebyshev'), precond_reverse(...)
-    "precond_forward" -> (args =>
-      PrecondForward(args.head, foldInt(args(1)), foldStr(args(2)))),
-    "precond_reverse" -> (args =>
-      PrecondReverse(args.head, foldInt(args(1)), foldStr(args(2)))),
-    // precond_reverse_ctx(window, degree, 'chebyshev', context): decode a
-    // window given the original-scale history preceding it
-    "precond_reverse_ctx" -> (args =>
-      PrecondReverseCtx(args.head, args(3), foldInt(args(1)), foldStr(args(2))))
-  )
+  /** A builder's arguments by position; the literal ones fold to Scala
+   * values, and every error names the function and the position. */
+  private final class Args(name: String, es: Seq[Expression]) {
+    def apply(i: Int): Expression = {
+      if (i >= es.size) {
+        throw new IllegalArgumentException(
+          s"$name: missing argument ${i + 1} (got ${es.size})")
+      }
+      es(i)
+    }
+    def head: Expression = apply(0)
+    private def literal(i: Int): String = {
+      val e = apply(i)
+      val v = if (e.foldable) e.eval(null) else null
+      if (v == null) {
+        throw new IllegalArgumentException(
+          s"$name: argument ${i + 1} must be a non-null literal, got $e")
+      }
+      v.toString
+    }
+    def int(i: Int): Int = literal(i).toInt
+    def long(i: Int): Long = literal(i).toLong
+    def str(i: Int): String = literal(i)
+    def double(i: Int): Double = literal(i).toDouble
+  }
 
-  private def foldInt(e: Expression): Int =
-    e.eval(null).toString.toInt
-  private def foldLong(e: Expression): Long =
-    e.eval(null).toString.toLong
-  private def foldStr(e: Expression): String =
-    e.eval(null).toString
-  private def foldDouble(e: Expression): Double =
-    e.eval(null).toString.toDouble
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Args => Expression)](
+      "gorilla_encode" -> (args => GorillaEncode(args.head)),
+      "gorilla_decode" -> (args => GorillaDecode(args.head)),
+      "dod_encode" -> (args => DodEncode(args.head)),
+      "dod_decode" -> (args => DodDecode(args.head)),
+      "chimp_encode" -> (args => ChimpEncode(args.head)),
+      "chimp_decode" -> (args => ChimpDecode(args.head)),
+      "simhash64" -> (args => SimHash64(args.head)),
+      // fused single-buffer tier aggregate (TypedImperativeAggregate): a
+      // bare AggregateFunction, wrapped by the analyzer in SQL and by call
+      "tier_stats" -> (args => TierStats(args.head)),
+      // codegen DeclarativeAggregate twin of tier_stats (same 128-bit-exact
+      // sum of squares; plain-expression update/merge in the hash-agg loop)
+      "tier_stats_decl" -> (args => TierStatsDecl(args.head)),
+      // bounded-state k-minimum-values sketch (TypedImperativeAggregate)
+      "kmv_kmin" -> (args => KmvKMin(args.head, args.int(1))),
+      "dot_q" -> (args => DotQ(args.head, args(1))),
+      "lsh_sig" -> (args => LshSig(args.head, args.int(1))),
+      "lsh_sig_affine" -> (args => LshSigAffine(args.head, args.int(1))),
+      // array kernels (typed JVM loops replacing interpreted HOF lambdas —
+      // see ArrayExpressions.scala)
+      // dedup-chain kernels (shingle/signature/band stages as codegen'd
+      // expressions — see DedupExpressions.scala)
+      "shingle_fnv" -> (args => ShingleFnv(args.head, args.int(1))),
+      "ngram_rep_stats" -> (args => NgramRepStats(args.head, args.int(1))),
+      "simhash_affine" -> (args => SimHashAffine(args.head, args.int(1))),
+      "minhash_affine" -> (args =>
+        MinHashAffine(args.head, args.int(1), args.int(2))),
+      "minhash_sig" -> (args => MinHashSig(args.head, args.int(1))),
+      "lsh_bands" -> (args => LshBands(args.head, args.int(1))),
+      "arr_sorted_inter_size" -> (args => SortedInterSize(args.head, args(1))),
+      "arr_pairs" -> (args => ArrPairs(args.head)),
+      "arr_sum" -> (args => ArrSum(args.head)),
+      "arr_sum_mod" -> (args => ArrSumMod(args.head, args.long(1))),
+      "arr_sum_q" -> (args => ArrSumQ(args.head, args.long(1))),
+      "bin_frame_sample" -> (args =>
+        BinFrameSample(args.head, args.int(1), args.int(2))),
+      "arr_null_count" -> (args => ArrNullCount(args.head)),
+      "arr_first_data_pos" -> (args => ArrFirstDataPos(args.head)),
+      "arr_pos_weighted_sum" -> (args => ArrPosWeightedSum(args.head, args.long(1))),
+      "arr_pos_weighted_sum_q" -> (args =>
+        ArrPosWeightedSumQ(args.head, args.long(1), args.long(2))),
+      "arr_abs_sum" -> (args => ArrAbsSum(args.head)),
+      "arr_abs_sum_q" -> (args => ArrAbsSumQ(args.head, args.long(1))),
+      "arr_abs_err_q_sum" -> (args =>
+        ArrErrQSum(args.head, args(1), args.long(2), squared = false)),
+      "arr_sq_err_q_sum" -> (args =>
+        ArrErrQSum(args.head, args(1), args.long(2), squared = true)),
+      "arr_seasonal_abs_sum" -> (args => ArrSeasonalAbsSum(args.head, args.int(1))),
+      "arr_interval_penalty_sum" -> (args =>
+        ArrIntervalPenaltySum(args.head, args(1), args(2), args.long(3))),
+      // ranged twins: evaluate over arr[start, start+len) in place (no
+      // slice materialization in the rolling-window hot path)
+      "arr_sum_range" -> (args => ArrSumRange(args.head, args(1), args(2))),
+      "arr_abs_sum_range" -> (args => ArrAbsSumRange(args.head, args(1), args(2))),
+      "arr_seasonal_abs_sum_range" -> (args =>
+        ArrSeasonalAbsSumRange(args.head, args(1), args(2), args.int(3))),
+      "arr_abs_err_q_sum_range" -> (args =>
+        ArrErrQSumRange(args.head, args(1), args(2), args(3), args.long(4), squared = false)),
+      "arr_sq_err_q_sum_range" -> (args =>
+        ArrErrQSumRange(args.head, args(1), args(2), args(3), args.long(4), squared = true)),
+      // eval_window_stats(tokens, m, ctx, hor, stride, scale): fused window
+      // enumeration + packed reductions, one compact struct per window
+      "window_slices" -> (args =>
+        WindowSlices(args.head, args.int(1), args.int(2), args.int(3))),
+      "window_slices_end" -> (args =>
+        WindowSlicesEnd(
+          args.head,
+          args.int(1),
+          args.int(2),
+          args.int(3),
+          args.int(4),
+          args.int(5))),
+      // lttb_select(pts, threshold): per-series LTTB selection kernel
+      "lttb_select" -> (args => LttbSelect(args.head, args.int(1))),
+      // eval_pinball_stats(tokens, ctx, hor, stride): fused per-window
+      // pinball / order-statistic reductions (q_eval_pinball/q_eval_extra)
+      "eval_pinball_stats" -> (args =>
+        EvalPinballStats(args.head, args.int(1), args.int(2), args.int(3))),
+      "eval_window_stats" -> (args =>
+        EvalWindowStats(
+          args.head,
+          args(1),
+          args.int(2),
+          args.int(3),
+          args.int(4),
+          args.long(5))),
+      "affine_mod_seq" -> (args =>
+        AffineModSeq(args.head, args(1), args.long(2), args.long(3), args.long(4))),
+      "arr_chunk" -> (args => ArrChunk(args.head, args.int(1))),
+      "arr_zscore_outliers" -> (args =>
+        ArrZscoreOutliers(args.head, args.int(1), args.double(2))),
+      "arr_ewma_half" -> (args => ArrEwmaHalf(args.head)),
+      "arr_every_kth" -> (args => ArrEveryKth(args.head, args.int(1))),
+      "arr_blur4_every_kth" -> (args => ArrBlur4EveryKth(args.head, args.int(1))),
+      "arr_repeat_each" -> (args => ArrRepeatEach(args.head, args.int(1))),
+      // precond_forward(arr, degree, 'chebyshev'), precond_reverse(...)
+      "precond_forward" -> (args =>
+        PrecondForward(args.head, args.int(1), args.str(2))),
+      "precond_reverse" -> (args =>
+        PrecondReverse(args.head, args.int(1), args.str(2))),
+      // precond_reverse_ctx(window, degree, 'chebyshev', context): decode a
+      // window given the original-scale history preceding it
+      "precond_reverse_ctx" -> (args =>
+        PrecondReverseCtx(args.head, args(3), args.int(1), args.str(2)))
+    ).map { case (name, build) =>
+      name -> ((es: Seq[Expression]) => build(new Args(name, es)))
+    }
 
+  private lazy val byName = builders.toMap
+
+  /** The graft function `name` applied to `args`, built from [[builders]].
+   * A bare aggregate function comes back wrapped as an aggregate
+   * expression (the analyzer's job for SQL calls). Fails at build time on
+   * an unknown name or a bad literal argument. */
+  def call(name: String, args: Column*): Column = {
+    val build = byName.getOrElse(
+      name,
+      throw new IllegalArgumentException(s"unknown graft function: $name"))
+    SparkInternals.column(build(args.map(SparkInternals.expression)) match {
+      case f: AggregateFunction => f.toAggregateExpression()
+      case e => e
+    })
+  }
+
+  /** Registers every function in `spark`'s own registry. Idempotent.
+   * Engine code uses [[call]]; this stays for the frozen [[graft.Bench]]. */
   def register(spark: SparkSession): Unit = synchronized {
     val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
@@ -139,11 +187,10 @@ object GraftFunctions {
     }
   }
 
-  /** Public extension-point registration (SparkSessionExtensions
-   * .injectFunction): every new session built with
-   * `spark.sql.extensions=graft.GraftExtensions` gets the functions
-   * without any imperative register() call — the supported deployment
-   * path; [[register]] remains as the programmatic fallback. */
+  /** SQL entry point (`SparkSessionExtensions.injectFunction`, used by
+   * [[graft.GraftExtensions]]): every session built with
+   * `spark.sql.extensions=graft.GraftExtensions` resolves the functions by
+   * name in SQL. */
   def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     builders.foreach { case (name, builder) =>
       ext.injectFunction(

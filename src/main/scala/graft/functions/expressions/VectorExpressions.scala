@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 /**
  * Vector kernels for the similarity/ANN operators — tight JVM loops inside
  * single Catalyst expressions, replacing the round-1 SQL higher-order
- * functions (`zip_with`/`aggregate` lambdas). Cost model (measured,
- * KernelBenchMain round 4): simple HOF lambdas are ~1-2 ns/element in
+ * functions (`zip_with`/`aggregate` lambdas). Cost model (measured in
+ * round 4, BENCH.md "Kernel vs interpreted-lambda"): simple HOF lambdas are ~1-2 ns/element in
  * Spark 4.1 — the round-1 "100 µs/element" was per-element STRING
  * construction on a codegen-broken span, not lambda evaluation — but the
  * kernels still win 10-25% per op and keep the projection in one

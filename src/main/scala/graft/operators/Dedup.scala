@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import graft.functions.SimHash
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
@@ -42,11 +43,10 @@ object Dedup {
       textCol: String,
       blockCol: String,
       n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(
       col(idCol).cast("long").as("_id"),
       col(blockCol).cast("string").as("_blk"),
-      call_function("shingle_fnv", col(textCol).cast("string"), lit(n)).as("hs"))
+      call("shingle_fnv", col(textCol).cast("string"), lit(n)).as("hs"))
   }
 
   /** Exact dedup: group identical texts by md5, keep the smallest id as the
@@ -122,12 +122,11 @@ object Dedup {
    * split out so the LSH chain can shingle once and reuse the same table
    * for verification. One `minhash_sig` kernel call per row. */
   private def signaturesFromSets(sets: DataFrame, numHashes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(sets.sparkSession)
     sets
       .filter(size(col("hs")) > 0)
       .select(
         col("_id"),
-        call_function("minhash_sig", col("hs"), lit(numHashes)).as("sig"))
+        call("minhash_sig", col("hs"), lit(numHashes)).as("sig"))
   }
 
   /** LSH candidate pairs from banded signatures, verified with exact
@@ -302,15 +301,14 @@ object Dedup {
    * PipelineSpec and monitored via DedupJob's candidate telemetry, and
    * arr_pairs fails loudly on a pair-bomb bucket). */
   private def bandCandidates(sigs: DataFrame, bands: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(sigs.sparkSession)
     sigs
       .select(
         col("_id"),
-        posexplode(call_function("lsh_bands", col("sig"), lit(bands))).as(Seq("band", "bh")))
+        posexplode(call("lsh_bands", col("sig"), lit(bands))).as(Seq("band", "bh")))
       .groupBy(col("band"), col("bh"))
       .agg(collect_list(col("_id")).as("ids"))
       .where(size(col("ids")) > 1)
-      .select(explode(call_function("arr_pairs", col("ids"))).as("p"))
+      .select(explode(call("arr_pairs", col("ids"))).as("p"))
       .select(col("p.a").as("_id"), col("p.b").as("_idb"))
       .distinct()
   }
@@ -328,7 +326,7 @@ object Dedup {
     candidates
       .join(sets.withColumnRenamed("_sid", "_id_a").withColumnRenamed("hs", "sa"), col("_id") === col("_id_a"))
       .join(sets.withColumnRenamed("_sid", "_id_b").withColumnRenamed("hs", "sb"), col("_idb") === col("_id_b"))
-      .withColumn("_inter", call_function("arr_sorted_inter_size", col("sa"), col("sb")))
+      .withColumn("_inter", call("arr_sorted_inter_size", col("sa"), col("sb")))
       .select(
         col("_id").as("doc_a"),
         col("_idb").as("doc_b"),
@@ -355,11 +353,10 @@ object Dedup {
       idCol: String,
       textCol: String,
       nBits: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(
         col(idCol).as("doc_id"),
-        call_function("simhash_affine", col(textCol).cast("string"), lit(nBits))
+        call("simhash_affine", col(textCol).cast("string"), lit(nBits))
           .as("simhash_bucket"))
       .filter(col("simhash_bucket") >= 0)
   }
@@ -441,17 +438,16 @@ object Dedup {
       textCol: String,
       n: Int,
       minHits: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
     val testH = testDocs
       .select(
-        explode(call_function("shingle_fnv", col(textCol).cast("string"), lit(n)))
+        explode(call("shingle_fnv", col(textCol).cast("string"), lit(n)))
           .as("h"))
       .distinct()
     val hits = docs
       .select(
         col(idCol),
-        explode(call_function("shingle_fnv", col(textCol).cast("string"), lit(n)))
+        explode(call("shingle_fnv", col(textCol).cast("string"), lit(n)))
           .as("h"))
       .join(broadcast(testH), Seq("h"))
       .groupBy(col(idCol))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -124,7 +125,6 @@ object Downsample {
       keyCol: String,
       xCol: String,
       yCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(
         col(keyCol).cast("string").as("_k"),
         col(xCol).cast("double").as("_x"),
@@ -145,7 +145,7 @@ object Downsample {
     seriesPoints(df, keyCol, xCol, yCol)
       .select(
         col("_k"),
-        explode(call_function("lttb_select", col("_pts"), lit(threshold))).as("_s"))
+        explode(call("lttb_select", col("_pts"), lit(threshold))).as("_s"))
       .select(
         col("_k").as(keyCol),
         col("_s.x").as(xCol),
@@ -169,7 +169,7 @@ object Downsample {
       .select(
         col("_k"),
         size(col("_pts")).as("_n"),
-        posexplode(call_function("lttb_select", col("_pts"), lit(threshold)))
+        posexplode(call("lttb_select", col("_pts"), lit(threshold)))
           .as(Seq("_p", "_s")))
       .select(
         col("_k").as(keyCol),
@@ -198,7 +198,6 @@ object Downsample {
       chunkSize: Int,
       threshold: Int): DataFrame = {
     require(chunkSize > threshold, "chunkSize must exceed threshold for a reduction")
-    graft.functions.GraftFunctions.register(spark)
     val level1 = df
       .select(
         col(keyCol).cast("string").as("_k"),
@@ -215,7 +214,7 @@ object Downsample {
       .agg(collect_list(struct(col("_x").as("x"), col("_y").as("y"))).as("_pts"))
       .select(
         col("_k"),
-        explode(call_function("lttb_select", col("_pts"), lit(threshold))).as("_s"))
+        explode(call("lttb_select", col("_pts"), lit(threshold))).as("_s"))
       .select(col("_k").as(keyCol), col("_s.x").as(xCol), col("_s.y").as(yCol))
     lttb(spark, level1, keyCol, xCol, yCol, threshold)
   }

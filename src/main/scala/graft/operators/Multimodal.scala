@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.awt.image.BufferedImage
 
@@ -474,7 +475,6 @@ object Multimodal {
    * this to the audio/video modalities; byte-chunking a compressed image
    * container is meaningless.) */
   def frameSample(media: DataFrame, frameBytes: Int, everyN: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(media.sparkSession)
     media.select(
       col("doc_id"),
       col("modality"),
@@ -482,7 +482,7 @@ object Multimodal {
       // selection fused; empty payloads -> empty array) — replaces the
       // former transform-over-sequence + filter lambda pair so the
       // projection stays in one whole-stage-codegen span
-      call_function("bin_frame_sample", col("media"), lit(frameBytes), lit(everyN))
+      call("bin_frame_sample", col("media"), lit(frameBytes), lit(everyN))
         .as("frames"))
   }
 }

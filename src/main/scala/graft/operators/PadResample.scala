@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -69,20 +70,16 @@ object PadResample {
 
   // The three rate-resamplers are single Catalyst kernel expressions
   // (ArrayExpressions.scala) rather than SQL higher-order functions.
-  // Measured cost model (KernelBenchMain, round 4): simple HOF lambdas run
-  // at ~1-2 ns/element in Spark 4.1 — the kernels' win here is the 10-25%
-  // per-op constant plus keeping this linear shuffle-free pass inside one
-  // whole-stage-codegen span; at 100 TB the constant IS the cost.
-
-  private def withFn(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df
-  }
+  // Measured cost model (round 4, BENCH.md "Kernel vs interpreted-lambda"):
+  // simple HOF lambdas run at ~1-2 ns/element in Spark 4.1 — the kernels'
+  // win here is the 10-25% per-op constant plus keeping this linear
+  // shuffle-free pass inside one whole-stage-codegen span; at 100 TB the
+  // constant IS the cost.
 
   /** Take every k-th element, starting at index 0 (Subsample,
    * resample.py:71-76: "just take every n-th element"). */
   def subsample(df: DataFrame, arr: String, k: Int, out: String): DataFrame =
-    withFn(df).withColumn(out, call_function("arr_every_kth", col(arr), lit(k)))
+    df.withColumn(out, call("arr_every_kth", col(arr), lit(k)))
 
   /** Binomial [1,2,1]/4 blur (the discrete Gaussian) then every k-th
    * element (GaussianFilterSubsample, resample.py:79-84: "blur using
@@ -90,9 +87,9 @@ object PadResample {
    * sample. Emitted pre-division as 4*g (an exact integer) so downstream
    * checksums stay exact. */
   def gaussianSubsample(df: DataFrame, arr: String, k: Int, out: String): DataFrame =
-    withFn(df).withColumn(out, call_function("arr_blur4_every_kth", col(arr), lit(k)))
+    df.withColumn(out, call("arr_blur4_every_kth", col(arr), lit(k)))
 
   /** Repeat each element k times (Upsample, resample.py:94-96). */
   def upsample(df: DataFrame, arr: String, k: Int, out: String): DataFrame =
-    withFn(df).withColumn(out, call_function("arr_repeat_each", col(arr), lit(k)))
+    df.withColumn(out, call("arr_repeat_each", col(arr), lit(k)))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,13 +32,12 @@ object PayloadCompaction {
    * matches the one-shot payload table: (source, bucket, n_windows,
    * payload_ts, payload_values, payload_values_chimp). */
   def compact(segments: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(segments.sparkSession)
     segments
       .select(
         col("source"),
         col("bucket"),
-        call_function("dod_decode", col("payload_ts")).as("ws"),
-        call_function("gorilla_decode", col("payload_values")).as("vs"))
+        call("dod_decode", col("payload_ts")).as("ws"),
+        call("gorilla_decode", col("payload_values")).as("vs"))
       .select(
         col("source"),
         col("bucket"),
@@ -54,9 +54,9 @@ object PayloadCompaction {
         col("source"),
         col("bucket"),
         size(col("series")).as("n_windows"),
-        call_function("dod_encode", expr("CAST(series.w AS array<bigint>)"))
+        call("dod_encode", expr("CAST(series.w AS array<bigint>)"))
           .as("payload_ts"),
-        call_function("gorilla_encode", expr("series.v")).as("payload_values"),
-        call_function("chimp_encode", expr("series.v")).as("payload_values_chimp"))
+        call("gorilla_encode", expr("series.v")).as("payload_values"),
+        call("chimp_encode", expr("series.v")).as("payload_values_chimp"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Tier
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -65,13 +66,12 @@ object Rollup {
     // ANSI cast fails LOUDLY where the old five-buffer sum wrapped
     // silently; keep the struct form (tier_stats_decl direct) when groups
     // can exceed that.
-    graft.functions.GraftFunctions.register(points.sparkSession)
     points
       .groupBy(
         col("source"),
         expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"),
         expr(s"CAST(pos - pos % $w AS INT)").as("window_start"))
-      .agg(call_function("tier_stats_decl", col("tok")).as("_st"))
+      .agg(call("tier_stats_decl", col("tok")).as("_st"))
       .select(
         col("source"),
         col("bucket"),

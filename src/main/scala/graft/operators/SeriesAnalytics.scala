@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,14 +27,13 @@ object SeriesAnalytics {
       raw: DataFrame,
       width: Int,
       z: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     raw
       .select(
         col("doc_id"),
         col("source"),
         col("n_tok"),
         posexplode(
-          call_function("arr_zscore_outliers", col("tokens"), lit(width), lit(z)))
+          call("arr_zscore_outliers", col("tokens"), lit(width), lit(z)))
           .as(Seq("patch_idx", "n_outliers")))
       .select(
         col("doc_id"),
@@ -49,12 +49,11 @@ object SeriesAnalytics {
    * the SQL `list_reduce` fold shape, so the oracle replays the exact
    * IEEE op sequence. Row-local kernel: zero shuffles. */
   def ewmaLevels(raw: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     raw.select(
       col("doc_id"),
       col("source"),
       col("n_tok"),
-      call_function("arr_ewma_half", col("tokens")).as("ewma_half"))
+      call("arr_ewma_half", col("tokens")).as("ewma_half"))
   }
 
   /** Continuous alerting over a tier: windows whose `valueCol` exceeds
@@ -447,7 +446,6 @@ object SeriesAnalytics {
     require(
       breakpoints.size <= 25,
       s"paaSax: at most 25 breakpoints (26-letter alphabet), got ${breakpoints.size}")
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     val letters = ('a' to 'z').take(breakpoints.size + 1).map(_.toString)
     val sax = breakpoints.zip(letters.init).foldRight(lit(letters.last)) {
       case ((bp, letter), acc) => when(col("paa_milli") < bp, lit(letter)).otherwise(acc)
@@ -456,14 +454,14 @@ object SeriesAnalytics {
       .select(
         col("doc_id"),
         col("source"),
-        posexplode(call_function("arr_chunk", col("tokens"), lit(segLen)))
+        posexplode(call("arr_chunk", col("tokens"), lit(segLen)))
           .as(Seq("seg_idx", "seg")))
       .select(
         col("doc_id"),
         col("source"),
         col("seg_idx"),
         size(col("seg")).as("seg_len"),
-        call_function("arr_sum", col("seg")).as("seg_sum"))
+        call("arr_sum", col("seg")).as("seg_sum"))
       .withColumn("paa_milli", expr("seg_sum * 1000 DIV seg_len"))
       .withColumn("sax", sax)
   }

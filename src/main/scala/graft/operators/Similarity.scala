@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
  * deterministic double expression. Quantization is also the realistic
  * at-scale choice (int8/int16 quantized ANN).
  *
- * Kernel discipline (round-2 fix, cost model corrected by round-4's
- * KernelBenchMain): dot products, norms and LSH signatures run inside
- * single Catalyst expressions with tight JVM loops
+ * Kernel discipline (round-2 fix, cost model corrected in round 4 —
+ * BENCH.md "Kernel vs interpreted-lambda"): dot products, norms and LSH
+ * signatures run inside single Catalyst expressions with tight JVM loops
  * ([[graft.functions.expressions.DotQ]]/[[graft.functions.expressions.LshSig]])
  * — NOT SQL higher-order functions. Simple HOF lambdas cost ~1-2
  * ns/element in Spark 4.1 (not the round-1 "100 µs" lore, which was
@@ -31,7 +31,8 @@ object Similarity {
 
   /** cosine from precomputed (va, vb, na, nb) columns via the dot_q kernel. */
   private val cosExpr =
-    expr("CAST(dot_q(va, vb) AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))")
+    call("dot_q", col("va"), col("vb")).cast("double") /
+      (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))
 
   /** Shared top-k tail of every search variant: candidate pairs carrying
    * (query_id, va, na, neighbor_id, vb, nb) -> exact cosine, deterministic
@@ -48,8 +49,7 @@ object Similarity {
 
   /** Adds `norm2: bigint` — the exact quantized squared norm. */
   def withNorm(emb: DataFrame, vecCol: String): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
-    emb.withColumn("norm2", call_function("dot_q", col(vecCol), col(vecCol)))
+    emb.withColumn("norm2", call("dot_q", col(vecCol), col(vecCol)))
   }
 
   /** All pairs (a < b) within the same blocking column with cosine >=
@@ -99,15 +99,15 @@ object Similarity {
    * deterministic pseudo-random small signed weights derived from
    * xxhash64(plane, dim) — identical at any parallelism. */
   def lshBucketed(emb: DataFrame, idCol: String, vecCol: String, nPlanes: Int): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     emb
-      .withColumn("norm2", call_function("dot_q", col(vecCol), col(vecCol)))
-      .withColumn("lsh_bucket", call_function("lsh_sig", col(vecCol), lit(nPlanes)))
+      .withColumn("norm2", call("dot_q", col(vecCol), col(vecCol)))
+      .withColumn("lsh_bucket", call("lsh_sig", col(vecCol), lit(nPlanes)))
   }
 
   /** cosine of a corpus vector (v, n2) against a centroid (cv, cn). */
   private val cCos =
-    expr("CAST(dot_q(v, cv) AS DOUBLE) / (sqrt(CAST(n2 AS DOUBLE)) * sqrt(CAST(cn AS DOUBLE)))")
+    call("dot_q", col("v"), col("cv")).cast("double") /
+      (sqrt(col("n2").cast("double")) * sqrt(col("cn").cast("double")))
 
   /** Best centroid per corpus vector WITHOUT shuffling the
    * (corpus x centroids) pair rows: max over struct(c_cos, -c_id) is a
@@ -141,8 +141,7 @@ object Similarity {
       .groupBy(col("c_id"))
       .agg(sort_array(collect_list(struct(col("d"), col("m")))).as("dm"))
       .select(col("c_id"), expr("dm.m").as("cv"))
-    GraftFunctions.register(moved.sparkSession)
-    moved.withColumn("cn", call_function("dot_q", col("cv"), col("cv")))
+    moved.withColumn("cn", call("dot_q", col("cv"), col("cv")))
   }
 
   /** The IVF ASSIGNMENT stage as a first-class oracle-checkable surface:
@@ -191,7 +190,6 @@ object Similarity {
       idCol: String,
       vecCol: String,
       nPlanes: Int): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     emb
       // an empty vector has no geometry — every plane dot is 0 and the
       // sign bucket would be the meaningless all-ones id; drop it (the
@@ -199,7 +197,7 @@ object Similarity {
       .filter(size(col(vecCol)) > 0)
       .select(
         col(idCol).as("vec_id"),
-        call_function("lsh_sig_affine", col(vecCol), lit(nPlanes)).as("ann_bucket"))
+        call("lsh_sig_affine", col(vecCol), lit(nPlanes)).as("ann_bucket"))
   }
 
   /** IVF (inverted-file) ANN — the FAISS-style coarse-quantizer shape:

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,7 +54,6 @@ object Sketches {
    * merge ([[mergeSketches]]), estimates don't. */
   def kmvSketch(points: DataFrame, windowWidth: Int, k: Int): DataFrame = {
     require(k >= 2, s"kmvSketch: k must be >= 2, got $k")
-    graft.functions.GraftFunctions.register(points.sparkSession)
     points
       .select(
         col("source"),
@@ -61,7 +61,7 @@ object Sketches {
         expr(s"CAST(pos - pos % $windowWidth AS INT)").as("window_start"),
         expr(tokHash).as("h"))
       .groupBy(col("source"), col("bucket"), col("window_start"))
-      .agg(call_function("kmv_kmin", col("h"), lit(k)).as("kmin"))
+      .agg(call("kmv_kmin", col("h"), lit(k)).as("kmin"))
   }
 
   /** Derive (n_kept, kth_min, est_distinct) from a [[kmvSketch]] table. */
@@ -89,11 +89,10 @@ object Sketches {
    * counts don't merge, sketches do). Cost: explode of ≤k values per
    * key per side, one bounded exchange. */
   def mergeSketches(a: DataFrame, b: DataFrame, keys: Seq[String], k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(a.sparkSession)
     a.unionByName(b)
       .select(keys.map(col) :+ explode(col("kmin")).as("h"): _*)
       .groupBy(keys.map(col): _*)
-      .agg(call_function("kmv_kmin", col("h"), lit(k)).as("kmin"))
+      .agg(call("kmv_kmin", col("h"), lit(k)).as("kmin"))
   }
 
   /** Merge two count-min sketch tables (key + (r, c, cell_cnt) rows,

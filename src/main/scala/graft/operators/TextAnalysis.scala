@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -94,10 +95,9 @@ object TextAnalysis {
       idCol: String,
       textCol: String,
       ns: Seq[Int] = Seq(2, 3)): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(
       col(idCol) +: ns.map(n =>
-        call_function("ngram_rep_stats", col(textCol).cast("string"), lit(n))
+        call("ngram_rep_stats", col(textCol).cast("string"), lit(n))
           .as(s"s$n")): _*)
     val outCols = col(idCol) +: ns.flatMap { n =>
       val s = col(s"s$n")

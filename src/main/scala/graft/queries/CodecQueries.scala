@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.call
 import graft.sources.TokenTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,13 +16,12 @@ object CodecQueries {
     // Gorilla: token arrays as doubles, encode→decode in-plan, exact
     // integer checksums of the decoded array.
     "q_codec_gorilla_roundtrip" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
         .withColumn(
           "decoded",
-          call_function("gorilla_decode", call_function("gorilla_encode", col("vals"))))
+          call("gorilla_decode", call("gorilla_encode", col("vals"))))
         .select(
           col("doc_id"),
           col("source"),
@@ -30,7 +29,7 @@ object CodecQueries {
           // decoded values are EXACT non-negative integer doubles (the
           // codec is lossless), so the quantized kernel sum at scale 1
           // equals the old CAST-to-BIGINT lambda bit-for-bit
-          call_function("arr_sum_q", col("decoded"), lit(1L)).as("sum_v"),
+          call("arr_sum_q", col("decoded"), lit(1L)).as("sum_v"),
           expr("element_at(decoded, 1)").as("first_v"),
           expr("element_at(decoded, -1)").as("last_v"))
     }),
@@ -38,13 +37,12 @@ object CodecQueries {
     // Chimp (VLDB 2022): the alternative XOR float codec — same in-plan
     // encode→decode round-trip gate as Gorilla, same exact checksums.
     "q_codec_chimp_roundtrip" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
         .withColumn(
           "decoded",
-          call_function("chimp_decode", call_function("chimp_encode", col("vals"))))
+          call("chimp_decode", call("chimp_encode", col("vals"))))
         .select(
           col("doc_id"),
           col("source"),
@@ -52,7 +50,7 @@ object CodecQueries {
           // decoded values are EXACT non-negative integer doubles (the
           // codec is lossless), so the quantized kernel sum at scale 1
           // equals the old CAST-to-BIGINT lambda bit-for-bit
-          call_function("arr_sum_q", col("decoded"), lit(1L)).as("sum_v"),
+          call("arr_sum_q", col("decoded"), lit(1L)).as("sum_v"),
           expr("element_at(decoded, 1)").as("first_v"),
           expr("element_at(decoded, -1)").as("last_v"))
     }),
@@ -64,7 +62,6 @@ object CodecQueries {
     // scale-killer); at-scale payloads are per-tier-series by design
     // (q_tier_payload is the production shape).
     "q_codec_dod_roundtrip" -> ((s, dir) => {
-      GraftFunctions.register(s)
       s.read
         .parquet(s"$dir/events.parquet")
         .select(
@@ -75,13 +72,13 @@ object CodecQueries {
         .agg(sort_array(collect_list(col("ts_us"))).as("ts_arr"))
         .withColumn(
           "decoded",
-          call_function("dod_decode", call_function("dod_encode", col("ts_arr"))))
+          call("dod_decode", call("dod_encode", col("ts_arr"))))
         .select(
           col("user_id"),
           size(col("decoded")).as("n_ts"),
           expr("element_at(decoded, 1)").as("first_us"),
           expr("element_at(decoded, -1)").as("last_us"),
-          call_function("arr_sum_mod", col("decoded"), lit(1000000007L)).as("sum_mod"))
+          call("arr_sum_mod", col("decoded"), lit(1000000007L)).as("sum_mod"))
     }),
 
     // Polynomial preconditioning round-trip (the reference's signature
@@ -89,20 +86,23 @@ object CodecQueries {
     // plan; decoded values are integers to <1e-10 so rounding restores the
     // original tokens exactly — checksummed against the raw oracle.
     "q_precond_roundtrip" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
         .withColumn(
           "rt",
-          expr("precond_reverse(precond_forward(vals, 4, 'chebyshev'), 4, 'chebyshev')"))
+          call(
+            "precond_reverse",
+            call("precond_forward", col("vals"), lit(4), lit("chebyshev")),
+            lit(4),
+            lit("chebyshev")))
         .select(
           col("doc_id"),
           col("source"),
           size(col("rt")).as("n"),
           // rt values are integers to <1e-10, never near .5, so
           // floor(x + 0.5) (the scale-1 kernel) == round(x)
-          call_function("arr_sum_q", col("rt"), lit(1L)).as("sum_v"))
+          call("arr_sum_q", col("rt"), lit(1L)).as("sum_v"))
     }),
 
     // Legendre-family round-trip (the second polynomial family,
@@ -111,20 +111,23 @@ object CodecQueries {
     // round-trip identity (reverse∘forward == id to <1e-10, rounded back
     // to the exact integer tokens) rather than forward values.
     "q_precond_legendre_roundtrip" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
         .withColumn(
           "rt",
-          expr("precond_reverse(precond_forward(vals, 3, 'legendre'), 3, 'legendre')"))
+          call(
+            "precond_reverse",
+            call("precond_forward", col("vals"), lit(3), lit("legendre")),
+            lit(3),
+            lit("legendre")))
         .select(
           col("doc_id"),
           col("source"),
           size(col("rt")).as("n"),
           // rt values are integers to <1e-10, never near .5, so
           // floor(x + 0.5) (the scale-1 kernel) == round(x)
-          call_function("arr_sum_q", col("rt"), lit(1L)).as("sum_v"))
+          call("arr_sum_q", col("rt"), lit(1L)).as("sum_v"))
     }),
 
     // Forward preconditioning checked value-by-value against a LAG-based
@@ -132,15 +135,14 @@ object CodecQueries {
     // per-element double arithmetic matches term-for-term in association
     // order; chebyshev d4 coeffs are exact binary fractions [0,-1,0,0.125]).
     "q_precond_forward" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
-        .withColumn("f", expr("precond_forward(vals, 4, 'chebyshev')"))
+        .withColumn("f", call("precond_forward", col("vals"), lit(4), lit("chebyshev")))
         .select(
           col("doc_id"),
           col("source"),
-          call_function("arr_sum_q", col("f"), lit(1000L)).as("sum_q"))
+          call("arr_sum_q", col("f"), lit(1000L)).as("sum_q"))
     }),
 
     // Tier payload compression (FIXTURES.md §2 schema): per (source, bucket)
@@ -154,15 +156,15 @@ object CodecQueries {
         col("source"),
         col("bucket"),
         col("n_windows"),
-        call_function("arr_sum", call_function("dod_decode", col("payload_ts")))
+        call("arr_sum", call("dod_decode", col("payload_ts")))
           .as("ts_sum_check"),
-        call_function(
+        call(
           "arr_sum_q",
-          call_function("gorilla_decode", col("payload_values")),
+          call("gorilla_decode", col("payload_values")),
           lit(1000L)).as("values_q_sum"),
-        call_function(
+        call(
           "arr_sum_q",
-          call_function("chimp_decode", col("payload_values_chimp")),
+          call("chimp_decode", col("payload_values_chimp")),
           lit(1000L)).as("values_q_sum_chimp"))),
 
     // Decode-with-context window round-trip (precondition.py:436-524
@@ -174,23 +176,24 @@ object CodecQueries {
     // Chebyshev d4 coeffs are exact binary fractions, so the decode is
     // bit-exactly the original tokens and the oracle is a plain range sum.
     "q_precond_window_roundtrip" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .filter(col("n_tok") >= 32)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
-        .withColumn("f", expr("precond_forward(vals, 4, 'chebyshev')"))
+        .withColumn("f", call("precond_forward", col("vals"), lit(4), lit("chebyshev")))
         .withColumn("fs", expr("CAST(n_tok DIV 2 AS INT)")) // >= 4, fs+16 <= n_tok
         .withColumn("win", expr("slice(f, fs + 1, 16)"))
         // original-scale history [fs-4, fs) — NOT the preconditioned values
         .withColumn("hist", expr("slice(vals, fs - 3, 4)"))
-        .withColumn("dec", expr("precond_reverse_ctx(win, 4, 'chebyshev', hist)"))
+        .withColumn(
+          "dec",
+          call("precond_reverse_ctx", col("win"), lit(4), lit("chebyshev"), col("hist")))
         .select(
           col("doc_id"),
           col("source"),
           col("fs"),
           size(col("dec")).as("w_len"),
-          call_function("arr_sum_q", col("dec"), lit(1000L)).as("win_sum_q"))
+          call("arr_sum_q", col("dec"), lit(1000L)).as("win_sum_q"))
     }),
 
     // Segment compaction (the Gorilla block merge): the same tier series
@@ -200,7 +203,6 @@ object CodecQueries {
     // (compaction must be observationally identical to never having
     // segmented at all).
     "q_payload_compact" -> ((s, dir) => {
-      GraftFunctions.register(s)
       import graft.core.Tier
       import graft.operators.{PayloadCompaction, Rollup}
       val segs = Rollup
@@ -216,12 +218,12 @@ object CodecQueries {
           col("source"),
           col("bucket"),
           col("seg_idx"),
-          call_function(
+          call(
             "dod_encode",
             expr("CAST(series.window_start AS array<bigint>)")).as("payload_ts"),
-          call_function("gorilla_encode", expr("series.avg_tok"))
+          call("gorilla_encode", expr("series.avg_tok"))
             .as("payload_values"),
-          call_function("chimp_encode", expr("series.avg_tok"))
+          call("chimp_encode", expr("series.avg_tok"))
             .as("payload_values_chimp"))
       PayloadCompaction
         .compact(segs)
@@ -229,15 +231,15 @@ object CodecQueries {
           col("source"),
           col("bucket"),
           col("n_windows"),
-          call_function("arr_sum", call_function("dod_decode", col("payload_ts")))
+          call("arr_sum", call("dod_decode", col("payload_ts")))
             .as("ts_sum_check"),
-          call_function(
+          call(
             "arr_sum_q",
-            call_function("gorilla_decode", col("payload_values")),
+            call("gorilla_decode", col("payload_values")),
             lit(1000L)).as("values_q_sum"),
-          call_function(
+          call(
             "arr_sum_q",
-            call_function("chimp_decode", col("payload_values_chimp")),
+            call("chimp_decode", col("payload_values_chimp")),
             lit(1000L)).as("values_q_sum_chimp"))
     }),
 
@@ -260,7 +262,6 @@ object CodecQueries {
    * (window_start, avg_tok) series per (source, bucket) packed as
    * dod/gorilla/chimp blobs. */
   private def tierPayload(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import graft.core.Tier
     import graft.operators.Rollup
     Rollup
@@ -273,13 +274,13 @@ object CodecQueries {
         col("source"),
         col("bucket"),
         size(col("series")).as("n_windows"),
-        call_function(
+        call(
           "dod_encode",
           expr("CAST(series.window_start AS array<bigint>)")).as("payload_ts"),
-        call_function(
+        call(
           "gorilla_encode",
           expr("series.avg_tok")).as("payload_values"),
-        call_function(
+        call(
           "chimp_encode",
           expr("series.avg_tok")).as("payload_values_chimp"))
   }

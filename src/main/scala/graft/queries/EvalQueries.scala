@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.GraftFunctions.call
 import graft.sources.TokenTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,14 +37,13 @@ object EvalQueries {
       ctx: Int = Ctx,
       hor: Int = Hor,
       stride: Int = Stride): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     TokenTable
       .raw(s, dir)
       .select(
         col("doc_id"),
         col("source"),
         explode(
-          call_function("window_slices", col("tokens"), lit(ctx), lit(hor), lit(stride)))
+          call("window_slices", col("tokens"), lit(ctx), lit(hor), lit(stride)))
           .as("_ws"))
       .select(
         col("doc_id"),
@@ -62,14 +62,13 @@ object EvalQueries {
     // Window enumeration + per-window context/horizon statistics — all
     // from the fused generator's compact structs (no window arrays).
     "q_rolling_eval" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .select(
           col("doc_id"),
           col("source"),
           explode(
-            call_function(
+            call(
               "eval_window_stats",
               col("tokens"),
               lit(1),
@@ -94,7 +93,6 @@ object EvalQueries {
     // covers the start-anchored twin (FinetunePatchCrop, crop.py:149-187,
     // whose fcst_start = context + window*distance is exactly that grid).
     "q_eval_crop" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // end-anchored generator: fs = n_tok - 64 + w*16, 3 windows of
       // ctx 32 / hor 16; the kernel returns EMPTY for series shorter than
       // 96 (the old filter), and window rows carry only their own slices
@@ -104,7 +102,7 @@ object EvalQueries {
           col("doc_id"),
           col("source"),
           explode(
-            call_function(
+            call(
               "window_slices_end",
               col("tokens"),
               lit(32),
@@ -117,15 +115,14 @@ object EvalQueries {
           col("source"),
           col("_we.w").as("w"),
           col("_we.fs").as("fs"),
-          call_function("arr_sum", col("_we.ctx")).as("ctx_sum"),
-          call_function("arr_sum", col("_we.hor")).as("hor_sum"))
+          call("arr_sum", col("_we.ctx")).as("ctx_sum"),
+          call("arr_sum", col("_we.hor")).as("hor_sum"))
     }),
 
     // Same grammar at a NON-default geometry (context 48, horizon 24,
     // stride 40) — proving (ctx, hor, stride) are genuinely free
     // parameters, as in the reference's per-dataset eval configuration.
     "q_rolling_eval_alt" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       rollingWindows(s, dir, ctx = 48, hor = 24, stride = 40)
         .select(
           col("doc_id"),
@@ -134,15 +131,14 @@ object EvalQueries {
           col("fs"),
           size(col("ctx")).as("ctx_len"),
           size(col("hor")).as("hor_len"),
-          call_function("arr_sum", col("ctx")).as("ctx_sum"),
-          call_function("arr_sum", col("hor")).as("hor_sum"))
+          call("arr_sum", col("ctx")).as("ctx_sum"),
+          call("arr_sum", col("hor")).as("hor_sum"))
     }),
 
     // Naive-forecast evaluation metrics: forecast = context mean; per-window
     // fixed-point MAE over the horizon, aggregated per source (the packed
     // doubly-normalized reduction shape, loss/packed/_base.py:76-106).
     "q_eval_metrics" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // the FUSED window generator: enumeration + per-window reduction in
       // one kernel pass per doc; window rows carry 8 longs, not a copy of
       // the token array
@@ -151,7 +147,7 @@ object EvalQueries {
         .select(
           col("source"),
           explode(
-            call_function(
+            call(
               "eval_window_stats",
               col("tokens"),
               lit(1),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tier
+import graft.functions.GraftFunctions.call
 import graft.operators.Rollup
 import graft.sources.{SimpleIngest, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,7 +16,6 @@ object IngestQueries {
     // simple.py:40-87): the position-weighted quantized checksum proves
     // the TIME ORDER of the folded series, not just its multiset.
     "q_ingest_long" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       SimpleIngest
         .longToSeries(
           s.read
@@ -40,7 +40,7 @@ object IngestQueries {
           // values; `series.value` is a codegen'd array-of-struct field
           // extraction, the kernel replaces the interpreted zip_with/
           // aggregate lambda (round-3 verdict hot path).
-          call_function("arr_pos_weighted_sum_q", col("series.value"), lit(100L), lit(1L))
+          call("arr_pos_weighted_sum_q", col("series.value"), lit(100L), lit(1L))
             .as("vq_pos_sum"))
     }),
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,14 +79,13 @@ object MetricQueries {
       dir: String,
       scale: Long,
       mCol: org.apache.spark.sql.Column): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     graft.sources.TokenTable
       .raw(s, dir)
       .select(
         col("doc_id"),
         col("source"),
         explode(
-          call_function(
+          call(
             "eval_window_stats",
             col("tokens"),
             mCol,
@@ -106,7 +106,7 @@ object MetricQueries {
       .rollingWindows(s, dir)
       .withColumn(
         "naive",
-        call_function("arr_sum", col("ctx")).cast("double") / Ctx.toDouble)
+        call("arr_sum", col("ctx")).cast("double") / Ctx.toDouble)
       .select(
         col("doc_id"),
         col("source"),
@@ -164,13 +164,12 @@ object MetricQueries {
     // of the sorted context array. n_points per (source, decile) is
     // hor per window, summed — identical to counting the exploded rows.
     "q_eval_pinball" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.sources.TokenTable
         .raw(s, dir)
         .select(
           col("source"),
           explode(
-            call_function(
+            call(
               "eval_pinball_stats",
               col("tokens"),
               lit(Ctx),
@@ -289,10 +288,10 @@ object MetricQueries {
         .withColumn("hi", expr("element_at(sctx, 63)")) // ceil(64*0.975)
         .withColumn(
           "terms",
-          call_function("arr_interval_penalty_sum", col("hor"), col("lo"), col("hi"), lit(40L)))
+          call("arr_interval_penalty_sum", col("hor"), col("lo"), col("hi"), lit(40L)))
         .withColumn(
           "se_num",
-          call_function("arr_seasonal_abs_sum", col("ctx"), lit(Season)))
+          call("arr_seasonal_abs_sum", col("ctx"), lit(Season)))
         .withColumn(
           "msis_w",
           expr(
@@ -321,13 +320,13 @@ object MetricQueries {
         .withColumn("hi", expr("element_at(sctx, 63)"))
         .withColumn(
           "terms",
-          call_function("arr_interval_penalty_sum", col("hor"), col("lo"), col("hi"), lit(40L)))
+          call("arr_interval_penalty_sum", col("hor"), col("lo"), col("hi"), lit(40L)))
         .withColumn(
           "se_num",
           when(
             col("m") === MEven,
-            call_function("arr_seasonal_abs_sum", col("ctx"), lit(MEven)))
-            .otherwise(call_function("arr_seasonal_abs_sum", col("ctx"), lit(MOdd))))
+            call("arr_seasonal_abs_sum", col("ctx"), lit(MEven)))
+            .otherwise(call("arr_seasonal_abs_sum", col("ctx"), lit(MOdd))))
         .withColumn(
           "msis_w",
           expr(
@@ -361,7 +360,7 @@ object MetricQueries {
         .select(
           col("source"),
           explode(
-            call_function(
+            call(
               "eval_pinball_stats",
               col("tokens"),
               lit(Ctx),
@@ -406,11 +405,11 @@ object MetricQueries {
     "q_eval_nll" -> ((s, dir) =>
       EvalQueries
         .rollingWindows(s, dir)
-        .withColumn("ctx_sum", call_function("arr_sum", col("ctx")))
+        .withColumn("ctx_sum", call("arr_sum", col("ctx")))
         // scale-1 squared-error sum against 0 == exact integer sum of x^2
         .withColumn(
           "ctx_sumsq",
-          call_function("arr_sq_err_q_sum", col("ctx"), lit(0.0), lit(1L)))
+          call("arr_sq_err_q_sum", col("ctx"), lit(0.0), lit(1L)))
         .withColumn("mu", col("ctx_sum").cast("double") / Ctx.toDouble)
         .withColumn("var_num", lit(Ctx.toLong) * col("ctx_sumsq") - col("ctx_sum") * col("ctx_sum"))
         .withColumn(

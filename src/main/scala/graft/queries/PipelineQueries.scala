@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.call
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -98,12 +98,11 @@ object PipelineQueries {
     // the plan). Rows-only; PipelineSpec asserts banded == all-pairs and
     // that planted near-dups are found.
     "q_dedup_simhash" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val sigs = docs(s, dir)
         .select(
           col("doc_id"),
           col("source"),
-          call_function("simhash64", split(col("text"), " ")).as("sig"))
+          call("simhash64", split(col("text"), " ")).as("sig"))
       Dedup.simHashBandedPairs(sigs, "doc_id", "sig", "source", 10)
     }),
 
@@ -201,10 +200,9 @@ object PipelineQueries {
     // (3-gram shingles, 8 seeds; docs under 3 words have no shingles and
     // emit no rows — matching the oracle's n-gram enumeration).
     "q_minhash_assign" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir).select(
         col("doc_id"),
-        posexplode(call_function("minhash_affine", col("text"), lit(3), lit(8)))
+        posexplode(call("minhash_affine", col("text"), lit(3), lit(8)))
           .as(Seq("seed", "min_val")))
     }),
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.GraftFunctions.call
 import graft.operators.PadResample
 import graft.sources.TokenTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -22,14 +23,13 @@ object ResampleQueries {
   // SQL HOF lambdas — those evaluate interpreted per element and were the
   // round-3 verdict's flagged hot path.
   private def padChecks(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(
       col("doc_id"),
       col("source"),
       size(col("padded")).as("padded_len"),
-      call_function("arr_null_count", col("padded")).as("n_nulls"),
-      call_function("arr_first_data_pos", col("padded")).as("first_data_pos"),
-      call_function("arr_sum", col("padded")).as("data_sum"))
+      call("arr_null_count", col("padded")).as("n_nulls"),
+      call("arr_first_data_pos", col("padded")).as("first_data_pos"),
+      call("arr_sum", col("padded")).as("data_sum"))
   }
 
   val q: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -58,7 +58,7 @@ object ResampleQueries {
           col("doc_id"),
           col("source"),
           size(col("sub")).as("n_sub"),
-          call_function("arr_sum", col("sub")).as("sum_sub"))),
+          call("arr_sum", col("sub")).as("sum_sub"))),
 
     // GaussianFilterSubsample: binomial [1,2,1] blur (x4, exact integers)
     // then every 3rd element (resample.py:79-84).
@@ -69,14 +69,13 @@ object ResampleQueries {
           col("doc_id"),
           col("source"),
           size(col("gsub")).as("n_sub"),
-          call_function("arr_sum", col("gsub")).as("sum_blur4"))),
+          call("arr_sum", col("gsub")).as("sum_blur4"))),
 
     // PatchCrop (crop.py:30-108): the random patch-aligned training-window
     // sampler with its three variates (offset / num_patches / first) drawn
     // deterministically — P=64, min 2 / max 8 patches; the crop checksum
     // is a raw range sum the oracle recomputes from the same derivation.
     "q_patch_crop" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.operators.Crop
         .patchCrop(
           TokenTable.raw(s, dir),
@@ -93,7 +92,7 @@ object ResampleQueries {
           col("first_patch"),
           col("crop_start").cast("int").as("crop_start"),
           size(col("crop")).as("crop_len"),
-          call_function("arr_sum", col("crop")).as("crop_sum"))
+          call("arr_sum", col("crop")).as("crop_sum"))
     }),
 
     // AddVariateIndex (feature.py:26-71): each exploded variate gets a
@@ -127,7 +126,7 @@ object ResampleQueries {
           col("doc_id"),
           col("source"),
           size(col("up")).as("n_up"),
-          call_function("arr_pos_weighted_sum", col("up"), lit(0L))
+          call("arr_pos_weighted_sum", col("up"), lit(0L))
             .as("pos_weighted_sum")))
   )
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.Tier
-import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.call
 import graft.operators.{GapFill, Rollup}
 import graft.sources.{LsfCsv, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,7 +20,6 @@ object StatQueries {
   /** Shared patch scaffold for the per-patch precondition queries: one row
    * per (doc, width-64 patch) with the patch values as doubles. */
   private def patchVals(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     TokenTable
       .raw(s, dir)
       .select(
@@ -120,15 +119,14 @@ object StatQueries {
     // over the preconditioned values (which, unlike raw tokens, go
     // negative — the scaler's abs() is load-bearing).
     "q_scaler_absmean" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .withColumn("vals", expr("CAST(tokens AS array<double>)"))
-        .withColumn("f", expr("precond_forward(vals, 4, 'chebyshev')"))
+        .withColumn("f", call("precond_forward", col("vals"), lit(4), lit("chebyshev")))
         .select(
           col("doc_id"),
           col("source"),
-          call_function("arr_abs_sum_q", col("f"), lit(1000L)).as("absq"),
+          call("arr_abs_sum_q", col("f"), lit(1000L)).as("absq"),
           size(col("f")).as("n"))
         .withColumn("abs_mean", expr("CAST(absq AS DOUBLE) / 1000.0 / CAST(n AS DOUBLE)"))
     }),
@@ -152,12 +150,12 @@ object StatQueries {
     // semantics the whole-array variant cannot express.
     "q_precond_patch" -> ((s, dir) =>
       patchVals(s, dir)
-        .withColumn("f", expr("precond_forward(vals, 4, 'chebyshev')"))
+        .withColumn("f", call("precond_forward", col("vals"), lit(4), lit("chebyshev")))
         .select(
           col("doc_id"),
           col("patch_idx"),
           size(col("f")).as("patch_len"),
-          call_function("arr_sum_q", col("f"), lit(1000L)).as("sum_q"))),
+          call("arr_sum_q", col("f"), lit(1000L)).as("sum_q"))),
 
     // Per-patch REVERSE precondition round-trip (PatchReversePrecondition,
     // transform/patch_precondition.py:222-305): forward-then-reverse inside
@@ -169,22 +167,25 @@ object StatQueries {
       patchVals(s, dir)
         .withColumn(
           "r",
-          expr("precond_reverse(precond_forward(vals, 4, 'chebyshev'), 4, 'chebyshev')"))
+          call(
+            "precond_reverse",
+            call("precond_forward", col("vals"), lit(4), lit("chebyshev")),
+            lit(4),
+            lit("chebyshev")))
         .select(
           col("doc_id"),
           col("patch_idx"),
           size(col("r")).as("patch_len"),
-          call_function("arr_sum_q", col("r"), lit(1000L)).as("sum_q"))),
+          call("arr_sum_q", col("r"), lit(1000L)).as("sum_q"))),
 
     // PackFields / FlatPackCollection / SequencifyField
     // (transform/reshape.py:26-123): patches flattened back to the token
     // axis, packed with the position field along the variate axis, and a
     // scalar broadcast to a sequence — all row-local, checksummed exactly.
     "q_pack_fields" -> ((s, dir) => {
-      GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
-        .withColumn("patches", call_function("arr_chunk", col("tokens"), lit(64)))
+        .withColumn("patches", call("arr_chunk", col("tokens"), lit(64)))
         .transform(d => graft.operators.Reshape.flatPack(d, "patches", "flat"))
         // AddTimeIndex's position field is just the integer range — no
         // identity lambda needed (sequence() is a codegen'd builtin)
@@ -194,10 +195,10 @@ object StatQueries {
         .select(
           col("doc_id"),
           size(col("packed")).as("packed_len"),
-          call_function("arr_sum", col("packed")).as("packed_sum"),
+          call("arr_sum", col("packed")).as("packed_sum"),
           expr("element_at(packed, 1)").as("first_v"),
           expr("element_at(packed, -1)").as("last_v"),
-          call_function("arr_sum", col("rep")).as("rep_sum"))
+          call("arr_sum", col("rep")).as("rep_sum"))
     }),
 
     // SampleDimension (transform/resample.py:29-66): subsample each

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tier
+import graft.functions.GraftFunctions.call
 import graft.operators.{Retention, Rollup, SeriesAnalytics, Sketches}
 import graft.sources.TokenTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -48,14 +49,13 @@ object TokenRollupQueries {
     // Raw tier + per-row token-array-equality invariant (as an exact
     // checksum: sum / first / last over the materialized array).
     "q_raw_tokens" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .select(
           col("doc_id"),
           col("source"),
           col("n_tok"),
-          call_function("arr_sum", col("tokens")).as("tok_sum"),
+          call("arr_sum", col("tokens")).as("tok_sum"),
           expr("element_at(tokens, 1)").as("tok_first"),
           expr("element_at(tokens, -1)").as("tok_last"))
     }),
@@ -105,13 +105,12 @@ object TokenRollupQueries {
     // a 128-bit-exact sum of squares per (source, bucket) — the unbounded-
     // group-size path for the variance statistic.
     "q_rollup_stats" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       TokenTable
         .points(s, dir)
         .groupBy(
           col("source"),
           expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"))
-        .agg(call_function("tier_stats", col("tok")).as("st"))
+        .agg(call("tier_stats", col("tok")).as("st"))
         .select(
           col("source"),
           col("bucket"),
@@ -130,7 +129,6 @@ object TokenRollupQueries {
     // token array into width-64 patches (last patch ragged), row-local
     // slice — no shuffle; stats checksummed per patch.
     "q_patchify" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       TokenTable
         .raw(s, dir)
         .select(
@@ -144,7 +142,7 @@ object TokenRollupQueries {
           size(col("patch")).as("patch_len"),
           expr("array_min(patch)").as("p_min"),
           expr("array_max(patch)").as("p_max"),
-          call_function("arr_sum", col("patch")).as("p_sum"))
+          call("arr_sum", col("patch")).as("p_sum"))
     }),
 
     // Retention enforcement, compact-then-expire (Retention.safeExpire):

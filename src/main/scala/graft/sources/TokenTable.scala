@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,7 +103,6 @@ object TokenTable {
    * interpreted lambda per TOKEN, a constant-factor tax on every
    * raw()-based query at corpus scale. */
   def raw(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read
       .parquet(s"$sfDir/documents.parquet")
       .select(
@@ -122,7 +122,7 @@ object TokenTable {
       // suffices. See points(balanceFanout) for the opposite regime.
       .select(
         col("d").cast("string").as("doc_id"),
-        call_function(
+        call(
           "affine_mod_seq",
           col("d"),
           col("n_tok"),

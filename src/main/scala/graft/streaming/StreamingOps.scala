@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -337,7 +338,6 @@ object StreamingOps {
    * batch: timestamps delta-of-delta encoded, values Gorilla- AND
    * Chimp-encoded (the batch table's exact column shape). */
   private def encodePayloadSegments(batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     batch
       .groupBy(col("source"), col("bucket"))
       .agg(
@@ -347,11 +347,11 @@ object StreamingOps {
         col("source"),
         col("bucket"),
         size(col("series")).as("n_windows"),
-        call_function("dod_encode", expr("CAST(series.window_start AS array<bigint>)"))
+        call("dod_encode", expr("CAST(series.window_start AS array<bigint>)"))
           .as("payload_ts"),
-        call_function("gorilla_encode", expr("CAST(series.value AS array<double>)"))
+        call("gorilla_encode", expr("CAST(series.value AS array<double>)"))
           .as("payload_values"),
-        call_function("chimp_encode", expr("CAST(series.value AS array<double>)"))
+        call("chimp_encode", expr("CAST(series.value AS array<double>)"))
           .as("payload_values_chimp"))
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DeltaOfDelta, GorillaCodec, GraftFunctions}
+import graft.functions.{DeltaOfDelta, GorillaCodec}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -129,7 +129,6 @@ class CodecSpec extends AnyFunSuite {
 /** Expression-level round-trip through a real Spark plan. */
 class CodecExpressionSpec extends SparkSpec {
   test("catalyst expressions round-trip inside a SQL plan") {
-    GraftFunctions.register(spark)
     val n = spark
       .sql("""SELECT count(*) AS bad FROM (
         |  SELECT id, transform(sequence(0, CAST(id % 50 AS INT) + 1),
@@ -146,7 +145,6 @@ class CodecExpressionSpec extends SparkSpec {
 
   test("payload compaction == one-shot encode, byte-for-byte") {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     import spark.implicits._
     // one key, 12 windows split into three 4-window segments — with the
     // LAST time block arriving as segment 0 (an out-of-order backfill):

@@ -1,7 +1,11 @@
 package graft
 
 import graft.core.{PatchSizing, Tier}
-import graft.operators.{Downsample, Validity}
+import graft.functions.GraftFunctions
+import graft.operators.{Downsample, Rollup, Validity}
+import graft.sources.TokenTable
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Round-2 operator extras: public extension registration, patch-size
@@ -21,6 +25,48 @@ class OperatorExtrasSpec extends SparkSpec {
       .collect()(0)
     assert(row.getDouble(0) == 2.25)
     assert(row.getLong(1) == 1000L * 3000L + 2000L * 4000L)
+  }
+
+  test("a NULL or column where a literal belongs names the function and the argument") {
+    def failure(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    }
+    val from = "FROM (SELECT array(1, 2, 3) AS tokens, 2 AS n_tok) t"
+    for (arg <- Seq("NULL", "n_tok")) {
+      val msg = failure(s"SELECT arr_chunk(tokens, $arg) $from")
+      assert(msg.contains("arr_chunk: argument 2 must be a non-null literal"), msg)
+    }
+  }
+
+  test("building DataFrames leaves the session's function registry untouched") {
+    val bare = spark.newSession()
+    val registry = bare.sessionState.functionRegistry
+    val names = GraftFunctions.builders.map(_._1)
+    names.foreach(n => registry.dropFunction(FunctionIdentifier(n)))
+    def registered = names.filter(n => registry.functionExists(FunctionIdentifier(n)))
+    assert(registered.isEmpty)
+    def countHash(df: DataFrame): (Long, Long) = {
+      val r = df
+        .select(
+          count(lit(1)),
+          coalesce(sum(hash(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).cast("long")), lit(0L)))
+        .first()
+      (r.getLong(0), r.getLong(1))
+    }
+    val dir = sf("sf0.001")
+    val builds: Seq[(String, SparkSession => DataFrame)] =
+      ("rollupFromPoints" -> ((s: SparkSession) =>
+        Rollup.rollupFromPoints(TokenTable.points(s, dir), Tier.OneMinute))) +:
+        Seq("q_rollup_late", "q_codec_chimp_roundtrip", "q_precond_roundtrip", "q_dedup_clusters", "q_eval_metrics")
+          .map(q => q -> ((s: SparkSession) => SparkEntry.queries(q)(s, dir)))
+    for ((name, build) <- builds) {
+      assert(countHash(build(bare)) == countHash(build(spark)), name)
+    }
+    assert(registered.isEmpty, s"building DataFrames registered: ${registered.mkString(", ")}")
+    // an unknown name fails when the column is built, not at analysis
+    val e = intercept[IllegalArgumentException](GraftFunctions.call("arr_no_such", col("x")))
+    assert(e.getMessage.contains("arr_no_such"), e.getMessage)
   }
 
   test("patch-size resolution: reference DEFAULT_RANGES semantics") {
@@ -271,7 +317,6 @@ class OperatorExtrasSpec extends SparkSpec {
   }
 
   test("dot_q returns NULL for dimension-mismatched vectors (zip_with parity)") {
-    graft.functions.GraftFunctions.register(spark)
     val row = spark
       .sql(
         "SELECT dot_q(array(1.0D, 2.0D), array(3.0D)) AS mismatch, " +
@@ -454,7 +499,6 @@ class OperatorExtrasSpec extends SparkSpec {
   test("tier_stats_decl == tier_stats bit-for-bit, including the 128-bit carry") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(3)
     // group "a": random values (negatives included); group "b": six
     // Int.MaxValue rows — sumsq = 6 * (2^31-1)^2 ≈ 2.77e19 > 2^64, so the

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.Tier
-import graft.functions.GraftFunctions
 import graft.operators.{Dedup, Downsample, GapFill, Rollup}
 import graft.sources.TokenTable
 import org.apache.spark.sql.functions._
@@ -14,7 +13,6 @@ import org.apache.spark.sql.functions._
 class PipelineE2ESpec extends SparkSpec {
 
   test("documents → dedup → rollup → gap-fill → LTTB → codec payload, invariants at every stage") {
-    GraftFunctions.register(spark)
     val dir = sf("sf0.001")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val nDocs = docs.count()
@@ -106,7 +104,6 @@ class PipelineE2ESpec extends SparkSpec {
 
   test("tier lifecycle: rollup → late merge → compact-then-expire → alerts, invariants chained") {
     import graft.operators.{Retention, SeriesAnalytics}
-    GraftFunctions.register(spark)
     val dir = sf("sf0.001")
     val points = TokenTable.points(spark, dir).cache()
 
@@ -172,7 +169,6 @@ class PipelineE2ESpec extends SparkSpec {
   }
 
   test("builder → pad → patchify → precondition window decode, invariants at every stage") {
-    GraftFunctions.register(spark)
     val dir = sf("sf0.001")
     import graft.operators.PadResample
     import graft.sources.UnionBuilder

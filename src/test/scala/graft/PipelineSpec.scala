@@ -139,8 +139,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("simhash finds the planted near-dup pairs at small hamming distance") {
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val exact = Dedup
       .ngramJaccardPairs(docs, "doc_id", "text", "source", 3, 0.5)
       .select("doc_a", "doc_b")

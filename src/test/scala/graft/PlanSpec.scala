@@ -15,12 +15,19 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
-  /** Plan minus the intentional fan-out-balancing repartition lines
-   * (TokenTable.points/raw shuffle the tiny pre-explode doc rows to full
-   * parallelism, tagged REPARTITION_BY_NUM) — the assertions below count
-   * only the requirement-driven exchanges each operator itself adds. */
-  private def opsOnly(plan: String): String =
-    plan.linesIterator.filterNot(_.contains("REPARTITION_BY_NUM")).mkString("\n")
+  /** The fan-out-balancing exchange `TokenTable.points(balanceFanout =
+   * true)` adds: the pre-explode doc rows hashed on the doc column `d`. */
+  private val balancing = """Exchange hashpartitioning\(d#\d+L?, \d+\), REPARTITION_BY_NUM""".r
+
+  /** Plan minus that one balancing exchange, so the assertions below
+   * count only the requirement-driven exchanges each operator itself
+   * adds. Any other REPARTITION_BY_NUM exchange fails the test. */
+  private def opsOnly(plan: String): String = {
+    val (balance, ops) = plan.linesIterator.toSeq.partition(l => balancing.findFirstIn(l).isDefined)
+    assert(balance.size <= 1, s"more than one fan-out-balancing exchange:\n$plan")
+    assert(!ops.exists(_.contains("REPARTITION_BY_NUM")), s"unexpected repartition(n, col):\n$plan")
+    ops.mkString("\n")
+  }
 
   test("rollup plan: column pruning reaches the scan; partial aggregation before shuffle") {
     val df = Rollup.rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
@@ -77,7 +84,6 @@ class PlanSpec extends SparkSpec {
     // the codegen span of EVERY expression in the same projection (the
     // dot_q lesson). Each kernel now has a real doGenCode: assert a
     // projection evaluating them keeps the * (codegen) marker.
-    graft.functions.GraftFunctions.register(spark)
     val df = spark
       .range(100)
       .selectExpr(
@@ -121,7 +127,6 @@ class PlanSpec extends SparkSpec {
     // Round 3 left lsh_sig/simhash64 as the last two CodegenFallback
     // expressions; the array kernels replaced interpreted HOF lambdas.
     // All must keep the projection's * (codegen) span.
-    graft.functions.GraftFunctions.register(spark)
     val df = spark
       .range(50)
       .selectExpr(

@@ -174,7 +174,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming codec-payload sink: decoded segments == finalized tier windows; replay skipped") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.jobs.SnapshotStore
     val base = java.nio.file.Files.createTempDirectory("graft-stream-codec-").toString
     val store = new SnapshotStore(base)
@@ -628,7 +627,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming KMV sketch: bounded keyed state merges across micro-batches == batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val in = MemoryStream[(String, Long)]
     val q = in
       .toDF()
