@@ -36,7 +36,7 @@ final case class TierRow(
     sum_tok: Long,
     cnt_tok: Long,
     avg_tok: Double,
-    sumsq_tok: Long, // exact to ~3.6e9 points/group; TierStats UDAF beyond
+    sumsq_tok: Long, // exact to ~3.6e9 points/group; tier_stats_decl struct beyond
     var_tok: Option[Double]) // sample variance (correction=1), null if cnt=1
 
 /** Retention tiers: window width on the token-position (seconds) axis. */

@@ -55,12 +55,12 @@ object GraftFunctions {
       "chimp_encode" -> (args => ChimpEncode(args.head)),
       "chimp_decode" -> (args => ChimpDecode(args.head)),
       "simhash64" -> (args => SimHash64(args.head)),
-      // fused single-buffer tier aggregate (TypedImperativeAggregate): a
-      // bare AggregateFunction, wrapped by the analyzer in SQL and by call
-      "tier_stats" -> (args => TierStats(args.head)),
-      // codegen DeclarativeAggregate twin of tier_stats (same 128-bit-exact
-      // sum of squares; plain-expression update/merge in the hash-agg loop)
+      // fused single-buffer tier aggregate (DeclarativeAggregate, 128-bit-
+      // exact sum of squares): a bare AggregateFunction, wrapped by the
+      // analyzer in SQL and by call; `tier_stats` is its older name, kept
+      // for the frozen Bench
       "tier_stats_decl" -> (args => TierStatsDecl(args.head)),
+      "tier_stats" -> (args => TierStatsDecl(args.head)),
       // bounded-state k-minimum-values sketch (TypedImperativeAggregate)
       "kmv_kmin" -> (args => KmvKMin(args.head, args.int(1))),
       "dot_q" -> (args => DotQ(args.head, args(1))),

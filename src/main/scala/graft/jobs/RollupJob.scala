@@ -35,41 +35,11 @@ object RollupJob {
    * This is the explicit skew discipline the north rule asks for; the
    * FFD packing of the reference (data/loader.py:103-209) solves the same
    * uneven-token-mass problem at batch level (SURVEY.md §2.8). */
-  def rollupSalted(points: DataFrame, tier: String, salt: Int): DataFrame = {
-    val w = Tier.widths(tier)
-    val partial = points
-      .groupBy(
-        pmod(hash(col("doc_id")), lit(salt)).as("_salt"),
-        col("source"),
-        expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"),
-        expr(s"CAST(pos - pos % $w AS INT)").as("window_start"))
-      .agg(
-        min(col("tok")).as("p_min"),
-        max(col("tok")).as("p_max"),
-        sum(col("tok").cast("long")).as("p_sum"),
-        count(lit(1)).as("p_cnt"),
-        sum((col("tok").cast("long")) * col("tok")).as("p_sumsq"))
-    partial
-      .groupBy(col("source"), col("bucket"), col("window_start"))
-      .agg(
-        min(col("p_min")).as("min_tok"),
-        max(col("p_max")).as("max_tok"),
-        sum(col("p_sum")).as("sum_tok"),
-        sum(col("p_cnt")).as("cnt_tok"),
-        sum(col("p_sumsq")).as("sumsq_tok"))
-      .select(
-        col("source"),
-        col("bucket"),
-        lit(tier).as("tier"),
-        col("window_start"),
-        col("min_tok"),
-        col("max_tok"),
-        col("sum_tok"),
-        col("cnt_tok"),
-        (col("sum_tok").cast("double") / col("cnt_tok").cast("double")).as("avg_tok"),
-        col("sumsq_tok"),
-        expr(Rollup.varExpr).as("var_tok"))
-  }
+  def rollupSalted(points: DataFrame, tier: String, salt: Int): DataFrame =
+    Rollup.finishTier(
+      Rollup.mergeState(
+        Rollup.pointState(points, tier, pmod(hash(col("doc_id")), lit(salt)).as("_salt"))),
+      tier)
 
   /** Run the full ladder; returns per-stage results.
    *

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.core.Tier
 import graft.functions.GraftFunctions.call
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -35,42 +35,37 @@ object Rollup {
    * reference's PackedStdScaler (packed_scaler.py:78-122, correction=1).
    * One fixed double expression over exact longs, so Spark and the SQL
    * oracle agree bitwise; null when the group has a single point. */
-  private[graft] val varExpr =
+  private val varExpr =
     "CASE WHEN cnt_tok > 1 THEN " +
       "(CAST(sumsq_tok AS DOUBLE) - CAST(sum_tok AS DOUBLE) * CAST(sum_tok AS DOUBLE) " +
       "/ CAST(cnt_tok AS DOUBLE)) / CAST(cnt_tok - 1 AS DOUBLE) " +
       "ELSE NULL END"
 
-  /** Tier windows on the position axis: `window_start = (pos div W) * W`.
+  /** Point kernel: exact tier state (source, bucket, window_start,
+   * min_tok, max_tok, sum_tok, cnt_tok, sumsq_tok) of `tier` from points
+   * (source, pos, tok), grouped additionally by `extraKeys` (which do not
+   * appear in the output — the salted phase 1 keys its partials on a salt
+   * this way).
    *
-   * sumsq_tok is an exact Long: tok^2 < 2.53e9, so the column is exact up
-   * to ~3.6e9 points per (source, bucket, window) group. Beyond that (the
-   * extreme 10^12-doc tail) use
-   * [[graft.functions.expressions.TierStatsDecl]] (`tier_stats_decl`) —
-   * 128-bit-exact sum of squares at measured parity with the built-in
-   * aggregates (codegen DeclarativeAggregate). The TypedImperativeAggregate
-   * form ([[graft.functions.expressions.TierStats]]) computes the same
-   * values but pays ~2-4x for interpreted per-row eval on the
-   * ObjectHashAggregate path — its earlier "parity" reading was a
-   * count()-pruning measurement artifact (BENCH.md protocol change). */
-  def rollupFromPoints(points: DataFrame, tier: String): DataFrame = {
+   * ONE fused aggregate buffer (tier_stats_decl, codegen
+   * DeclarativeAggregate) instead of five built-in buffers: identical
+   * values, but roughly half the per-point hash-map traffic — measured at
+   * 1.024B points this is the difference between 0.65-0.82 and 0.91-1.02
+   * N->4N wall efficiency (BENCH.md round-7: the five-buffer shape
+   * saturates shared memory bandwidth at 16 threads; cpu-per-point ratios
+   * 1.15-1.37 vs 0.94-1.06 fused). The 128-bit sumsq is cast back to LONG
+   * for schema stability: tok^2 < 2.53e9, so the column is exact up to
+   * ~3.6e9 points per group, and past that the ANSI cast fails LOUDLY
+   * instead of wrapping; read the `tier_stats_decl` struct directly when
+   * groups can exceed that. */
+  private[graft] def pointState(points: DataFrame, tier: String, extraKeys: Column*): DataFrame = {
     val w = Tier.widths(tier)
-    // ONE fused aggregate buffer (tier_stats_decl, codegen
-    // DeclarativeAggregate) instead of five built-in buffers: identical
-    // values, but roughly half the per-point hash-map traffic — measured
-    // at 1.024B points this is the difference between 0.65-0.82 and
-    // 0.91-1.02 N->4N wall efficiency (BENCH.md round-7: the five-buffer
-    // shape saturates shared memory bandwidth at 16 threads; cpu-per-point
-    // ratios 1.15-1.37 vs 0.94-1.06 fused). The 128-bit sumsq is cast
-    // back to LONG for schema stability — past ~3.6e9 points/group the
-    // ANSI cast fails LOUDLY where the old five-buffer sum wrapped
-    // silently; keep the struct form (tier_stats_decl direct) when groups
-    // can exceed that.
     points
       .groupBy(
-        col("source"),
-        expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"),
-        expr(s"CAST(pos - pos % $w AS INT)").as("window_start"))
+        extraKeys ++ Seq(
+          col("source"),
+          expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"),
+          expr(s"CAST(pos - pos % $w AS INT)").as("window_start")): _*)
       .agg(call("tier_stats_decl", col("tok")).as("_st"))
       .select(
         col("source"),
@@ -81,19 +76,46 @@ object Rollup {
         col("_st.sum_tok").as("sum_tok"),
         col("_st.cnt_tok").as("cnt_tok"),
         col("_st.sumsq_tok").cast("long").as("sumsq_tok"))
-      .select(
-        col("source"),
-        col("bucket"),
-        lit(tier).as("tier"),
-        col("window_start"),
-        col("min_tok"),
-        col("max_tok"),
-        col("sum_tok"),
-        col("cnt_tok"),
-        (col("sum_tok").cast("double") / col("cnt_tok").cast("double")).as("avg_tok"),
-        col("sumsq_tok"),
-        expr(varExpr).as("var_tok"))
   }
+
+  /** Merge kernel: tier-state rows (possibly several per key) into one
+   * exact state row per (source, bucket, `windowStart`). Exact because
+   * every state column is a min/max/sum over disjoint point sets; pass
+   * the window truncated to a coarser width to cascade a tier. */
+  private[graft] def mergeState(
+      rows: DataFrame,
+      windowStart: Column = col("window_start")): DataFrame =
+    rows
+      .groupBy(col("source"), col("bucket"), windowStart)
+      .agg(
+        min(col("min_tok")).as("min_tok"),
+        max(col("max_tok")).as("max_tok"),
+        sum(col("sum_tok")).as("sum_tok"),
+        sum(col("cnt_tok")).as("cnt_tok"),
+        sum(col("sumsq_tok")).as("sumsq_tok"))
+
+  /** Finishing step: tier state -> the 11-column tier row
+   * ([[graft.core.TierRow]] order), adding `tier` and the derived
+   * `avg_tok` / `var_tok`. */
+  private[graft] def finishTier(state: DataFrame, tier: String): DataFrame =
+    state.select(
+      col("source"),
+      col("bucket"),
+      lit(tier).as("tier"),
+      col("window_start"),
+      col("min_tok"),
+      col("max_tok"),
+      col("sum_tok"),
+      col("cnt_tok"),
+      (col("sum_tok").cast("double") / col("cnt_tok").cast("double")).as("avg_tok"),
+      col("sumsq_tok"),
+      expr(varExpr).as("var_tok"))
+
+  /** Tier windows on the position axis: `window_start = (pos div W) * W`;
+   * see [[pointState]] for the aggregate and the exactness range of
+   * `sumsq_tok`. */
+  def rollupFromPoints(points: DataFrame, tier: String): DataFrame =
+    finishTier(pointState(points, tier), tier)
 
   /** Reaggregate a finer tier into a coarser one (sum/count/min/max compose;
    * avg derived). Input and output share the (source, bucket) key, so with
@@ -101,29 +123,9 @@ object Rollup {
    * co-partitioned aggregation. */
   def reaggregate(finer: DataFrame, toTier: String): DataFrame = {
     val w = Tier.widths(toTier)
-    finer
-      .groupBy(
-        col("source"),
-        col("bucket"),
-        expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start"))
-      .agg(
-        min(col("min_tok")).as("min_tok"),
-        max(col("max_tok")).as("max_tok"),
-        sum(col("sum_tok")).as("sum_tok"),
-        sum(col("cnt_tok")).as("cnt_tok"),
-        sum(col("sumsq_tok")).as("sumsq_tok"))
-      .select(
-        col("source"),
-        col("bucket"),
-        lit(toTier).as("tier"),
-        col("window_start"),
-        col("min_tok"),
-        col("max_tok"),
-        col("sum_tok"),
-        col("cnt_tok"),
-        (col("sum_tok").cast("double") / col("cnt_tok").cast("double")).as("avg_tok"),
-        col("sumsq_tok"),
-        expr(varExpr).as("var_tok"))
+    finishTier(
+      mergeState(finer, expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start")),
+      toTier)
   }
 
   /** Incremental late-data reconciliation: fold a (small) delta of
@@ -194,31 +196,6 @@ object Rollup {
    * points REPLACES the tier instead of reconciling it). */
   val DefaultMaxAffectedWindows: Long = 100000000L
 
-  /** Re-merge tier-state rows (possibly several per key) into one exact
-   * row per (source, bucket, window_start) with the derived columns
-   * recomputed — the single merge kernel behind both mergeLate paths. */
-  private def remergeState(rows: DataFrame, tier: String): DataFrame =
-    rows
-      .groupBy(col("source"), col("bucket"), col("window_start"))
-      .agg(
-        min(col("min_tok")).as("min_tok"),
-        max(col("max_tok")).as("max_tok"),
-        sum(col("sum_tok")).as("sum_tok"),
-        sum(col("cnt_tok")).as("cnt_tok"),
-        sum(col("sumsq_tok")).as("sumsq_tok"))
-      .select(
-        col("source"),
-        col("bucket"),
-        lit(tier).as("tier"),
-        col("window_start"),
-        col("min_tok"),
-        col("max_tok"),
-        col("sum_tok"),
-        col("cnt_tok"),
-        (col("sum_tok").cast("double") / col("cnt_tok").cast("double")).as("avg_tok"),
-        col("sumsq_tok"),
-        expr(varExpr).as("var_tok"))
-
   /** [[mergeLate]] plus a release hook: the delta aggregate is persisted
    * (it feeds the affected-key split AND the merge union — one
    * computation instead of three), and long-lived callers that merge
@@ -279,13 +256,13 @@ object Rollup {
           tierTable.join(broadcast(affectedKeys), keys, "left_anti")
         val affected =
           tierTable.join(broadcast(affectedKeys), keys, "left_semi")
-        val merged = remergeState(affected.unionByName(delta), tier)
+        val merged = finishTier(mergeState(affected.unionByName(delta)), tier)
         // the equi-join fronts its keys — restore the tier table's own
         // column order so merge output unions cleanly with unmerged tables
         untouched.unionByName(merged).select(tierTable.columns.map(col): _*)
       } else {
-        remergeState(
-          tierTable.select(stateCols: _*).unionByName(delta.select(stateCols: _*)),
+        finishTier(
+          mergeState(tierTable.select(stateCols: _*).unionByName(delta.select(stateCols: _*))),
           tier)
           .select(tierTable.columns.map(col): _*)
       }

@@ -222,22 +222,7 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        var release: () => Unit = () => ()
-        try {
-          commitBatchOnce(store, table, s"stream_$queryName", batchId, batch) { snaps =>
-            snaps.lastOption match {
-              case Some(prev) =>
-                val (m, rel) = graft.operators.Rollup
-                  .mergeLateReleasable(store.read(spark, prev), batch, tier)
-                release = rel
-                m
-              case None =>
-                graft.operators.Rollup.rollupFromPoints(batch, tier)
-            }
-          }
-        } finally release() // commit materialized the merge; drop the delta cache
-        ()
+        commitFoldedBatch(store, table, s"stream_$queryName", batchId, batch, tier)(identity)
       }
 
   /** Streaming tier MAINTENANCE — the lifecycle composed into one sink
@@ -287,33 +272,11 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        def mergeInto(
-            prev: Option[graft.jobs.SnapshotInfo],
-            tier: String): (DataFrame, () => Unit) =
-          prev match {
-            case Some(p) =>
-              graft.operators.Rollup.mergeLateReleasable(
-                // the stored fine table carries the audit flag; the merge
-                // kernel re-derives it from scratch each batch
-                store.read(spark, p).drop("retained_uncovered"), batch, tier)
-            case None =>
-              (graft.operators.Rollup.rollupFromPoints(batch, tier), () => ())
-          }
         // coarse first: it is the fine tier's expiry coverage
-        var relCoarse: () => Unit = () => ()
-        try {
-          commitBatchOnce(store, coarseTable, s"stream_$queryName", batchId, batch) { snaps =>
-            val (m, rel) = mergeInto(snaps.lastOption, coarseTier)
-            relCoarse = rel
-            m
-          }
-        } finally relCoarse()
-        var relFine: () => Unit = () => ()
-        try {
-          commitBatchOnce(store, fineTable, s"stream_$queryName", batchId, batch) { snaps =>
-            val (merged, rel) = mergeInto(snaps.lastOption, fineTier)
-            relFine = rel
+        commitFoldedBatch(store, coarseTable, s"stream_$queryName", batchId, batch, coarseTier)(
+          identity)
+        commitFoldedBatch(store, fineTable, s"stream_$queryName", batchId, batch, fineTier) {
+          merged =>
             // frontier over the (cardinality-bounded) TIER, not the points;
             // monotone across batches because the merge never drops the max
             val maxW = merged
@@ -327,11 +290,39 @@ object StreamingOps {
                 s"tierMaintenanceSink: coverage table $coarseTable has no " +
                   "snapshot — the coarse merge commits first"))
             graft.operators.Retention
-              .safeExpire(merged, store.read(spark, coarseNow), coarseTier, horizon)
-          }
-        } finally relFine()
-        ()
+              .safeExpire(merged, store.read(batch.sparkSession, coarseNow), coarseTier, horizon)
+        }
       }
+  }
+
+  /** Commits the micro-batch `batch` of raw points folded into the latest
+   * snapshot of the `tier` table `table` (a plain rollup while the table
+   * is empty), passed through `finish`, under the [[commitBatchOnce]]
+   * contract. The merge's delta cache is released once the commit has
+   * materialized the result. A stored `retained_uncovered` audit flag is
+   * dropped before the merge; the maintenance sink's expiry re-derives it
+   * each batch. */
+  private def commitFoldedBatch(
+      store: graft.jobs.SnapshotStore,
+      table: String,
+      stage: String,
+      batchId: Long,
+      batch: DataFrame,
+      tier: String)(finish: DataFrame => DataFrame): Unit = {
+    var release: () => Unit = () => ()
+    try {
+      commitBatchOnce(store, table, stage, batchId, batch) { snaps =>
+        finish(snaps.lastOption match {
+          case Some(prev) =>
+            val (merged, rel) = graft.operators.Rollup.mergeLateReleasable(
+              store.read(batch.sparkSession, prev).drop("retained_uncovered"), batch, tier)
+            release = rel
+            merged
+          case None =>
+            graft.operators.Rollup.rollupFromPoints(batch, tier)
+        })
+      }
+    } finally release()
   }
 
   /** One payload-segment row per (source, bucket) of a finalized-window

@@ -496,34 +496,66 @@ class OperatorExtrasSpec extends SparkSpec {
     assert(got.size == 5)
   }
 
-  test("tier_stats_decl == tier_stats bit-for-bit, including the 128-bit carry") {
+  test("tier_stats_decl == a BigInt reference, codegen and interpreted, incl. the carry") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(3)
     // group "a": random values (negatives included); group "b": six
     // Int.MaxValue rows — sumsq = 6 * (2^31-1)^2 ≈ 2.77e19 > 2^64, so the
-    // unsigned-overflow carry MUST fire for the declarative form to agree
+    // unsigned-overflow carry MUST fire for the 128-bit sum to be right
     val rows =
       Seq.fill(4000)(("a", rnd.nextInt())) ++
         Seq.fill(6)(("b", Int.MaxValue)) ++
         Seq(("c", 0)) // single zero: min=max=sum=sumsq=0
-    def agg(fn: String) = rows
-      .toDF("k", "tok")
-      .repartition(7)
-      .groupBy("k")
-      .agg(call_function(fn, col("tok")).as("st"))
-      .select(col("k"), col("st.min_tok"), col("st.max_tok"), col("st.sum_tok"),
-        col("st.cnt_tok"), col("st.sumsq_tok"))
-      .collect()
-      .map(r => r.getString(0) -> r.toSeq.tail)
-      .toMap
-    val imp = agg("tier_stats")
-    val dec = agg("tier_stats_decl")
-    assert(dec == imp, s"decl vs imperative mismatch:\n$dec\n$imp")
-    // and both match the independent BigInt reference on the carry group
-    val want = BigInt(Int.MaxValue.toLong) * Int.MaxValue * 6
-    assert(BigDecimal(imp("b")(4).asInstanceOf[java.math.BigDecimal]) == BigDecimal(want))
-    assert(want > (BigInt(1) << 64), "test must actually exceed 2^64")
+    // independent reference: Int min/max, Long sum/count, BigInt sumsq
+    val want: Map[String, Seq[Any]] = rows.groupBy(_._1).map { case (k, g) =>
+      val v = g.map(_._2)
+      k -> Seq[Any](v.min, v.max, v.map(_.toLong).sum, v.size.toLong,
+        BigDecimal(v.map(x => BigInt(x) * x).sum))
+    }
+    val carry = BigInt(Int.MaxValue.toLong) * Int.MaxValue * 6
+    assert(want("b")(4) == BigDecimal(carry))
+    assert(carry > (BigInt(1) << 64), "test must actually exceed 2^64")
+    def agg(fn: String, nPart: Int, codegen: Boolean) = {
+      val df = rows
+        .toDF("k", "tok")
+        .repartition(nPart)
+        .groupBy("k")
+        .agg(call_function(fn, col("tok")).as("st"))
+        .select(col("k"), col("st.min_tok"), col("st.max_tok"), col("st.sum_tok"),
+          col("st.cnt_tok"), col("st.sumsq_tok"))
+      val got = df
+        .collect()
+        .map(r => r.getString(0) -> Seq[Any](r.getInt(1), r.getInt(2), r.getLong(3),
+          r.getLong(4), BigDecimal(r.getDecimal(5))))
+        .toMap
+      // whole-stage codegen spans print as "*(n)" operator prefixes
+      val plan = df.queryExecution.executedPlan.toString
+      assert("""\*\(\d+\)""".r.findFirstIn(plan).isDefined == codegen, plan)
+      got
+    }
+    // one partition: the carry fires in the update path; seven: partial
+    // buffers of the carry group merge across partitions
+    def check(codegen: Boolean): Unit = for (nPart <- Seq(1, 7)) {
+      val got = agg("tier_stats_decl", nPart, codegen)
+      assert(got == want, s"codegen=$codegen, repartition($nPart):\n$got\n$want")
+      assert(agg("tier_stats", nPart, codegen) == got,
+        s"codegen=$codegen, repartition($nPart): tier_stats")
+    }
+    check(codegen = true)
+    // interpreted eval of the update/merge/evaluate expressions: the
+    // LEGACY-mode wrapping add and the carry identity outside codegen
+    val interpreted = Seq(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      check(codegen = false)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("kmv_kmin: k smallest distinct values, stable across partitionings") {

@@ -30,23 +30,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rollup plan: column pruning reaches the scan; partial aggregation before shuffle") {
-    val df = Rollup.rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
-    val plan = planOf(df)
-    // text column must be pruned from the parquet scan
-    assert(plan.contains("ReadSchema"), plan)
-    assert(!plan.contains("text"), "scan must not read the text column")
-    // partial (map-side) aggregation before the exchange — the fused
-    // tier_stats_decl buffer (one slot, not five; BENCH.md round-7)
-    val exchangeIdx = opsOnly(plan).indexOf("Exchange hashpartitioning")
-    assert(exchangeIdx > 0, "expected one hash exchange on the group keys")
-    val partialIdx = opsOnly(plan).indexOf("partial_tier_stats_decl")
-    assert(partialIdx > exchangeIdx,
-      "expected partial (map-side) fused aggregation below the exchange")
-    // the fused path must stay on the codegen HashAggregate, never the
-    // interpreted ObjectHashAggregate the imperative UDAF takes
-    assert(!plan.contains("ObjectHashAggregate"), plan)
-    // exactly ONE shuffle in the whole rollup (minus fan-out balancing)
-    assert("Exchange".r.findAllIn(opsOnly(plan)).size == 1, s"expected 1 exchange:\n$plan")
+    val inputs = Seq(
+      "rollupFromPoints" ->
+        Rollup.rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute),
+      "q_rollup_stats" ->
+        graft.queries.TokenRollupQueries.q("q_rollup_stats")(spark, sf("sf0.001")))
+    for ((name, df) <- inputs) {
+      val plan = planOf(df)
+      // text column must be pruned from the parquet scan
+      assert(plan.contains("ReadSchema"), s"$name:\n$plan")
+      assert(!plan.contains("text"), s"$name: scan must not read the text column")
+      // partial (map-side) aggregation before the exchange — the fused
+      // tier_stats_decl buffer (one slot, not five; BENCH.md round-7)
+      val exchangeIdx = opsOnly(plan).indexOf("Exchange hashpartitioning")
+      assert(exchangeIdx > 0, s"$name: expected one hash exchange on the group keys")
+      val partialIdx = opsOnly(plan).indexOf("partial_tier_stats_decl")
+      assert(partialIdx > exchangeIdx,
+        s"$name: expected partial (map-side) fused aggregation below the exchange")
+      // the fused path must stay on the codegen HashAggregate, never the
+      // interpreted ObjectHashAggregate
+      assert(!plan.contains("ObjectHashAggregate"), s"$name:\n$plan")
+      // exactly ONE shuffle in the whole rollup (minus fan-out balancing)
+      assert("Exchange".r.findAllIn(opsOnly(plan)).size == 1, s"$name: expected 1 exchange:\n$plan")
+    }
   }
 
   test("filter on n_tok is pushed down to the documents scan") {
