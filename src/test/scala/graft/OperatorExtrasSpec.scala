@@ -496,7 +496,7 @@ class OperatorExtrasSpec extends SparkSpec {
     assert(got.size == 5)
   }
 
-  test("tier_stats_decl == a BigInt reference, codegen and interpreted, incl. the carry") {
+  test("tier_stats_decl == tier_stats bit-for-bit, including the 128-bit carry") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(3)
