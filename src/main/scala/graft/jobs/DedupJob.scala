@@ -139,7 +139,7 @@ object DedupJob {
         "DedupJob.runDelta: no committed dedup_keep labeling to fold into — " +
           "run DedupJob.run for the initial corpus first"))
     // the delta's identity is its CONTENT fingerprint (count + order-free
-    // hash sum — the streaming commitBatchOnce discipline), NOT the prev
+    // hash sum — the streaming batchFingerprint discipline), NOT the prev
     // labeling's uid: a crash-retried or duplicate-delivered delta must
     // RESUME even though the first attempt already advanced
     // `dedup_keep` — and skipping is correct, not just safe, because

@@ -23,11 +23,14 @@ import org.apache.spark.sql.functions._
  *    reaches the scan as a pushed-down predicate (PlanSpec), and on a
  *    date/window-partitioned tier table it prunes whole partitions, so
  *    expiry cost is proportional to the SURVIVING data read, not history.
- *  - [[safeExpire]] joins only the EXPIRED slice (bounded by the horizon,
- *    not by history) against the coarse tier restricted to the same
- *    range, keyed on (source, bucket, coarse window). Both sides shrink
- *    with the horizon; AQE picks broadcast when the pruned coarse side is
- *    small. No collect, no driver loop — the verdict is a join column.
+ *  - [[safeExpire]] is ONE pass over the fine tier: a single left-outer
+ *    join against the coverage keys — the coarse tier pruned to the
+ *    expired range (the horizon reaches its scan as a pushed filter), so
+ *    the build side shrinks with the horizon, and AQE broadcasts it when
+ *    small. Live rows probe the coverage hash relation too (and are kept
+ *    whatever they hit); in exchange the fine tier is read once, with no
+ *    union of a live and an expired branch. No collect, no driver loop —
+ *    the verdict is a join column.
  */
 object Retention {
 
@@ -41,7 +44,9 @@ object Retention {
    * `retained_uncovered` flag — false for rows inside the horizon, true
    * for rows OLDER than the horizon kept because the coarse tier has no
    * aggregate for their (source, bucket, coarse window) yet. Covered
-   * expired rows are dropped. */
+   * expired rows are dropped. `coarse` holds at most one row per
+   * (source, bucket, window_start) — true of every tier table — so the
+   * coverage join never duplicates a fine row. */
   def safeExpire(
       fine: DataFrame,
       coarse: DataFrame,
@@ -55,11 +60,8 @@ object Retention {
         col("source").as("_cs"),
         col("bucket").as("_cb"),
         col("window_start").as("_cw"))
-    val live = fine
-      .filter(col("window_start") >= horizonStart)
-      .withColumn("retained_uncovered", lit(false))
-    val uncovered = fine
-      .filter(col("window_start") < horizonStart)
+    val expired = col("window_start") < horizonStart
+    fine
       .join(
         cov,
         // the coverage key keeps the column's own integer type (no INT
@@ -67,9 +69,10 @@ object Retention {
         // silently-mismatched coverage key
         col("source") === col("_cs") && col("bucket") === col("_cb") &&
           expr(s"window_start - window_start % $w") === col("_cw"),
-        "left_anti")
-      .withColumn("retained_uncovered", lit(true))
-    live.unionByName(uncovered)
+        "left_outer")
+      .filter(col("window_start") >= horizonStart || (expired && col("_cw").isNull))
+      .withColumn("retained_uncovered", expired)
+      .drop("_cs", "_cb", "_cw")
   }
 
   /** Per-tier horizons over the WHOLE ladder (the TimescaleDB per-policy

@@ -121,11 +121,14 @@ object Rollup {
    * avg derived). Input and output share the (source, bucket) key, so with
    * tier tables bucketed/partitioned on (source, bucket) this is a
    * co-partitioned aggregation. */
-  def reaggregate(finer: DataFrame, toTier: String): DataFrame = {
+  def reaggregate(finer: DataFrame, toTier: String): DataFrame =
+    finishTier(cascadeState(finer, toTier), toTier)
+
+  /** Cascade kernel: finer tier-state rows merged into the state of the
+   * coarser tier `toTier` (the window truncated to its width). */
+  private[graft] def cascadeState(finer: DataFrame, toTier: String): DataFrame = {
     val w = Tier.widths(toTier)
-    finishTier(
-      mergeState(finer, expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start")),
-      toTier)
+    mergeState(finer, expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start"))
   }
 
   /** Incremental late-data reconciliation: fold a (small) delta of
@@ -235,38 +238,59 @@ object Rollup {
     val nAffected =
       try {
         val n = delta.count()
-        require(
-          n <= maxAffectedWindows,
-          s"mergeLate: delta touches $n windows (> $maxAffectedWindows). " +
-            "Incremental reconciliation is for late slices; a delta this " +
-            "size is a bulk backfill — run a full re-rollup, or raise " +
-            "maxAffectedWindows.")
+        guardDelta(n, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
         n
       } catch {
         case e: Throwable => delta.unpersist(); throw e
       }
+    (foldDelta(tierTable, delta, nAffected, tier, maxBroadcastWindows),
+      () => { delta.unpersist(); () })
+  }
+
+  /** The loud ceiling on an incremental fold ([[DefaultMaxAffectedWindows]]
+   * unless the caller exposes its own), checked BEFORE anything is
+   * broadcast: `n` is the delta's window count, `caller` names the API
+   * in the message and `knob` says how that caller can move the ceiling
+   * (empty when it cannot). */
+  private[graft] def guardDelta(n: Long, maxAffectedWindows: Long, caller: String, knob: String = ""): Unit =
+    require(
+      n <= maxAffectedWindows,
+      s"$caller: delta touches $n windows (> $maxAffectedWindows). " +
+        "Incremental reconciliation is for late slices; a delta this " +
+        s"size is a bulk backfill — run a full re-rollup$knob.")
+
+  /** The one incremental fold: tier-state rows `delta` (at most one per
+   * (source, bucket, window_start); extra tier-row columns are ignored)
+   * merged into `tierTable`, recomputing only the windows the delta
+   * touches, in the regimes of [[mergeLateReleasable]]. `nDelta` must
+   * have passed [[guardDelta]]; it picks the regime, and any UPPER bound
+   * on the delta's row count is exact-safe (both regimes return the same
+   * rows, an over-estimate only trades the broadcast split for the
+   * shuffle re-merge). `delta` is read twice on the broadcast path —
+   * persist it. Output keeps `tierTable`'s column order. */
+  private[graft] def foldDelta(
+      tierTable: DataFrame,
+      delta: DataFrame,
+      nDelta: Long,
+      tier: String,
+      maxBroadcastWindows: Long = DefaultMaxBroadcastWindows): DataFrame = {
     val keys = Seq("source", "bucket", "window_start")
     val stateCols =
-      Seq("source", "bucket", "window_start", "min_tok", "max_tok",
-        "sum_tok", "cnt_tok", "sumsq_tok").map(col)
-    val out =
-      if (nAffected <= maxBroadcastWindows) {
-        val affectedKeys = delta.select(keys.map(col): _*)
-        val untouched =
-          tierTable.join(broadcast(affectedKeys), keys, "left_anti")
-        val affected =
-          tierTable.join(broadcast(affectedKeys), keys, "left_semi")
-        val merged = finishTier(mergeState(affected.unionByName(delta)), tier)
-        // the equi-join fronts its keys — restore the tier table's own
-        // column order so merge output unions cleanly with unmerged tables
-        untouched.unionByName(merged).select(tierTable.columns.map(col): _*)
+      (keys ++ Seq("min_tok", "max_tok", "sum_tok", "cnt_tok", "sumsq_tok")).map(col)
+    val state = delta.select(stateCols: _*)
+    val merged =
+      if (nDelta <= maxBroadcastWindows) {
+        val affectedKeys = broadcast(delta.select(keys.map(col): _*))
+        val untouched = tierTable.join(affectedKeys, keys, "left_anti")
+        val affected = tierTable.join(affectedKeys, keys, "left_semi")
+        // the equi-join fronts its keys; the final select below restores
+        // the tier table's own order
+        untouched.unionByName(
+          finishTier(mergeState(affected.select(stateCols: _*).unionByName(state)), tier))
       } else {
-        finishTier(
-          mergeState(tierTable.select(stateCols: _*).unionByName(delta.select(stateCols: _*))),
-          tier)
-          .select(tierTable.columns.map(col): _*)
+        finishTier(mergeState(tierTable.select(stateCols: _*).unionByName(state)), tier)
       }
-    (out, () => { delta.unpersist(); () })
+    merged.select(tierTable.columns.map(col): _*)
   }
 
   /** Full ladder from the point view: returns tier name -> tier DataFrame.

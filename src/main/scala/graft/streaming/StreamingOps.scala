@@ -1,9 +1,12 @@
 package graft.streaming
 
+import graft.core.Tier
 import graft.functions.GraftFunctions.call
+import graft.operators.{Retention, Rollup}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Structured Streaming counterparts of the batch operators. The reference
@@ -78,8 +81,10 @@ object StreamingOps {
         col("n_1m_windows"),
         col("sum_v"))
 
-  /** Exactly-once batch commit shared by every streaming sink: the
-   * stored fingerprint is the batch id PLUS exact content (count +
+  /** Exactly-once batch commit shared by every streaming sink, in two
+   * steps: [[batchFingerprint]] once per micro-batch, then
+   * [[pendingCommit]] per table the batch commits to. The stored
+   * fingerprint is the batch id PLUS exact content (count +
    * order-independent hash-sum over all columns, DECIMAL(38,0) — a
    * BIGINT sum of 64-bit hashes overflows). A batch-id-only fingerprint
    * cannot tell a genuine crash-replay from a fresh checkpoint whose
@@ -94,18 +99,12 @@ object StreamingOps {
    *     content to the original is indistinguishable from a replay and
    *     is skipped — harmless precisely because committing it would be
    *     a no-op duplicate of what the table already holds.
-   *   - empty batch -> nothing to commit (the fingerprint aggregation
-   *     doubles as the emptiness probe — one pass, no separate isEmpty
-   *     job; the hash must be known BEFORE commit because it IS the
-   *     stored fingerprint, so it cannot ride the commit's observe).
-   * `compute` receives the manifest listing so sinks can read the
-   * previous version without re-listing (2 listings/batch total). */
-  private def commitBatchOnce(
-      store: graft.jobs.SnapshotStore,
-      table: String,
-      stage: String,
-      batchId: Long,
-      batch: DataFrame)(compute: Seq[graft.jobs.SnapshotInfo] => DataFrame): Unit = {
+   *   - empty batch -> nothing to commit: the fingerprint is None (the
+   *     fingerprint aggregation doubles as the emptiness probe — one
+   *     pass, no separate isEmpty job; the hash must be known BEFORE
+   *     commit because it IS the stored fingerprint, so it cannot ride
+   *     the commit's observe). */
+  private def batchFingerprint(batchId: Long, batch: DataFrame): Option[String] = {
     val cols = batch.columns.map(col)
     val fpRow = batch
       .agg(
@@ -115,30 +114,39 @@ object StreamingOps {
           lit(0).cast("decimal(38,0)")))
       .collect()(0)
     val n = fpRow.getLong(0)
-    if (n > 0) {
-      val fp = s"batch=$batchId-n$n-h${fpRow.getDecimal(1).toBigInteger}"
-      val snaps = store.snapshots(table)
-      val replayed = snaps.exists(s => s.stage == stage && s.fingerprint == fp)
-      if (!replayed) {
-        val collided = snaps.exists(s =>
-          s.stage == stage &&
-            (s.fingerprint == s"batch=$batchId" ||
-              (s.fingerprint.startsWith(s"batch=$batchId-") && s.fingerprint != fp)))
-        require(
-          !collided,
-          s"streaming sink: batch id $batchId was already committed with " +
-            "different (or unverifiable legacy) content — a fresh checkpoint " +
-            "was pointed at a populated table. Keep the original " +
-            "checkpointLocation or start a new table.")
-        store.commit(compute(snaps), table, stage, fp)
-      }
-    }
+    Option.when(n > 0)(s"batch=$batchId-n$n-h${fpRow.getDecimal(1).toBigInteger}")
+  }
+
+  /** The per-table step of the [[batchFingerprint]] contract: the
+   * table's manifest listing when it does not hold batch `batchId` yet
+   * (so a sink can read the previous version without re-listing), None
+   * for a genuine replay; fails loudly on a rewound counter. The caller
+   * commits with `store.commit(df, table, stage, fp)`. */
+  private def pendingCommit(
+      store: graft.jobs.SnapshotStore,
+      table: String,
+      stage: String,
+      batchId: Long,
+      fp: String): Option[Seq[graft.jobs.SnapshotInfo]] = {
+    val snaps = store.snapshots(table)
+    val replayed = snaps.exists(s => s.stage == stage && s.fingerprint == fp)
+    val collided = snaps.exists(s =>
+      s.stage == stage &&
+        (s.fingerprint == s"batch=$batchId" ||
+          (s.fingerprint.startsWith(s"batch=$batchId-") && s.fingerprint != fp)))
+    require(
+      replayed || !collided,
+      s"streaming sink: batch id $batchId was already committed with " +
+        "different (or unverifiable legacy) content — a fresh checkpoint " +
+        "was pointed at a populated table. Keep the original " +
+        "checkpointLocation or start a new table.")
+    Option.unless(replayed)(snaps)
   }
 
   /** Continuous ingestion into the engine's snapshot layer: each
    * micro-batch commits one immutable snapshot version — exactly-once
    * under crash-replay, loud under checkpoint rewind (the
-   * [[commitBatchOnce]] content-fingerprint contract): the streaming
+   * [[batchFingerprint]] content-fingerprint contract): the streaming
    * face of the batch job's resume contract (RollupJob stage
    * fingerprints).
    *
@@ -156,7 +164,10 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchOnce(store, table, s"stream_$queryName", batchId, batch)(_ => batch)
+        for {
+          fp <- batchFingerprint(batchId, batch)
+          _ <- pendingCommit(store, table, s"stream_$queryName", batchId, fp)
+        } store.commit(batch, table, s"stream_$queryName", fp)
         ()
       }
 
@@ -167,7 +178,7 @@ object StreamingOps {
    * (source, bucket) group's windows into ONE Gorilla/Chimp/DoD-encoded
    * payload SEGMENT row, and commits the whole batch of segments as one
    * snapshot version — exactly-once/loud-rewind per the
-   * [[commitBatchOnce]] content-fingerprint contract (a silently
+   * [[batchFingerprint]] content-fingerprint contract (a silently
    * skipped rewound batch here would punch a hole in the segment
    * sequence the decode concatenation relies on).
    *
@@ -189,10 +200,13 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // watermark-only batches carry no finalized windows; the helper's
-        // emptiness probe keeps them from minting empty snapshot versions
-        commitBatchOnce(store, table, s"stream_$queryName", batchId, batch)(_ =>
-          encodePayloadSegments(batch))
+        // watermark-only batches carry no finalized windows; the
+        // fingerprint's emptiness probe keeps them from minting empty
+        // snapshot versions
+        for {
+          fp <- batchFingerprint(batchId, batch)
+          _ <- pendingCommit(store, table, s"stream_$queryName", batchId, fp)
+        } store.commit(encodePayloadSegments(batch), table, s"stream_$queryName", fp)
         ()
       }
 
@@ -200,16 +214,17 @@ object StreamingOps {
    * [[graft.operators.Rollup.mergeLate]]: each micro-batch of raw
    * points folds into the latest committed tier snapshot, recomputing
    * only the windows the batch touches (broadcast split of the big
-   * tier, small re-merge). Arrival order does not matter — no
-   * watermark, no dropped late data — because the merge is an exact
-   * integer reaggregation, so after any sequence of batches the
-   * table's latest version is bit-equal to the one-shot batch rollup
-   * of every point seen. Each batch commits one snapshot version
-   * fingerprinted by batch id PLUS exact content (count + hash-sum):
-   * a genuine crash-replay skips, while a rewound batch counter with
-   * different content — a fresh checkpoint aimed at a populated
-   * table — fails loudly instead of silently dropping or
-   * double-counting. Input schema: (source string, pos, tok). */
+   * tier, small re-merge; the per-batch fold of [[foldTierBatch]]).
+   * Arrival order does not matter — no watermark, no dropped late
+   * data — because the merge is an exact integer reaggregation, so
+   * after any sequence of batches the table's latest version is
+   * bit-equal to the one-shot batch rollup of every point seen. Each
+   * batch commits one snapshot version fingerprinted by batch id PLUS
+   * exact content (count + hash-sum): a genuine crash-replay skips,
+   * while a rewound batch counter with different content — a fresh
+   * checkpoint aimed at a populated table — fails loudly instead of
+   * silently dropping or double-counting. Input schema:
+   * (source string, pos, tok). */
   def tierMergeSink(
       points: DataFrame,
       store: graft.jobs.SnapshotStore,
@@ -222,29 +237,34 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitFoldedBatch(store, table, s"stream_$queryName", batchId, batch, tier)(identity)
+        foldTierBatch(store, s"stream_$queryName", "tierMergeSink", batchId, batch, table, tier, None)
       }
 
   /** Streaming tier MAINTENANCE — the lifecycle composed into one sink
    * (ingest -> merge -> compact-then-expire), the continuous face of
    * [[graft.operators.Retention.safeExpire]] beside [[tierMergeSink]].
-   * Each micro-batch of raw points:
-   *   1. folds into the COARSE tier FIRST
-   *      ([[graft.operators.Rollup.mergeLateReleasable]] against its
-   *      latest snapshot) — the coarse tier is the retention policy's
-   *      coverage and keeps full history;
-   *   2. folds into the FINE tier, then compacts-then-expires it against
-   *      the just-committed coarse table: the horizon trails the fine
-   *      tier's own frontier by `keepWindows` windows, and a fine row
-   *      older than it is dropped only where its coarse coverage exists
-   *      (here it always does — the SAME batch advanced coarse first, and
-   *      a coarse parent window never starts after its fine child). The
-   *      horizon is MONOTONE across batches (the frontier never
-   *      regresses), so an expired window cannot resurrect: late points
-   *      for it still merge into the coarse tier, and the fine window
-   *      they re-create is re-expired inside the same commit.
+   * Each micro-batch of raw points is fingerprinted once and rolled up
+   * once, then ([[foldTierBatch]]):
+   *   1. ONE job over the batch's persisted fine-tier delta state and
+   *      the previous fine snapshot's `window_start` yields the guard
+   *      count and the fine tier's frontier;
+   *   2. the COARSE tier commits FIRST — its delta is the fine delta's
+   *      cascade, folded into its latest snapshot — because the coarse
+   *      tier is the retention policy's coverage and keeps full history;
+   *   3. the FINE tier commits the fine delta folded into its latest
+   *      snapshot, compacted-then-expired against the just-committed
+   *      coarse table: the horizon trails the frontier by `keepWindows`
+   *      windows, and a fine row older than it is dropped only where its
+   *      coarse coverage exists (here it always does — the SAME batch
+   *      advanced coarse first, and a coarse parent window never starts
+   *      after its fine child). The horizon is MONOTONE across batches
+   *      (the frontier is the max over the delta AND the previous
+   *      snapshot, so a late-only batch never pulls it back), so an
+   *      expired window cannot resurrect: late points for it still merge
+   *      into the coarse tier, and the fine window they re-create is
+   *      re-expired inside the same commit.
    * Both tables commit exactly-once per batch under the
-   * [[commitBatchOnce]] content-fingerprint contract, independently: a
+   * [[batchFingerprint]] content-fingerprint contract, independently: a
    * crash between the two commits replays the batch, skips the
    * already-committed coarse version, and completes the fine one. The
    * stored fine table carries safeExpire's `retained_uncovered` audit
@@ -263,67 +283,91 @@ object StreamingOps {
       coarseTier: String,
       keepWindows: Long): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(keepWindows >= 1, s"tierMaintenanceSink: keepWindows must be >= 1, got $keepWindows")
-    val fineWidth = graft.core.Tier.widths(fineTier)
     require(
-      graft.core.Tier.widths(coarseTier) > fineWidth,
+      Tier.widths(coarseTier) > Tier.widths(fineTier),
       s"tierMaintenanceSink: coverage tier $coarseTier must be coarser than $fineTier")
+    val coverage = Some(Coverage(coarseTable, coarseTier, keepWindows))
     points.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // coarse first: it is the fine tier's expiry coverage
-        commitFoldedBatch(store, coarseTable, s"stream_$queryName", batchId, batch, coarseTier)(
-          identity)
-        commitFoldedBatch(store, fineTable, s"stream_$queryName", batchId, batch, fineTier) {
-          merged =>
-            // frontier over the (cardinality-bounded) TIER, not the points;
-            // monotone across batches because the merge never drops the max
-            val maxW = merged
-              .agg(expr("CAST(max(window_start) AS BIGINT)"))
-              .head()
-              .getLong(0)
-            val horizon = maxW - (keepWindows - 1) * fineWidth
-            val coarseNow = store
-              .latest(coarseTable)
-              .getOrElse(throw new IllegalStateException(
-                s"tierMaintenanceSink: coverage table $coarseTable has no " +
-                  "snapshot — the coarse merge commits first"))
-            graft.operators.Retention
-              .safeExpire(merged, store.read(batch.sparkSession, coarseNow), coarseTier, horizon)
-        }
+        foldTierBatch(
+          store, s"stream_$queryName", "tierMaintenanceSink", batchId, batch, fineTable, fineTier,
+          coverage)
       }
   }
 
-  /** Commits the micro-batch `batch` of raw points folded into the latest
-   * snapshot of the `tier` table `table` (a plain rollup while the table
-   * is empty), passed through `finish`, under the [[commitBatchOnce]]
-   * contract. The merge's delta cache is released once the commit has
-   * materialized the result. A stored `retained_uncovered` audit flag is
-   * dropped before the merge; the maintenance sink's expiry re-derives it
-   * each batch. */
-  private def commitFoldedBatch(
+  /** The maintenance sink's coverage tier: `table` of tier `tier`, and
+   * how many fine windows the fine tier keeps behind its frontier. */
+  private final case class Coverage(table: String, tier: String, keepWindows: Long)
+
+  /** The one per-batch fold of both tier sinks: micro-batch `batch` of
+   * raw points into the `tier` table `table` — and first into the
+   * `coverage` table, which `table` is then compacted-then-expired
+   * against. The batch is fingerprinted once, and every table that still
+   * lacks it ([[pendingCommit]]) folds the same ONE persisted delta
+   * ([[graft.operators.Rollup.pointState]]; the coverage delta is its
+   * [[graft.operators.Rollup.cascadeState]]) with
+   * [[graft.operators.Rollup.foldDelta]]. ONE job over the delta checks
+   * the guard, warms the cache and, when expiring, takes the frontier:
+   * max(window_start) over the delta and the previous snapshot, i.e. over
+   * the folded tier without running the fold. The coverage regime is
+   * picked from the FINE delta's count, an upper bound on the coarse
+   * delta's (a coarse window is a union of fine ones), so the choice is
+   * exact-safe. A stored `retained_uncovered` flag is dropped before the
+   * fold; the expiry re-derives it. */
+  private def foldTierBatch(
       store: graft.jobs.SnapshotStore,
-      table: String,
       stage: String,
+      caller: String,
       batchId: Long,
       batch: DataFrame,
-      tier: String)(finish: DataFrame => DataFrame): Unit = {
-    var release: () => Unit = () => ()
-    try {
-      commitBatchOnce(store, table, stage, batchId, batch) { snaps =>
-        finish(snaps.lastOption match {
-          case Some(prev) =>
-            val (merged, rel) = graft.operators.Rollup.mergeLateReleasable(
-              store.read(batch.sparkSession, prev).drop("retained_uncovered"), batch, tier)
-            release = rel
-            merged
-          case None =>
-            graft.operators.Rollup.rollupFromPoints(batch, tier)
-        })
+      table: String,
+      tier: String,
+      coverage: Option[Coverage]): Unit =
+    batchFingerprint(batchId, batch).foreach { fp =>
+      val spark = batch.sparkSession
+      // Some(previous snapshot, if any) while `t` still lacks this batch
+      def pending(t: String): Option[Option[DataFrame]] =
+        pendingCommit(store, t, stage, batchId, fp)
+          .map(_.lastOption.map(store.read(spark, _).drop("retained_uncovered")))
+      val coarsePrev = coverage.flatMap(c => pending(c.table).map(c -> _))
+      val finePrev = pending(table)
+      if (coarsePrev.nonEmpty || finePrev.nonEmpty) {
+        val delta = Rollup.pointState(batch, tier).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val frontierOver = if (coverage.isDefined) finePrev.flatten else None
+          val probe = frontierOver
+            .foldLeft(delta.select(lit(1L).as("_n"), col("window_start"))) { (rows, prev) =>
+              rows.unionByName(prev.select(lit(0L).as("_n"), col("window_start")))
+            }
+            .agg(sum(col("_n")), expr("CAST(max(window_start) AS BIGINT)"))
+            .head()
+          val n = probe.getLong(0)
+          Rollup.guardDelta(n, Rollup.DefaultMaxAffectedWindows, caller)
+          def fold(prev: Option[DataFrame], state: DataFrame, t: String): DataFrame =
+            prev.fold(Rollup.finishTier(state, t))(Rollup.foldDelta(_, state, n, t))
+          // coarse first: it is the fine tier's expiry coverage
+          coarsePrev.foreach { case (c, prev) =>
+            store.commit(fold(prev, Rollup.cascadeState(delta, c.tier), c.tier), c.table, stage, fp)
+          }
+          finePrev.foreach { prev =>
+            val merged = fold(prev, delta, tier)
+            val out = coverage.fold(merged) { c =>
+              val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
+              val covered = store
+                .latest(c.table)
+                .getOrElse(throw new IllegalStateException(
+                  s"$caller: coverage table ${c.table} has no snapshot — the " +
+                    "coarse merge commits first"))
+              Retention.safeExpire(merged, store.read(spark, covered), c.tier, horizon)
+            }
+            store.commit(out, table, stage, fp)
+          }
+        } finally delta.unpersist()
       }
-    } finally release()
-  }
+    }
 
   /** One payload-segment row per (source, bucket) of a finalized-window
    * batch: timestamps delta-of-delta encoded, values Gorilla- AND
@@ -548,7 +592,7 @@ object StreamingOps {
    * KMV sketch folds into the committed sketch table
    * ([[graft.operators.Sketches.mergeSketches]] — a pure set property,
    * so re-folding identical content is a no-op), committed through the
-   * [[commitBatchOnce]] exactly-once contract: crash-replays of a batch
+   * [[batchFingerprint]] exactly-once contract: crash-replays of a batch
    * skip, rewound checkpoints over different content fail loudly. The
    * streaming face of [[graft.jobs.SketchJob]]: history is never
    * rescanned — each batch costs its own sketch plus one exchange
@@ -566,9 +610,12 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchOnce(store, table, s"stream_$queryName", batchId, batch) { snaps =>
+        for {
+          fp <- batchFingerprint(batchId, batch)
+          snaps <- pendingCommit(store, table, s"stream_$queryName", batchId, fp)
+        } {
           val delta = graft.operators.Sketches.kmvSketch(batch, windowWidth, k)
-          snaps.lastOption match {
+          val merged = snaps.lastOption match {
             case Some(p) =>
               graft.operators.Sketches.mergeSketches(
                 store.read(batch.sparkSession, p),
@@ -577,6 +624,7 @@ object StreamingOps {
                 k)
             case None => delta
           }
+          store.commit(merged, table, s"stream_$queryName", fp)
         }
         ()
       }

@@ -497,6 +497,26 @@ class PlanSpec extends SparkSpec {
       plan)
   }
 
+  test("safeExpire reads the fine tier once: one scan, no union, horizon pushed to coverage") {
+    val pts = TokenTable.points(spark, sf("sf0.001"))
+    val fineDir = java.nio.file.Files.createTempDirectory("graft-ret-fine-").toString
+    val coarseDir = java.nio.file.Files.createTempDirectory("graft-ret-coarse-").toString
+    Rollup.rollupFromPoints(pts, Tier.OneMinute).write.mode("overwrite").parquet(fineDir)
+    Rollup.rollupFromPoints(pts, Tier.FiveMinutes).write.mode("overwrite").parquet(coarseDir)
+    val df = graft.operators.Retention.safeExpire(
+      spark.read.parquet(fineDir), spark.read.parquet(coarseDir), Tier.FiveMinutes, 300L)
+    val plan = planOf(df)
+    val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
+    // the live and the expired fine rows come from ONE read of the fine
+    // dir — no union of two filtered copies
+    assert(scans.count(_.contains(fineDir)) == 1, plan)
+    assert(!plan.contains("Union"), plan)
+    // the coverage side still reaches its scan pruned to the expired range
+    val coverageScan = scans.filter(_.contains(coarseDir))
+    assert(coverageScan.size == 1, plan)
+    assert(coverageScan.head.contains("LessThan(window_start,300)"), plan)
+  }
+
   test("trend line / local extrema: tier + one op exchange, join-free") {
     val tier = Rollup.rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
     for (

@@ -410,6 +410,115 @@ class StreamingSpec extends SparkSpec {
     assert(resumed && snap.version == fineSnaps.head.version)
   }
 
+  /** The maintenance sink's one-shot references over every point sent:
+   * the 1h coverage tier is their rollup, the 1m fine tier their rollup
+   * compact-then-expired at `horizon`. */
+  private def assertMaintainedTiers(
+      store: graft.jobs.SnapshotStore,
+      all: org.apache.spark.sql.DataFrame,
+      horizon: Long): Unit = {
+    import graft.core.Tier
+    import graft.operators.{Retention, Rollup}
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val coarseWant = Rollup.rollupFromPoints(all, Tier.OneHour)
+    assert(
+      rows(store.read(spark, store.latest("tier_1h_cov").get)) == rows(coarseWant),
+      "coarse coverage tier != one-shot rollup")
+    assert(
+      rows(store.read(spark, store.latest("tier_1m_live").get)) ==
+        rows(Retention.safeExpire(
+          Rollup.rollupFromPoints(all, Tier.OneMinute), coarseWant, Tier.OneHour, horizon)),
+      "maintained fine tier != one-shot safeExpire")
+  }
+
+  test("tier maintenance sink: a late-only batch keeps the horizon; an empty batch commits nothing") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.jobs.SnapshotStore
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-late-").toString
+    val store = new SnapshotStore(base)
+    val in = MemoryStream[(String, Int, Int)]
+    val q = StreamingOps
+      .tierMaintenanceSink(
+        in.toDF().toDF("source", "pos", "tok"),
+        store,
+        "tier_1m_live",
+        "tier_1h_cov",
+        "latetest",
+        s"$base/_ckpt",
+        graft.core.Tier.OneMinute,
+        graft.core.Tier.OneHour,
+        keepWindows = 2)
+      .start()
+    // batch 2 moves the frontier to window 3660 -> horizon 3600. Batch 3
+    // is late-only: its own newest window is 3540, so a frontier taken
+    // from the batch alone would pull the horizon back to 3480 and keep
+    // the re-created fine window 3540 (covered by hour 0, so it must go).
+    val b1 = Seq(("a", 0, 5), ("a", 61, 7), ("b", 2, 4))
+    val b2 = Seq(("a", 3700, 2))
+    val b3 = Seq(("a", 3550, 9), ("b", 5, 6))
+    in.addData(b1: _*); q.processAllAvailable()
+    in.addData(b2: _*); q.processAllAvailable()
+    in.addData(b3: _*); q.processAllAvailable()
+    val fine = store.read(spark, store.latest("tier_1m_live").get)
+    assert(fine.filter(col("window_start") < 3600).isEmpty, "horizon regressed after a late-only batch")
+    // an empty micro-batch runs but mints no version in either table
+    val ranBefore = q.lastProgress.batchId
+    in.addData(Seq.empty[(String, Int, Int)]); q.processAllAvailable()
+    assert(q.lastProgress.batchId == ranBefore + 1 && q.lastProgress.numInputRows == 0)
+    q.stop()
+    assert(store.snapshots("tier_1m_live").size == 3 && store.snapshots("tier_1h_cov").size == 3)
+    assertMaintainedTiers(store, (b1 ++ b2 ++ b3).toDF("source", "pos", "tok"), horizon = 3600L)
+  }
+
+  test("tier maintenance sink: a crash between the two commits replays into the fine table only") {
+    import spark.implicits._
+    import graft.jobs.SnapshotStore
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-crash-").toString
+    val store = new SnapshotStore(base)
+    val src = s"$base/points"
+    val schema = Seq(("", 0, 0)).toDF("source", "pos", "tok").schema
+    def start() = StreamingOps
+      .tierMaintenanceSink(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src),
+        store,
+        "tier_1m_live",
+        "tier_1h_cov",
+        "crashtest",
+        s"$base/_ckpt",
+        graft.core.Tier.OneMinute,
+        graft.core.Tier.OneHour,
+        keepWindows = 2)
+      .start()
+    val b1 = Seq(("a", 0, 5), ("a", 61, 7), ("b", 2, 4))
+    val b2 = Seq(("a", 3700, 2), ("b", 62, 6))
+    // one parquet file per batch: a replay re-reads the same file
+    def addFile(b: Seq[(String, Int, Int)]): Unit =
+      b.toDF("source", "pos", "tok").coalesce(1).write.mode("append").parquet(src)
+    addFile(b1)
+    val q = start()
+    q.processAllAvailable()
+    addFile(b2)
+    q.processAllAvailable()
+    q.stop()
+    assert(store.snapshots("tier_1m_live").size == 2 && store.snapshots("tier_1h_cov").size == 2)
+    // simulate a crash after the coarse commit of the last batch: the
+    // query never recorded the batch as done, the fine manifest is gone
+    val ckptCommits = java.nio.file.Paths.get(s"$base/_ckpt/commits")
+    val lastCommit = ckptCommits.toFile.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    java.nio.file.Files.delete(ckptCommits.resolve(lastCommit.toString))
+    java.nio.file.Files.deleteIfExists(ckptCommits.resolve(s".$lastCommit.crc"))
+    val fineManifest = java.nio.file.Paths.get(base, "tier_1m_live", "_snapshots", "v2.json")
+    java.nio.file.Files.delete(fineManifest)
+    val q2 = start()
+    q2.processAllAvailable()
+    q2.stop()
+    // the replayed batch skips the coarse table and completes the fine one
+    assert(store.snapshots("tier_1h_cov").size == 2, "coarse replay must be skipped")
+    assert(store.snapshots("tier_1m_live").size == 2, "fine must gain exactly one version")
+    assertMaintainedTiers(store, (b1 ++ b2).toDF("source", "pos", "tok"), horizon = 3600L)
+  }
+
   test("streaming counter rate: matches batch counterRate across micro-batch boundaries") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
