@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.sources.UnionBuilder
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -82,39 +82,36 @@ object CurationJob {
     // up front would be one redundant full-corpus scan per run
     val params = s"curate-n$n-tp$testPermille-vp$valPermille"
 
-    val obs = Observation("curation_funnel")
-    val labeled = labelDocs(docs, testDocs, n, testPermille, valPermille)
-      .observe(
-        obs,
-        count(lit(1)).as("input_docs"),
+    val (curatedSnap, funnel) = store.commitObserved(
+      labelDocs(docs, testDocs, n, testPermille, valPermille),
+      "curated",
+      "curation_funnel",
+      params,
+      counters = Seq(
         count(when(!col("canonical"), lit(1))).as("dropped_dup"),
         count(when(col("canonical") && col("contaminated"), lit(1)))
           .as("dropped_contaminated"),
         count(
           when(col("canonical") && !col("contaminated") && !col("quality_ok"), lit(1)))
           .as("dropped_quality"),
-        count(when(col("kept"), lit(1))).as("kept_docs"))
-    val curatedSnap = store.commit(labeled, "curated", "curation_funnel", params)
+        count(when(col("kept"), lit(1))).as("kept_docs")))
+    // labels, never drops: one committed row per input doc
+    val input = funnel("rows")
+    val dup = funnel("dropped_dup")
+    val cont = funnel("dropped_contaminated")
+    val qual = funnel("dropped_quality")
+    val kept = funnel("kept_docs")
 
-    val input = obs.get("input_docs").asInstanceOf[Long]
-    val dup = obs.get("dropped_dup").asInstanceOf[Long]
-    val cont = obs.get("dropped_contaminated").asInstanceOf[Long]
-    val qual = obs.get("dropped_quality").asInstanceOf[Long]
-    val kept = obs.get("kept_docs").asInstanceOf[Long]
-
-    val v = curatedSnap.version.toLong
-    val metricsDf = spark
-      .createDataFrame(
-        Seq(
-          ("curation", v, "input_docs", input.toDouble),
-          ("curation", v, "dropped_dup", dup.toDouble),
-          ("curation", v, "dropped_contaminated", cont.toDouble),
-          ("curation", v, "dropped_quality", qual.toDouble),
-          ("curation", v, "kept_docs", kept.toDouble),
-          ("curation", v, "kept_ratio", if (input > 0) kept.toDouble / input else 0.0)))
-      .toDF("stage", "snapshot_id", "metric", "value")
-    val metricsSnap =
-      store.commit(metricsDf, "metrics", "metrics_curation", s"v$v-${curatedSnap.uid}")
+    val metricsSnap = store.commitMetrics(
+      spark,
+      "curation",
+      curatedSnap -> Seq(
+        "input_docs" -> input.toDouble,
+        "dropped_dup" -> dup.toDouble,
+        "dropped_contaminated" -> cont.toDouble,
+        "dropped_quality" -> qual.toDouble,
+        "kept_docs" -> kept.toDouble,
+        "kept_ratio" -> (if (input > 0) kept.toDouble / input else 0.0)))
     Result(curatedSnap, metricsSnap, input, dup, cont, qual, kept)
   }
 }

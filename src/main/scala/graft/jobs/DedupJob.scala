@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.core.Hash
 import graft.operators.{ConnectedComponents, Dedup}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,44 +46,40 @@ object DedupJob {
 
     val (lsh, obsCand, obsVer) =
       Dedup.minHashLshPairsObserved(docs, "doc_id", "text", n, numHashes, bands, threshold)
-    val pairsSnap = store.commit(lsh.pairs, "dedup_pairs", "lsh_pairs", params)
+    val (pairsSnap, pairs) = store.commitObserved(
+      lsh.pairs, "dedup_pairs", "lsh_pairs", params, observations = Seq(obsCand, obsVer))
     // the committed snapshot is the durable pair set — release the chain's
     // internal shingle cache now (a long-lived session would otherwise
     // accumulate one cached shingle table per distinct corpus run)
     lsh.release()
-    val cand = obsCand.get("candidate_pairs").asInstanceOf[Long]
-    val ver = obsVer.get("verified_pairs").asInstanceOf[Long]
+    val cand = pairs("candidate_pairs")
+    val ver = pairs("verified_pairs")
 
-    val obsKeep = Observation("dedup_keep")
-    val keep = ConnectedComponents
-      .keepList(docs, "doc_id", store.read(spark, pairsSnap))
-      .observe(
-        obsKeep,
-        count(when(col("keep"), lit(1))).as("kept"),
-        count(when(!col("keep"), lit(1))).as("dropped"))
-    val keepSnap =
-      store.commit(keep, "dedup_keep", "keep_list", s"pairs=${pairsSnap.uid}")
-    val kept = obsKeep.get("kept").asInstanceOf[Long]
-    val dropped = obsKeep.get("dropped").asInstanceOf[Long]
+    val (keepSnap, keep) = store.commitObserved(
+      ConnectedComponents.keepList(docs, "doc_id", store.read(spark, pairsSnap)),
+      "dedup_keep", "keep_list", s"pairs=${pairsSnap.uid}", KeepCounters)
+    val kept = keep("kept")
+    val dropped = keep("dropped")
 
-    val v = keepSnap.version.toLong
-    val metricsDf = spark
-      .createDataFrame(
-        Seq(
-          ("dedup_lsh", v, "input_docs", nDocs.toDouble),
-          ("dedup_lsh", v, "candidate_pairs", cand.toDouble),
-          ("dedup_lsh", v, "verified_pairs", ver.toDouble),
-          ("dedup_lsh", v, "rejected_pairs", (cand - ver).toDouble),
-          // the density-bound monitor: ~O(bands) per doc when healthy
-          ("dedup_lsh", v, "candidates_per_doc",
-            if (nDocs > 0) cand.toDouble / nDocs else 0.0),
-          ("dedup_lsh", v, "kept_docs", kept.toDouble),
-          ("dedup_lsh", v, "dropped_docs", dropped.toDouble)))
-      .toDF("stage", "snapshot_id", "metric", "value")
-    val metricsSnap =
-      store.commit(metricsDf, "metrics", "metrics_dedup_lsh", s"v$v-${keepSnap.uid}")
+    val metricsSnap = store.commitMetrics(
+      spark,
+      "dedup_lsh",
+      keepSnap -> Seq(
+        "input_docs" -> nDocs.toDouble,
+        "candidate_pairs" -> cand.toDouble,
+        "verified_pairs" -> ver.toDouble,
+        "rejected_pairs" -> (cand - ver).toDouble,
+        // the density-bound monitor: ~O(bands) per doc when healthy
+        "candidates_per_doc" -> (if (nDocs > 0) cand.toDouble / nDocs else 0.0),
+        "kept_docs" -> kept.toDouble,
+        "dropped_docs" -> dropped.toDouble))
     Result(pairsSnap, keepSnap, metricsSnap, cand, ver, kept, dropped)
   }
+
+  /** The keep/drop split, observed on the keep-list write. */
+  private val KeepCounters = Seq(
+    count(when(col("keep"), lit(1))).as("kept"),
+    count(when(!col("keep"), lit(1))).as("dropped"))
 
   /** `keep` is the labeling version THIS delta produced — or, when
    * `resumed`, the version its original fold produced, which may be
@@ -121,7 +118,7 @@ object DedupJob {
    *  - the new full labeling over `allDocs`,
    * both exactly-once: the fingerprints carry the upstream snapshot uid,
    * the chain parameters and the delta count, so a crashed-and-retried
-   * delta run RESUMES instead of double-folding (getOrCompute, the
+   * delta run RESUMES instead of double-folding (SnapshotStore.stage, the
    * RollupJob stage discipline). Candidate/verified telemetry rides the
    * pair write via observe, zero extra scans. */
   def runDelta(
@@ -147,17 +144,9 @@ object DedupJob {
     // (Docs are immutable under a given id in this store — re-submitting
     // an id set with MUTATED text is out of contract, as everywhere else
     // snapshots are fingerprinted by inputs.)
-    val fpRow = newDocIds
-      .select(col(newDocIds.columns.head).cast("long").as("_nid"))
-      .distinct()
-      .agg(
-        count(lit(1)),
-        coalesce(
-          sum(xxhash64(col("_nid")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")))
-      .head()
-    val nNew = fpRow.getLong(0)
-    val idFp = String.valueOf(fpRow.getDecimal(1))
+    val (nNew, idFp) = Hash.contentFingerprint(
+      newDocIds.select(col(newDocIds.columns.head).cast("long").as("_nid")).distinct(),
+      col("_nid"))
     val params =
       s"delta-n$n-h$numHashes-b$bands-t$threshold-new$nNew-fp$idFp"
 
@@ -166,50 +155,33 @@ object DedupJob {
     val (deltaPairs, release) = Dedup.minHashLshDeltaPairs(
       allDocs, newDocIds, "doc_id", "text", n, numHashes, bands, threshold,
       Some((obsCand, obsVer)))
-    val (pairsSnap, pairsResumed) =
-      store.getOrCompute("dedup_pairs", "lsh_pairs_delta", params)(deltaPairs)
+    val pairs = store.stage(
+      "dedup_pairs", "lsh_pairs_delta", params, observations = Seq(obsCand))(deltaPairs)
     release()
-    // a resumed pair stage never ran its observe action, so the
-    // CANDIDATE counter is only defined on the computing run — but the
-    // VERIFIED count is the committed snapshot itself (its row count),
-    // recoverable for free from parquet metadata. This matters on the
-    // crash-retry path (pairs committed, keep not): the first attempt
-    // died BEFORE any metrics commit, so nothing else holds the value.
-    val (cand, ver) =
-      if (pairsResumed) (-1L, store.read(spark, pairsSnap).count())
-      else (
-        obsCand.get("candidate_pairs").asInstanceOf[Long],
-        obsVer.get("verified_pairs").asInstanceOf[Long])
+    // a resumed pair stage never ran its observe action, so the CANDIDATE
+    // counter is only defined on the computing run — but the VERIFIED
+    // count is the committed snapshot's own row count, known on both
+    // paths. This matters on the crash-retry path (pairs committed, keep
+    // not): the first attempt died BEFORE any metrics commit, so nothing
+    // else holds the value.
+    val cand = pairs.counter("candidate_pairs")
+    val ver = pairs.snap.rowCount
 
     val prevLabels = store
       .read(spark, prevKeep)
       .filter(!col("keep")) // singleton labels are self-loops; drop early
       .select(col("doc_id").as("node"), col("rep_id").as("rep"))
-    val obsKeep = Observation(s"delta_keep_$params")
     // fingerprinted by the pair delta alone: "this delta has been folded
     // into this table" — the labeling the fold would produce from any
     // later prev state is identical (closure monotonicity)
-    val (keepSnap, keepResumed) = store.getOrCompute(
-      "dedup_keep", "keep_list_delta", s"pairs=${pairsSnap.uid}") {
-      val comp = ConnectedComponents
-        .incrementalComponents(
-          prevLabels, store.read(spark, pairsSnap), "doc_a", "doc_b")
-        .withColumnRenamed("node", "doc_id")
-      allDocs
-        .select(col("doc_id").cast("long").as("doc_id"))
-        .join(comp, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_id"))
-        .withColumn("keep", col("doc_id") === col("rep_id"))
-        .observe(
-          obsKeep,
-          count(when(col("keep"), lit(1))).as("kept"),
-          count(when(!col("keep"), lit(1))).as("dropped"))
+    val keep = store.stage(
+      "dedup_keep", "keep_list_delta", s"pairs=${pairs.snap.uid}", KeepCounters) {
+      ConnectedComponents.keepVerdict(
+        allDocs,
+        "doc_id",
+        ConnectedComponents.incrementalComponents(
+          prevLabels, store.read(spark, pairs.snap), "doc_a", "doc_b"))
     }
-    val (kept, dropped) =
-      if (keepResumed) (-1L, -1L)
-      else (
-        obsKeep.get("kept").asInstanceOf[Long],
-        obsKeep.get("dropped").asInstanceOf[Long])
 
     // metrics accompany every NEW labeling version — including the
     // crash-retry path where the pairs stage resumed but the keep stage
@@ -217,28 +189,29 @@ object DedupJob {
     // between the two commits, i.e. BEFORE any metrics commit, so the
     // only counter genuinely lost with it is candidate_pairs (it exists
     // only as the computing run's observe); verified_pairs is always
-    // recorded (the snapshot's own row count), and -1 sentinels never
-    // reach the table.
-    if (!keepResumed) {
-      val v = keepSnap.version.toLong
-      val rows =
-        Seq(
-          ("dedup_delta", v, "new_docs", nNew.toDouble),
-          ("dedup_delta", v, "verified_pairs", ver.toDouble),
-          ("dedup_delta", v, "kept_docs", kept.toDouble),
-          ("dedup_delta", v, "dropped_docs", dropped.toDouble)) ++
-          (if (pairsResumed) Seq.empty
-           else
-             Seq(
-               ("dedup_delta", v, "candidate_pairs", cand.toDouble),
-               ("dedup_delta", v, "candidates_per_new_doc",
-                 if (nNew > 0) cand.toDouble / nNew else 0.0)))
-      val metricsDf = spark
-        .createDataFrame(rows)
-        .toDF("stage", "snapshot_id", "metric", "value")
-      store.commit(metricsDf, "metrics", "metrics_dedup_delta", s"v$v-${keepSnap.uid}")
+    // recorded, and -1 sentinels never reach the table.
+    keep.counters.foreach { k =>
+      store.commitMetrics(
+        spark,
+        "dedup_delta",
+        keep.snap -> (Seq(
+          "new_docs" -> nNew.toDouble,
+          "verified_pairs" -> ver.toDouble,
+          "kept_docs" -> k("kept").toDouble,
+          "dropped_docs" -> k("dropped").toDouble) ++
+          cand.toSeq.flatMap { c =>
+            Seq(
+              "candidate_pairs" -> c.toDouble,
+              "candidates_per_new_doc" -> (if (nNew > 0) c.toDouble / nNew else 0.0))
+          }))
     }
     DeltaResult(
-      pairsSnap, keepSnap, pairsResumed && keepResumed, cand, ver, kept, dropped)
+      pairs.snap,
+      keep.snap,
+      pairs.resumed && keep.resumed,
+      cand.getOrElse(-1L),
+      ver,
+      keep.counter("kept").getOrElse(-1L),
+      keep.counter("dropped").getOrElse(-1L))
   }
 }

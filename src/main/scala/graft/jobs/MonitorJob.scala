@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.operators.SeriesAnalytics
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -55,45 +55,32 @@ object MonitorJob {
           "rollup job first"))
     val tier = store.read(spark, tierSnap)
 
-    val aObs = Observation(s"monitor-alerts-${tierSnap.uid}")
-    val (alertsSnap, aResumed) = store.getOrCompute(
+    val alerts = store.stage(
       "tier_alerts",
       "monitor_alerts",
       s"tier=${tierSnap.uid};v=$alertValueCol;t=$alertThreshold;k=$alertMinRun;w=$windowWidth") {
       SeriesAnalytics
         .consecutiveBreaches(tier, alertValueCol, alertThreshold, alertMinRun, windowWidth)
-        .observe(aObs, count(lit(1)).as("alert_rows"))
     }
-    val alertRows =
-      if (aResumed) -1L else aObs.get("alert_rows").asInstanceOf[Long]
-
-    val cObs = Observation(s"monitor-cusum-${tierSnap.uid}")
-    val (cusumSnap, cResumed) = store.getOrCompute(
+    val cusum = store.stage(
       "tier_cusum_alarms",
       "monitor_cusum",
       s"tier=${tierSnap.uid};v=$cusumValueCol;k=$cusumK;h=$cusumH") {
       SeriesAnalytics
         .cusum(tier, cusumValueCol, cusumK, cusumH)
         .filter(col("alarm"))
-        .observe(cObs, count(lit(1)).as("alarm_rows"))
     }
-    val alarmRows =
-      if (cResumed) -1L else cObs.get("alarm_rows").asInstanceOf[Long]
 
-    if (!aResumed || !cResumed) {
-      val v = cusumSnap.version.toLong
-      val rows =
-        (if (aResumed) Seq.empty
-         else Seq(("monitor", alertsSnap.version.toLong, "alert_rows", alertRows.toDouble))) ++
-          (if (cResumed) Seq.empty
-           else Seq(("monitor", v, "alarm_rows", alarmRows.toDouble)))
-      val metricsDf = spark
-        .createDataFrame(rows)
-        .toDF("stage", "snapshot_id", "metric", "value")
-      store.commit(
-        metricsDf, "metrics", "metrics_monitor",
-        s"a=${alertsSnap.uid};c=${cusumSnap.uid}")
+    // each stage's output row count, observed on its write when it computed
+    val observed = Seq(alerts -> "alert_rows", cusum -> "alarm_rows").flatMap {
+      case (run, metric) => run.counter("rows").map(n => run.snap -> Seq(metric -> n.toDouble))
     }
-    Result(alertsSnap, cusumSnap, alertRows, alarmRows, aResumed && cResumed)
+    if (observed.nonEmpty) store.commitMetrics(spark, "monitor", observed: _*)
+    Result(
+      alerts.snap,
+      cusum.snap,
+      alerts.counter("rows").getOrElse(-1L),
+      cusum.counter("rows").getOrElse(-1L),
+      alerts.resumed && cusum.resumed)
   }
 }

@@ -3,7 +3,7 @@ package graft.jobs
 import graft.core.Tier
 import graft.operators.Rollup
 import graft.sources.TokenTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -60,18 +60,18 @@ object RollupJob {
     val store = new SnapshotStore(storeDir)
     var results = Map.empty[String, StageResult]
 
+    // a stage that computed here also commits its lineage and metrics
     def stage(
         table: String,
         stageName: String,
         fingerprint: String,
-        extraMetrics: () => Seq[(String, Double)] = () => Seq.empty)(
-        compute: => DataFrame): StageResult = {
+        counters: Seq[Column] = Nil,
+        observations: => Seq[Observation] = Nil)(compute: => DataFrame): StageResult = {
       val t0 = System.nanoTime()
-      val (snap, resumed) = store.getOrCompute(table, stageName, fingerprint)(compute)
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      val res = StageResult(snap, resumed, wallMs)
+      val run = store.stage(table, stageName, fingerprint, counters, observations)(compute)
+      val res = StageResult(run.snap, run.resumed, (System.nanoTime() - t0) / 1000000L)
       results += (stageName -> res)
-      if (!resumed) emitObservability(spark, store, res, extraMetrics())
+      run.counters.foreach(emitObservability(spark, store, res, _))
       res
     }
 
@@ -83,25 +83,18 @@ object RollupJob {
     // Stage 1: 1m tier from the raw snapshot's point view, with the
     // validity-invariant counter (skip-and-count, the reference's
     // eval_precond_space.py:100-136 semantics) riding the stage's own
-    // write action via observe — no extra scan.
-    var validityObs: Option[org.apache.spark.sql.Observation] = None
+    // write action via observe — no extra scan. Lazy: a resumed stage
+    // never reads the raw snapshot.
+    lazy val valid = graft.operators.Validity.filterWithCounter(
+      store.read(spark, raw.snap),
+      size(col("tokens")) >= 1,
+      s"validity-1m-${raw.snap.uid}")
     val t1m = stage(
       "tier_1m",
       "rollup_1m",
       s"raw=${raw.snap.uid};salt=$salt",
-      extraMetrics = () =>
-        validityObs.toSeq.flatMap { o =>
-          Seq(
-            "skipped_rows" -> o.get("skipped").asInstanceOf[Long].toDouble,
-            "input_rows" -> o.get("total").asInstanceOf[Long].toDouble)
-        }) {
-      val rawDf = store.read(spark, raw.snap)
-      val (valid, obs) = graft.operators.Validity.filterWithCounter(
-        rawDf,
-        size(col("tokens")) >= 1,
-        s"validity-1m-${raw.snap.uid}")
-      validityObs = Some(obs)
-      val points = valid
+      observations = Seq(valid._2)) {
+      val points = valid._1
         .select(
           col("doc_id"),
           col("source"),
@@ -138,32 +131,19 @@ object RollupJob {
         coarse: StageResult,
         coarseName: String,
         horizon: Long): Unit = {
-      var retObs: Option[org.apache.spark.sql.Observation] = None
       stage(
         s"tier_${fineName}_retained",
         s"retention_$fineName",
         s"fine=${fine.snap.uid};coarse=${coarse.snap.uid};h=$horizon",
-        extraMetrics = () =>
-          retObs.toSeq.flatMap { o =>
-            Seq(
-              "retained_uncovered_rows" ->
-                o.get("uncovered").asInstanceOf[Long].toDouble,
-              "survivor_rows" -> o.get("survivors").asInstanceOf[Long].toDouble)
-          }) {
-        val obs = org.apache.spark.sql.Observation(
-          s"retention-$fineName-${fine.snap.uid}-$horizon")
-        retObs = Some(obs)
-        graft.operators.Retention
-          .safeExpire(
-            store.read(spark, fine.snap),
-            store.read(spark, coarse.snap),
-            coarseName,
-            horizon)
-          .observe(
-            obs,
-            coalesce(sum(expr("CAST(retained_uncovered AS LONG)")), lit(0L))
-              .as("uncovered"),
-            count(lit(1)).as("survivors"))
+        counters = Seq(
+          coalesce(sum(expr("CAST(retained_uncovered AS LONG)")), lit(0L))
+            .as("retained_uncovered_rows"),
+          count(lit(1)).as("survivor_rows"))) {
+        graft.operators.Retention.safeExpire(
+          store.read(spark, fine.snap),
+          store.read(spark, coarse.snap),
+          coarseName,
+          horizon)
       }
       ()
     }
@@ -196,13 +176,17 @@ object RollupJob {
     results
   }
 
-  /** Per-partition lineage rows + stage metrics, appended to the store's
+  /** Names the metrics table gives the validity filter's counters. */
+  private val ValidityMetrics = Map("skipped" -> "skipped_rows", "total" -> "input_rows")
+
+  /** Per-partition lineage rows + stage metrics (the counters observed on
+   * the stage's write among them), appended to the store's
    * lineage/metrics tables (north-rule stats contract). */
   private def emitObservability(
       spark: SparkSession,
       store: SnapshotStore,
       res: StageResult,
-      extra: Seq[(String, Double)] = Seq.empty): Unit = {
+      counters: Map[String, Long]): Unit = {
     val out = store.read(spark, res.snap)
     val lineage = out
       .groupBy(spark_partition_id().as("partition_id"))
@@ -216,15 +200,17 @@ object RollupJob {
     store.commit(lineage, "lineage", s"lineage_${res.snap.stage}", s"v${res.snap.version}")
     val pointsPerSec =
       if (res.wallMs > 0) res.snap.rowCount.toDouble * 1000.0 / res.wallMs else 0.0
-    val metrics = spark
-      .createDataFrame(
-        Seq(
-          (res.snap.stage, res.snap.version.toLong, "rows_out", res.snap.rowCount.toDouble),
-          (res.snap.stage, res.snap.version.toLong, "wall_ms", res.wallMs.toDouble),
-          (res.snap.stage, res.snap.version.toLong, "rows_per_sec", pointsPerSec)) ++
-          extra.map { case (k, v) => (res.snap.stage, res.snap.version.toLong, k, v) })
-      .toDF("stage", "snapshot_id", "metric", "value")
-    store.commit(metrics, "metrics", s"metrics_${res.snap.stage}", s"v${res.snap.version}")
+    val observed = (counters - "rows").toSeq.sorted.map { case (k, v) =>
+      ValidityMetrics.getOrElse(k, k) -> v.toDouble
+    }
+    store.commitMetrics(
+      spark,
+      res.snap.stage,
+      res.snap -> (Seq(
+        "rows_out" -> res.snap.rowCount.toDouble,
+        "wall_ms" -> res.wallMs.toDouble,
+        "rows_per_sec" -> pointsPerSec) ++ observed))
+    ()
   }
 
   def main(args: Array[String]): Unit = {

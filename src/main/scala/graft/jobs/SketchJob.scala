@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.core.Hash
 import graft.operators.Sketches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,42 +35,27 @@ object SketchJob {
   private val SketchTable = "kmv_sketch"
   private val Keys = Seq("source", "bucket", "window_start")
 
-  /** Content fingerprint of a point batch: count + order-independent
-   * xxhash64 sum over the full point identity. */
-  private def contentFp(points: DataFrame): (Long, String) = {
-    val row = points
-      .agg(
-        count(lit(1)),
-        coalesce(
-          sum(xxhash64(col("source"), col("pos"), col("tok")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")))
-      .head()
-    (row.getLong(0), String.valueOf(row.getDecimal(1)))
-  }
-
-  // the key count is the sketch snapshot's own row count — commit()
-  // already observes count(1) on the write action (one key per row), so
-  // a separate Observation here would just duplicate snap.rowCount
-
-  /** Metrics are keyed on the SKETCH snapshot's uid and committed via
-   * getOrCompute, so a resumed (duplicate-delivered) run also resumes
-   * its metrics instead of appending a duplicate version per replay —
-   * without this, anyone summing input_points across metric versions
-   * would double-count every retried delta. */
-  private def commitMetrics(
+  /** Commit-or-resume `sketch` as the next sketch version under `stage`,
+   * fingerprinted by the parameters and the CONTENT of `points` (count +
+   * order-independent xxhash64 sum over the full point identity), plus
+   * its metrics version — keyed on the sketch snapshot's uid, so a
+   * resumed (duplicate-delivered) run also resumes its metrics instead of
+   * appending a duplicate version per replay. The key count is the sketch
+   * snapshot's own row count (one key per row). */
+  private def commitSketch(
       spark: SparkSession,
       store: SnapshotStore,
-      snap: SnapshotInfo,
-      stage: String,
-      inputPoints: Long): SnapshotInfo = {
-    import spark.implicits._
-    store
-      .getOrCompute("metrics", s"metrics_$stage", s"sketch=${snap.uid}")(
-        Seq(
-          ("kmv_sketch", snap.version.toLong, "keys", snap.rowCount.toDouble),
-          ("kmv_sketch", snap.version.toLong, "input_points", inputPoints.toDouble))
-          .toDF("job", "version", "metric", "value"))
-      ._1
+      points: DataFrame,
+      windowWidth: Int,
+      k: Int,
+      stage: String)(sketch: => DataFrame): Result = {
+    val (n, fp) = Hash.contentFingerprint(points, col("source"), col("pos"), col("tok"))
+    val run = store.stage(SketchTable, stage, s"w$windowWidth-k$k-n$n-fp$fp")(sketch)
+    val metrics = store.commitMetrics(
+      spark,
+      s"sketch_$stage",
+      run.snap -> Seq("keys" -> run.snap.rowCount.toDouble, "input_points" -> n.toDouble))
+    Result(run.snap, metrics, run.resumed, run.snap.rowCount)
   }
 
   /** Initial build: the full corpus's per-window KMV sketch, committed
@@ -79,14 +65,9 @@ object SketchJob {
       points: DataFrame,
       store: SnapshotStore,
       windowWidth: Int,
-      k: Int): Result = {
-    val (n, fp) = contentFp(points)
-    val params = s"w$windowWidth-k$k-n$n-fp$fp"
-    val (snap, resumed) = store.getOrCompute(SketchTable, "initial", params)(
+      k: Int): Result =
+    commitSketch(spark, store, points, windowWidth, k, "initial")(
       Sketches.kmvSketch(points, windowWidth, k))
-    val metrics = commitMetrics(spark, store, snap, "initial", n)
-    Result(snap, metrics, resumed, snap.rowCount)
-  }
 
   /** Fold one delta batch into the latest committed sketch. The
    * fingerprint is the delta's CONTENT only (the DedupJob.runDelta
@@ -106,15 +87,11 @@ object SketchJob {
       .getOrElse(throw new IllegalStateException(
         "SketchJob.runDelta: no committed sketch to fold into — run " +
           "SketchJob.run for the initial corpus first"))
-    val (n, fp) = contentFp(deltaPoints)
-    val params = s"w$windowWidth-k$k-n$n-fp$fp"
-    val merged = Sketches.mergeSketches(
-      store.read(spark, prev),
-      Sketches.kmvSketch(deltaPoints, windowWidth, k),
-      Keys,
-      k)
-    val (snap, resumed) = store.getOrCompute(SketchTable, "delta", params)(merged)
-    val metrics = commitMetrics(spark, store, snap, "delta", n)
-    Result(snap, metrics, resumed, snap.rowCount)
+    commitSketch(spark, store, deltaPoints, windowWidth, k, "delta")(
+      Sketches.mergeSketches(
+        store.read(spark, prev),
+        Sketches.kmvSketch(deltaPoints, windowWidth, k),
+        Keys,
+        k))
   }
 }

@@ -3,7 +3,8 @@ package graft.jobs
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /**
  * Iceberg-style snapshot layer over parquet directories (no Iceberg jars
@@ -82,40 +83,63 @@ final class SnapshotStore(base: String) {
     snapshots(table).findLast(s => s.stage == stage && s.fingerprint == fingerprint)
 
   /** Write `df` as the next version of `table` and commit its manifest
-   * atomically. Returns the committed snapshot.
-   *
-   * Two scale/safety properties:
-   *  - the row count comes from `df.observe` piggy-backed on the write
-   *    action itself (NOT a second full read of the output — at 100x scale
-   *    a re-read would double checkpoint I/O);
-   *  - the data directory name embeds the commit uid, so two racing
-   *    writers targeting the same next-version number write to DISJOINT
-   *    directories; the loser's ATOMIC_MOVE of the manifest fails and its
-   *    data dir is left orphaned — never visible, never overwritten. */
+   * atomically. Returns the committed snapshot. */
   def commit(
       df: DataFrame,
       table: String,
       stage: String,
-      fingerprint: String): SnapshotInfo = {
+      fingerprint: String): SnapshotInfo =
+    commitObserved(df, table, stage, fingerprint)._1
+
+  /** [[commit]], also returning the counters observed on the write: the
+   * commit's own row count as `rows` (a reserved name), every aggregate
+   * in `counters` (evaluated over the committed rows) and every metric of
+   * `observations` (attached inside `df`'s plan by the caller). The
+   * always-compute half of [[stage]], for a stage whose fingerprint does
+   * not pin its input content.
+   *
+   * Two scale/safety properties:
+   *  - the counters ride `df.observe` on the write action itself (NOT a
+   *    second full read of the output — at 100x scale a re-read would
+   *    double checkpoint I/O);
+   *  - the data directory name embeds the commit uid, so two racing
+   *    writers targeting the same next-version number write to DISJOINT
+   *    directories; the loser's manifest publish fails and its data dir is
+   *    left orphaned — never visible, never overwritten. */
+  def commitObserved(
+      df: DataFrame,
+      table: String,
+      stage: String,
+      fingerprint: String,
+      counters: Seq[Column] = Nil,
+      observations: => Seq[Observation] = Nil): (SnapshotInfo, Map[String, Long]) = {
     val next = latest(table).map(_.version + 1).getOrElse(1)
     val uid = System.nanoTime()
     val dataPath = tableDir(table).resolve("data").resolve(s"v$next-$uid")
-    val obs = org.apache.spark.sql.Observation(s"commit-$table-v$next-$uid")
-    df.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
+    val obs = Observation(s"commit-$table-v$next-$uid")
+    df.observe(obs, count(lit(1)).as("rows"), counters: _*)
       .write.mode("overwrite").parquet(dataPath.toString)
-    val rows = obs.get("rows").asInstanceOf[Long]
-    val info =
-      SnapshotInfo(table, next, uid, stage, fingerprint, rows, dataPath.toString)
-    Files.createDirectories(snapDir(table))
-    val tmp = snapDir(table).resolve(s".v$next-$uid.json.tmp")
+    val observed = (observations :+ obs)
+      .flatMap(_.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+      .toMap
+    val info = publish(
+      SnapshotInfo(table, next, uid, stage, fingerprint, observed("rows"), dataPath.toString))
+    (info, observed)
+  }
+
+  /** Publish `info` as its table's manifest v<version>.json: write a
+   * temporary file, then hard-link it into place. The link is an atomic
+   * CREATE-if-absent: it fails with FileAlreadyExistsException when the
+   * manifest exists (POSIX link(2) never replaces), unlike
+   * rename(2)/ATOMIC_MOVE which silently replaces an existing target — so
+   * of two racing writers exactly one publishes vN and the loser's
+   * exception surfaces instead of clobbering. */
+  private def publish(info: SnapshotInfo): SnapshotInfo = {
+    val dir = snapDir(info.table)
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".v${info.version}-${info.uid}.json.tmp")
     Files.write(tmp, render(info).getBytes(StandardCharsets.UTF_8))
-    // Atomic CREATE-if-absent: a hard link fails with
-    // FileAlreadyExistsException when the manifest exists (POSIX link(2)
-    // never replaces), unlike rename(2)/ATOMIC_MOVE which silently
-    // replaces an existing target — so of two racing writers exactly one
-    // commits vN and the loser's exception surfaces instead of clobbering.
-    try Files.createLink(snapDir(table).resolve(s"v$next.json"), tmp)
+    try Files.createLink(dir.resolve(s"v${info.version}.json"), tmp)
     finally Files.deleteIfExists(tmp)
     info
   }
@@ -147,21 +171,15 @@ final class SnapshotStore(base: String) {
       .getOrElse(sys.error(s"$table has no committed version $version to roll back to"))
     val next = latest(table).map(_.version + 1).getOrElse(1)
     require(next > version, s"$table: cannot roll back to unwritten future version $version")
-    val uid = System.nanoTime()
-    val info = SnapshotInfo(
-      table,
-      next,
-      uid,
-      stage = s"rollback",
-      fingerprint = s"rollback-to-v$version-uid${target.uid}",
-      rowCount = target.rowCount,
-      dataPath = target.dataPath)
-    Files.createDirectories(snapDir(table))
-    val tmp = snapDir(table).resolve(s".v$next-$uid.json.tmp")
-    Files.write(tmp, render(info).getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(snapDir(table).resolve(s"v$next.json"), tmp)
-    finally Files.deleteIfExists(tmp)
-    info
+    publish(
+      SnapshotInfo(
+        table,
+        next,
+        System.nanoTime(),
+        stage = "rollback",
+        fingerprint = s"rollback-to-v$version-uid${target.uid}",
+        rowCount = target.rowCount,
+        dataPath = target.dataPath))
   }
 
   /** Expire snapshots older than the newest `keepLast` versions:
@@ -202,9 +220,57 @@ final class SnapshotStore(base: String) {
   def getOrCompute(
       table: String,
       stage: String,
-      fingerprint: String)(compute: => DataFrame): (SnapshotInfo, Boolean) =
+      fingerprint: String)(compute: => DataFrame): (SnapshotInfo, Boolean) = {
+    val run = this.stage(table, stage, fingerprint)(compute)
+    (run.snap, run.resumed)
+  }
+
+  /** The stage primitive every job commits through: return the existing
+   * snapshot for (stage, fingerprint) — the resume — or compute `compute`
+   * and commit it with the counters of [[commitObserved]]. Counters exist
+   * only when the stage computed here: a resumed stage's write never ran,
+   * and the computing run's values are in the metrics table. */
+  def stage(
+      table: String,
+      stage: String,
+      fingerprint: String,
+      counters: Seq[Column] = Nil,
+      observations: => Seq[Observation] = Nil)(compute: => DataFrame): StageRun =
     find(table, stage, fingerprint) match {
-      case Some(s) => (s, true)
-      case None => (commit(compute, table, stage, fingerprint), false)
+      case Some(s) => StageRun(s, None)
+      case None =>
+        val (s, observed) =
+          commitObserved(compute, table, stage, fingerprint, counters, observations)
+        StageRun(s, Some(observed))
     }
+
+  /** The one metrics writer: each (snapshot, metrics) pair becomes rows
+   * (stage, snapshot_id = the snapshot's version, metric, value) of ONE
+   * new `metrics` table version. The version is keyed on the producing
+   * snapshots' uids and resumed like any stage, so a replayed run never
+   * appends a duplicate version (anyone summing a counter across versions
+   * would double-count it). */
+  def commitMetrics(
+      spark: SparkSession,
+      stage: String,
+      observed: (SnapshotInfo, Seq[(String, Double)])*): SnapshotInfo = {
+    require(observed.exists(_._2.nonEmpty), s"commitMetrics($stage): no metric rows")
+    val rows = for ((snap, metrics) <- observed; (metric, value) <- metrics)
+      yield (stage, snap.version.toLong, metric, value)
+    val producers = observed.map { case (snap, _) => s"v${snap.version}-${snap.uid}" }
+    this
+      .stage("metrics", s"metrics_$stage", producers.mkString(";")) {
+        spark.createDataFrame(rows).toDF("stage", "snapshot_id", "metric", "value")
+      }
+      .snap
+  }
+}
+
+/** A stage as [[SnapshotStore.stage]] left it: the snapshot and, only
+ * when the stage computed here, the counters observed on its write. */
+final case class StageRun(snap: SnapshotInfo, counters: Option[Map[String, Long]]) {
+  def resumed: Boolean = counters.isEmpty
+
+  /** Counter `name` observed on this stage's write; None when resumed. */
+  def counter(name: String): Option[Long] = counters.map(_(name))
 }

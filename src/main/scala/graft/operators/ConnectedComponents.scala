@@ -61,18 +61,8 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint()
 
-    // the hash sum rides DECIMAL(38,0): a BIGINT sum of 64-bit hashes
-    // overflows (and ANSI mode rightly throws) at any real edge count
-    def fingerprint(e: DataFrame): (Long, String) = {
-      val r = e
-        .agg(
-          count(lit(1)),
-          coalesce(
-            sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")))
-        .head()
-      (r.getLong(0), String.valueOf(r.getDecimal(1)))
-    }
+    def fingerprint(e: DataFrame): (Long, String) =
+      graft.core.Hash.contentFingerprint(e, col("u"), col("v"))
 
     // Frees the block-storage copy behind a localCheckpoint'ed edge set.
     // Each round's checkpoint blocks are dead weight the moment the NEXT
@@ -161,14 +151,18 @@ object ConnectedComponents {
       idCol: String,
       pairs: DataFrame,
       aCol: String = "doc_a",
-      bCol: String = "doc_b"): DataFrame = {
-    val comp = components(pairs, aCol, bCol).withColumnRenamed("node", "doc_id")
+      bCol: String = "doc_b"): DataFrame =
+    keepVerdict(docs, idCol, components(pairs, aCol, bCol))
+
+  /** The verdict step of [[keepList]] over existing (node, rep) `labels`
+   * (from [[components]] or [[incrementalComponents]]): a doc without a
+   * label is a singleton and represents itself. */
+  private[graft] def keepVerdict(docs: DataFrame, idCol: String, labels: DataFrame): DataFrame =
     docs
       .select(col(idCol).cast("long").as("doc_id"))
-      .join(comp, Seq("doc_id"), "left")
+      .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_id"))
       .withColumn("keep", col("doc_id") === col("rep_id"))
-  }
 
   /** Incremental closure maintenance: fold NEW pairs into an existing
    * (node, rep) labeling without re-walking the old pair set. Each
@@ -185,7 +179,7 @@ object ConnectedComponents {
    * SINGLETON label (node == rep) is a self-loop edge and is filtered,
    * so a label table fed back across many increments keeps only
    * multi-node components — consumers re-derive singleton verdicts via
-   * the [[keepList]] coalesce, never from label presence. */
+   * [[keepVerdict]], never from label presence. */
   def incrementalComponents(
       prevLabels: DataFrame,
       newPairs: DataFrame,

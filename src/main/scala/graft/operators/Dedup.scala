@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.functions.GraftFunctions.call
-import graft.functions.SimHash
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,34 +92,20 @@ object Dedup {
 
   // -- MinHash + LSH ------------------------------------------------------
 
-  /** The per-seed MinHash permutation family h_i(x) = mix64(x xor
-   * i*GOLDEN), over the shared SplitMix64 finalizer
-   * ([[graft.core.Hash.mix64]]). */
-  private def mix64(z: Long): Long = graft.core.Hash.mix64(z)
-
-  /** MinHash signature per doc: sig[i] = min over shingle hashes of the
-   * i-seeded SplitMix64 permutation. Computed ROW-LOCALLY by the
-   * `minhash_sig` kernel over the shingle array — zero shuffle (the
-   * round-1 formulation exploded every shingle and ran numHashes
-   * min-aggregations, shuffling |shingles| rows for nothing: the minima
-   * are per-doc state).
+  /** MinHash signature per doc from an `(_id, hs)` shingle table:
+   * sig[i] = min over shingle hashes of the i-seeded SplitMix64
+   * permutation h_i(x) = mix64(x xor i*GOLDEN) ([[graft.core.Hash.mix64]]).
+   * Computed ROW-LOCALLY by the `minhash_sig` kernel over the shingle
+   * array — zero shuffle (the round-1 formulation exploded every shingle
+   * and ran numHashes min-aggregations, shuffling |shingles| rows for
+   * nothing: the minima are per-doc state). The LSH chain shingles once
+   * and reuses the same table for verification.
    *
    * Docs with ZERO shingles (text shorter than n words) are dropped: the
    * min over an empty set is undefined, and an all-sentinel signature
    * would make every such pair collide in every band and then pass the
    * 0/0 = NaN Jaccard verification. The exact path drops them too (no
    * shingle rows to join), so the LSH == exact invariant holds. */
-  def minHashSignatures(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int): DataFrame =
-    signaturesFromSets(shingleHashes(docs, idCol, textCol, idCol, n), numHashes)
-
-  /** Signature derivation from an existing `(_id, hs)` shingle table —
-   * split out so the LSH chain can shingle once and reuse the same table
-   * for verification. One `minhash_sig` kernel call per row. */
   private def signaturesFromSets(sets: DataFrame, numHashes: Int): DataFrame = {
     sets
       .filter(size(col("hs")) > 0)
@@ -143,7 +128,7 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       threshold: Double): DataFrame =
-    lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, obs = None)._1
+    lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, None, None)._1
 
   /** The returned-pairs + release-hook view of the LSH chain.
    * [[LshPairs.release]] unpersists the chain's internal shingle cache; call
@@ -154,20 +139,6 @@ object Dedup {
    * but a long-lived session running many DIFFERENT corpora through the
    * chain should release each when done ([[graft.jobs.DedupJob]] does). */
   final case class LshPairs(pairs: DataFrame, release: () => Unit)
-
-  /** [[minHashLshPairs]] returning the explicit cache-release hook. */
-  def minHashLshPairsReleasable(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double): LshPairs = {
-    val (pairs, release) =
-      lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, obs = None)
-    LshPairs(pairs, release)
-  }
 
   /** [[minHashLshPairs]] with candidate-volume telemetry riding
    * `df.observe` (the [[Validity]] pattern): after ANY action on the
@@ -187,7 +158,7 @@ object Dedup {
     val obsCand = Observation("lsh_candidates")
     val obsVer = Observation("lsh_verified")
     val (pairs, release) =
-      lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, Some((obsCand, obsVer)))
+      lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, None, Some((obsCand, obsVer)))
     (LshPairs(pairs, release), obsCand, obsVer)
   }
 
@@ -215,28 +186,8 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       threshold: Double,
-      obs: Option[(Observation, Observation)] = None): (DataFrame, () => Unit) = {
-    val sets = shingleHashes(docs, idCol, textCol, idCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ids = newIds
-      .select(col(newIds.columns.head).cast("long").as("_nid"))
-      .distinct()
-    val touching0 = bandCandidates(signaturesFromSets(sets, numHashes), bands)
-      .join(
-        broadcast(ids.select(col("_nid").as("_na"))), col("_id") === col("_na"), "left")
-      .join(
-        broadcast(ids.select(col("_nid").as("_nb"))), col("_idb") === col("_nb"), "left")
-      .filter(col("_na").isNotNull || col("_nb").isNotNull)
-      .select(col("_id"), col("_idb"))
-    val touching = obs
-      .map { case (c, _) => touching0.observe(c, count(lit(1)).as("candidate_pairs")) }
-      .getOrElse(touching0)
-    val verified0 = verifyAgainstSets(touching, sets, threshold)
-    val verified = obs
-      .map { case (_, v) => verified0.observe(v, count(lit(1)).as("verified_pairs")) }
-      .getOrElse(verified0)
-    (verified, () => { sets.unpersist(blocking = false); () })
-  }
+      obs: Option[(Observation, Observation)] = None): (DataFrame, () => Unit) =
+    lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, Some(newIds), obs)
 
   /** The shared chain: shingle ONCE, derive signatures and verification
    * sets from the same persisted shingle table. Shingling is the chain's
@@ -247,6 +198,10 @@ object Dedup {
    * and re-shingled per consumer (measured 3 scans end-to-end). Persist is
    * MEMORY_AND_DISK: the set table is ~50 longs/doc, far smaller than the
    * corpus text, and spills rather than OOMs on big blocks.
+   *
+   * With `newIds` (a one-column id frame) only the candidates touching
+   * one of those ids go on to verification — the delta chain
+   * ([[minHashLshDeltaPairs]]); the id set is broadcast.
    *
    * Returns the verified pairs plus the shingle-cache release hook (see
    * [[LshPairs]] for the lifetime contract — the hook is safe to call any
@@ -259,10 +214,23 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       threshold: Double,
+      newIds: Option[DataFrame],
       obs: Option[(Observation, Observation)]): (DataFrame, () => Unit) = {
     val sets = shingleHashes(docs, idCol, textCol, idCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands0 = bandCandidates(signaturesFromSets(sets, numHashes), bands)
+    val all = bandCandidates(signaturesFromSets(sets, numHashes), bands)
+    val cands0 = newIds.fold(all) { delta =>
+      val ids = delta
+        .select(col(delta.columns.head).cast("long").as("_nid"))
+        .distinct()
+      all
+        .join(
+          broadcast(ids.select(col("_nid").as("_na"))), col("_id") === col("_na"), "left")
+        .join(
+          broadcast(ids.select(col("_nid").as("_nb"))), col("_idb") === col("_nb"), "left")
+        .filter(col("_na").isNotNull || col("_nb").isNotNull)
+        .select(col("_id"), col("_idb"))
+    }
     val cands = obs
       .map { case (c, _) => cands0.observe(c, count(lit(1)).as("candidate_pairs")) }
       .getOrElse(cands0)
@@ -272,17 +240,6 @@ object Dedup {
       .getOrElse(verified0)
     (verified, () => { sets.unpersist(blocking = false); () })
   }
-
-  /** Distinct band-collision candidate pairs (a < b), linear in
-   * docs x bands (kept for the stage-probe benchmark). */
-  private[graft] def lshCandidatePairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int): DataFrame =
-    bandCandidates(minHashSignatures(docs, idCol, textCol, n, numHashes), bands)
 
   /** Band-bucket candidate pairs over (_id, sig) signature rows: one
    * SplitMix64 chain bucket id per band (`lsh_bands` kernel), then ONE
@@ -334,12 +291,6 @@ object Dedup {
           (size(col("sa")) + size(col("sb")) - col("_inter")).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
-
-  /** SimHash signatures per doc (near-dup pairs at small Hamming distance);
-   * the signature itself is the [[graft.functions.SimHash64]] Catalyst
-   * expression applied to the word array. */
-  def simHashSignature(words: Array[String]): Long =
-    SimHash.simhash64(words.iterator)
 
   /** The SimHash ASSIGNMENT stage on the hard oracle gate: the
    * `simhash_affine` kernel (mod-prime char-fold word hashes + Lehmer

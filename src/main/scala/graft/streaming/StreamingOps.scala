@@ -1,11 +1,12 @@
 package graft.streaming
 
-import graft.core.Tier
+import graft.core.{Hash, Tier}
 import graft.functions.GraftFunctions.call
+import graft.jobs.{SnapshotInfo, SnapshotStore}
 import graft.operators.{Retention, Rollup}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -83,14 +84,13 @@ object StreamingOps {
 
   /** Exactly-once batch commit shared by every streaming sink, in two
    * steps: [[batchFingerprint]] once per micro-batch, then
-   * [[pendingCommit]] per table the batch commits to. The stored
-   * fingerprint is the batch id PLUS exact content (count +
-   * order-independent hash-sum over all columns, DECIMAL(38,0) — a
-   * BIGINT sum of 64-bit hashes overflows). A batch-id-only fingerprint
-   * cannot tell a genuine crash-replay from a fresh checkpoint whose
-   * counter rewound onto a populated table — the rewound batch would be
-   * skipped as a "replay" and its rows silently dropped (or, for the
-   * merge sink, double-counted). Rules:
+   * [[SinkBatch.pendingCommit]] per table the batch commits to. The stored
+   * fingerprint is the batch id PLUS exact content (the shared
+   * [[graft.core.Hash.contentFingerprint]] over all columns). A
+   * batch-id-only fingerprint cannot tell a genuine crash-replay from a
+   * fresh checkpoint whose counter rewound onto a populated table — the
+   * rewound batch would be skipped as a "replay" and its rows silently
+   * dropped (or, for the merge sink, double-counted). Rules:
    *   - same id, same content  -> genuine replay: skip.
    *   - same id, DIFFERENT content (or a legacy id-only fingerprint,
    *     whose content is unverifiable) -> the counter rewound: refuse
@@ -105,43 +105,53 @@ object StreamingOps {
    *     commit because it IS the stored fingerprint, so it cannot ride
    *     the commit's observe). */
   private def batchFingerprint(batchId: Long, batch: DataFrame): Option[String] = {
-    val cols = batch.columns.map(col)
-    val fpRow = batch
-      .agg(
-        count(lit(1)),
-        coalesce(
-          sum(xxhash64(struct(cols: _*)).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")))
-      .collect()(0)
-    val n = fpRow.getLong(0)
-    Option.when(n > 0)(s"batch=$batchId-n$n-h${fpRow.getDecimal(1).toBigInteger}")
+    val (n, h) = Hash.contentFingerprint(batch, batch.columns.map(col).toSeq: _*)
+    Option.when(n > 0)(s"batch=$batchId-n$n-h$h")
   }
 
-  /** The per-table step of the [[batchFingerprint]] contract: the
-   * table's manifest listing when it does not hold batch `batchId` yet
-   * (so a sink can read the previous version without re-listing), None
-   * for a genuine replay; fails loudly on a rewound counter. The caller
-   * commits with `store.commit(df, table, stage, fp)`. */
-  private def pendingCommit(
-      store: graft.jobs.SnapshotStore,
-      table: String,
-      stage: String,
-      batchId: Long,
-      fp: String): Option[Seq[graft.jobs.SnapshotInfo]] = {
-    val snaps = store.snapshots(table)
-    val replayed = snaps.exists(s => s.stage == stage && s.fingerprint == fp)
-    val collided = snaps.exists(s =>
-      s.stage == stage &&
-        (s.fingerprint == s"batch=$batchId" ||
-          (s.fingerprint.startsWith(s"batch=$batchId-") && s.fingerprint != fp)))
-    require(
-      replayed || !collided,
-      s"streaming sink: batch id $batchId was already committed with " +
-        "different (or unverifiable legacy) content — a fresh checkpoint " +
-        "was pointed at a populated table. Keep the original " +
-        "checkpointLocation or start a new table.")
-    Option.unless(replayed)(snaps)
+  /** One non-empty micro-batch of a snapshot sink: its rows, id and
+   * content fingerprint, committed under the sink's `stage`. */
+  private final case class SinkBatch(rows: DataFrame, id: Long, fp: String, stage: String) {
+
+    /** The per-table step of the [[batchFingerprint]] contract: the
+     * table's manifest listing when it does not hold this batch yet (so a
+     * sink can read the previous version without re-listing), None for a
+     * genuine replay; fails loudly on a rewound counter. */
+    def pendingCommit(store: SnapshotStore, table: String): Option[Seq[SnapshotInfo]] = {
+      val snaps = store.snapshots(table)
+      val replayed = snaps.exists(s => s.stage == stage && s.fingerprint == fp)
+      val collided = snaps.exists(s =>
+        s.stage == stage &&
+          (s.fingerprint == s"batch=$id" ||
+            (s.fingerprint.startsWith(s"batch=$id-") && s.fingerprint != fp)))
+      require(
+        replayed || !collided,
+        s"streaming sink: batch id $id was already committed with " +
+          "different (or unverifiable legacy) content — a fresh checkpoint " +
+          "was pointed at a populated table. Keep the original " +
+          "checkpointLocation or start a new table.")
+      Option.unless(replayed)(snaps)
+    }
+
+    def commit(store: SnapshotStore, df: DataFrame, table: String): SnapshotInfo =
+      store.commit(df, table, stage, fp)
   }
+
+  /** The one snapshot-sink builder: streams `df` as query `queryName`
+   * (append mode, checkpoint REQUIRED at `checkpointDir` — batch ids are
+   * only unique within one checkpoint lineage) and hands each non-empty
+   * micro-batch, fingerprinted once, to the sink's `commit` body. */
+  private def snapshotSink(df: DataFrame, queryName: String, checkpointDir: String)(
+      commit: SinkBatch => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .queryName(queryName)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batchFingerprint(batchId, batch).foreach { fp =>
+          commit(SinkBatch(batch, batchId, fp, s"stream_$queryName"))
+        }
+      }
 
   /** Continuous ingestion into the engine's snapshot layer: each
    * micro-batch commits one immutable snapshot version — exactly-once
@@ -155,21 +165,13 @@ object StreamingOps {
    * and is refused rather than silently dropped. */
   def sinkToSnapshots(
       df: DataFrame,
-      store: graft.jobs.SnapshotStore,
+      store: SnapshotStore,
       table: String,
       queryName: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        for {
-          fp <- batchFingerprint(batchId, batch)
-          _ <- pendingCommit(store, table, s"stream_$queryName", batchId, fp)
-        } store.commit(batch, table, s"stream_$queryName", fp)
-        ()
-      }
+      checkpointDir: String): DataStreamWriter[Row] =
+    snapshotSink(df, queryName, checkpointDir) { b =>
+      b.pendingCommit(store, table).foreach(_ => b.commit(store, b.rows, table))
+    }
 
   /** Streaming codec-payload sink — the continuous face of the batch
    * payload table (CodecQueries.tierPayload): each micro-batch takes the
@@ -191,24 +193,16 @@ object StreamingOps {
    * (source string, bucket, window_start long, value double). */
   def codecPayloadSink(
       tierWindows: DataFrame,
-      store: graft.jobs.SnapshotStore,
+      store: SnapshotStore,
       table: String,
       queryName: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    tierWindows.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // watermark-only batches carry no finalized windows; the
-        // fingerprint's emptiness probe keeps them from minting empty
-        // snapshot versions
-        for {
-          fp <- batchFingerprint(batchId, batch)
-          _ <- pendingCommit(store, table, s"stream_$queryName", batchId, fp)
-        } store.commit(encodePayloadSegments(batch), table, s"stream_$queryName", fp)
-        ()
-      }
+      checkpointDir: String): DataStreamWriter[Row] =
+    // watermark-only batches carry no finalized windows; the
+    // fingerprint's emptiness probe keeps them from minting empty
+    // snapshot versions
+    snapshotSink(tierWindows, queryName, checkpointDir) { b =>
+      b.pendingCommit(store, table).foreach(_ => b.commit(store, encodePayloadSegments(b.rows), table))
+    }
 
   /** Streaming tier maintenance — the continuous face of
    * [[graft.operators.Rollup.mergeLate]]: each micro-batch of raw
@@ -227,18 +221,14 @@ object StreamingOps {
    * (source string, pos, tok). */
   def tierMergeSink(
       points: DataFrame,
-      store: graft.jobs.SnapshotStore,
+      store: SnapshotStore,
       table: String,
       queryName: String,
       checkpointDir: String,
-      tier: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    points.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldTierBatch(store, s"stream_$queryName", "tierMergeSink", batchId, batch, table, tier, None)
-      }
+      tier: String): DataStreamWriter[Row] =
+    snapshotSink(points, queryName, checkpointDir) { b =>
+      foldTierBatch(store, "tierMergeSink", b, table, tier, None)
+    }
 
   /** Streaming tier MAINTENANCE — the lifecycle composed into one sink
    * (ingest -> merge -> compact-then-expire), the continuous face of
@@ -274,39 +264,33 @@ object StreamingOps {
    * Input schema: (source string, pos, tok). */
   def tierMaintenanceSink(
       points: DataFrame,
-      store: graft.jobs.SnapshotStore,
+      store: SnapshotStore,
       fineTable: String,
       coarseTable: String,
       queryName: String,
       checkpointDir: String,
       fineTier: String,
       coarseTier: String,
-      keepWindows: Long): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      keepWindows: Long): DataStreamWriter[Row] = {
     require(keepWindows >= 1, s"tierMaintenanceSink: keepWindows must be >= 1, got $keepWindows")
     require(
       Tier.widths(coarseTier) > Tier.widths(fineTier),
       s"tierMaintenanceSink: coverage tier $coarseTier must be coarser than $fineTier")
     val coverage = Some(Coverage(coarseTable, coarseTier, keepWindows))
-    points.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldTierBatch(
-          store, s"stream_$queryName", "tierMaintenanceSink", batchId, batch, fineTable, fineTier,
-          coverage)
-      }
+    snapshotSink(points, queryName, checkpointDir) { b =>
+      foldTierBatch(store, "tierMaintenanceSink", b, fineTable, fineTier, coverage)
+    }
   }
 
   /** The maintenance sink's coverage tier: `table` of tier `tier`, and
    * how many fine windows the fine tier keeps behind its frontier. */
   private final case class Coverage(table: String, tier: String, keepWindows: Long)
 
-  /** The one per-batch fold of both tier sinks: micro-batch `batch` of
-   * raw points into the `tier` table `table` — and first into the
-   * `coverage` table, which `table` is then compacted-then-expired
-   * against. The batch is fingerprinted once, and every table that still
-   * lacks it ([[pendingCommit]]) folds the same ONE persisted delta
+  /** The one per-batch fold of both tier sinks: micro-batch `b` of raw
+   * points into the `tier` table `table` — and first into the `coverage`
+   * table, which `table` is then compacted-then-expired against. Every
+   * table that still lacks the batch ([[SinkBatch.pendingCommit]]) folds
+   * the same ONE persisted delta
    * ([[graft.operators.Rollup.pointState]]; the coverage delta is its
    * [[graft.operators.Rollup.cascadeState]]) with
    * [[graft.operators.Rollup.foldDelta]]. ONE job over the delta checks
@@ -318,56 +302,53 @@ object StreamingOps {
    * exact-safe. A stored `retained_uncovered` flag is dropped before the
    * fold; the expiry re-derives it. */
   private def foldTierBatch(
-      store: graft.jobs.SnapshotStore,
-      stage: String,
+      store: SnapshotStore,
       caller: String,
-      batchId: Long,
-      batch: DataFrame,
+      b: SinkBatch,
       table: String,
       tier: String,
-      coverage: Option[Coverage]): Unit =
-    batchFingerprint(batchId, batch).foreach { fp =>
-      val spark = batch.sparkSession
-      // Some(previous snapshot, if any) while `t` still lacks this batch
-      def pending(t: String): Option[Option[DataFrame]] =
-        pendingCommit(store, t, stage, batchId, fp)
-          .map(_.lastOption.map(store.read(spark, _).drop("retained_uncovered")))
-      val coarsePrev = coverage.flatMap(c => pending(c.table).map(c -> _))
-      val finePrev = pending(table)
-      if (coarsePrev.nonEmpty || finePrev.nonEmpty) {
-        val delta = Rollup.pointState(batch, tier).persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val frontierOver = if (coverage.isDefined) finePrev.flatten else None
-          val probe = frontierOver
-            .foldLeft(delta.select(lit(1L).as("_n"), col("window_start"))) { (rows, prev) =>
-              rows.unionByName(prev.select(lit(0L).as("_n"), col("window_start")))
-            }
-            .agg(sum(col("_n")), expr("CAST(max(window_start) AS BIGINT)"))
-            .head()
-          val n = probe.getLong(0)
-          Rollup.guardDelta(n, Rollup.DefaultMaxAffectedWindows, caller)
-          def fold(prev: Option[DataFrame], state: DataFrame, t: String): DataFrame =
-            prev.fold(Rollup.finishTier(state, t))(Rollup.foldDelta(_, state, n, t))
-          // coarse first: it is the fine tier's expiry coverage
-          coarsePrev.foreach { case (c, prev) =>
-            store.commit(fold(prev, Rollup.cascadeState(delta, c.tier), c.tier), c.table, stage, fp)
+      coverage: Option[Coverage]): Unit = {
+    val spark = b.rows.sparkSession
+    // Some(previous snapshot, if any) while `t` still lacks this batch
+    def pending(t: String): Option[Option[DataFrame]] =
+      b.pendingCommit(store, t)
+        .map(_.lastOption.map(store.read(spark, _).drop("retained_uncovered")))
+    val coarsePrev = coverage.flatMap(c => pending(c.table).map(c -> _))
+    val finePrev = pending(table)
+    if (coarsePrev.nonEmpty || finePrev.nonEmpty) {
+      val delta = Rollup.pointState(b.rows, tier).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val frontierOver = if (coverage.isDefined) finePrev.flatten else None
+        val probe = frontierOver
+          .foldLeft(delta.select(lit(1L).as("_n"), col("window_start"))) { (rows, prev) =>
+            rows.unionByName(prev.select(lit(0L).as("_n"), col("window_start")))
           }
-          finePrev.foreach { prev =>
-            val merged = fold(prev, delta, tier)
-            val out = coverage.fold(merged) { c =>
-              val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
-              val covered = store
-                .latest(c.table)
-                .getOrElse(throw new IllegalStateException(
-                  s"$caller: coverage table ${c.table} has no snapshot — the " +
-                    "coarse merge commits first"))
-              Retention.safeExpire(merged, store.read(spark, covered), c.tier, horizon)
-            }
-            store.commit(out, table, stage, fp)
+          .agg(sum(col("_n")), expr("CAST(max(window_start) AS BIGINT)"))
+          .head()
+        val n = probe.getLong(0)
+        Rollup.guardDelta(n, Rollup.DefaultMaxAffectedWindows, caller)
+        def fold(prev: Option[DataFrame], state: DataFrame, t: String): DataFrame =
+          prev.fold(Rollup.finishTier(state, t))(Rollup.foldDelta(_, state, n, t))
+        // coarse first: it is the fine tier's expiry coverage
+        coarsePrev.foreach { case (c, prev) =>
+          b.commit(store, fold(prev, Rollup.cascadeState(delta, c.tier), c.tier), c.table)
+        }
+        finePrev.foreach { prev =>
+          val merged = fold(prev, delta, tier)
+          val out = coverage.fold(merged) { c =>
+            val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
+            val covered = store
+              .latest(c.table)
+              .getOrElse(throw new IllegalStateException(
+                s"$caller: coverage table ${c.table} has no snapshot — the " +
+                  "coarse merge commits first"))
+            Retention.safeExpire(merged, store.read(spark, covered), c.tier, horizon)
           }
-        } finally delta.unpersist()
-      }
+          b.commit(store, out, table)
+        }
+      } finally delta.unpersist()
     }
+  }
 
   /** One payload-segment row per (source, bucket) of a finalized-window
    * batch: timestamps delta-of-delta encoded, values Gorilla- AND
@@ -599,35 +580,22 @@ object StreamingOps {
    * bounded by keys x k. */
   def sketchMaintenanceSink(
       points: DataFrame,
-      store: graft.jobs.SnapshotStore,
+      store: SnapshotStore,
       table: String,
       queryName: String,
       checkpointDir: String,
       windowWidth: Int,
-      k: Int): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    points.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        for {
-          fp <- batchFingerprint(batchId, batch)
-          snaps <- pendingCommit(store, table, s"stream_$queryName", batchId, fp)
-        } {
-          val delta = graft.operators.Sketches.kmvSketch(batch, windowWidth, k)
-          val merged = snaps.lastOption match {
-            case Some(p) =>
-              graft.operators.Sketches.mergeSketches(
-                store.read(batch.sparkSession, p),
-                delta,
-                Seq("source", "bucket", "window_start"),
-                k)
-            case None => delta
-          }
-          store.commit(merged, table, s"stream_$queryName", fp)
+      k: Int): DataStreamWriter[Row] =
+    snapshotSink(points, queryName, checkpointDir) { b =>
+      b.pendingCommit(store, table).foreach { snaps =>
+        val delta = graft.operators.Sketches.kmvSketch(b.rows, windowWidth, k)
+        val merged = snaps.lastOption.fold(delta) { p =>
+          graft.operators.Sketches.mergeSketches(
+            store.read(b.rows.sparkSession, p), delta, Seq("source", "bucket", "window_start"), k)
         }
-        ()
+        b.commit(store, merged, table)
       }
+    }
 
   final case class Ev(user_id: Long, ts_us: Long, value: Double)
   final case class SessionState(sessionId: Long, lastTsUs: Long)

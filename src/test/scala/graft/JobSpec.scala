@@ -454,6 +454,48 @@ class JobSpec extends SparkSpec {
     assert(m("input_points") == delta.count().toDouble)
   }
 
+  test("metrics: every job writes rows in the one (stage, snapshot_id, metric, value) schema") {
+    import org.apache.spark.sql.functions._
+    val base = tmpDir().toString
+    val store = new SnapshotStore(base)
+    val dir = sf("sf0.001")
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    RollupJob.run(spark, dir, base, retentionHorizon = Some(300L))
+    graft.jobs.DedupJob.run(spark, docs, store)
+    graft.jobs.CurationJob.run(
+      spark, docs.select("doc_id", "text", "source"), docs.filter(col("doc_id") % 53 === 0), store)
+    graft.jobs.MonitorJob.run(
+      spark, store,
+      alertThreshold = 25200.0, alertMinRun = 2, windowWidth = 60,
+      cusumK = 1507710L, cusumH = 150000L)
+    graft.jobs.SketchJob.run(spark, TokenTable.points(spark, dir), store, 3600, 64)
+    val metrics = store.snapshots("metrics").map(store.read(spark, _))
+    metrics.foreach { m =>
+      assert(m.columns.toSeq == Seq("stage", "snapshot_id", "metric", "value"))
+      assert(m.schema.map(_.dataType.typeName) == Seq("string", "long", "string", "double"))
+    }
+    val stages = metrics.flatMap(_.select("stage").distinct().collect().map(_.getString(0))).toSet
+    for (s <- Seq("rollup_1m", "retention_1m", "dedup_lsh", "curation", "monitor", "sketch_initial"))
+      assert(stages(s), s"no metrics rows for stage $s: $stages")
+  }
+
+  test("content fingerprint: pinned to the count + sum of xxhash64 as DECIMAL(38,0) literal") {
+    import org.apache.spark.sql.functions._
+    val df = spark
+      .range(0, 1000)
+      .select(
+        col("id"),
+        (col("id") % 7).cast("int").as("k"),
+        concat(lit("s"), col("id").cast("string")).as("s"))
+    // the literals are what coalesce(sum(xxhash64(cols).cast("decimal(38,0)")), 0)
+    // gives for this frame
+    assert(
+      graft.core.Hash.contentFingerprint(df, col("id"), col("k"), col("s")) ==
+        (1000L, "127365493055495745233"))
+    assert(graft.core.Hash.contentFingerprint(df, col("id")) == (1000L, "110247926852080349360"))
+    assert(graft.core.Hash.contentFingerprint(df.filter("id < 0"), col("id")) == (0L, "0"))
+  }
+
   test("snapshot lifecycle: time travel, zero-copy rollback, reachability-safe expiry") {
     import spark.implicits._
     val store = new SnapshotStore(tmpDir().toString)
