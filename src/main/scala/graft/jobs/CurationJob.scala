@@ -1,5 +1,6 @@
 package graft.jobs
 
+import graft.core.Hash
 import graft.operators.{Dedup, TextAnalysis}
 import graft.sources.UnionBuilder
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,6 +21,9 @@ import org.apache.spark.sql.functions._
  * Every verdict column stays in the output table — the job never
  * destroys rows, it labels them (the keep/drop decision is replayable
  * and auditable downstream, like ConnectedComponents.keepList).
+ *
+ * A re-run on identical input resumes (SnapshotStore.stage) and returns
+ * the first run's snapshot, metrics version and counters.
  */
 object CurationJob {
 
@@ -77,41 +81,38 @@ object CurationJob {
       n: Int = 8,
       testPermille: Int = 20,
       valPermille: Int = 50): Result = {
-    // configuration-only fingerprint: the input count is already
-    // observed for free on the snapshot write (input_docs) — counting
-    // up front would be one redundant full-corpus scan per run
-    val params = s"curate-n$n-tp$testPermille-vp$valPermille"
-
-    val (curatedSnap, funnel) = store.commitObserved(
-      labelDocs(docs, testDocs, n, testPermille, valPermille),
+    // keyed on the CONTENT the funnel reads: identical input resumes
+    val (nDocs, docsFp) =
+      Hash.contentFingerprint(docs, col("doc_id"), col("text"), col("source"))
+    val (nTest, testFp) = Hash.contentFingerprint(testDocs, col("text"))
+    val curated = store.stage(
       "curated",
       "curation_funnel",
-      params,
-      counters = Seq(
-        count(when(!col("canonical"), lit(1))).as("dropped_dup"),
-        count(when(col("canonical") && col("contaminated"), lit(1)))
-          .as("dropped_contaminated"),
-        count(
-          when(col("canonical") && !col("contaminated") && !col("quality_ok"), lit(1)))
-          .as("dropped_quality"),
-        count(when(col("kept"), lit(1))).as("kept_docs")))
+      s"curate-n$n-tp$testPermille-vp$valPermille-docs$nDocs-fp$docsFp-test$nTest-fp$testFp",
+      FunnelCounters)(labelDocs(docs, testDocs, n, testPermille, valPermille))
     // labels, never drops: one committed row per input doc
-    val input = funnel("rows")
-    val dup = funnel("dropped_dup")
-    val cont = funnel("dropped_contaminated")
-    val qual = funnel("dropped_quality")
-    val kept = funnel("kept_docs")
+    val Seq(input, dup, cont, qual, kept) =
+      Seq("rows", "dropped_dup", "dropped_contaminated", "dropped_quality", "kept_docs")
+        .map(curated.counter)
 
     val metricsSnap = store.commitMetrics(
       spark,
       "curation",
-      curatedSnap -> Seq(
+      curated.snap -> Seq(
         "input_docs" -> input.toDouble,
         "dropped_dup" -> dup.toDouble,
         "dropped_contaminated" -> cont.toDouble,
         "dropped_quality" -> qual.toDouble,
         "kept_docs" -> kept.toDouble,
         "kept_ratio" -> (if (input > 0) kept.toDouble / input else 0.0)))
-    Result(curatedSnap, metricsSnap, input, dup, cont, qual, kept)
+    Result(curated.snap, metricsSnap, input, dup, cont, qual, kept)
   }
+
+  /** The funnel's ordered drop attribution over the labeled rows. */
+  private val FunnelCounters = Seq(
+    count(when(!col("canonical"), lit(1))).as("dropped_dup"),
+    count(when(col("canonical") && col("contaminated"), lit(1))).as("dropped_contaminated"),
+    count(when(col("canonical") && !col("contaminated") && !col("quality_ok"), lit(1)))
+      .as("dropped_quality"),
+    count(when(col("kept"), lit(1))).as("kept_docs"))
 }

@@ -19,8 +19,12 @@ import org.apache.spark.sql.functions._
  * PipelineSpec) is also MONITORED on every production run: an operator
  * watching the metrics table sees a band-collision blow-up (skewed
  * shingles, adversarial content) as a candidates_per_doc spike, before it
- * becomes a cluster-wide shuffle explosion. The only non-observe counter
- * is the input doc count — a parquet metadata count, no data scan.
+ * becomes a cluster-wide shuffle explosion.
+ *
+ * Both entry points resume (SnapshotStore.stage): a re-run on identical
+ * input returns the first run's snapshots, metrics version and counters,
+ * except `candidatePairs` — an observation of the pair computation, -1
+ * when that stage resumed.
  */
 object DedupJob {
 
@@ -41,42 +45,60 @@ object DedupJob {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.5): Result = {
-    val nDocs = docs.count()
-    val params = s"lsh-n$n-h$numHashes-b$bands-t$threshold-docs$nDocs"
+    // keyed on the CONTENT the chain reads: identical input resumes
+    val (nDocs, docsFp) = Hash.contentFingerprint(docs, col("doc_id"), col("text"))
+    val params = s"lsh-n$n-h$numHashes-b$bands-t$threshold-docs$nDocs-fp$docsFp"
 
-    val (lsh, obsCand, obsVer) =
-      Dedup.minHashLshPairsObserved(docs, "doc_id", "text", n, numHashes, bands, threshold)
-    val (pairsSnap, pairs) = store.commitObserved(
-      lsh.pairs, "dedup_pairs", "lsh_pairs", params, observations = Seq(obsCand, obsVer))
+    val obsCand = Observation(s"lsh_candidates_$params")
+    val obsVer = Observation(s"lsh_verified_$params")
+    val (lshPairs, release) = Dedup.lshChain(
+      docs, "doc_id", "text", n, numHashes, bands, threshold, None, Some((obsCand, obsVer)))
+    val pairs = store.stage(
+      "dedup_pairs", "lsh_pairs", params, observations = Seq(obsCand))(lshPairs)
     // the committed snapshot is the durable pair set — release the chain's
     // internal shingle cache now (a long-lived session would otherwise
     // accumulate one cached shingle table per distinct corpus run)
-    lsh.release()
-    val cand = pairs("candidate_pairs")
-    val ver = pairs("verified_pairs")
+    release()
+    val cand = pairs.observation("candidate_pairs")
+    val ver = pairs.snap.rowCount
 
-    val (keepSnap, keep) = store.commitObserved(
-      ConnectedComponents.keepList(docs, "doc_id", store.read(spark, pairsSnap)),
-      "dedup_keep", "keep_list", s"pairs=${pairsSnap.uid}", KeepCounters)
-    val kept = keep("kept")
-    val dropped = keep("dropped")
-
+    val keep = store.stage(
+      "dedup_keep", "keep_list", s"pairs=${pairs.snap.uid}", KeepCounters) {
+      ConnectedComponents.keepList(docs, "doc_id", store.read(spark, pairs.snap))
+    }
+    val kept = keep.counter("kept")
+    val dropped = keep.counter("dropped")
     val metricsSnap = store.commitMetrics(
       spark,
       "dedup_lsh",
-      keepSnap -> Seq(
-        "input_docs" -> nDocs.toDouble,
-        "candidate_pairs" -> cand.toDouble,
-        "verified_pairs" -> ver.toDouble,
-        "rejected_pairs" -> (cand - ver).toDouble,
-        // the density-bound monitor: ~O(bands) per doc when healthy
-        "candidates_per_doc" -> (if (nDocs > 0) cand.toDouble / nDocs else 0.0),
-        "kept_docs" -> kept.toDouble,
-        "dropped_docs" -> dropped.toDouble))
-    Result(pairsSnap, keepSnap, metricsSnap, cand, ver, kept, dropped)
+      keep.snap -> labelingMetrics("input_docs" -> nDocs, "doc", cand, ver, kept, dropped))
+    Result(pairs.snap, keep.snap, metricsSnap, cand.getOrElse(-1L), ver, kept, dropped)
   }
 
-  /** The keep/drop split, observed on the keep-list write. */
+  /** One labeling version's metric rows. The candidate rows exist only
+   * when the pair stage computed (-1 never reaches the table);
+   * `candidates_per_<unit>` is the density monitor, ~O(bands) when healthy. */
+  private def labelingMetrics(
+      input: (String, Long),
+      unit: String,
+      cand: Option[Long],
+      ver: Long,
+      kept: Long,
+      dropped: Long): Seq[(String, Double)] =
+    Seq(
+      input._1 -> input._2.toDouble,
+      "verified_pairs" -> ver.toDouble,
+      "kept_docs" -> kept.toDouble,
+      "dropped_docs" -> dropped.toDouble) ++
+      cand.toSeq.flatMap { c =>
+        Seq(
+          "candidate_pairs" -> c.toDouble,
+          "rejected_pairs" -> (c - ver).toDouble,
+          s"candidates_per_$unit" -> (if (input._2 > 0) c.toDouble / input._2 else 0.0))
+      }
+
+  /** The keep/drop split over the keep-list rows (observed on the write;
+   * read back when the stage resumed). */
   private val KeepCounters = Seq(
     count(when(col("keep"), lit(1))).as("kept"),
     count(when(!col("keep"), lit(1))).as("dropped"))
@@ -87,11 +109,13 @@ object DedupJob {
    * re-delivered old delta resumes to its own version; skipping the
    * re-fold is correct because its pairs are already in the closure).
    * Downstream readers that want the current corpus labeling must read
-   * `store.latest("dedup_keep")`, not this snapshot. `candidatePairs`,
-   * `keptDocs` and `droppedDocs` are -1 when their stage resumed (the
-   * metrics table holds the computing run's values); `verifiedPairs` is
-   * always real — a resumed pairs stage recovers it from the committed
-   * snapshot's row count. */
+   * `store.latest("dedup_keep")`, not this snapshot. `candidatePairs` is
+   * -1 when the pair stage resumed (it is an observation of that
+   * computation; the metrics table holds the computing run's value).
+   * The other counters are aggregates over committed rows and real on
+   * both paths: `verifiedPairs` is the pair snapshot's row count, and a
+   * resumed keep stage reads `keptDocs`/`droppedDocs` back from its
+   * snapshot. */
   final case class DeltaResult(
       pairsDelta: SnapshotInfo,
       keep: SnapshotInfo,
@@ -159,12 +183,9 @@ object DedupJob {
       "dedup_pairs", "lsh_pairs_delta", params, observations = Seq(obsCand))(deltaPairs)
     release()
     // a resumed pair stage never ran its observe action, so the CANDIDATE
-    // counter is only defined on the computing run — but the VERIFIED
-    // count is the committed snapshot's own row count, known on both
-    // paths. This matters on the crash-retry path (pairs committed, keep
-    // not): the first attempt died BEFORE any metrics commit, so nothing
-    // else holds the value.
-    val cand = pairs.counter("candidate_pairs")
+    // count is only defined on the computing run — but the VERIFIED count
+    // is the committed snapshot's own row count, known on both paths
+    val cand = pairs.observation("candidate_pairs")
     val ver = pairs.snap.rowCount
 
     val prevLabels = store
@@ -183,35 +204,15 @@ object DedupJob {
           prevLabels, store.read(spark, pairs.snap), "doc_a", "doc_b"))
     }
 
-    // metrics accompany every NEW labeling version — including the
-    // crash-retry path where the pairs stage resumed but the keep stage
-    // computed. That path arises precisely when the first attempt died
-    // between the two commits, i.e. BEFORE any metrics commit, so the
-    // only counter genuinely lost with it is candidate_pairs (it exists
-    // only as the computing run's observe); verified_pairs is always
-    // recorded, and -1 sentinels never reach the table.
-    keep.counters.foreach { k =>
-      store.commitMetrics(
-        spark,
-        "dedup_delta",
-        keep.snap -> (Seq(
-          "new_docs" -> nNew.toDouble,
-          "verified_pairs" -> ver.toDouble,
-          "kept_docs" -> k("kept").toDouble,
-          "dropped_docs" -> k("dropped").toDouble) ++
-          cand.toSeq.flatMap { c =>
-            Seq(
-              "candidate_pairs" -> c.toDouble,
-              "candidates_per_new_doc" -> (if (nNew > 0) c.toDouble / nNew else 0.0))
-          }))
-    }
+    // resumed on the labeling's uid: a retry after a crash between the
+    // keep and metrics commits writes the missing version
+    val kept = keep.counter("kept")
+    val dropped = keep.counter("dropped")
+    store.commitMetrics(
+      spark,
+      "dedup_delta",
+      keep.snap -> labelingMetrics("new_docs" -> nNew, "new_doc", cand, ver, kept, dropped))
     DeltaResult(
-      pairs.snap,
-      keep.snap,
-      pairs.resumed && keep.resumed,
-      cand.getOrElse(-1L),
-      ver,
-      keep.counter("kept").getOrElse(-1L),
-      keep.counter("dropped").getOrElse(-1L))
+      pairs.snap, keep.snap, pairs.resumed && keep.resumed, cand.getOrElse(-1L), ver, kept, dropped)
   }
 }

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
  */
 object MonitorJob {
 
-  /** `alertRows` / `alarmRows` are -1 when their stage resumed (the
-   * metrics table holds the computing run's values). */
+  /** `alertRows` / `alarmRows` are the committed snapshots' row counts,
+   * on both the computing and the resumed path. */
   final case class Result(
       alerts: SnapshotInfo,
       cusum: SnapshotInfo,
@@ -71,16 +71,16 @@ object MonitorJob {
         .filter(col("alarm"))
     }
 
-    // each stage's output row count, observed on its write when it computed
-    val observed = Seq(alerts -> "alert_rows", cusum -> "alarm_rows").flatMap {
-      case (run, metric) => run.counter("rows").map(n => run.snap -> Seq(metric -> n.toDouble))
+    // metrics only for the stages that computed here
+    val computed = Seq(alerts -> "alert_rows", cusum -> "alarm_rows").collect {
+      case (run, metric) if !run.resumed => run.snap -> Seq(metric -> run.counter("rows").toDouble)
     }
-    if (observed.nonEmpty) store.commitMetrics(spark, "monitor", observed: _*)
+    if (computed.nonEmpty) store.commitMetrics(spark, "monitor", computed: _*)
     Result(
       alerts.snap,
       cusum.snap,
-      alerts.counter("rows").getOrElse(-1L),
-      cusum.counter("rows").getOrElse(-1L),
+      alerts.counter("rows"),
+      cusum.counter("rows"),
       alerts.resumed && cusum.resumed)
   }
 }

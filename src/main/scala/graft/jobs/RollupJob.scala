@@ -60,7 +60,8 @@ object RollupJob {
     val store = new SnapshotStore(storeDir)
     var results = Map.empty[String, StageResult]
 
-    // a stage that computed here also commits its lineage and metrics
+    // a stage that computed here also commits its lineage and metrics; a
+    // resumed stage reads nothing back (its versions already exist)
     def stage(
         table: String,
         stageName: String,
@@ -71,7 +72,7 @@ object RollupJob {
       val run = store.stage(table, stageName, fingerprint, counters, observations)(compute)
       val res = StageResult(run.snap, run.resumed, (System.nanoTime() - t0) / 1000000L)
       results += (stageName -> res)
-      run.counters.foreach(emitObservability(spark, store, res, _))
+      run.observed.foreach(emitObservability(spark, store, res, _))
       res
     }
 
@@ -197,7 +198,8 @@ object RollupJob {
         col("partition_id"),
         col("rows_out"),
         lit(res.wallMs).as("wall_ms"))
-    store.commit(lineage, "lineage", s"lineage_${res.snap.stage}", s"v${res.snap.version}")
+    store.stage(
+      "lineage", s"lineage_${res.snap.stage}", s"v${res.snap.version}-${res.snap.uid}")(lineage)
     val pointsPerSec =
       if (res.wallMs > 0) res.snap.rowCount.toDouble * 1000.0 / res.wallMs else 0.0
     val observed = (counters - "rows").toSeq.sorted.map { case (k, v) =>

@@ -39,11 +39,13 @@ final class SnapshotStore(base: String) {
   private def tableDir(table: String): Path = Paths.get(base, table)
   private def snapDir(table: String): Path = tableDir(table).resolve("_snapshots")
 
+  // string fields are JSON strings: `\` and `"` are escaped on render and
+  // unescaped on parse, so a quote in a path or fingerprint round-trips
   private def parse(j: String): SnapshotInfo = {
     def field(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*(\"([^\"]*)\"|(\\d+))").r
+      val m = ("\"" + k + "\"\\s*:\\s*(\"((?:[^\"\\\\]|\\\\.)*)\"|(\\d+))").r
       m.findFirstMatchIn(j)
-        .map(g => Option(g.group(2)).getOrElse(g.group(3)))
+        .map(g => Option(g.group(2)).map(unescape).getOrElse(g.group(3)))
         .getOrElse(sys.error(s"missing $k in manifest"))
     }
     SnapshotInfo(
@@ -56,10 +58,14 @@ final class SnapshotStore(base: String) {
       field("dataPath"))
   }
 
+  private def escape(v: String): String = v.replace("\\", "\\\\").replace("\"", "\\\"")
+  private def unescape(v: String): String =
+    "\\\\(.)".r.replaceAllIn(v, m => scala.util.matching.Regex.quoteReplacement(m.group(1)))
+
   private def render(s: SnapshotInfo): String =
-    s"""{"table": "${s.table}", "version": ${s.version}, "uid": ${s.uid}, "stage": "${s.stage}",
-       | "fingerprint": "${s.fingerprint}", "rowCount": ${s.rowCount},
-       | "dataPath": "${s.dataPath}"}""".stripMargin
+    s"""{"table": "${escape(s.table)}", "version": ${s.version}, "uid": ${s.uid},
+       | "stage": "${escape(s.stage)}", "fingerprint": "${escape(s.fingerprint)}",
+       | "rowCount": ${s.rowCount}, "dataPath": "${escape(s.dataPath)}"}""".stripMargin
 
   def snapshots(table: String): Seq[SnapshotInfo] = {
     val d = snapDir(table)
@@ -89,14 +95,11 @@ final class SnapshotStore(base: String) {
       table: String,
       stage: String,
       fingerprint: String): SnapshotInfo =
-    commitObserved(df, table, stage, fingerprint)._1
+    commitObserved(df, table, stage, fingerprint, Nil, Nil)._1
 
-  /** [[commit]], also returning the counters observed on the write: the
-   * commit's own row count as `rows` (a reserved name), every aggregate
-   * in `counters` (evaluated over the committed rows) and every metric of
-   * `observations` (attached inside `df`'s plan by the caller). The
-   * always-compute half of [[stage]], for a stage whose fingerprint does
-   * not pin its input content.
+  /** [[commit]] and the compute half of [[stage]]: also returns the
+   * values observed on the write — `rows` (a reserved name), `counters`
+   * and the caller's in-plan `observations`.
    *
    * Two scale/safety properties:
    *  - the counters ride `df.observe` on the write action itself (NOT a
@@ -106,13 +109,13 @@ final class SnapshotStore(base: String) {
    *    writers targeting the same next-version number write to DISJOINT
    *    directories; the loser's manifest publish fails and its data dir is
    *    left orphaned — never visible, never overwritten. */
-  def commitObserved(
+  private def commitObserved(
       df: DataFrame,
       table: String,
       stage: String,
       fingerprint: String,
-      counters: Seq[Column] = Nil,
-      observations: => Seq[Observation] = Nil): (SnapshotInfo, Map[String, Long]) = {
+      counters: Seq[Column],
+      observations: Seq[Observation]): (SnapshotInfo, Map[String, Long]) = {
     val next = latest(table).map(_.version + 1).getOrElse(1)
     val uid = System.nanoTime()
     val dataPath = tableDir(table).resolve("data").resolve(s"v$next-$uid")
@@ -225,11 +228,15 @@ final class SnapshotStore(base: String) {
     (run.snap, run.resumed)
   }
 
-  /** The stage primitive every job commits through: return the existing
-   * snapshot for (stage, fingerprint) — the resume — or compute `compute`
-   * and commit it with the counters of [[commitObserved]]. Counters exist
-   * only when the stage computed here: a resumed stage's write never ran,
-   * and the computing run's values are in the metrics table. */
+  /** The one way a job commits a stage: return the existing snapshot for
+   * (stage, fingerprint) — the resume — or compute `compute` and commit
+   * it. The resume rule holds only if `fingerprint` pins everything the
+   * stage reads: its parameters plus the content fingerprint
+   * ([[graft.core.Hash.contentFingerprint]]) or snapshot uid of each
+   * input. `counters` are aggregates over the committed rows, so they
+   * exist on both paths (see [[StageRun]]); `observations` are the
+   * caller's in-plan facts about the computation, so they exist only
+   * when the stage computed here. */
   def stage(
       table: String,
       stage: String,
@@ -237,11 +244,16 @@ final class SnapshotStore(base: String) {
       counters: Seq[Column] = Nil,
       observations: => Seq[Observation] = Nil)(compute: => DataFrame): StageRun =
     find(table, stage, fingerprint) match {
-      case Some(s) => StageRun(s, None)
+      case Some(s) =>
+        // read back on the first ask, in one aggregate job
+        new StageRun(s, None, {
+          val r = read(SparkSession.active, s).agg(counters.head, counters.tail: _*).head()
+          r.getValuesMap[Long](r.schema.fieldNames.toSeq)
+        })
       case None =>
         val (s, observed) =
           commitObserved(compute, table, stage, fingerprint, counters, observations)
-        StageRun(s, Some(observed))
+        new StageRun(s, Some(observed), observed)
     }
 
   /** The one metrics writer: each (snapshot, metrics) pair becomes rows
@@ -266,11 +278,23 @@ final class SnapshotStore(base: String) {
   }
 }
 
-/** A stage as [[SnapshotStore.stage]] left it: the snapshot and, only
- * when the stage computed here, the counters observed on its write. */
-final case class StageRun(snap: SnapshotInfo, counters: Option[Map[String, Long]]) {
-  def resumed: Boolean = counters.isEmpty
+/** A stage as [[SnapshotStore.stage]] left it. A counter (an aggregate
+ * over the committed rows) has its value on both paths: observed on the
+ * write when the stage computed, read back from the snapshot when it
+ * resumed; `rows` is the manifest's row count. An observation exists only
+ * when the stage computed. `observed` is everything observed on the write
+ * (counters, `rows`, observations); None when resumed. */
+final class StageRun private[jobs] (
+    val snap: SnapshotInfo,
+    val observed: Option[Map[String, Long]],
+    readCounters: => Map[String, Long]) {
+  def resumed: Boolean = observed.isEmpty
 
-  /** Counter `name` observed on this stage's write; None when resumed. */
-  def counter(name: String): Option[Long] = counters.map(_(name))
+  private lazy val counters = readCounters
+
+  /** Counter `name` over the committed rows, on either path. */
+  def counter(name: String): Long = if (name == "rows") snap.rowCount else counters(name)
+
+  /** Observation `name` of the computation; None when resumed. */
+  def observation(name: String): Option[Long] = observed.map(_(name))
 }

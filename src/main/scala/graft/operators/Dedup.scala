@@ -130,38 +130,6 @@ object Dedup {
       threshold: Double): DataFrame =
     lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, None, None)._1
 
-  /** The returned-pairs + release-hook view of the LSH chain.
-   * [[LshPairs.release]] unpersists the chain's internal shingle cache; call
-   * it once the pairs have been materialized (written / collected). Without
-   * it the cache lives for the SESSION — bounded, because Spark's
-   * CacheManager keys entries by canonicalized plan so re-invoking the
-   * chain on the same input reuses one entry rather than stacking copies,
-   * but a long-lived session running many DIFFERENT corpora through the
-   * chain should release each when done ([[graft.jobs.DedupJob]] does). */
-  final case class LshPairs(pairs: DataFrame, release: () => Unit)
-
-  /** [[minHashLshPairs]] with candidate-volume telemetry riding
-   * `df.observe` (the [[Validity]] pattern): after ANY action on the
-   * returned pairs, the two observations hold `candidate_pairs` (distinct
-   * band-collision candidates generated) and `verified_pairs` (candidates
-   * whose exact Jaccard met the threshold) — the linear-candidate-density
-   * claim the WWW'07-style banding rests on, MONITORED on every production
-   * run with zero extra scans instead of only property-tested. */
-  def minHashLshPairsObserved(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double): (LshPairs, Observation, Observation) = {
-    val obsCand = Observation("lsh_candidates")
-    val obsVer = Observation("lsh_verified")
-    val (pairs, release) =
-      lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, None, Some((obsCand, obsVer)))
-    (LshPairs(pairs, release), obsCand, obsVer)
-  }
-
   /** Delta variant of the LSH chain for incremental dedup maintenance
    * ([[graft.jobs.DedupJob]]'s delta run): shingling and banding run over
    * the FULL corpus — both LINEAR, one shuffle, and unavoidable without
@@ -175,8 +143,7 @@ object Dedup {
    * `newIds`' single column is the delta's doc ids; the set is broadcast
    * (a delta batch is small by nature — a bulk backfill should re-run the
    * full chain). Returns (verified delta pairs, shingle-cache release
-   * hook); `obs` mirrors [[minHashLshPairsObserved]] over the DELTA
-   * candidates/pairs. */
+   * hook); `obs` observes the DELTA candidates/pairs as in [[lshChain]]. */
   def minHashLshDeltaPairs(
       docs: DataFrame,
       newIds: DataFrame,
@@ -203,10 +170,17 @@ object Dedup {
    * one of those ids go on to verification — the delta chain
    * ([[minHashLshDeltaPairs]]); the id set is broadcast.
    *
-   * Returns the verified pairs plus the shingle-cache release hook (see
-   * [[LshPairs]] for the lifetime contract — the hook is safe to call any
-   * time after the pairs are materialized, and idempotent). */
-  private def lshChain(
+   * With `obs`, after ANY action on the returned pairs the two
+   * observations hold `candidate_pairs` (distinct band-collision
+   * candidates) and `verified_pairs` — the linear-candidate-density claim
+   * the banding rests on, monitored with zero extra scans.
+   *
+   * Returns the verified pairs plus the release hook that unpersists the
+   * shingle cache; call it once the pairs are materialized (idempotent).
+   * Without it the cache lives for the session — bounded, as Spark's
+   * CacheManager keys entries by canonicalized plan, but a long-lived
+   * session running many different corpora should release each. */
+  private[graft] def lshChain(
       docs: DataFrame,
       idCol: String,
       textCol: String,

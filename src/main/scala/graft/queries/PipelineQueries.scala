@@ -75,14 +75,9 @@ object PipelineQueries {
           .localCheckpoint(eager = false)
       val isNew = (col("doc_a") + col("doc_b")) % 3 === 0
       val prev = ConnectedComponents.components(pairs.filter(!isNew), "doc_a", "doc_b")
-      val labels = ConnectedComponents
-        .incrementalComponents(prev, pairs.filter(isNew), "doc_a", "doc_b")
-        .withColumnRenamed("node", "doc_id")
-      docs(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep_id"))
-        .withColumn("keep", col("doc_id") === col("rep_id"))
+      val labels =
+        ConnectedComponents.incrementalComponents(prev, pairs.filter(isNew), "doc_a", "doc_b")
+      ConnectedComponents.keepVerdict(docs(s, dir), "doc_id", labels)
     }),
 
     // MinHash+LSH: 64 hashes × 16 bands of 4 (s-curve threshold ≈ 0.5).

@@ -530,4 +530,115 @@ class JobSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(v1.dataPath)))
     intercept[RuntimeException](store.readVersion(spark, "t", 1))
   }
+
+  test("curation job: a re-run on identical input resumes with the first run's snapshots and counters") {
+    import org.apache.spark.sql.functions._
+    val store = new SnapshotStore(tmpDir().toString)
+    val docs = spark.read
+      .parquet(s"${sf("sf0.001")}/documents.parquet")
+      .select(col("doc_id"), col("text"), col("source"))
+    val testSet = docs.filter(col("doc_id") % 53 === 0)
+    def versions = Seq("curated", "metrics").map(store.snapshots(_).size)
+    val r1 = graft.jobs.CurationJob.run(spark, docs, testSet, store)
+    val before = versions
+    val r2 = graft.jobs.CurationJob.run(spark, docs, testSet, store)
+    assert(versions == before, "an unchanged re-run must append no version")
+    // same snapshots, metrics version and counters (read back from the table)
+    assert(r2 == r1)
+    // one doc fewer is different content: the stage recomputes
+    val r3 = graft.jobs.CurationJob
+      .run(spark, docs.filter(col("doc_id") =!= docs.head().getLong(0)), testSet, store)
+    assert(r3.curated.uid != r1.curated.uid && r3.inputDocs == r1.inputDocs - 1)
+    assert(store.snapshots("curated").size == before.head + 1)
+  }
+
+  test("dedup job: a re-run on identical input resumes with the first run's snapshots and counters") {
+    import org.apache.spark.sql.functions._
+    val store = new SnapshotStore(tmpDir().toString)
+    val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
+    def versions = Seq("dedup_pairs", "dedup_keep", "metrics").map(store.snapshots(_).size)
+    val r1 = graft.jobs.DedupJob.run(spark, docs, store)
+    val before = versions
+    val r2 = graft.jobs.DedupJob.run(spark, docs, store)
+    assert(versions == before, "an unchanged re-run must append no version")
+    // candidates are an observation of the pair computation, which did not
+    // run again; every other counter is the first run's
+    assert(r2 == r1.copy(candidatePairs = -1L))
+    assert(r1.verifiedPairs > 0 && r1.candidatePairs >= r1.verifiedPairs)
+    // one doc fewer is different content: both stages recompute
+    val r3 = graft.jobs.DedupJob
+      .run(spark, docs.filter(col("doc_id") =!= docs.head().getLong(0)), store)
+    assert(r3.pairs.uid != r1.pairs.uid && r3.keep.uid != r1.keep.uid)
+    assert(r3.keptDocs + r3.droppedDocs == r1.keptDocs + r1.droppedDocs - 1)
+    assert(r3.candidatePairs >= 0)
+  }
+
+  test("resumed monitor and delta dedup runs return the computing run's counters") {
+    import org.apache.spark.sql.functions._
+    val store = new SnapshotStore(tmpDir().toString)
+    val dir = sf("sf0.001")
+    val tier = Rollup.rollupFromPoints(TokenTable.points(spark, dir), Tier.OneMinute)
+    store.commit(tier, "tier_1m", "rollup_1m", "test-tier")
+    def monitor() = graft.jobs.MonitorJob.run(
+      spark, store,
+      alertThreshold = 25200.0, alertMinRun = 2, windowWidth = 60,
+      cusumK = 1507710L, cusumH = 150000L)
+    val m1 = monitor()
+    val m2 = monitor()
+    assert(!m1.resumed && m2.resumed)
+    assert(m2 == m1.copy(resumed = true) && m1.alertRows > 0 && m1.alarmRows > 0)
+
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val isNew = col("doc_id") % 3 === 0
+    graft.jobs.DedupJob.run(spark, docs.filter(!isNew), store)
+    val newIds = docs.filter(isNew).select("doc_id")
+    val d1 = graft.jobs.DedupJob.runDelta(spark, docs, newIds, store)
+    val metricsBefore = store.snapshots("metrics").size
+    val d2 = graft.jobs.DedupJob.runDelta(spark, docs, newIds, store)
+    assert(!d1.resumed && d2.resumed)
+    assert(d2 == d1.copy(resumed = true, candidatePairs = -1L))
+    assert(d1.keptDocs + d1.droppedDocs == docs.count())
+    assert(store.snapshots("metrics").size == metricsBefore, "a resumed delta appends no metrics")
+  }
+
+  test("manifest: quotes in the store path and fingerprint round-trip; the stage resumes") {
+    import spark.implicits._
+    val base = Files.createDirectories(tmpDir().resolve("store \"quoted\""))
+    val store = new SnapshotStore(base.toString)
+    val fp = "src=/data/\"sf\"\\x;col=\"v\""
+    val first = store.stage("t", "stage \"s\"", fp)((1 to 5).toDF("x"))
+    assert(!first.resumed)
+    val snap = store.latest("t").get
+    assert(snap == first.snap, s"manifest must read back as committed: $snap")
+    assert(store.read(spark, snap).count() == 5)
+    val again = store.stage("t", "stage \"s\"", fp)(sys.error("a resumed stage must not compute"))
+    assert(again.resumed && again.snap == first.snap)
+  }
+
+  test("crash between data write and manifest publish: the orphan stays invisible and unread") {
+    import spark.implicits._
+    val base = tmpDir()
+    val store = new SnapshotStore(base.toString)
+    val v1 = store.commit((1 to 3).toDF("x"), "t", "s", "fp-1")
+    // the crashed writer's leftovers for v2: its data directory and its
+    // unpublished manifest, which claims the very (stage, fingerprint)
+    // the retry will ask for
+    val uid = System.nanoTime()
+    val orphan = base.resolve("t").resolve("data").resolve(s"v2-$uid")
+    (100 to 199).toDF("x").write.parquet(orphan.toString)
+    val tmp = base.resolve("t").resolve("_snapshots").resolve(s".v2-$uid.json.tmp")
+    Files.writeString(
+      tmp,
+      s"""{"table": "t", "version": 2, "uid": $uid, "stage": "s", "fingerprint": "fp-2",
+         | "rowCount": 100, "dataPath": "$orphan"}""".stripMargin)
+    assert(store.snapshots("t") == Seq(v1), "neither leftover may become visible")
+    assert(store.find("t", "s", "fp-2").isEmpty)
+
+    val retry = store.stage("t", "s", "fp-2")((10 to 13).toDF("x"))
+    assert(!retry.resumed, "the retry must compute, not resume the orphan")
+    assert(retry.snap.version == 2 && retry.snap.rowCount == 4)
+    assert(retry.snap.dataPath != orphan.toString)
+    assert(store.snapshots("t") == Seq(v1, retry.snap))
+    assert(store.read(spark, retry.snap).as[Int].collect().sorted.toSeq == (10 to 13))
+  }
 }
