@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.expr
+
 /**
  * Core data model of the engine (SURVEY.md §1.4).
  *
@@ -55,6 +58,14 @@ object Tier {
   /** Position-bucket width: spatial key orthogonal to the tier window
    * (ancestor: patch sizes 8..128, uni2ts transform/patch.py:77-159). */
   val BucketWidth = 64
+
+  /** Position bucket of a point, `pos div BucketWidth`, named `bucket`. */
+  def bucket: Column = expr(s"CAST(pos DIV $BucketWidth AS INT)").as("bucket")
+
+  /** Tier window of a point, `(pos div width) * width`, named
+   * `window_start`. */
+  def windowStart(width: Int): Column =
+    expr(s"CAST(pos - pos % $width AS INT)").as("window_start")
 }
 
 /** One lineage row per input partition per stage (north-rule lineage). */

@@ -89,25 +89,11 @@ object GraftFunctions {
       "arr_pos_weighted_sum" -> (args => ArrPosWeightedSum(args.head, args.long(1))),
       "arr_pos_weighted_sum_q" -> (args =>
         ArrPosWeightedSumQ(args.head, args.long(1), args.long(2))),
-      "arr_abs_sum" -> (args => ArrAbsSum(args.head)),
       "arr_abs_sum_q" -> (args => ArrAbsSumQ(args.head, args.long(1))),
-      "arr_abs_err_q_sum" -> (args =>
-        ArrErrQSum(args.head, args(1), args.long(2), squared = false)),
-      "arr_sq_err_q_sum" -> (args =>
-        ArrErrQSum(args.head, args(1), args.long(2), squared = true)),
+      "arr_sq_err_q_sum" -> (args => ArrErrQSum(args.head, args(1), args.long(2))),
       "arr_seasonal_abs_sum" -> (args => ArrSeasonalAbsSum(args.head, args.int(1))),
       "arr_interval_penalty_sum" -> (args =>
         ArrIntervalPenaltySum(args.head, args(1), args(2), args.long(3))),
-      // ranged twins: evaluate over arr[start, start+len) in place (no
-      // slice materialization in the rolling-window hot path)
-      "arr_sum_range" -> (args => ArrSumRange(args.head, args(1), args(2))),
-      "arr_abs_sum_range" -> (args => ArrAbsSumRange(args.head, args(1), args(2))),
-      "arr_seasonal_abs_sum_range" -> (args =>
-        ArrSeasonalAbsSumRange(args.head, args(1), args(2), args.int(3))),
-      "arr_abs_err_q_sum_range" -> (args =>
-        ArrErrQSumRange(args.head, args(1), args(2), args(3), args.long(4), squared = false)),
-      "arr_sq_err_q_sum_range" -> (args =>
-        ArrErrQSumRange(args.head, args(1), args(2), args(3), args.long(4), squared = true)),
       // eval_window_stats(tokens, m, ctx, hor, stride, scale): fused window
       // enumeration + packed reductions, one compact struct per window
       "window_slices" -> (args =>

@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
  * ~1-2 ns/element in Spark 4.1, so the win per op is a real-but-modest
  * 10-25% plus span preservation — the big wins are structural: no
  * per-element strings, no CodegenFallback in hot projections, and the
- * RANGED variants below that eliminate window-slice materialization.
+ * fused window generators below that eliminate window-slice
+ * materialization.
  *
  * Semantics copied exactly from the SQL they replace (reference:
  * uni2ts/src/uni2ts/transform/pad.py, resample.py — see
@@ -221,32 +222,17 @@ object ArrayKernels {
     s
   }
 
-  /** Null-skipping sum of |x| over an integral array (the ABS_TARGET
-   * normalization denominator, loss/packed/normalized.py). */
-  def absSum(a: ArrayData, isInt: Boolean): Long = {
-    val n = a.numElements()
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) s += math.abs(getLong(a, i, isInt))
-      i += 1
-    }
-    s
-  }
-
-  /** Quantized error sum against a per-row scalar forecast: sum of
-   * floor(|x - center| * scale + 0.5) (abs mode) or
-   * floor((x - center)^2 * scale + 0.5) (squared mode) — bit-identical to
-   * the SQL `aggregate` lambdas it replaces (same double-op order). */
-  def errQSum(a: ArrayData, isInt: Boolean, center: Double, scale: Long, squared: Boolean): Long = {
+  /** Quantized squared-error sum against a per-row scalar forecast: sum
+   * of floor((x - center)^2 * scale + 0.5) — bit-identical to the SQL
+   * `aggregate` lambda it replaces (same double-op order). */
+  def errQSum(a: ArrayData, isInt: Boolean, center: Double, scale: Long): Long = {
     val n = a.numElements()
     var s = 0L
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i)) {
         val d = getLong(a, i, isInt).toDouble - center
-        val t = if (squared) d * d else math.abs(d)
-        s += math.floor(t * scale + 0.5).toLong
+        s += math.floor(d * d * scale + 0.5).toLong
       }
       i += 1
     }
@@ -286,89 +272,6 @@ object ArrayKernels {
     s
   }
 
-  // ---- Ranged variants: evaluate over arr[start, start+len) IN PLACE ----
-  // The rolling-window evaluation grid reads a (ctx | horizon) WINDOW of
-  // each series per enumerated position; materializing those windows as
-  // slice() arrays costs ~(ctx+hor) element copies per window — at the
-  // eval grid's density that is more memory traffic than the metric math
-  // itself (measured: the slice-based chain scales at 0.65 wall efficiency
-  // 4->16 threads vs 0.84-0.92 for the rollup — memory-bandwidth-bound).
-  // The ranged kernels read the ORIGINAL array in place; ranges clamp to
-  // the array bounds (slice() truncation semantics).
-
-  // A negative start would here mean a miscomputed window (fs-ctx below
-  // the series head) — fail loudly instead of silently summing a
-  // truncated prefix (slice()'s negative-index semantics are NOT wanted
-  // by any ranged-kernel caller; the window generators filter short
-  // series before ranges are formed). Only the END clamps (slice()
-  // truncation) — round-4 ADVICE.
-  private def clampRange(n: Int, start: Int, len: Int): (Int, Int) = {
-    if (start < 0)
-      throw new IllegalArgumentException(
-        s"ranged kernel: negative start $start — window arithmetic underran the series head")
-    val hi = math.min(math.max(len, 0).toLong + start, n.toLong).toInt
-    (start, hi)
-  }
-
-  def sumRange(a: ArrayData, isInt: Boolean, start: Int, len: Int): Long = {
-    val (lo, hi) = clampRange(a.numElements(), start, len)
-    var s = 0L
-    var i = lo
-    while (i < hi) {
-      if (!a.isNullAt(i)) s += getLong(a, i, isInt)
-      i += 1
-    }
-    s
-  }
-
-  def absSumRange(a: ArrayData, isInt: Boolean, start: Int, len: Int): Long = {
-    val (lo, hi) = clampRange(a.numElements(), start, len)
-    var s = 0L
-    var i = lo
-    while (i < hi) {
-      if (!a.isNullAt(i)) s += math.abs(getLong(a, i, isInt))
-      i += 1
-    }
-    s
-  }
-
-  def errQSumRange(
-      a: ArrayData,
-      isInt: Boolean,
-      start: Int,
-      len: Int,
-      center: Double,
-      scale: Long,
-      squared: Boolean): Long = {
-    val (lo, hi) = clampRange(a.numElements(), start, len)
-    var s = 0L
-    var i = lo
-    while (i < hi) {
-      if (!a.isNullAt(i)) {
-        val d = getLong(a, i, isInt).toDouble - center
-        val t = if (squared) d * d else math.abs(d)
-        s += math.floor(t * scale + 0.5).toLong
-      }
-      i += 1
-    }
-    s
-  }
-
-  /** Seasonal numerator over arr[start, start+len): sum |a[t] - a[t-m]|
-   * for t in [start+m, start+len), all indices inside the range. */
-  def seasonalAbsSumRange(a: ArrayData, isInt: Boolean, start: Int, len: Int, m: Int): Long = {
-    val (lo, hi) = clampRange(a.numElements(), start, len)
-    var s = 0L
-    var t = lo + m
-    while (t < hi) {
-      s += math.abs(
-        getLongStrict(a, t, isInt, "arr_seasonal_abs_sum_range") -
-          getLongStrict(a, t - m, isInt, "arr_seasonal_abs_sum_range"))
-      t += 1
-    }
-    s
-  }
-
   /** Fused rolling-window evaluation stats: one pass over the series
    * emits ONE COMPACT STRUCT PER WINDOW — {w, fs, ctx_sum, ctx_sumsq,
    * ctx_min, ctx_max, hor_sum, habs, sum_eq, sum_e2q, se_num} — instead of exploding window rows
@@ -376,9 +279,11 @@ object ArrayKernels {
    * materializes `tokens` into every window row: at (ctx,hor,stride) =
    * (64,16,32) that is ~n/32 copies of an n-element array per doc, a
    * 10-30x write amplification that caps thread scaling long before the
-   * metric math does). Semantics per window are bit-identical to the
-   * ranged kernels: naive = ctx_sum/ctx as double, quantized error sums
-   * at `scale`, seasonal numerator at lag m. */
+   * metric math does). Each field equals a whole-array kernel or
+   * quantized lambda over one slice of the window — the context
+   * a[fs-ctx, fs) or the horizon a[fs, fs+hor): naive = ctx_sum/ctx as
+   * double, quantized error sums against naive at `scale`, seasonal
+   * numerator at lag m inside the context (PlanSpec checks each field). */
   def evalWindowStats(
       a: ArrayData,
       isInt: Boolean,
@@ -771,7 +676,7 @@ object ArrayKernels {
    * step is one IEEE add and one exact halving, so any engine folding
    * left over the same doubles reproduces the result bit-for-bit.
    * Raises on empty or null-holding input (callers guarantee dense
-   * token arrays — same loud-failure discipline as the ranged kernels). */
+   * token arrays — same loud-failure discipline as the window kernels). */
   def ewmaHalf(a: ArrayData): Double = {
     val n = a.numElements()
     require(n > 0, "arr_ewma_half on empty array")
@@ -1017,26 +922,11 @@ case class ArrBlur4EveryKth(child: Expression, k: Int) extends ArrayKernelExpres
     copy(child = newChild)
 }
 
-/** `arr_abs_sum(array<int|bigint>) -> bigint`: null-skipping sum of |x|. */
-case class ArrAbsSum(child: Expression) extends ArrayKernelExpression {
-  override protected def elemOk(e: DataType): Boolean =
-    e == IntegerType || e == LongType
-  override protected def expects: String = "array<int|bigint>"
-  override def dataType: DataType = LongType
-  override def prettyName: String = "arr_abs_sum"
-  override protected def nullSafeEval(input: Any): Any =
-    ArrayKernels.absSum(input.asInstanceOf[ArrayData], elemIsInt)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.absSum($c, $elemIsInt)"
-  override protected def withNewChildInternal(newChild: Expression): ArrAbsSum =
-    copy(child = newChild)
-}
-
-/** `arr_{abs|sq}_err_q_sum(array<int|bigint>, center double, scale) ->
- * bigint`: quantized per-window error sum against a per-row scalar
+/** `arr_sq_err_q_sum(array<int|bigint>, center double, scale) -> bigint`:
+ * quantized per-window squared-error sum against a per-row scalar
  * forecast — the PackedLoss numerator as ONE codegen'd expression instead
  * of an interpreted per-element lambda. */
-case class ArrErrQSum(left: Expression, right: Expression, scale: Long, squared: Boolean)
+case class ArrErrQSum(left: Expression, right: Expression, scale: Long)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   private def elemIsInt = left.dataType match {
     case ArrayType(IntegerType, _) => true
@@ -1051,20 +941,15 @@ case class ArrErrQSum(left: Expression, right: Expression, scale: Long, squared:
           s"$prettyName requires (array<int|bigint>, double), got ($l, $r)")
     }
   override def dataType: DataType = LongType
-  override def prettyName: String = if (squared) "arr_sq_err_q_sum" else "arr_abs_err_q_sum"
+  override def prettyName: String = "arr_sq_err_q_sum"
   override protected def nullSafeEval(arr: Any, center: Any): Any =
-    ArrayKernels.errQSum(
-      arr.asInstanceOf[ArrayData],
-      elemIsInt,
-      center.asInstanceOf[Double],
-      scale,
-      squared)
+    ArrayKernels.errQSum(arr.asInstanceOf[ArrayData], elemIsInt, center.asInstanceOf[Double], scale)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(
       ctx,
       ev,
       (a, c) =>
-        s"${ev.value} = ${ArrayKernelExpression.K}.errQSum($a, $elemIsInt, $c, ${scale}L, $squared);")
+        s"${ev.value} = ${ArrayKernelExpression.K}.errQSum($a, $elemIsInt, $c, ${scale}L);")
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): ArrErrQSum = copy(left = newLeft, right = newRight)
@@ -1208,6 +1093,7 @@ case class EvalWindowStats(
  * Replaces the typed `flatMapGroups` path (Dataset-encoder round-trip per
  * point, outside whole-stage codegen). */
 case class LttbSelect(child: Expression, threshold: Int) extends ArrayKernelExpression {
+  require(threshold >= 2, s"lttb_select requires threshold >= 2, got $threshold")
   override protected def elemOk(e: DataType): Boolean = e match {
     case StructType(fields) =>
       fields.length == 2 && fields.forall(_.dataType == DoubleType)
@@ -1398,136 +1284,6 @@ case class ArrEwmaHalf(child: Expression) extends ArrayKernelExpression {
     s"${ArrayKernelExpression.K}.ewmaHalf($c)"
   override protected def withNewChildInternal(newChild: Expression): ArrEwmaHalf =
     copy(child = newChild)
-}
-
-/** Base for the (arr, start, len) ranged kernels: in-place window
- * evaluation without materializing slice() arrays. */
-abstract class RangedKernelExpression
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  def first: Expression
-  def second: Expression
-  def third: Expression
-  protected def elemIsInt: Boolean = first.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (
-            ArrayType(IntegerType | LongType, _),
-            IntegerType | LongType,
-            IntegerType | LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, s, l) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<int|bigint>, int|bigint, int|bigint), got ($a, $s, $l)")
-    }
-  override def dataType: DataType = LongType
-  protected def asInt(v: Any): Int = v match {
-    case i: java.lang.Integer => i.intValue()
-    case l: java.lang.Long => l.intValue()
-    case other => other.asInstanceOf[Number].intValue()
-  }
-  /** Java expression from (arr, start, len) variables (already int-cast). */
-  protected def genCall(a: String, s: String, l: String): String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, s, l) => s"${ev.value} = ${genCall(a, s"(int) $s", s"(int) $l")};")
-}
-
-/** `arr_sum_range(arr, start, len) -> bigint` (0-based start, clamped). */
-case class ArrSumRange(first: Expression, second: Expression, third: Expression)
-    extends RangedKernelExpression {
-  override def prettyName: String = "arr_sum_range"
-  override protected def nullSafeEval(a: Any, s: Any, l: Any): Any =
-    ArrayKernels.sumRange(
-      a.asInstanceOf[ArrayData], elemIsInt, asInt(s), asInt(l))
-  override protected def genCall(a: String, s: String, l: String): String =
-    s"${ArrayKernelExpression.K}.sumRange($a, $elemIsInt, $s, $l)"
-  override protected def withNewChildrenInternal(
-      f: Expression, se: Expression, t: Expression): ArrSumRange =
-    copy(first = f, second = se, third = t)
-}
-
-/** `arr_abs_sum_range(arr, start, len) -> bigint`. */
-case class ArrAbsSumRange(first: Expression, second: Expression, third: Expression)
-    extends RangedKernelExpression {
-  override def prettyName: String = "arr_abs_sum_range"
-  override protected def nullSafeEval(a: Any, s: Any, l: Any): Any =
-    ArrayKernels.absSumRange(
-      a.asInstanceOf[ArrayData], elemIsInt, asInt(s), asInt(l))
-  override protected def genCall(a: String, s: String, l: String): String =
-    s"${ArrayKernelExpression.K}.absSumRange($a, $elemIsInt, $s, $l)"
-  override protected def withNewChildrenInternal(
-      f: Expression, se: Expression, t: Expression): ArrAbsSumRange =
-    copy(first = f, second = se, third = t)
-}
-
-/** `arr_seasonal_abs_sum_range(arr, start, len, m) -> bigint`. */
-case class ArrSeasonalAbsSumRange(
-    first: Expression,
-    second: Expression,
-    third: Expression,
-    m: Int)
-    extends RangedKernelExpression {
-  require(m >= 1, s"arr_seasonal_abs_sum_range requires m >= 1, got $m")
-  override def prettyName: String = "arr_seasonal_abs_sum_range"
-  override protected def nullSafeEval(a: Any, s: Any, l: Any): Any =
-    ArrayKernels.seasonalAbsSumRange(
-      a.asInstanceOf[ArrayData], elemIsInt, asInt(s), asInt(l), m)
-  override protected def genCall(a: String, s: String, l: String): String =
-    s"${ArrayKernelExpression.K}.seasonalAbsSumRange($a, $elemIsInt, $s, $l, $m)"
-  override protected def withNewChildrenInternal(
-      f: Expression, se: Expression, t: Expression): ArrSeasonalAbsSumRange =
-    copy(first = f, second = se, third = t)
-}
-
-/** `arr_{abs|sq}_err_q_sum_range(arr, start, len, center) -> bigint`:
- * ranged twin of ArrErrQSum (the packed-loss numerator read in place). */
-case class ArrErrQSumRange(
-    first: Expression,
-    second: Expression,
-    third: Expression,
-    fourth: Expression,
-    scale: Long,
-    squared: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-  private def elemIsInt = first.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (
-            ArrayType(IntegerType | LongType, _),
-            IntegerType | LongType,
-            IntegerType | LongType,
-            DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, s, l, c) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<int|bigint>, int|bigint, int|bigint, double), got ($a, $s, $l, $c)")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String =
-    if (squared) "arr_sq_err_q_sum_range" else "arr_abs_err_q_sum_range"
-  override protected def nullSafeEval(a: Any, s: Any, l: Any, c: Any): Any =
-    ArrayKernels.errQSumRange(
-      a.asInstanceOf[ArrayData],
-      elemIsInt,
-      s.asInstanceOf[Number].intValue(),
-      l.asInstanceOf[Number].intValue(),
-      c.asInstanceOf[Double],
-      scale,
-      squared)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, s, l, c) =>
-        s"${ev.value} = ${ArrayKernelExpression.K}.errQSumRange($a, $elemIsInt, (int) $s, (int) $l, $c, ${scale}L, $squared);")
-  override protected def withNewChildrenInternal(
-      f: Expression, se: Expression, t: Expression, fo: Expression): ArrErrQSumRange =
-    copy(first = f, second = se, third = t, fourth = fo)
 }
 
 /** `arr_repeat_each(array<T>, k) -> array<T>`: each element repeated k

@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
  */
 object Downsample {
 
-  /** Core LTTB over a series already sorted by x. Always keeps first and
-   * last points; selects one point per interior bucket maximizing the
-   * triangle area with the previously selected point and the next bucket's
-   * centroid. */
+  /** Core LTTB over a series already sorted by x: at most `threshold`
+   * points (>= 2, or it fails). Always keeps first and last points;
+   * selects one point per interior bucket maximizing the triangle area
+   * with the previously selected point and the next bucket's centroid. */
   def lttbCore(points: Array[(Double, Double)], threshold: Int): Array[(Double, Double)] =
     lttbCoreIndices(points, threshold).map(points)
 
@@ -36,12 +36,9 @@ object Downsample {
    * oracle-checked (q_lttb_anchors) even though the sequential
    * area-maximization is not SQL-expressible. */
   def lttbCoreIndices(points: Array[(Double, Double)], threshold: Int): Array[Int] = {
+    require(threshold >= 2, s"lttb requires threshold >= 2, got $threshold")
     val n = points.length
-    if (threshold >= n || threshold <= 2) {
-      if (threshold >= n) return Array.tabulate(n)(identity)
-      // threshold <= 2: degenerate — first and last only (or fewer)
-      return if (n <= 2) Array.tabulate(n)(identity) else Array(0, n - 1)
-    }
+    if (threshold >= n) return Array.tabulate(n)(identity)
     val out = new Array[Int](threshold)
     out(0) = 0
     val every = (n - 2).toDouble / (threshold - 2).toDouble

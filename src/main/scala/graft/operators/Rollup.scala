@@ -59,13 +59,9 @@ object Rollup {
    * instead of wrapping; read the `tier_stats_decl` struct directly when
    * groups can exceed that. */
   private[graft] def pointState(points: DataFrame, tier: String, extraKeys: Column*): DataFrame = {
-    val w = Tier.widths(tier)
     points
       .groupBy(
-        extraKeys ++ Seq(
-          col("source"),
-          expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"),
-          expr(s"CAST(pos - pos % $w AS INT)").as("window_start")): _*)
+        extraKeys ++ Seq(col("source"), Tier.bucket, Tier.windowStart(Tier.widths(tier))): _*)
       .agg(call("tier_stats_decl", col("tok")).as("_st"))
       .select(
         col("source"),
@@ -148,67 +144,10 @@ object Rollup {
    * Windows that exist only in the delta (entirely-late windows) surface
    * as new rows; `tierTable` must be a single-tier table of the same
    * `tier` (its rows pass through or re-merge keyed on
-   * (source, bucket, window_start) only). */
-  def mergeLate(
-      tierTable: DataFrame,
-      latePoints: DataFrame,
-      tier: String,
-      maxAffectedWindows: Long = DefaultMaxAffectedWindows,
-      maxBroadcastWindows: Long = DefaultMaxBroadcastWindows): DataFrame = {
-    // convenience path: trade the delta cache for leak-freedom — the
-    // guard count already ran, unpersisting here just means the (small)
-    // delta aggregate recomputes downstream. CONTRACT: `latePoints` must
-    // be DETERMINISTIC (a table read or pure generator — every caller in
-    // this engine): after the release the affected-key split and the
-    // merge union each re-derive the delta, and a nondeterministic input
-    // would let them disagree (dropped or duplicated key rows). The
-    // contract is ENFORCED, not just documented: a plan carrying any
-    // nondeterministic expression is rejected up front with a pointer to
-    // mergeLateReleasable, whose cache pins ONE materialization until the
-    // caller releases it (the streaming sink's path).
-    val nonDet = latePoints.queryExecution.analyzed.collectFirst {
-      case p if p.expressions.exists(_.exists(e => !e.deterministic)) => p.nodeName
-    }
-    require(
-      nonDet.isEmpty,
-      s"mergeLate: latePoints plan contains a nondeterministic expression " +
-        s"(in ${nonDet.getOrElse("?")}); after the convenience release the " +
-        "delta is re-derived and could disagree with itself. Use " +
-        "mergeLateReleasable and call the release hook after materializing.")
-    val (out, release) =
-      mergeLateReleasable(
-        tierTable, latePoints, tier, maxAffectedWindows, maxBroadcastWindows)
-    release()
-    out
-  }
-
-  /** Broadcast ceiling for the affected-key split, derived from a BYTE
-   * budget, not row count alone: a key row (source string, bucket int,
-   * window_start int) is ~40-60 B inside a built broadcast hash
-   * relation, so 1M keys is a ~40-60 MB relation on the driver and
-   * every executor — the top of the range where shipping the key set
-   * still beats shuffling the tier. Past it, [[mergeLateReleasable]]
-   * switches to the shuffle re-merge path rather than building a
-   * multi-hundred-MB broadcast. */
-  val DefaultMaxBroadcastWindows: Long = 1000000L
-
-  /** Absolute loud ceiling on a reconciliation delta: even the shuffle
-   * path re-merges the tier row-by-row against the delta, and a delta
-   * touching a large fraction of all windows is a bulk backfill — the
-   * economics flip to a full re-rollup from points (one shuffle of the
-   * points REPLACES the tier instead of reconciling it). */
-  val DefaultMaxAffectedWindows: Long = 100000000L
-
-  /** [[mergeLate]] plus a release hook: the delta aggregate is persisted
-   * (it feeds the affected-key split AND the merge union — one
-   * computation instead of three), and long-lived callers that merge
-   * repeatedly (the streaming sink) must call the hook once the result
-   * is materialized, or cached delta blocks accumulate for the session
-   * lifetime (the lshChain release discipline). One-shot callers in a
-   * short session may ignore it.
+   * (source, bucket, window_start) only).
    *
-   * Three cost regimes, picked by the delta's window count (the count
-   * rides the same job that warms the persisted delta):
+   * Three cost regimes, picked by the delta's window count (one eager
+   * `count()` of the delta aggregate):
    *  - <= `maxBroadcastWindows`: BROADCAST split — the affected-key set
    *    ships to every executor and the big tier is split row-locally
    *    (anti/semi, zero tier shuffle); only the affected slice
@@ -223,29 +162,51 @@ object Rollup {
    *    tier shuffle but never touches the (window-width-times-larger)
    *    raw points.
    *  - beyond: loud failure — that delta is a bulk backfill; run a
-   *    full re-rollup. Fails with a diagnosis, not a driver OOM. */
-  def mergeLateReleasable(
+   *    full re-rollup. Fails with a diagnosis, not a driver OOM.
+   *
+   * `latePoints` must be DETERMINISTIC (a table read or pure generator —
+   * every caller in this engine): the count, the affected-key split and
+   * the merge union each derive the delta from it, and a nondeterministic
+   * input would let them disagree (dropped or duplicated key rows). A
+   * plan carrying any nondeterministic expression is rejected up front;
+   * `localCheckpoint()` such points first (a plain persist keeps the
+   * nondeterministic expression in the analyzed plan). */
+  def mergeLate(
       tierTable: DataFrame,
       latePoints: DataFrame,
       tier: String,
       maxAffectedWindows: Long = DefaultMaxAffectedWindows,
-      maxBroadcastWindows: Long = DefaultMaxBroadcastWindows): (DataFrame, () => Unit) = {
+      maxBroadcastWindows: Long = DefaultMaxBroadcastWindows): DataFrame = {
+    val nonDet = latePoints.queryExecution.analyzed.collectFirst {
+      case p if p.expressions.exists(_.exists(e => !e.deterministic)) => p.nodeName
+    }
+    require(
+      nonDet.isEmpty,
+      s"mergeLate: latePoints plan contains a nondeterministic expression " +
+        s"(in ${nonDet.getOrElse("?")}); the delta is derived more than once " +
+        "and could disagree with itself. localCheckpoint() the late points first.")
     val delta = rollupFromPoints(latePoints, tier)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the guard must not leak the just-persisted delta when it fires
-    // (a streaming retry loop would pin one materialized cache per
-    // attempt): unpersist before propagating
-    val nAffected =
-      try {
-        val n = delta.count()
-        guardDelta(n, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
-        n
-      } catch {
-        case e: Throwable => delta.unpersist(); throw e
-      }
-    (foldDelta(tierTable, delta, nAffected, tier, maxBroadcastWindows),
-      () => { delta.unpersist(); () })
+    val nAffected = delta.count()
+    guardDelta(nAffected, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
+    foldDelta(tierTable, delta, nAffected, tier, maxBroadcastWindows)
   }
+
+  /** Broadcast ceiling for the affected-key split, derived from a BYTE
+   * budget, not row count alone: a key row (source string, bucket int,
+   * window_start int) is ~40-60 B inside a built broadcast hash
+   * relation, so 1M keys is a ~40-60 MB relation on the driver and
+   * every executor — the top of the range where shipping the key set
+   * still beats shuffling the tier. Past it, [[mergeLate]] switches to
+   * the shuffle re-merge path rather than building a multi-hundred-MB
+   * broadcast. */
+  val DefaultMaxBroadcastWindows: Long = 1000000L
+
+  /** Absolute loud ceiling on a reconciliation delta: even the shuffle
+   * path re-merges the tier row-by-row against the delta, and a delta
+   * touching a large fraction of all windows is a bulk backfill — the
+   * economics flip to a full re-rollup from points (one shuffle of the
+   * points REPLACES the tier instead of reconciling it). */
+  val DefaultMaxAffectedWindows: Long = 100000000L
 
   /** The loud ceiling on an incremental fold ([[DefaultMaxAffectedWindows]]
    * unless the caller exposes its own), checked BEFORE anything is
@@ -262,7 +223,7 @@ object Rollup {
   /** The one incremental fold: tier-state rows `delta` (at most one per
    * (source, bucket, window_start); extra tier-row columns are ignored)
    * merged into `tierTable`, recomputing only the windows the delta
-   * touches, in the regimes of [[mergeLateReleasable]]. `nDelta` must
+   * touches, in the regimes of [[mergeLate]]. `nDelta` must
    * have passed [[guardDelta]]; it picks the regime, and any UPPER bound
    * on the delta's row count is exact-safe (both regimes return the same
    * rows, an over-estimate only trades the broadcast split for the

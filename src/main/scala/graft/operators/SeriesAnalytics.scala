@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Tier
 import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -109,8 +110,8 @@ object SeriesAnalytics {
     points
       .groupBy(
         col("source"),
-        expr(s"CAST(pos DIV ${graft.core.Tier.BucketWidth} AS INT)").as("bucket"),
-        expr(s"CAST(pos - pos % $windowWidth AS INT)").as("window_start"))
+        Tier.bucket,
+        Tier.windowStart(windowWidth))
       .agg(
         countDistinct(col("tok")).as("n_distinct"),
         count(lit(1)).as("cnt_tok"))
@@ -127,7 +128,7 @@ object SeriesAnalytics {
     points
       .groupBy(
         col("source"),
-        expr(s"CAST(pos DIV ${graft.core.Tier.BucketWidth} AS INT)").as("bucket"),
+        Tier.bucket,
         col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("rank", row_number().over(rank))
@@ -144,7 +145,7 @@ object SeriesAnalytics {
     points
       .groupBy(
         col("source"),
-        expr(s"CAST(pos DIV ${graft.core.Tier.BucketWidth} AS INT)").as("bucket"),
+        Tier.bucket,
         expr(s"CAST(tok DIV $binWidth AS INT)").as("bin"))
       .agg(count(lit(1)).as("cnt"))
   }
@@ -567,8 +568,8 @@ object SeriesAnalytics {
     points
       .groupBy(
         col("source"),
-        expr(s"CAST(pos DIV ${graft.core.Tier.BucketWidth} AS INT)").as("bucket"),
-        expr(s"CAST(pos - pos % $windowWidth AS INT)").as("window_start"),
+        Tier.bucket,
+        Tier.windowStart(windowWidth),
         col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("total", sum(col("cnt")).over(byWin))
@@ -617,8 +618,8 @@ object SeriesAnalytics {
     val winCnt = points
       .groupBy(
         col("source"),
-        expr(s"CAST(pos DIV ${graft.core.Tier.BucketWidth} AS INT)").as("bucket"),
-        expr(s"CAST(pos - pos % $windowWidth AS INT)").as("window_start"),
+        Tier.bucket,
+        Tier.windowStart(windowWidth),
         col("tok"))
       .agg(count(lit(1)).as("cnt_w"))
     // per-source grand totals DERIVED from the pair aggregate (sum of the
@@ -666,7 +667,7 @@ object SeriesAnalytics {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     points
       .groupBy(col("source"), col("tok"))
-      .agg(min(expr(s"CAST(pos - pos % $windowWidth AS INT)")).as("window_start"))
+      .agg(min(Tier.windowStart(windowWidth)).as("window_start"))
       .groupBy(col("source"), col("window_start"))
       .agg(count(lit(1)).as("novel_tokens"))
       .withColumn("vocab_cum", sum(col("novel_tokens")).over(cum))
@@ -772,7 +773,7 @@ object SeriesAnalytics {
     val paired = points
       .groupBy(
         col("source"),
-        expr(s"CAST(pos - pos % $windowWidth AS INT)").as("window_start"),
+        Tier.windowStart(windowWidth),
         col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("total", sum(col("cnt")).over(byWin))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Tier
 import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -57,8 +58,8 @@ object Sketches {
     points
       .select(
         col("source"),
-        expr(s"CAST(pos DIV ${graft.core.Tier.BucketWidth} AS INT)").as("bucket"),
-        expr(s"CAST(pos - pos % $windowWidth AS INT)").as("window_start"),
+        Tier.bucket,
+        Tier.windowStart(windowWidth),
         expr(tokHash).as("h"))
       .groupBy(col("source"), col("bucket"), col("window_start"))
       .agg(call("kmv_kmin", col("h"), lit(k)).as("kmin"))

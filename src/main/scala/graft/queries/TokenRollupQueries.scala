@@ -109,7 +109,7 @@ object TokenRollupQueries {
         .points(s, dir)
         .groupBy(
           col("source"),
-          expr(s"CAST(pos DIV ${Tier.BucketWidth} AS INT)").as("bucket"))
+          Tier.bucket)
         .agg(call("tier_stats_decl", col("tok")).as("st"))
         .select(
           col("source"),
@@ -231,7 +231,7 @@ object TokenRollupQueries {
           .points(s, dir)
           .groupBy(
             col("source"),
-            expr("CAST(pos - pos % 60 AS INT)").as("window_start"))
+            Tier.windowStart(60))
           .agg(expr("CAST(sum(tok) AS BIGINT)").as("value")),
         60,
         2)),
@@ -338,7 +338,7 @@ object TokenRollupQueries {
           .groupBy(
             col("source"),
             expr("CAST(0 AS INT)").as("bucket"),
-            expr("CAST(pos - pos % 60 AS INT)").as("window_start"))
+            Tier.windowStart(60))
           .agg(expr("CAST(sum(tok) AS BIGINT)").as("sum_tok")),
         "sum_tok")),
 
@@ -356,7 +356,7 @@ object TokenRollupQueries {
           .groupBy(
             col("source"),
             expr("CAST(0 AS INT)").as("bucket"),
-            expr("CAST(pos - pos % 60 AS INT)").as("window_start"))
+            Tier.windowStart(60))
           .agg(expr("CAST(sum(tok) AS BIGINT) * 1000 DIV count(*)").as("avg_milli")),
         "avg_milli",
         60)),

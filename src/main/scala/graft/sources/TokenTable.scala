@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
  *     seeded-generator test discipline
  *     (test_forward_reverse_correctness.py:19, seed 42).
  *
- *  2. [[synthesizeScaled]] — a pure `spark.range`-based generator of an
- *     arbitrarily large table of the same shape for throughput runs
- *     (stands in for the 10^12-sequence production table). Splittable:
- *     every row is a pure function of its index, so any parallelism level
- *     produces identical rows (FIXTURES.md §1).
+ *  2. [[rangePoints]] — a pure `spark.range`-based generator of an
+ *     arbitrarily large point view of the same token formula for
+ *     throughput runs (stands in for the 10^12-sequence production
+ *     table). Splittable: every row is a pure function of its index, so
+ *     any parallelism level produces identical rows (FIXTURES.md §1).
  *
  * Token formula (shared with every DuckDB oracle in SparkEntry):
  *   n_tok       = n_chars
@@ -133,29 +133,6 @@ object TokenTable {
         col("source"))
   }
 
-  /** Arbitrary-scale generator for throughput benchmarks: `nDocs` docs,
-   * `tokensPerDoc` tokens each, `nSources` sources. Pure function of the
-   * row index — identical output at any parallelism. */
-  def synthesizeScaled(
-      spark: SparkSession,
-      nDocs: Long,
-      tokensPerDoc: Int,
-      nSources: Int = 20,
-      partitions: Int = 0): DataFrame = {
-    val base =
-      if (partitions > 0) spark.range(0L, nDocs, 1L, partitions)
-      else spark.range(nDocs)
-    base.select(
-      col("id").as("d"),
-      concat(lit("src"), (col("id") % nSources).cast("string")).as("source"),
-      // length varies deterministically in [tokensPerDoc/2, 3*tokensPerDoc/2).
-      // id is reduced modulo tokensPerDoc BEFORE the multiply so the product
-      // cannot overflow Long for any id (mathematically identical result:
-      // ((id mod m) * c) mod m == (id * c) mod m).
-      (lit(tokensPerDoc / 2) +
-        (col("id") % tokensPerDoc * 2654435761L % tokensPerDoc).cast("int")).as("n_tok"))
-  }
-
   /** Allocation-free giant point view for throughput benchmarks: one range
    * row per point, (doc, pos) derived arithmetically — measures the rollup
    * aggregation itself rather than generator allocation. Fixed tokensPerDoc
@@ -183,15 +160,4 @@ object TokenTable {
         s"CAST(((id DIV $tokensPerDoc + 1) * ${MulA}L + (id % $tokensPerDoc) * ${MulB}L) % ${Vocab}L AS INT)")
         .as("tok"))
   }
-
-  /** Point view of [[synthesizeScaled]] output. */
-  def scaledPoints(docs: DataFrame): DataFrame =
-    docs
-      .filter(col("n_tok") >= 1) // empty-doc guard, see points()
-      .select(col("d"), col("source"), explode(sequence(lit(0), col("n_tok") - 1)).as("pos"))
-      .select(
-        col("d").as("doc_id"),
-        col("source"),
-        col("pos"),
-        tokExpr("d", "pos").as("tok"))
 }

@@ -24,7 +24,7 @@ class DownsampleSpec extends SparkSpec {
 
   test("lttbCore: invariants — size, endpoints, membership, x-monotone, tie earliest") {
     val rnd = new scala.util.Random(42)
-    for (n <- Seq(3, 10, 100, 1437); k <- Seq(3, 4, 20, 100)) {
+    for (n <- Seq(3, 10, 100, 1437); k <- Seq(2, 3, 4, 20, 100)) {
       val pts = Array.tabulate(n)(i => (i.toDouble, rnd.nextDouble() * 100))
       val got = Downsample.lttbCore(pts, k)
       assert(got.length == math.min(n, k))
@@ -38,6 +38,18 @@ class DownsampleSpec extends SparkSpec {
     // every = (10-2)/3 = 2.667 => interior buckets start at idx 1, 3, 6;
     // zero areas everywhere => earliest of each bucket: 1, 3, 6
     assert(gotFlat.toSeq == Seq((0.0, 1.0), (1.0, 1.0), (3.0, 1.0), (6.0, 1.0), (9.0, 1.0)))
+  }
+
+  test("lttb: a threshold below 2 fails at build time, naming the threshold") {
+    import spark.implicits._
+    val df = Seq(("a", 0.0, 1.0), ("a", 1.0, 2.0), ("a", 2.0, 0.0)).toDF("k", "x", "y")
+    val pts = Array((0.0, 1.0), (1.0, 2.0), (2.0, 0.0))
+    for (t <- Seq(1, 0, -1)) {
+      val built = intercept[IllegalArgumentException](Downsample.lttb(spark, df, "k", "x", "y", t))
+      assert(built.getMessage.endsWith(s"threshold >= 2, got $t"), built.getMessage)
+      val core = intercept[IllegalArgumentException](Downsample.lttbCore(pts, t))
+      assert(core.getMessage.endsWith(s"threshold >= 2, got $t"), core.getMessage)
+    }
   }
 
   test("distributed lttb: per-key series, deterministic across partitioning") {

@@ -171,58 +171,75 @@ class PlanSpec extends SparkSpec {
       .filterNot(_.replaceAll("^[\\s:+\\-]*", "").startsWith("*("))
       .toList
     assert(offending.isEmpty, s"kernel expr outside codegen:\n${offending.mkString("\n")}\n$plan")
-    // the GENERATED path must agree bit-exactly with the interpreted SQL
-    // HOF formulations the kernels replaced
-    val wrong = spark
-      .range(50)
-      .selectExpr(
-        "id",
-        "transform(sequence(0L, 15L), i -> CAST(i * (id + 1) AS DOUBLE)) AS v",
-        "transform(sequence(0L, 20L), i -> CAST(i * (id + 3) AS INT)) AS a")
-      .selectExpr(
-        "arr_sum(a) = aggregate(a, 0L, (acc, x) -> acc + x) AS c1",
-        "arr_sum_q(v, 1000) = aggregate(v, 0L, (acc, x) -> acc + CAST(floor(x * 1000 + 0.5) AS BIGINT)) AS c2",
-        "arr_pos_weighted_sum(a, 0) = aggregate(zip_with(a, sequence(0L, size(a) - 1), (x, i) -> CAST(x AS BIGINT) * i), 0L, (acc, y) -> acc + y) AS c3",
-        "arr_pos_weighted_sum_q(v, 100, 1) = aggregate(zip_with(v, sequence(1L, size(v)), (x, i) -> i * CAST(floor(x * 100 + 0.5) AS BIGINT)), 0L, (acc, y) -> acc + y) AS c4",
-        "arr_every_kth(a, 3) = filter(a, (x, i) -> i % 3 = 0) AS c5",
-        "arr_abs_sum(a) = aggregate(a, 0L, (acc, x) -> acc + abs(x)) AS m1",
-        "arr_abs_err_q_sum(a, CAST(3.7 AS DOUBLE), 10000) = aggregate(a, 0L, (acc, x) -> acc + CAST(floor(abs(CAST(x AS DOUBLE) - 3.7) * 10000 + 0.5) AS BIGINT)) AS m2",
-        "arr_sq_err_q_sum(a, CAST(3.7 AS DOUBLE), 10000) = aggregate(a, 0L, (acc, x) -> acc + CAST(floor((CAST(x AS DOUBLE) - 3.7) * (CAST(x AS DOUBLE) - 3.7) * 10000 + 0.5) AS BIGINT)) AS m3",
-        "arr_seasonal_abs_sum(a, 7) = aggregate(sequence(7, size(a) - 1), 0L, (acc, t) -> acc + abs(CAST(element_at(a, t + 1) AS BIGINT) - element_at(a, t - 6))) AS m4",
-        "arr_interval_penalty_sum(a, 5, 30, 40) = aggregate(a, 0L, (acc, y) -> acc + (30 - 5) + CASE WHEN y < 5 THEN 40L * (5 - y) ELSE 0L END + CASE WHEN y > 30 THEN 40L * (y - 30) ELSE 0L END) AS m5",
-        // ranged twins == full kernels over the equivalent slice (slice()
-        // is 1-based; the ranged start is 0-based)
-        "arr_sum_range(a, 2, 5) = arr_sum(slice(a, 3, 5)) AS r1",
-        "arr_abs_sum_range(a, 2, 5) = arr_abs_sum(slice(a, 3, 5)) AS r2",
-        "arr_abs_err_q_sum_range(a, 2, 5, CAST(3.7 AS DOUBLE), 10000) = arr_abs_err_q_sum(slice(a, 3, 5), CAST(3.7 AS DOUBLE), 10000) AS r3",
-        "arr_sq_err_q_sum_range(a, 2, 5, CAST(3.7 AS DOUBLE), 10000) = arr_sq_err_q_sum(slice(a, 3, 5), CAST(3.7 AS DOUBLE), 10000) AS r4",
-        "arr_seasonal_abs_sum_range(a, 2, 12, 3) = arr_seasonal_abs_sum(slice(a, 3, 12), 3) AS r5",
-        // the fused generator's per-window stats == the slice formulation
-        "aggregate(transform(eval_window_stats(a, 3, 8, 4, 4, 10000), st -> CAST(st.ctx_sum = arr_sum_range(a, st.fs - 8, 8) AND st.ctx_sumsq = arr_sq_err_q_sum_range(a, st.fs - 8, 8, CAST(0.0 AS DOUBLE), 1) AND st.ctx_min = CAST(array_min(slice(a, st.fs - 7, 8)) AS BIGINT) AND st.ctx_max = CAST(array_max(slice(a, st.fs - 7, 8)) AS BIGINT) AND st.hor_sum = arr_sum_range(a, st.fs, 4) AND st.habs = arr_abs_sum_range(a, st.fs, 4) AND st.sum_eq = arr_abs_err_q_sum_range(a, st.fs, 4, CAST(st.ctx_sum AS DOUBLE) / 8.0, 10000) AND st.sum_e2q = arr_sq_err_q_sum_range(a, st.fs, 4, CAST(st.ctx_sum AS DOUBLE) / 8.0, 10000) AND st.se_num = arr_seasonal_abs_sum_range(a, st.fs - 8, 8, 3) AS INT)), 0L, (acc, x) -> acc + x) = size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r6",
-        // the slice generator's windows == the slice() formulation
-        "aggregate(transform(window_slices(a, 8, 4, 4), ws -> CAST(ws.ctx = slice(a, ws.fs - 7, 8) AND ws.hor = slice(a, ws.fs + 1, 4) AND ws.fs = 8 + ws.w * 4 AS INT)), 0L, (acc, x) -> acc + x) = size(window_slices(a, 8, 4, 4)) AS r7",
-        "size(window_slices(a, 8, 4, 4)) = size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r8",
-        // end-anchored generator: fs = n - 12 + w*3, 2 windows, ctx 6 / hor 2
-        "aggregate(transform(window_slices_end(a, 6, 2, 3, 2, 12), we -> CAST(we.fs = size(a) - 12 + we.w * 3 AND we.ctx = slice(a, we.fs - 5, 6) AND we.hor = slice(a, we.fs + 1, 2) AS INT)), 0L, (acc, x) -> acc + x) = size(window_slices_end(a, 6, 2, 3, 2, 12)) AS r9",
-        "size(window_slices_end(a, 6, 2, 3, 2, 12)) = CASE WHEN size(a) >= 18 THEN 2 ELSE 0 END AS r10",
-        "arr_blur4_every_kth(a, 3) = filter(transform(a, (x, i) -> CAST(element_at(a, CAST(greatest(i, 1) AS INT)) AS BIGINT) + 2L * x + element_at(a, CAST(least(i + 2, size(a)) AS INT))), (x, i) -> i % 3 = 0) AS c6",
-        "arr_repeat_each(a, 2) = flatten(transform(a, x -> array_repeat(x, 2))) AS c7",
-        "arr_null_count(a) = size(filter(a, x -> x IS NULL)) AS c8",
-        "arr_first_data_pos(a) = CAST(array_position(transform(a, x -> x IS NOT NULL), true) AS BIGINT) AS c9")
-      .where("NOT (c1 AND c2 AND c3 AND c4 AND c5 AND c6 AND c7 AND c8 AND c9 " +
-        "AND m1 AND m2 AND m3 AND m4 AND m5 AND r1 AND r2 AND r3 AND r4 AND r5 " +
-        "AND r6 AND r7 AND r8 AND r9 AND r10)")
-      .count()
-    assert(wrong == 0, "array kernel disagrees with its HOF-SQL formulation")
-    // null-handling twins: sums skip nulls, counts/positions see them
-    val nulls = spark
-      .sql("SELECT array(CAST(NULL AS INT), 5, NULL, 7) AS a")
-      .selectExpr(
-        "arr_sum(a) AS s", "arr_null_count(a) AS nc",
-        "arr_first_data_pos(a) AS fp", "arr_pos_weighted_sum(a, 0) AS pws")
-      .collect()(0)
-    assert(nulls.getLong(0) == 12L && nulls.getInt(1) == 2 &&
-      nulls.getLong(2) == 2L && nulls.getLong(3) == 26L)
+    // the kernels must agree bit-exactly with the SQL HOF formulations
+    // they replaced — on the generated path, and again with codegen off,
+    // where each kernel runs its interpreted nullSafeEval
+    def checkKernels(): Unit = {
+      val wrong = spark
+        .range(50)
+        .selectExpr(
+          "id",
+          "transform(sequence(0L, 15L), i -> CAST(i * (id + 1) AS DOUBLE)) AS v",
+          "transform(sequence(0L, 20L), i -> CAST(i * (id + 3) AS INT)) AS a")
+        .selectExpr(
+          "arr_sum(a) = aggregate(a, 0L, (acc, x) -> acc + x) AS c1",
+          "arr_sum_q(v, 1000) = aggregate(v, 0L, (acc, x) -> acc + CAST(floor(x * 1000 + 0.5) AS BIGINT)) AS c2",
+          "arr_pos_weighted_sum(a, 0) = aggregate(zip_with(a, sequence(0L, size(a) - 1), (x, i) -> CAST(x AS BIGINT) * i), 0L, (acc, y) -> acc + y) AS c3",
+          "arr_pos_weighted_sum_q(v, 100, 1) = aggregate(zip_with(v, sequence(1L, size(v)), (x, i) -> i * CAST(floor(x * 100 + 0.5) AS BIGINT)), 0L, (acc, y) -> acc + y) AS c4",
+          "arr_every_kth(a, 3) = filter(a, (x, i) -> i % 3 = 0) AS c5",
+          "arr_sq_err_q_sum(a, CAST(3.7 AS DOUBLE), 10000) = aggregate(a, 0L, (acc, x) -> acc + CAST(floor((CAST(x AS DOUBLE) - 3.7) * (CAST(x AS DOUBLE) - 3.7) * 10000 + 0.5) AS BIGINT)) AS m3",
+          "arr_seasonal_abs_sum(a, 7) = aggregate(sequence(7, size(a) - 1), 0L, (acc, t) -> acc + abs(CAST(element_at(a, t + 1) AS BIGINT) - element_at(a, t - 6))) AS m4",
+          "arr_interval_penalty_sum(a, 5, 30, 40) = aggregate(a, 0L, (acc, y) -> acc + (30 - 5) + CASE WHEN y < 5 THEN 40L * (5 - y) ELSE 0L END + CASE WHEN y > 30 THEN 40L * (y - 30) ELSE 0L END) AS m5",
+          // the fused generator's per-window stats == the kernels and
+          // lambdas over the window's slice() (context a[fs-8, fs),
+          // horizon a[fs, fs+4); slice() is 1-based)
+          "aggregate(transform(eval_window_stats(a, 3, 8, 4, 4, 10000), st -> CAST(" +
+            "st.ctx_sum = arr_sum(slice(a, st.fs - 7, 8)) " +
+            "AND st.ctx_sumsq = arr_sq_err_q_sum(slice(a, st.fs - 7, 8), CAST(0.0 AS DOUBLE), 1) " +
+            "AND st.ctx_min = CAST(array_min(slice(a, st.fs - 7, 8)) AS BIGINT) " +
+            "AND st.ctx_max = CAST(array_max(slice(a, st.fs - 7, 8)) AS BIGINT) " +
+            "AND st.hor_sum = arr_sum(slice(a, st.fs + 1, 4)) " +
+            "AND st.habs = aggregate(slice(a, st.fs + 1, 4), 0L, (acc, x) -> acc + abs(x)) " +
+            "AND st.sum_eq = aggregate(slice(a, st.fs + 1, 4), 0L, (acc, x) -> acc + CAST(floor(abs(CAST(x AS DOUBLE) - CAST(st.ctx_sum AS DOUBLE) / 8.0) * 10000 + 0.5) AS BIGINT)) " +
+            "AND st.sum_e2q = arr_sq_err_q_sum(slice(a, st.fs + 1, 4), CAST(st.ctx_sum AS DOUBLE) / 8.0, 10000) " +
+            "AND st.se_num = arr_seasonal_abs_sum(slice(a, st.fs - 7, 8), 3) " +
+            "AS INT)), 0L, (acc, x) -> acc + x) = size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r6",
+          // the slice generator's windows == the slice() formulation
+          "aggregate(transform(window_slices(a, 8, 4, 4), ws -> CAST(ws.ctx = slice(a, ws.fs - 7, 8) AND ws.hor = slice(a, ws.fs + 1, 4) AND ws.fs = 8 + ws.w * 4 AS INT)), 0L, (acc, x) -> acc + x) = size(window_slices(a, 8, 4, 4)) AS r7",
+          "size(window_slices(a, 8, 4, 4)) = size(eval_window_stats(a, 3, 8, 4, 4, 10000)) AS r8",
+          // end-anchored generator: fs = n - 12 + w*3, 2 windows, ctx 6 / hor 2
+          "aggregate(transform(window_slices_end(a, 6, 2, 3, 2, 12), we -> CAST(we.fs = size(a) - 12 + we.w * 3 AND we.ctx = slice(a, we.fs - 5, 6) AND we.hor = slice(a, we.fs + 1, 2) AS INT)), 0L, (acc, x) -> acc + x) = size(window_slices_end(a, 6, 2, 3, 2, 12)) AS r9",
+          "size(window_slices_end(a, 6, 2, 3, 2, 12)) = CASE WHEN size(a) >= 18 THEN 2 ELSE 0 END AS r10",
+          "arr_blur4_every_kth(a, 3) = filter(transform(a, (x, i) -> CAST(element_at(a, CAST(greatest(i, 1) AS INT)) AS BIGINT) + 2L * x + element_at(a, CAST(least(i + 2, size(a)) AS INT))), (x, i) -> i % 3 = 0) AS c6",
+          "arr_repeat_each(a, 2) = flatten(transform(a, x -> array_repeat(x, 2))) AS c7",
+          "arr_null_count(a) = size(filter(a, x -> x IS NULL)) AS c8",
+          "arr_first_data_pos(a) = CAST(array_position(transform(a, x -> x IS NOT NULL), true) AS BIGINT) AS c9")
+        .where("NOT (c1 AND c2 AND c3 AND c4 AND c5 AND c6 AND c7 AND c8 AND c9 " +
+          "AND m3 AND m4 AND m5 AND r6 AND r7 AND r8 AND r9 AND r10)")
+        .count()
+      assert(wrong == 0, "array kernel disagrees with its HOF-SQL formulation")
+      // null-handling twins: sums skip nulls, counts/positions see them
+      val nulls = spark
+        .sql("SELECT array(CAST(NULL AS INT), 5, NULL, 7) AS a")
+        .selectExpr(
+          "arr_sum(a) AS s", "arr_null_count(a) AS nc",
+          "arr_first_data_pos(a) AS fp", "arr_pos_weighted_sum(a, 0) AS pws")
+        .collect()(0)
+      assert(nulls.getLong(0) == 12L && nulls.getInt(1) == 2 &&
+        nulls.getLong(2) == 2L && nulls.getLong(3) == 26L)
+    }
+    checkKernels()
+    val interpreted = Seq(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      checkKernels()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("composed train chain: row-local stages, exactly one exchange (the per-patch groupBy)") {

@@ -257,6 +257,6 @@ class RollupSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Rollup.mergeLate(base, points.filter(rand() < 2.0), Tier.OneMinute)
     }
-    assert(e.getMessage.contains("mergeLateReleasable"), e.getMessage)
+    assert(e.getMessage.contains("localCheckpoint()"), e.getMessage)
   }
 }
