@@ -40,10 +40,19 @@ object GraftFunctions {
       }
       v.toString
     }
-    def int(i: Int): Int = literal(i).toInt
-    def long(i: Int): Long = literal(i).toLong
+    private def number[T](i: Int, kind: String, parse: String => T): T = {
+      val v = literal(i)
+      try parse(v)
+      catch {
+        case e: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$name: argument ${i + 1} must be $kind literal, got $v", e)
+      }
+    }
+    def int(i: Int): Int = number(i, "an int", _.toInt)
+    def long(i: Int): Long = number(i, "a bigint", _.toLong)
     def str(i: Int): String = literal(i)
-    def double(i: Int): Double = literal(i).toDouble
+    def double(i: Int): Double = number(i, "a double", _.toDouble)
   }
 
   private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] =

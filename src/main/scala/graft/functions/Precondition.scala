@@ -1,8 +1,8 @@
 package graft.functions
 
+import graft.functions.expressions.{BinaryKernel, UnaryKernel}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -160,26 +160,10 @@ object Precondition {
   }
 }
 
-/** Each precondition expression has a REAL `doGenCode` (one call into the
- * static kernels below, coefficients passed via `addReferenceObj`), so the
- * recode projections keep a single whole-stage-codegen span — same
- * rationale as [[graft.functions.expressions.CodecKernels]]. */
-object PrecondKernels {
-  def forwardData(a: ArrayData, c: Array[Double]): ArrayData =
-    new GenericArrayData(Precondition.forward(a.toDoubleArray(), c))
-  def reverseData(a: ArrayData, c: Array[Double]): ArrayData =
-    new GenericArrayData(Precondition.reverse(a.toDoubleArray(), c))
-  def reverseCtxData(a: ArrayData, c: Array[Double], context: ArrayData): ArrayData =
-    new GenericArrayData(
-      Precondition.reverseWithContext(a.toDoubleArray(), c, context.toDoubleArray()))
-}
-
-abstract class PrecondExpression extends UnaryExpression {
+abstract class PrecondExpression extends UnaryKernel {
   def polyType: String
   def degree: Int
   protected lazy val cs: Array[Double] = Precondition.coeffs(polyType, degree)
-  /** Unqualified [[PrecondKernels]] method to call from generated code. */
-  protected def kernel: String
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -187,23 +171,14 @@ abstract class PrecondExpression extends UnaryExpression {
         TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<double>, got $t")
     }
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("precondCoeffs", cs, "double[]")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      in =>
-        s"${ev.value} = graft.functions.PrecondKernels$$.MODULE$$.$kernel($in, $cRef);")
-  }
 }
 
 /** precond_forward(array<double>, degree, 'chebyshev'|'legendre') */
 case class PrecondForward(child: Expression, degree: Int, polyType: String)
     extends PrecondExpression {
   override def prettyName: String = "precond_forward"
-  override protected def kernel: String = "forwardData"
   override protected def nullSafeEval(input: Any): Any =
-    PrecondKernels.forwardData(input.asInstanceOf[ArrayData], cs)
+    new GenericArrayData(Precondition.forward(input.asInstanceOf[ArrayData].toDoubleArray(), cs))
   override protected def withNewChildInternal(newChild: Expression): PrecondForward =
     copy(child = newChild)
 }
@@ -212,9 +187,8 @@ case class PrecondForward(child: Expression, degree: Int, polyType: String)
 case class PrecondReverse(child: Expression, degree: Int, polyType: String)
     extends PrecondExpression {
   override def prettyName: String = "precond_reverse"
-  override protected def kernel: String = "reverseData"
   override protected def nullSafeEval(input: Any): Any =
-    PrecondKernels.reverseData(input.asInstanceOf[ArrayData], cs)
+    new GenericArrayData(Precondition.reverse(input.asInstanceOf[ArrayData].toDoubleArray(), cs))
   override protected def withNewChildInternal(newChild: Expression): PrecondReverse =
     copy(child = newChild)
 }
@@ -227,7 +201,7 @@ case class PrecondReverseCtx(
     right: Expression,
     degree: Int,
     polyType: String)
-    extends BinaryExpression {
+    extends BinaryKernel {
   private lazy val cs: Array[Double] = Precondition.coeffs(polyType, degree)
   override def prettyName: String = "precond_reverse_ctx"
   override def checkInputDataTypes(): TypeCheckResult =
@@ -240,18 +214,11 @@ case class PrecondReverseCtx(
     }
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override protected def nullSafeEval(window: Any, context: Any): Any =
-    PrecondKernels.reverseCtxData(
-      window.asInstanceOf[ArrayData],
-      cs,
-      context.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("precondCoeffs", cs, "double[]")
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (w, c) =>
-        s"${ev.value} = graft.functions.PrecondKernels$$.MODULE$$.reverseCtxData($w, $cRef, $c);")
-  }
+    new GenericArrayData(
+      Precondition.reverseWithContext(
+        window.asInstanceOf[ArrayData].toDoubleArray(),
+        cs,
+        context.asInstanceOf[ArrayData].toDoubleArray()))
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): PrecondReverseCtx = copy(left = newLeft, right = newRight)

@@ -1,7 +1,8 @@
 package graft.functions
 
+import graft.functions.expressions.UnaryKernel
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -41,22 +42,11 @@ object SimHash {
     }
     sig
   }
-
-  /** [[simhash64]] straight off ArrayData — the shared entry point for the
-   * interpreted eval AND the generated Java call of the `simhash64`
-   * expression, so it keeps a real `doGenCode` (the CodecKernels pattern)
-   * instead of a span-breaking CodegenFallback. */
-  def simhashData(arr: ArrayData): Long =
-    simhash64((0 until arr.numElements()).iterator.map(i => arr.getUTF8String(i).toString))
 }
 
-/** Catalyst expression: simhash64(array<string>) -> bigint.
- *
- * Real `doGenCode` (one-line call into [[SimHash.simhashData]]) — the
- * expression sits in the fingerprint projection of every simhash dedup
- * query, and a CodegenFallback would break the whole-stage span around
- * every co-resident expression (the measured dot_q effect). */
-case class SimHash64(child: Expression) extends UnaryExpression {
+/** Catalyst expression: simhash64(array<string>) -> bigint, in the
+ * fingerprint projection of every simhash dedup query. */
+case class SimHash64(child: Expression) extends UnaryKernel {
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -65,16 +55,10 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     }
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    SimHash.simhashData(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = graft.functions.SimHash$$.MODULE$$.simhashData($c);")
+  override protected def nullSafeEval(input: Any): Any = {
+    val arr = input.asInstanceOf[ArrayData]
+    SimHash.simhash64((0 until arr.numElements()).iterator.map(i => arr.getUTF8String(i).toString))
+  }
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }

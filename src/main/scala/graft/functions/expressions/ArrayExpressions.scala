@@ -1,8 +1,7 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -10,9 +9,9 @@ import org.apache.spark.sql.types._
  * Array kernels replacing the SQL higher-order-function lambdas
  * (`aggregate`/`filter`/`transform`/`zip_with`) that previously sat in the
  * pad/resample operators and their checksum queries. Each kernel is one
- * expression eval per ROW containing a tight JVM loop, with a real
- * `doGenCode` (the DotQ/CodecKernels pattern) so the surrounding
- * projection stays inside one whole-stage-codegen span. Measured honestly
+ * expression eval per ROW containing a tight JVM loop, bound to generated
+ * code by [[KernelCodegen]] so the surrounding projection stays inside
+ * one whole-stage-codegen span. Measured honestly
  * (BENCH.md "Kernel vs interpreted-lambda"): simple HOF lambdas cost only
  * ~1-2 ns/element in Spark 4.1, so the win per op is a real-but-modest
  * 10-25% plus span preservation — the big wins are structural: no
@@ -695,20 +694,19 @@ object ArrayKernels {
   }
 }
 
-/** Base for the array kernels: input must be an array; doGenCode is a
- * one-line static-kernel call built by [[genCall]]. Abstract members are
- * defs, not ctor params — superclasses of serialized expressions must keep
- * no-arg constructors (Java serialization, see CodecExpressions.scala). */
-abstract class ArrayKernelExpression extends UnaryExpression {
+/** Base for the array kernels: input must be an array. Abstract members
+ * are defs, not ctor params — superclasses of serialized expressions must
+ * keep no-arg constructors (Java serialization, see CodecExpressions.scala). */
+abstract class ArrayKernelExpression extends UnaryKernel {
   protected def elemOk(e: DataType): Boolean
   protected def expects: String
 
-  protected def elemType: DataType = child.dataType match {
+  protected lazy val elemType: DataType = child.dataType match {
     case ArrayType(e, _) => e
     case t => throw new IllegalStateException(s"$prettyName on non-array $t")
   }
-  protected def elemIsInt: Boolean = elemType == IntegerType
-  protected def elemIsFloat: Boolean = elemType == FloatType
+  protected lazy val elemIsInt: Boolean = elemType == IntegerType
+  protected lazy val elemIsFloat: Boolean = elemType == FloatType
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -716,16 +714,6 @@ abstract class ArrayKernelExpression extends UnaryExpression {
       case t =>
         TypeCheckResult.TypeCheckFailure(s"$prettyName requires $expects, got $t")
     }
-
-  /** Java expression computing the result from ArrayData variable `c`. */
-  protected def genCall(ctx: CodegenContext, c: String): String
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${genCall(ctx, c)};")
-}
-
-private object ArrayKernelExpression {
-  final val K = "graft.functions.expressions.ArrayKernels$.MODULE$"
 }
 
 /** `arr_sum(array<int|bigint>) -> bigint`: null-skipping exact sum. */
@@ -737,8 +725,6 @@ case class ArrSum(child: Expression) extends ArrayKernelExpression {
   override def prettyName: String = "arr_sum"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.sumLong(input.asInstanceOf[ArrayData], elemIsInt)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.sumLong($c, $elemIsInt)"
   override protected def withNewChildInternal(newChild: Expression): ArrSum =
     copy(child = newChild)
 }
@@ -754,8 +740,6 @@ case class ArrSumMod(child: Expression, mod: Long) extends ArrayKernelExpression
   override def prettyName: String = "arr_sum_mod"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.sumModLong(input.asInstanceOf[ArrayData], elemIsInt, mod)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.sumModLong($c, $elemIsInt, ${mod}L)"
   override protected def withNewChildInternal(newChild: Expression): ArrSumMod =
     copy(child = newChild)
 }
@@ -765,7 +749,7 @@ case class ArrSumMod(child: Expression, mod: Long) extends ArrayKernelExpression
  * frames, every-Nth kept. Not an [[ArrayKernelExpression]] — the child is
  * a scalar binary payload, not an array. */
 case class BinFrameSample(child: Expression, frameBytes: Int, everyN: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(frameBytes >= 1, s"bin_frame_sample requires frameBytes >= 1, got $frameBytes")
   require(everyN >= 1, s"bin_frame_sample requires everyN >= 1, got $everyN")
   override def checkInputDataTypes(): TypeCheckResult =
@@ -782,11 +766,6 @@ case class BinFrameSample(child: Expression, frameBytes: Int, everyN: Int)
   override def prettyName: String = "bin_frame_sample"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.frameSample(input.asInstanceOf[Array[Byte]], frameBytes, everyN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c => s"${ev.value} = ${ArrayKernelExpression.K}.frameSample($c, $frameBytes, $everyN);")
   override protected def withNewChildInternal(newChild: Expression): BinFrameSample =
     copy(child = newChild)
 }
@@ -801,8 +780,6 @@ case class ArrSumQ(child: Expression, scale: Long) extends ArrayKernelExpression
   override def prettyName: String = "arr_sum_q"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.sumQuant(input.asInstanceOf[ArrayData], elemIsFloat, scale)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.sumQuant($c, $elemIsFloat, ${scale}L)"
   override protected def withNewChildInternal(newChild: Expression): ArrSumQ =
     copy(child = newChild)
 }
@@ -817,8 +794,6 @@ case class ArrAbsSumQ(child: Expression, scale: Long) extends ArrayKernelExpress
   override def prettyName: String = "arr_abs_sum_q"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.absSumQuant(input.asInstanceOf[ArrayData], elemIsFloat, scale)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.absSumQuant($c, $elemIsFloat, ${scale}L)"
   override protected def withNewChildInternal(newChild: Expression): ArrAbsSumQ =
     copy(child = newChild)
 }
@@ -831,8 +806,6 @@ case class ArrNullCount(child: Expression) extends ArrayKernelExpression {
   override def prettyName: String = "arr_null_count"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.nullCount(input.asInstanceOf[ArrayData])
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.nullCount($c)"
   override protected def withNewChildInternal(newChild: Expression): ArrNullCount =
     copy(child = newChild)
 }
@@ -846,8 +819,6 @@ case class ArrFirstDataPos(child: Expression) extends ArrayKernelExpression {
   override def prettyName: String = "arr_first_data_pos"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.firstDataPos(input.asInstanceOf[ArrayData])
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.firstDataPos($c)"
   override protected def withNewChildInternal(newChild: Expression): ArrFirstDataPos =
     copy(child = newChild)
 }
@@ -863,8 +834,6 @@ case class ArrPosWeightedSum(child: Expression, base: Long)
   override def prettyName: String = "arr_pos_weighted_sum"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.posWeightedSum(input.asInstanceOf[ArrayData], elemIsInt, base)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.posWeightedSum($c, $elemIsInt, ${base}L)"
   override protected def withNewChildInternal(newChild: Expression): ArrPosWeightedSum =
     copy(child = newChild)
 }
@@ -880,8 +849,6 @@ case class ArrPosWeightedSumQ(child: Expression, scale: Long, base: Long)
   override def prettyName: String = "arr_pos_weighted_sum_q"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.posWeightedSumQuant(input.asInstanceOf[ArrayData], elemIsFloat, scale, base)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.posWeightedSumQuant($c, $elemIsFloat, ${scale}L, ${base}L)"
   override protected def withNewChildInternal(newChild: Expression): ArrPosWeightedSumQ =
     copy(child = newChild)
 }
@@ -896,10 +863,6 @@ case class ArrEveryKth(child: Expression, k: Int) extends ArrayKernelExpression 
   override def prettyName: String = "arr_every_kth"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.everyKth(input.asInstanceOf[ArrayData], k, elemType)
-  override protected def genCall(ctx: CodegenContext, c: String): String = {
-    val et = ctx.addReferenceObj("elemType", elemType, classOf[DataType].getName)
-    s"${ArrayKernelExpression.K}.everyKth($c, $k, $et)"
-  }
   override protected def withNewChildInternal(newChild: Expression): ArrEveryKth =
     copy(child = newChild)
 }
@@ -916,8 +879,6 @@ case class ArrBlur4EveryKth(child: Expression, k: Int) extends ArrayKernelExpres
   override def prettyName: String = "arr_blur4_every_kth"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.blur4EveryKth(input.asInstanceOf[ArrayData], k, elemIsInt)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.blur4EveryKth($c, $k, $elemIsInt)"
   override protected def withNewChildInternal(newChild: Expression): ArrBlur4EveryKth =
     copy(child = newChild)
 }
@@ -927,8 +888,8 @@ case class ArrBlur4EveryKth(child: Expression, k: Int) extends ArrayKernelExpres
  * forecast — the PackedLoss numerator as ONE codegen'd expression instead
  * of an interpreted per-element lambda. */
 case class ArrErrQSum(left: Expression, right: Expression, scale: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  private def elemIsInt = left.dataType match {
+    extends BinaryKernel {
+  private lazy val elemIsInt = left.dataType match {
     case ArrayType(IntegerType, _) => true
     case _ => false
   }
@@ -944,12 +905,6 @@ case class ArrErrQSum(left: Expression, right: Expression, scale: Long)
   override def prettyName: String = "arr_sq_err_q_sum"
   override protected def nullSafeEval(arr: Any, center: Any): Any =
     ArrayKernels.errQSum(arr.asInstanceOf[ArrayData], elemIsInt, center.asInstanceOf[Double], scale)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, c) =>
-        s"${ev.value} = ${ArrayKernelExpression.K}.errQSum($a, $elemIsInt, $c, ${scale}L);")
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): ArrErrQSum = copy(left = newLeft, right = newRight)
@@ -966,8 +921,6 @@ case class ArrSeasonalAbsSum(child: Expression, m: Int) extends ArrayKernelExpre
   override def prettyName: String = "arr_seasonal_abs_sum"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.seasonalAbsSum(input.asInstanceOf[ArrayData], elemIsInt, m)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.seasonalAbsSum($c, $elemIsInt, $m)"
   override protected def withNewChildInternal(newChild: Expression): ArrSeasonalAbsSum =
     copy(child = newChild)
 }
@@ -981,8 +934,8 @@ case class ArrIntervalPenaltySum(
     second: Expression,
     third: Expression,
     mult: Long)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  private def elemIsInt = first.dataType match {
+    extends TernaryKernel {
+  private lazy val elemIsInt = first.dataType match {
     case ArrayType(IntegerType, _) => true
     case _ => false
   }
@@ -996,24 +949,13 @@ case class ArrIntervalPenaltySum(
     }
   override def dataType: DataType = LongType
   override def prettyName: String = "arr_interval_penalty_sum"
-  private def toLong(v: Any): Long = v match {
-    case i: java.lang.Integer => i.toLong
-    case l: java.lang.Long => l
-    case other => other.asInstanceOf[Number].longValue()
-  }
   override protected def nullSafeEval(arr: Any, lo: Any, hi: Any): Any =
     ArrayKernels.intervalPenaltySum(
       arr.asInstanceOf[ArrayData],
       elemIsInt,
-      toLong(lo),
-      toLong(hi),
+      lo.asInstanceOf[Number].longValue(),
+      hi.asInstanceOf[Number].longValue(),
       mult)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, lo, hi) =>
-        s"${ev.value} = ${ArrayKernelExpression.K}.intervalPenaltySum($a, $elemIsInt, (long) $lo, (long) $hi, ${mult}L);")
   override protected def withNewChildrenInternal(
       newFirst: Expression,
       newSecond: Expression,
@@ -1036,9 +978,9 @@ case class EvalWindowStats(
     hor: Int,
     stride: Int,
     scale: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel {
   require(ctx >= 1 && hor >= 0 && stride >= 1, s"bad geometry ($ctx, $hor, $stride)")
-  private def elemIsInt = left.dataType match {
+  private lazy val elemIsInt = left.dataType match {
     case ArrayType(IntegerType, _) => true
     case _ => false
   }
@@ -1074,12 +1016,6 @@ case class EvalWindowStats(
       stride,
       m.asInstanceOf[Number].intValue(),
       scale)
-  override protected def doGenCode(ctx0: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx0,
-      ev,
-      (a, m) =>
-        s"${ev.value} = ${ArrayKernelExpression.K}.evalWindowStats($a, $elemIsInt, $ctx, $hor, $stride, (int) $m, ${scale}L);")
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): EvalWindowStats = copy(left = newLeft, right = newRight)
@@ -1109,8 +1045,6 @@ case class LttbSelect(child: Expression, threshold: Int) extends ArrayKernelExpr
   override def prettyName: String = "lttb_select"
   override protected def nullSafeEval(input: Any): Any =
     graft.operators.Downsample.lttbSelectKernel(input.asInstanceOf[ArrayData], threshold)
-  override protected def genCall(ctx0: CodegenContext, c: String): String =
-    s"graft.operators.Downsample$$.MODULE$$.lttbSelectKernel($c, $threshold)"
   override protected def withNewChildInternal(newChild: Expression): LttbSelect =
     copy(child = newChild)
 }
@@ -1135,8 +1069,6 @@ case class EvalPinballStats(child: Expression, ctx: Int, hor: Int, stride: Int)
   override def prettyName: String = "eval_pinball_stats"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.evalPinballStats(input.asInstanceOf[ArrayData], elemIsInt, ctx, hor, stride)
-  override protected def genCall(ctx0: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.evalPinballStats($c, $elemIsInt, $ctx, $hor, $stride)"
   override protected def withNewChildInternal(newChild: Expression): EvalPinballStats =
     copy(child = newChild)
 }
@@ -1169,8 +1101,6 @@ case class WindowSlicesEnd(
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.windowSlicesEnd(
       input.asInstanceOf[ArrayData], elemIsInt, ctx, hor, distance, nWindows, endOffset)
-  override protected def genCall(ctx0: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.windowSlicesEnd($c, $elemIsInt, $ctx, $hor, $distance, $nWindows, $endOffset)"
   override protected def withNewChildInternal(newChild: Expression): WindowSlicesEnd =
     copy(child = newChild)
 }
@@ -1193,8 +1123,6 @@ case class WindowSlices(child: Expression, ctx: Int, hor: Int, stride: Int)
   override def prettyName: String = "window_slices"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.windowSlices(input.asInstanceOf[ArrayData], elemIsInt, ctx, hor, stride)
-  override protected def genCall(ctx0: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.windowSlices($c, $elemIsInt, $ctx, $hor, $stride)"
   override protected def withNewChildInternal(newChild: Expression): WindowSlices =
     copy(child = newChild)
 }
@@ -1207,7 +1135,7 @@ case class AffineModSeq(
     mulA: Long,
     mulB: Long,
     mod: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel {
   require(mod >= 2 && mod <= Int.MaxValue, s"mod must fit int, got $mod")
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -1224,12 +1152,6 @@ case class AffineModSeq(
       mulA,
       mulB,
       mod)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (d, n) =>
-        s"${ev.value} = ${ArrayKernelExpression.K}.affineModSeq($d, $n, ${mulA}L, ${mulB}L, ${mod}L);")
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): AffineModSeq = copy(left = newLeft, right = newRight)
@@ -1245,10 +1167,6 @@ case class ArrChunk(child: Expression, k: Int) extends ArrayKernelExpression {
   override def prettyName: String = "arr_chunk"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.chunk(input.asInstanceOf[ArrayData], k, elemType)
-  override protected def genCall(ctx: CodegenContext, c: String): String = {
-    val et = ctx.addReferenceObj("elemType", elemType, classOf[DataType].getName)
-    s"${ArrayKernelExpression.K}.chunk($c, $k, $et)"
-  }
   override protected def withNewChildInternal(newChild: Expression): ArrChunk =
     copy(child = newChild)
 }
@@ -1265,8 +1183,6 @@ case class ArrZscoreOutliers(child: Expression, k: Int, z: Double)
   override def prettyName: String = "arr_zscore_outliers"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.zscoreOutliers(input.asInstanceOf[ArrayData], k, z)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.zscoreOutliers($c, $k, ${z}D)"
   override protected def withNewChildInternal(newChild: Expression): ArrZscoreOutliers =
     copy(child = newChild)
 }
@@ -1280,8 +1196,6 @@ case class ArrEwmaHalf(child: Expression) extends ArrayKernelExpression {
   override def prettyName: String = "arr_ewma_half"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.ewmaHalf(input.asInstanceOf[ArrayData])
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${ArrayKernelExpression.K}.ewmaHalf($c)"
   override protected def withNewChildInternal(newChild: Expression): ArrEwmaHalf =
     copy(child = newChild)
 }
@@ -1296,10 +1210,6 @@ case class ArrRepeatEach(child: Expression, k: Int) extends ArrayKernelExpressio
   override def prettyName: String = "arr_repeat_each"
   override protected def nullSafeEval(input: Any): Any =
     ArrayKernels.repeatEach(input.asInstanceOf[ArrayData], k, elemType)
-  override protected def genCall(ctx: CodegenContext, c: String): String = {
-    val et = ctx.addReferenceObj("elemType", elemType, classOf[DataType].getName)
-    s"${ArrayKernelExpression.K}.repeatEach($c, $k, $et)"
-  }
   override protected def withNewChildInternal(newChild: Expression): ArrRepeatEach =
     copy(child = newChild)
 }

@@ -1,58 +1,27 @@
 package graft.functions.expressions
 
-import graft.functions.{DeltaOfDelta, GorillaCodec}
+import graft.functions.{ChimpCodec, DeltaOfDelta, GorillaCodec}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-
-/** Static entry points shared by the interpreted eval and the generated
- * Java call of each codec expression (the DotQ pattern,
- * VectorExpressions.scala): one JVM method per codec direction, taking the
- * Catalyst-native input and returning the Catalyst-native output, so the
- * generated code is a single assignment. */
-object CodecKernels {
-  def gorillaEncode(a: ArrayData): Array[Byte] = GorillaCodec.encode(a.toDoubleArray())
-  def gorillaDecode(b: Array[Byte]): ArrayData = new GenericArrayData(GorillaCodec.decode(b))
-  def chimpEncode(a: ArrayData): Array[Byte] =
-    graft.functions.ChimpCodec.encode(a.toDoubleArray())
-  def chimpDecode(b: Array[Byte]): ArrayData =
-    new GenericArrayData(graft.functions.ChimpCodec.decode(b))
-  def dodEncode(a: ArrayData): Array[Byte] = DeltaOfDelta.encode(a.toLongArray())
-  def dodDecode(b: Array[Byte]): ArrayData = new GenericArrayData(DeltaOfDelta.decode(b))
-}
 
 /**
  * Catalyst expressions for the tier-payload codecs (north-rule mandated:
  * "Gorilla XOR + delta-of-delta ... implemented as Catalyst
- * expressions/UDAFs"). Each has a REAL `doGenCode` — a one-line call into
- * [[CodecKernels]] — so a projection mixing codec calls with ordinary
- * expressions stays inside ONE whole-stage-codegen span. (The per-row work
- * is still the tight Scala loop; what codegen buys is not the loop but the
- * span: a CodegenFallback here would break codegen for EVERY expression in
- * the same projection — the exact effect measured and fixed for dot_q.)
+ * expressions/UDAFs"), bound to generated code by [[KernelCodegen]] so a
+ * projection mixing codec calls with ordinary expressions stays inside
+ * ONE whole-stage-codegen span.
  *
  * The whole payload lives in ONE row's blob; decode never needs state from
  * another row (reference series-boundary rule,
  * uni2ts/src/uni2ts/transform/precondition.py:176-185).
  */
-abstract class CodecExpression extends UnaryExpression {
-  /** Unqualified [[CodecKernels]] method name to call. */
-  protected def kernel: String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = graft.functions.expressions.CodecKernels$$.MODULE$$.$kernel($c);")
-}
-
 // `elem` is an abstract def, NOT a constructor parameter: Spark ships
 // expressions via Java serialization, and only the concrete case class is
 // Serializable — every superclass must keep a no-arg constructor or task
 // deserialization dies with InvalidClassException("no valid constructor").
-abstract class ArrayToBinaryCodec extends CodecExpression {
+abstract class ArrayToBinaryCodec extends UnaryKernel {
   protected def elem: DataType
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -63,7 +32,7 @@ abstract class ArrayToBinaryCodec extends CodecExpression {
   override def dataType: DataType = BinaryType
 }
 
-abstract class BinaryToArrayCodec extends CodecExpression {
+abstract class BinaryToArrayCodec extends UnaryKernel {
   protected def elem: DataType
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
@@ -75,9 +44,8 @@ abstract class BinaryToArrayCodec extends CodecExpression {
 case class GorillaEncode(child: Expression) extends ArrayToBinaryCodec {
   override protected def elem: DataType = DoubleType
   override def prettyName: String = "gorilla_encode"
-  override protected def kernel: String = "gorillaEncode"
   override protected def nullSafeEval(input: Any): Any =
-    CodecKernels.gorillaEncode(input.asInstanceOf[ArrayData])
+    GorillaCodec.encode(input.asInstanceOf[ArrayData].toDoubleArray())
   override protected def withNewChildInternal(newChild: Expression): GorillaEncode =
     copy(child = newChild)
 }
@@ -85,9 +53,8 @@ case class GorillaEncode(child: Expression) extends ArrayToBinaryCodec {
 case class GorillaDecode(child: Expression) extends BinaryToArrayCodec {
   override protected def elem: DataType = DoubleType
   override def prettyName: String = "gorilla_decode"
-  override protected def kernel: String = "gorillaDecode"
   override protected def nullSafeEval(input: Any): Any =
-    CodecKernels.gorillaDecode(input.asInstanceOf[Array[Byte]])
+    new GenericArrayData(GorillaCodec.decode(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): GorillaDecode =
     copy(child = newChild)
 }
@@ -95,9 +62,8 @@ case class GorillaDecode(child: Expression) extends BinaryToArrayCodec {
 case class ChimpEncode(child: Expression) extends ArrayToBinaryCodec {
   override protected def elem: DataType = DoubleType
   override def prettyName: String = "chimp_encode"
-  override protected def kernel: String = "chimpEncode"
   override protected def nullSafeEval(input: Any): Any =
-    CodecKernels.chimpEncode(input.asInstanceOf[ArrayData])
+    ChimpCodec.encode(input.asInstanceOf[ArrayData].toDoubleArray())
   override protected def withNewChildInternal(newChild: Expression): ChimpEncode =
     copy(child = newChild)
 }
@@ -105,9 +71,8 @@ case class ChimpEncode(child: Expression) extends ArrayToBinaryCodec {
 case class ChimpDecode(child: Expression) extends BinaryToArrayCodec {
   override protected def elem: DataType = DoubleType
   override def prettyName: String = "chimp_decode"
-  override protected def kernel: String = "chimpDecode"
   override protected def nullSafeEval(input: Any): Any =
-    CodecKernels.chimpDecode(input.asInstanceOf[Array[Byte]])
+    new GenericArrayData(ChimpCodec.decode(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): ChimpDecode =
     copy(child = newChild)
 }
@@ -115,9 +80,8 @@ case class ChimpDecode(child: Expression) extends BinaryToArrayCodec {
 case class DodEncode(child: Expression) extends ArrayToBinaryCodec {
   override protected def elem: DataType = LongType
   override def prettyName: String = "dod_encode"
-  override protected def kernel: String = "dodEncode"
   override protected def nullSafeEval(input: Any): Any =
-    CodecKernels.dodEncode(input.asInstanceOf[ArrayData])
+    DeltaOfDelta.encode(input.asInstanceOf[ArrayData].toLongArray())
   override protected def withNewChildInternal(newChild: Expression): DodEncode =
     copy(child = newChild)
 }
@@ -125,9 +89,8 @@ case class DodEncode(child: Expression) extends ArrayToBinaryCodec {
 case class DodDecode(child: Expression) extends BinaryToArrayCodec {
   override protected def elem: DataType = LongType
   override def prettyName: String = "dod_decode"
-  override protected def kernel: String = "dodDecode"
   override protected def nullSafeEval(input: Any): Any =
-    CodecKernels.dodDecode(input.asInstanceOf[Array[Byte]])
+    new GenericArrayData(DeltaOfDelta.decode(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): DodDecode =
     copy(child = newChild)
 }

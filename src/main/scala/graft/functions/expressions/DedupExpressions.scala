@@ -2,16 +2,15 @@ package graft.functions.expressions
 
 import graft.core.Hash
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Typed kernels for the MinHash/LSH dedup chain — the shingle, signature
- * and band stages as Catalyst expressions with real `doGenCode`, replacing
- * the Dataset `map` formulation.
+ * and band stages as Catalyst expressions inside whole-stage codegen
+ * ([[KernelCodegen]]), replacing the Dataset `map` formulation.
  *
  * Why: a typed Dataset map deserializes EVERY row into Scala objects
  * (tuples, boxed fields, a copied String) and re-serializes the result —
@@ -303,13 +302,9 @@ object DedupKernels {
   }
 }
 
-private object DedupKernelRef {
-  final val K = "graft.functions.expressions.DedupKernels$.MODULE$"
-}
-
 /** `shingle_fnv(text, n) -> array<bigint>`: distinct sorted word-n-gram
  * FNV-1a shingle hashes. */
-case class ShingleFnv(child: Expression, n: Int) extends UnaryExpression {
+case class ShingleFnv(child: Expression, n: Int) extends UnaryKernel {
   require(n >= 1, s"shingle_fnv requires n >= 1, got $n")
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -320,15 +315,13 @@ case class ShingleFnv(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "shingle_fnv"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.shingleFnv(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${DedupKernelRef.K}.shingleFnv($c, $n);")
   override protected def withNewChildInternal(newChild: Expression): ShingleFnv =
     copy(child = newChild)
 }
 
 /** `ngram_rep_stats(text, n) -> array<int> [slots, top_cnt, dup_occ]`:
  * word-n-gram repetition stats (see [[DedupKernels.ngramRepStats]]). */
-case class NgramRepStats(child: Expression, n: Int) extends UnaryExpression {
+case class NgramRepStats(child: Expression, n: Int) extends UnaryKernel {
   require(n >= 1, s"ngram_rep_stats requires n >= 1, got $n")
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -339,8 +332,6 @@ case class NgramRepStats(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "ngram_rep_stats"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.ngramRepStats(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${DedupKernelRef.K}.ngramRepStats($c, $n);")
   override protected def withNewChildInternal(newChild: Expression): NgramRepStats =
     copy(child = newChild)
 }
@@ -350,7 +341,7 @@ case class NgramRepStats(child: Expression, n: Int) extends UnaryExpression {
  * Lehmer-round bit signs instead of xxhash64, so the SimHash ASSIGNMENT
  * stage can be hash-checked against an external SQL oracle (-1 = no
  * nonempty word). */
-case class SimHashAffine(child: Expression, nBits: Int) extends UnaryExpression {
+case class SimHashAffine(child: Expression, nBits: Int) extends UnaryKernel {
   require(nBits >= 1 && nBits <= 62, s"simhash_affine requires 1 <= nBits <= 62, got $nBits")
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -361,8 +352,6 @@ case class SimHashAffine(child: Expression, nBits: Int) extends UnaryExpression 
   override def prettyName: String = "simhash_affine"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.simhashAffine(input.asInstanceOf[UTF8String], nBits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${DedupKernelRef.K}.simhashAffine($c, $nBits);")
   override protected def withNewChildInternal(newChild: Expression): SimHashAffine =
     copy(child = newChild)
 }
@@ -371,7 +360,7 @@ case class SimHashAffine(child: Expression, nBits: Int) extends UnaryExpression 
  * SQL-reproducible twin of the shingle->minhash signature chain, so the
  * MinHash ASSIGNMENT stage can be hash-checked against an external SQL
  * oracle (empty array = fewer than n words). */
-case class MinHashAffine(child: Expression, n: Int, numHashes: Int) extends UnaryExpression {
+case class MinHashAffine(child: Expression, n: Int, numHashes: Int) extends UnaryKernel {
   require(n >= 1, s"minhash_affine requires n >= 1, got $n")
   require(
     numHashes >= 1 && numHashes <= 1024,
@@ -385,9 +374,6 @@ case class MinHashAffine(child: Expression, n: Int, numHashes: Int) extends Unar
   override def prettyName: String = "minhash_affine"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.minhashAffine(input.asInstanceOf[UTF8String], n, numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx, ev, c => s"${ev.value} = ${DedupKernelRef.K}.minhashAffine($c, $n, $numHashes);")
   override protected def withNewChildInternal(newChild: Expression): MinHashAffine =
     copy(child = newChild)
 }
@@ -406,8 +392,6 @@ case class ArrPairs(child: Expression) extends ArrayKernelExpression {
   override def prettyName: String = "arr_pairs"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.pairs(input.asInstanceOf[ArrayData])
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${DedupKernelRef.K}.pairs($c)"
   override protected def withNewChildInternal(newChild: Expression): ArrPairs =
     copy(child = newChild)
 }
@@ -415,7 +399,7 @@ case class ArrPairs(child: Expression) extends ArrayKernelExpression {
 /** `arr_sorted_inter_size(array<bigint>, array<bigint>) -> int`:
  * merge-walk intersection size of two sorted-distinct arrays. */
 case class SortedInterSize(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel {
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
@@ -428,11 +412,6 @@ case class SortedInterSize(left: Expression, right: Expression)
   override def prettyName: String = "arr_sorted_inter_size"
   override protected def nullSafeEval(a: Any, b: Any): Any =
     DedupKernels.sortedInterSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => s"${ev.value} = ${DedupKernelRef.K}.sortedInterSize($a, $b);")
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): SortedInterSize = copy(left = newLeft, right = newRight)
@@ -450,8 +429,6 @@ case class MinHashSig(child: Expression, numHashes: Int) extends ArrayKernelExpr
   override def prettyName: String = "minhash_sig"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.minhashSig(input.asInstanceOf[ArrayData], numHashes)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${DedupKernelRef.K}.minhashSig($c, $numHashes)"
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
@@ -466,8 +443,6 @@ case class LshBands(child: Expression, bands: Int) extends ArrayKernelExpression
   override def prettyName: String = "lsh_bands"
   override protected def nullSafeEval(input: Any): Any =
     DedupKernels.lshBands(input.asInstanceOf[ArrayData], bands)
-  override protected def genCall(ctx: CodegenContext, c: String): String =
-    s"${DedupKernelRef.K}.lshBands($c, $bands)"
   override protected def withNewChildInternal(newChild: Expression): LshBands =
     copy(child = newChild)
 }

@@ -1,7 +1,8 @@
 package graft.functions.expressions
 
+import graft.functions.expressions.VectorKernels.elemOf
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -25,6 +26,13 @@ object VectorKernels {
 
   def quantize(x: Double): Long = math.floor(x * 1000.0 + 0.5).toLong
 
+  /** The element type of a vector argument: float or double, else None. */
+  def elemOf(t: DataType): Option[DataType] = t match {
+    case ArrayType(FloatType, _) => Some(FloatType)
+    case ArrayType(DoubleType, _) => Some(DoubleType)
+    case _ => None
+  }
+
   /** Random-hyperplane LSH signature over the quantized vector; plane
    * weights are small signed ints derived from XXH64(plane*1024+dim, 42) —
    * a pure function of (plane, dim), deterministic at any parallelism.
@@ -32,12 +40,7 @@ object VectorKernels {
    * formulation, not bit-identical to it: the SQL's xxhash64 hashed its
    * INT argument via hashInt; this kernel hashes the long via hashLong.
    * Bucket ids are engine-internal — only recall, asserted in
-   * PipelineSpec, is the contract.)
-   *
-   * Reads straight off ArrayData — the shared entry point for the
-   * interpreted eval AND the generated Java call of `lsh_sig`, so the
-   * expression keeps a real `doGenCode` (same one-line kernel-call shape
-   * as DotQ/CodecKernels) instead of a span-breaking CodegenFallback. */
+   * PipelineSpec, is the contract.) Reads straight off ArrayData. */
   def lshSigData(a: ArrayData, isFloat: Boolean, nPlanes: Int): Long = {
     val n = a.numElements()
     var acc = 0L
@@ -116,10 +119,8 @@ object VectorKernels {
   def mismatchOrNullPrefix(a: ArrayData, b: ArrayData): Boolean =
     a.numElements() != b.numElements() || hasNullPrefix(a, b)
 
-  /** Allocation-free dot product straight off ArrayData — the entry point
-   * for both the interpreted eval and the generated Java call (so DotQ
-   * stays inside whole-stage codegen instead of forcing a fallback).
-   * Callers must check [[hasNullPrefix]] first. */
+  /** Allocation-free dot product straight off ArrayData. Callers must
+   * check [[hasNullPrefix]] first. */
   def dotQData(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var s = 0L
@@ -136,20 +137,8 @@ object VectorKernels {
 }
 
 /** `dot_q(a, b) -> bigint`: exact fixed-point dot product (see
- * [[VectorKernels]]). `dot_q(v, v)` is the squared norm.
- *
- * Has a real `doGenCode` (a one-line call into the static kernel), so the
- * surrounding projection/filter stays inside WHOLE-STAGE CODEGEN — a
- * `CodegenFallback` here would break the span around every candidate pair
- * in the similarity joins. */
-case class DotQ(left: Expression, right: Expression) extends BinaryExpression {
-
-  private def elemOf(t: DataType): Option[DataType] = t match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
+ * [[VectorKernels]]). `dot_q(v, v)` is the squared norm. */
+case class DotQ(left: Expression, right: Expression) extends BinaryKernel {
   override def checkInputDataTypes(): TypeCheckResult =
     (elemOf(left.dataType), elemOf(right.dataType)) match {
       case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
@@ -162,8 +151,8 @@ case class DotQ(left: Expression, right: Expression) extends BinaryExpression {
   // dimension mismatch, or a null element anywhere => NULL result
   override def nullable: Boolean = true
 
-  private def aFloat = elemOf(left.dataType).contains(FloatType)
-  private def bFloat = elemOf(right.dataType).contains(FloatType)
+  private lazy val aFloat = elemOf(left.dataType).contains(FloatType)
+  private lazy val bFloat = elemOf(right.dataType).contains(FloatType)
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val aa = a.asInstanceOf[ArrayData]
@@ -172,40 +161,15 @@ case class DotQ(left: Expression, right: Expression) extends BinaryExpression {
     else VectorKernels.dotQData(aa, bb, aFloat, bFloat)
   }
 
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) =>
-        s"""if (graft.functions.expressions.VectorKernels$$.MODULE$$.mismatchOrNullPrefix($a, $b)) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  ${ev.value} = graft.functions.expressions.VectorKernels$$.MODULE$$
-           |    .dotQData($a, $b, $aFloat, $bFloat);
-           |}""".stripMargin)
-
   override protected def withNewChildrenInternal(
       newLeft: Expression,
       newRight: Expression): DotQ = copy(left = newLeft, right = newRight)
 }
 
-/** `lsh_sig(vec, nPlanes) -> bigint`: hyperplane-LSH bucket signature.
- *
- * Real `doGenCode` (one-line call into [[VectorKernels.lshSigData]]) — this
- * expression sits in the bucketing projection of every ANN query, and a
- * CodegenFallback here would break the whole-stage span around every
- * co-resident expression (the measured dot_q effect). */
-case class LshSig(child: Expression, nPlanes: Int) extends UnaryExpression {
-
-  private def elemOf(t: DataType): Option[DataType] = t match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
+/** `lsh_sig(vec, nPlanes) -> bigint`: hyperplane-LSH bucket signature
+ * ([[VectorKernels.lshSigData]]), in the bucketing projection of every
+ * ANN query. */
+case class LshSig(child: Expression, nPlanes: Int) extends UnaryKernel {
   override def checkInputDataTypes(): TypeCheckResult =
     if (elemOf(child.dataType).isDefined && nPlanes >= 1 && nPlanes <= 63)
       TypeCheckResult.TypeCheckSuccess
@@ -216,21 +180,10 @@ case class LshSig(child: Expression, nPlanes: Int) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "lsh_sig"
 
-  private def isFloat = elemOf(child.dataType).contains(FloatType)
+  private lazy val isFloat = elemOf(child.dataType).contains(FloatType)
 
   override protected def nullSafeEval(input: Any): Any =
     VectorKernels.lshSigData(input.asInstanceOf[ArrayData], isFloat, nPlanes)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = graft.functions.expressions.VectorKernels$$.MODULE$$" +
-          s".lshSigData($c, $isFloat, $nPlanes);")
 
   override protected def withNewChildInternal(newChild: Expression): LshSig =
     copy(child = newChild)
@@ -239,16 +192,8 @@ case class LshSig(child: Expression, nPlanes: Int) extends UnaryExpression {
 /** `lsh_sig_affine(vec, nPlanes) -> bigint`: the SQL-reproducible twin of
  * [[LshSig]] (weights from [[VectorKernels.lshSigAffineData]]'s two Lehmer
  * rounds instead of xxhash64), so the hyperplane ASSIGNMENT stage can be
- * hash-checked against an external SQL oracle. Same real-`doGenCode`
- * one-line kernel-call shape. */
-case class LshSigAffine(child: Expression, nPlanes: Int) extends UnaryExpression {
-
-  private def elemOf(t: DataType): Option[DataType] = t match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
+ * hash-checked against an external SQL oracle. */
+case class LshSigAffine(child: Expression, nPlanes: Int) extends UnaryKernel {
   override def checkInputDataTypes(): TypeCheckResult =
     if (elemOf(child.dataType).isDefined && nPlanes >= 1 && nPlanes <= 63)
       TypeCheckResult.TypeCheckSuccess
@@ -259,21 +204,10 @@ case class LshSigAffine(child: Expression, nPlanes: Int) extends UnaryExpression
   override def dataType: DataType = LongType
   override def prettyName: String = "lsh_sig_affine"
 
-  private def isFloat = elemOf(child.dataType).contains(FloatType)
+  private lazy val isFloat = elemOf(child.dataType).contains(FloatType)
 
   override protected def nullSafeEval(input: Any): Any =
     VectorKernels.lshSigAffineData(input.asInstanceOf[ArrayData], isFloat, nPlanes)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      c =>
-        s"${ev.value} = graft.functions.expressions.VectorKernels$$.MODULE$$" +
-          s".lshSigAffineData($c, $isFloat, $nPlanes);")
 
   override protected def withNewChildInternal(newChild: Expression): LshSigAffine =
     copy(child = newChild)

@@ -37,6 +37,11 @@ class OperatorExtrasSpec extends SparkSpec {
       val msg = failure(s"SELECT arr_chunk(tokens, $arg) $from")
       assert(msg.contains("arr_chunk: argument 2 must be a non-null literal"), msg)
     }
+    // a literal that does not parse as the argument's type
+    for (arg <- Seq("2.5", "3000000000")) {
+      val msg = failure(s"SELECT arr_chunk(tokens, $arg) $from")
+      assert(msg.contains(s"arr_chunk: argument 2 must be an int literal, got $arg"), msg)
+    }
   }
 
   test("building DataFrames leaves the session's function registry untouched") {
@@ -46,14 +51,6 @@ class OperatorExtrasSpec extends SparkSpec {
     names.foreach(n => registry.dropFunction(FunctionIdentifier(n)))
     def registered = names.filter(n => registry.functionExists(FunctionIdentifier(n)))
     assert(registered.isEmpty)
-    def countHash(df: DataFrame): (Long, Long) = {
-      val r = df
-        .select(
-          count(lit(1)),
-          coalesce(sum(hash(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).cast("long")), lit(0L)))
-        .first()
-      (r.getLong(0), r.getLong(1))
-    }
     val dir = sf("sf0.001")
     val builds: Seq[(String, SparkSession => DataFrame)] =
       ("rollupFromPoints" -> ((s: SparkSession) =>
@@ -545,17 +542,7 @@ class OperatorExtrasSpec extends SparkSpec {
     check(codegen = true)
     // interpreted eval of the update/merge/evaluate expressions: the
     // LEGACY-mode wrapping add and the carry identity outside codegen
-    val interpreted = Seq(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
-      check(codegen = false)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    withConfs(codegenOff: _*)(check(codegen = false))
   }
 
   test("kmv_kmin: k smallest distinct values, stable across partitionings") {

@@ -88,7 +88,7 @@ class PlanSpec extends SparkSpec {
   test("codec + precondition expressions stay inside whole-stage codegen") {
     // Round 2 left these as CodegenFallback; a fallback expression breaks
     // the codegen span of EVERY expression in the same projection (the
-    // dot_q lesson). Each kernel now has a real doGenCode: assert a
+    // dot_q lesson). Each kernel is bound by KernelCodegen: assert a
     // projection evaluating them keeps the * (codegen) marker.
     val df = spark
       .range(100)
@@ -229,17 +229,58 @@ class PlanSpec extends SparkSpec {
         nulls.getLong(2) == 2L && nulls.getLong(3) == 26L)
     }
     checkKernels()
-    val interpreted = Seq(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
-      checkKernels()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    withConfs(codegenOff: _*)(checkKernels())
+  }
+
+  test("arr_zscore_outliers with z = Infinity compiles inside whole-stage codegen") {
+    // literal arguments reach generated code inside the expression object,
+    // never as Java source text, so a value with no Java spelling
+    // (Infinity) still compiles; no fallback to the interpreted path may
+    // hide a compile error
+    withConfs("spark.sql.codegen.fallback" -> "false") {
+      val df = spark
+        .range(20)
+        .selectExpr(
+          "arr_zscore_outliers(sequence(CAST(id AS INT), CAST(id AS INT) + 9), 4, " +
+            "double('Infinity')) AS o")
+      val plan = planOf(df)
+      val lines = plan.linesIterator.filter(_.contains("arr_zscore_outliers")).toList
+      assert(lines.nonEmpty && lines.forall(_.replaceAll("^[\\s:+\\-]*", "").startsWith("*(")), plan)
+      // 10 elements in width-4 chunks: 3 counts per row, none above z = Infinity
+      val counts = df.collect().map(_.getSeq[Int](0))
+      assert(counts.length == 20 && counts.forall(_ == Seq(0, 0, 0)), counts.toSeq)
     }
+  }
+
+  test("every graft function computes the same rows with codegen off") {
+    // sf0.001 queries whose optimized plans together name every builder;
+    // each runs inside whole-stage codegen and again through the
+    // interpreted eval, and must give the same (count, hash-sum)
+    val queries = Seq(
+      "q_payload_compact", "q_codec_dod_roundtrip", "q_decontaminate", "q_dedup_minhash",
+      "q_dedup_simhash", "q_simhash_assign", "q_minhash_assign", "q_text_repetition",
+      "q_knn_ann", "q_ann_assign", "q_kmv_distinct", "q_eval_msis", "q_eval_nll",
+      "q_eval_crop", "q_eval_metrics", "q_eval_extra", "q_eval_pad", "q_anomaly_patch",
+      "q_ewma_levels", "q_subsample", "q_gauss_subsample", "q_upsample", "q_ingest_long",
+      "q_scaler_absmean", "q_precond_roundtrip", "q_precond_window_roundtrip",
+      "q_pack_fields", "q_lttb_events", "q_multimodal_frames")
+    // `tier_stats` is the older SQL name of tier_stats_decl (same expression)
+    val printedAs = Map("tier_stats" -> "tier_stats_decl")
+    val names = graft.functions.GraftFunctions.builders.map(_._1)
+    val dir = sf("sf0.001")
+    val exercised = queries.flatMap { q =>
+      val build = SparkEntry.queries(q)
+      val df = build(spark, dir)
+      val plan = df.queryExecution.optimizedPlan.toString
+      val named = names.filter(n => plan.contains(printedAs.getOrElse(n, n) + "("))
+      assert(named.nonEmpty, s"$q names no graft function:\n$plan")
+      val generated = countHash(df)
+      val interpreted = withConfs(codegenOff: _*)(countHash(build(spark, dir)))
+      assert(interpreted == generated, s"$q: codegen off $interpreted, on $generated")
+      named
+    }.toSet
+    val missed = names.filterNot(exercised)
+    assert(missed.isEmpty, s"no query here runs: ${missed.mkString(", ")}")
   }
 
   test("composed train chain: row-local stages, exactly one exchange (the per-patch groupBy)") {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, hash, lit, sum}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,35 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** (row count, sum of row hashes over every column): equal for two
+   * DataFrames holding the same rows in any order. */
+  def countHash(df: DataFrame): (Long, Long) = {
+    val r = df
+      .select(
+        count(lit(1)),
+        coalesce(sum(hash(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).cast("long")), lit(0L)))
+      .first()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Session confs that run every expression through its interpreted
+   * `eval`: no whole-stage codegen, no generated projections. */
+  val codegenOff: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** `body` with the session confs `kvs` set, each restored afterwards. */
+  def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
@@ -19,6 +49,9 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a generated-code compile error fails the test instead of running
+      // the stage interpreted with only an ERROR log line
+      .config("spark.sql.codegen.fallback", "false")
       // public registration path under test (ExtensionsSpec): every new
       // session gets the graft functions without an imperative register()
       .config("spark.sql.extensions", "graft.GraftExtensions")
