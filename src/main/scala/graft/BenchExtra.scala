@@ -20,8 +20,19 @@ import org.apache.spark.sql.SparkSession
  */
 object BenchExtra {
 
-  private def consumeAll(df: org.apache.spark.sql.DataFrame): Long =
-    BenchActions.consumeAll(df)
+  /** Full-consumption timing action, the same contract as the frozen
+   * [[Bench]]'s private copy: count + hash-sum over EVERY output column,
+   * so Catalyst cannot prune aggregate expressions out of a timed plan
+   * (the count()-pruning lesson — see Bench.consumeAll's doc). Any future
+   * protocol fix must be applied to both. */
+  private def consumeAll(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.functions.{col, hash, sum, count => cnt, lit}
+    df.select(
+        cnt(lit(1)).as("n"),
+        sum(hash(df.columns.map(col): _*).cast("long")).as("h"))
+      .first()
+      .getLong(0)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions.{count, lit}
  * `ckpt_path="last"` resume (reference cli/train.py:185-189): a stage is
  * skipped when a snapshot with the same (stage, fingerprint) already
  * exists.
+ *
+ * Three methods write a version, and nothing else does: [[stage]] (every
+ * job stage and every streaming sink batch — compute-or-resume),
+ * [[commitMetrics]] (itself a stage of the `metrics` table) and
+ * [[rollbackTo]] (a manifest aliasing an older version's data).
  */
 final case class SnapshotInfo(
     table: String,
@@ -88,18 +93,10 @@ final class SnapshotStore(base: String) {
   def find(table: String, stage: String, fingerprint: String): Option[SnapshotInfo] =
     snapshots(table).findLast(s => s.stage == stage && s.fingerprint == fingerprint)
 
-  /** Write `df` as the next version of `table` and commit its manifest
-   * atomically. Returns the committed snapshot. */
-  def commit(
-      df: DataFrame,
-      table: String,
-      stage: String,
-      fingerprint: String): SnapshotInfo =
-    commitObserved(df, table, stage, fingerprint, Nil, Nil)._1
-
-  /** [[commit]] and the compute half of [[stage]]: also returns the
-   * values observed on the write — `rows` (a reserved name), `counters`
-   * and the caller's in-plan `observations`.
+  /** The compute half of [[stage]]: write `df` as the next version of
+   * `table`, commit its manifest atomically, and return the committed
+   * snapshot with the values observed on the write — `rows` (a reserved
+   * name), `counters` and the caller's in-plan `observations`.
    *
    * Two scale/safety properties:
    *  - the counters ride `df.observe` on the write action itself (NOT a
@@ -215,17 +212,6 @@ final class SnapshotStore(base: String) {
       }
     }
     expire.map(_.version)
-  }
-
-  /** Compute-or-resume: return the existing snapshot for (stage,
-   * fingerprint) or compute, commit and return a new one. The boolean is
-   * true when the stage was resumed (skipped). */
-  def getOrCompute(
-      table: String,
-      stage: String,
-      fingerprint: String)(compute: => DataFrame): (SnapshotInfo, Boolean) = {
-    val run = this.stage(table, stage, fingerprint)(compute)
-    (run.snap, run.resumed)
   }
 
   /** The one way a job commits a stage: return the existing snapshot for

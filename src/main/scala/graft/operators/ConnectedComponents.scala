@@ -39,6 +39,17 @@ import org.apache.spark.sql.functions._
  */
 object ConnectedComponents {
 
+  /** Frees the block-storage copy behind a `localCheckpoint`ed frame
+   * (idempotent). Without it the blocks stay in the block manager until
+   * GC happens to collect the RDD reference — per closure round, and per
+   * LSH chain ([[Dedup.lshChain]]'s release hook). */
+  private[operators] def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** (node, rep) for every node appearing in `pairs`; rep is the MINIMUM
    * id of the node's connected component (a deterministic cluster
    * representative under any execution order). */
@@ -63,22 +74,6 @@ object ConnectedComponents {
 
     def fingerprint(e: DataFrame): (Long, String) =
       graft.core.Hash.contentFingerprint(e, col("u"), col("v"))
-
-    // Frees the block-storage copy behind a localCheckpoint'ed edge set.
-    // Each round's checkpoint blocks are dead weight the moment the NEXT
-    // round has materialized (local checkpoints truncate lineage, so the
-    // next round's blocks never re-read the previous round's) — without
-    // this, every round of every closure run in a session accumulates in
-    // the block manager until GC happens to collect the RDD references.
-    // The FINAL edge set is deliberately NOT freed here: the returned
-    // labels read it lazily; its blocks are reclaimed by the
-    // ContextCleaner once the caller drops the labels DataFrame.
-    def unpersistCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
 
     var fp = fingerprint(edges)
     var rounds = 0
@@ -122,7 +117,11 @@ object ConnectedComponents {
         .localCheckpoint(eager = false)
       val nfp = fingerprint(next)
       // `next` is now fully materialized in its own blocks — the previous
-      // round's checkpoint can be freed immediately
+      // round's checkpoint can be freed immediately (local checkpoints
+      // truncate lineage, so the next round never re-reads it). The FINAL
+      // edge set is deliberately NOT freed: the returned labels read it
+      // lazily; its blocks are reclaimed by the ContextCleaner once the
+      // caller drops the labels DataFrame.
       unpersistCheckpoint(edges)
       converged = nfp == fp
       fp = nfp

@@ -157,14 +157,16 @@ object Dedup {
     lshChain(docs, idCol, textCol, n, numHashes, bands, threshold, Some(newIds), obs)
 
   /** The shared chain: shingle ONCE, derive signatures and verification
-   * sets from the same persisted shingle table. Shingling is the chain's
+   * sets from the same materialized shingle table. Shingling is the chain's
    * single most CPU-expensive row-local stage (string walk + FNV per
    * shingle) and its output feeds two DIFFERENTLY-KEYED shuffles (band
    * buckets; per-side verification joins), which Spark's exchange reuse
-   * cannot deduplicate — without the persist the whole corpus is re-read
-   * and re-shingled per consumer (measured 3 scans end-to-end). Persist is
-   * MEMORY_AND_DISK: the set table is ~50 longs/doc, far smaller than the
-   * corpus text, and spills rather than OOMs on big blocks.
+   * cannot deduplicate — without materializing it the whole corpus is
+   * re-read and re-shingled per consumer (measured 3 scans end-to-end).
+   * The set table (~50 longs/doc, far smaller than the corpus text) is a
+   * lazy `localCheckpoint` — the q_dedup_incremental and closure-round
+   * idiom: the first action materializes it and both consumers read its
+   * blocks, with no entry in the session's CacheManager.
    *
    * With `newIds` (a one-column id frame) only the candidates touching
    * one of those ids go on to verification — the delta chain
@@ -175,11 +177,12 @@ object Dedup {
    * candidates) and `verified_pairs` — the linear-candidate-density claim
    * the banding rests on, monitored with zero extra scans.
    *
-   * Returns the verified pairs plus the release hook that unpersists the
-   * shingle cache; call it once the pairs are materialized (idempotent).
-   * Without it the cache lives for the session — bounded, as Spark's
-   * CacheManager keys entries by canonicalized plan, but a long-lived
-   * session running many different corpora should release each. */
+   * Returns the verified pairs plus the release hook that frees the
+   * checkpoint blocks ([[ConnectedComponents.unpersistCheckpoint]]); call
+   * it once the pairs are materialized (idempotent). Without it the
+   * blocks live until the ContextCleaner collects the dropped pairs
+   * DataFrame — the lifetime [[minHashLshPairs]] leaves them, as its
+   * caller holds no hook. */
   private[graft] def lshChain(
       docs: DataFrame,
       idCol: String,
@@ -190,8 +193,7 @@ object Dedup {
       threshold: Double,
       newIds: Option[DataFrame],
       obs: Option[(Observation, Observation)]): (DataFrame, () => Unit) = {
-    val sets = shingleHashes(docs, idCol, textCol, idCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sets = shingleHashes(docs, idCol, textCol, idCol, n).localCheckpoint(eager = false)
     val all = bandCandidates(signaturesFromSets(sets, numHashes), bands)
     val cands0 = newIds.fold(all) { delta =>
       val ids = delta
@@ -212,7 +214,7 @@ object Dedup {
     val verified = obs
       .map { case (_, v) => verified0.observe(v, count(lit(1)).as("verified_pairs")) }
       .getOrElse(verified0)
-    (verified, () => { sets.unpersist(blocking = false); () })
+    (verified, () => ConnectedComponents.unpersistCheckpoint(sets))
   }
 
   /** Band-bucket candidate pairs over (_id, sig) signature rows: one

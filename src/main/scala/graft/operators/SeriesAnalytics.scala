@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.core.Tier
 import graft.functions.GraftFunctions.call
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -322,7 +322,7 @@ object SeriesAnalytics {
         lead(col("x"), l).over(byKey).as("y"),
         lead(col("window_start"), l).over(byKey).as("y_ws"))
     }: _*)
-    tier
+    val pairs = tier
       .select(
         col("source"),
         col("bucket"),
@@ -337,27 +337,7 @@ object SeriesAnalytics {
         col("_l.y").isNotNull &&
           col("_l.y_ws") === col("window_start") + col("_l.lag") * windowWidth)
       .groupBy(col("source"), col("bucket"), col("_l.lag").as("lag"))
-      .agg(
-        count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"),
-        sum(col("_l.y")).as("sy"),
-        sum(col("x") * col("_l.y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("_l.y") * col("_l.y")).as("syy"))
-      .withColumn(
-        "acf",
-        expr("""
-          CASE WHEN CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-                AND CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-                    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-          THEN (CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (SQRT(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                  * SQRT(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-                         - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-          ELSE NULL END"""))
+    exactMoments(pairs, "n_pairs", col("x"), col("_l.y")).withColumn("acf", pearson("n_pairs"))
   }
 
   /** One-sided CUSUM drift detection per tier key (Page 1954): the
@@ -703,30 +683,11 @@ object SeriesAnalytics {
       col("bucket"),
       col("window_start"),
       col("sum_tok").as("y"))
-    a.join(b, Seq("bucket", "window_start"))
+    val pairs = a
+      .join(b, Seq("bucket", "window_start"))
       .filter(col("source_a") < col("source_b"))
       .groupBy(col("source_a"), col("source_b"))
-      .agg(
-        count(lit(1)).as("n_win"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .withColumn(
-        "corr",
-        expr("""
-          CASE WHEN CAST(n_win AS DOUBLE) * CAST(sxx AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-                AND CAST(n_win AS DOUBLE) * CAST(syy AS DOUBLE)
-                    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-          THEN (CAST(n_win AS DOUBLE) * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (SQRT(CAST(n_win AS DOUBLE) * CAST(sxx AS DOUBLE)
-                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                  * SQRT(CAST(n_win AS DOUBLE) * CAST(syy AS DOUBLE)
-                         - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-          ELSE NULL END"""))
+    exactMoments(pairs, "n_win", col("x"), col("y")).withColumn("corr", pearson("n_win"))
   }
 
   /** Population-stability drift between CONSECUTIVE windows per source
@@ -1020,29 +981,44 @@ object SeriesAnalytics {
         col("y"))
       // b's window w matches a's window w - L*width: align by shifting
       .withColumn("window_start", col("window_start") - col("lag") * windowWidth)
-    a.join(b, Seq("window_start"))
+    val pairs = a
+      .join(b, Seq("window_start"))
       .filter(col("source_a") < col("source_b"))
       .groupBy(col("source_a"), col("source_b"), col("lag"))
-      .agg(
-        count(lit(1)).as("n_win"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .withColumn(
-        "corr",
-        expr("""
-          CASE WHEN CAST(n_win AS DOUBLE) * CAST(sxx AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-                AND CAST(n_win AS DOUBLE) * CAST(syy AS DOUBLE)
-                    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-          THEN (CAST(n_win AS DOUBLE) * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (SQRT(CAST(n_win AS DOUBLE) * CAST(sxx AS DOUBLE)
-                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                  * SQRT(CAST(n_win AS DOUBLE) * CAST(syy AS DOUBLE)
-                         - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-          ELSE NULL END"""))
+    exactMoments(pairs, "n_win", col("x"), col("y")).withColumn("corr", pearson("n_win"))
   }
+
+  /** The six exact BIGINT moments of each group's (x, y) pairs: the pair
+   * count as `n`, then sx, sy, sxy, sxx, syy. The exact half of the
+   * correlation discipline shared by [[sourceCorrelation]],
+   * [[autocorrelation]] and [[laggedCrossCorrelation]]. */
+  private def exactMoments(
+      pairs: RelationalGroupedDataset,
+      n: String,
+      x: Column,
+      y: Column): DataFrame =
+    pairs.agg(
+      count(lit(1)).as(n),
+      sum(x).as("sx"),
+      sum(y).as("sy"),
+      sum(x * y).as("sxy"),
+      sum(x * x).as("sxx"),
+      sum(y * y).as("syy"))
+
+  /** Pearson correlation over [[exactMoments]]' columns (count `n`) in
+   * one fixed double formula, so it is bit-reproducible cross-engine;
+   * NULL when either side has zero variance. */
+  private def pearson(n: String): Column =
+    expr(s"""
+      CASE WHEN CAST($n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
+            AND CAST($n AS DOUBLE) * CAST(syy AS DOUBLE)
+                - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
+      THEN (CAST($n AS DOUBLE) * CAST(sxy AS DOUBLE)
+            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+           / (SQRT(CAST($n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                   - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+              * SQRT(CAST($n AS DOUBLE) * CAST(syy AS DOUBLE)
+                     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+      ELSE NULL END""")
 }

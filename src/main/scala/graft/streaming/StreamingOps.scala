@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.{Hash, Tier}
 import graft.functions.GraftFunctions.call
-import graft.jobs.{SnapshotInfo, SnapshotStore}
+import graft.jobs.{SnapshotInfo, SnapshotStore, StageRun}
 import graft.operators.{Retention, Rollup}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -84,14 +84,15 @@ object StreamingOps {
 
   /** Exactly-once batch commit shared by every streaming sink, in two
    * steps: [[batchFingerprint]] once per micro-batch, then
-   * [[SinkBatch.pendingCommit]] per table the batch commits to. The stored
+   * [[SinkBatch.commit]] per table the batch commits to. The stored
    * fingerprint is the batch id PLUS exact content (the shared
    * [[graft.core.Hash.contentFingerprint]] over all columns). A
    * batch-id-only fingerprint cannot tell a genuine crash-replay from a
    * fresh checkpoint whose counter rewound onto a populated table — the
    * rewound batch would be skipped as a "replay" and its rows silently
    * dropped (or, for the merge sink, double-counted). Rules:
-   *   - same id, same content  -> genuine replay: skip.
+   *   - same id, same content  -> genuine replay: skip (the resume of
+   *     [[graft.jobs.SnapshotStore.stage]], keyed on this fingerprint).
    *   - same id, DIFFERENT content (or a legacy id-only fingerprint,
    *     whose content is unverifiable) -> the counter rewound: refuse
    *     loudly, the operator decides. RESIDUAL AMBIGUITY (accepted): a
@@ -113,28 +114,27 @@ object StreamingOps {
    * content fingerprint, committed under the sink's `stage`. */
   private final case class SinkBatch(rows: DataFrame, id: Long, fp: String, stage: String) {
 
-    /** The per-table step of the [[batchFingerprint]] contract: the
-     * table's manifest listing when it does not hold this batch yet (so a
-     * sink can read the previous version without re-listing), None for a
-     * genuine replay; fails loudly on a rewound counter. */
-    def pendingCommit(store: SnapshotStore, table: String): Option[Seq[SnapshotInfo]] = {
-      val snaps = store.snapshots(table)
-      val replayed = snaps.exists(s => s.stage == stage && s.fingerprint == fp)
-      val collided = snaps.exists(s =>
-        s.stage == stage &&
-          (s.fingerprint == s"batch=$id" ||
-            (s.fingerprint.startsWith(s"batch=$id-") && s.fingerprint != fp)))
-      require(
-        replayed || !collided,
-        s"streaming sink: batch id $id was already committed with " +
-          "different (or unverifiable legacy) content — a fresh checkpoint " +
-          "was pointed at a populated table. Keep the original " +
-          "checkpointLocation or start a new table.")
-      Option.unless(replayed)(snaps)
-    }
-
-    def commit(store: SnapshotStore, df: DataFrame, table: String): SnapshotInfo =
-      store.commit(df, table, stage, fp)
+    /** The per-table step of the [[batchFingerprint]] contract, as one
+     * [[graft.jobs.SnapshotStore.stage]]: a table that holds this batch
+     * resumes it (a genuine replay — `compute` never runs). Otherwise the
+     * stage's compute lists the table once, fails loudly on a rewound or
+     * legacy batch id — before anything is written — and hands the
+     * previous version, if any, to `compute`, whose frame is committed. */
+    def commit(store: SnapshotStore, table: String)(
+        compute: Option[SnapshotInfo] => DataFrame): StageRun =
+      store.stage(table, stage, fp) {
+        val snaps = store.snapshots(table)
+        require(
+          !snaps.exists(s =>
+            s.stage == stage &&
+              (s.fingerprint == s"batch=$id" ||
+                (s.fingerprint.startsWith(s"batch=$id-") && s.fingerprint != fp))),
+          s"streaming sink: batch id $id was already committed with " +
+            "different (or unverifiable legacy) content — a fresh checkpoint " +
+            "was pointed at a populated table. Keep the original " +
+            "checkpointLocation or start a new table.")
+        compute(snaps.lastOption)
+      }
   }
 
   /** The one snapshot-sink builder: streams `df` as query `queryName`
@@ -170,7 +170,7 @@ object StreamingOps {
       queryName: String,
       checkpointDir: String): DataStreamWriter[Row] =
     snapshotSink(df, queryName, checkpointDir) { b =>
-      b.pendingCommit(store, table).foreach(_ => b.commit(store, b.rows, table))
+      b.commit(store, table)(_ => b.rows)
     }
 
   /** Streaming codec-payload sink — the continuous face of the batch
@@ -201,7 +201,7 @@ object StreamingOps {
     // fingerprint's emptiness probe keeps them from minting empty
     // snapshot versions
     snapshotSink(tierWindows, queryName, checkpointDir) { b =>
-      b.pendingCommit(store, table).foreach(_ => b.commit(store, encodePayloadSegments(b.rows), table))
+      b.commit(store, table)(_ => encodePayloadSegments(b.rows))
     }
 
   /** Streaming tier maintenance — the continuous face of
@@ -254,9 +254,10 @@ object StreamingOps {
    *      into the coarse tier, and the fine window they re-create is
    *      re-expired inside the same commit.
    * Both tables commit exactly-once per batch under the
-   * [[batchFingerprint]] content-fingerprint contract, independently: a
-   * crash between the two commits replays the batch, skips the
-   * already-committed coarse version, and completes the fine one. The
+   * [[batchFingerprint]] content-fingerprint contract, the coarse stage
+   * nested in the fine one: a crash between the two commits replays the
+   * batch, resumes the already-committed coarse version, and completes
+   * the fine one; a batch the fine table holds is skipped whole. The
    * stored fine table carries safeExpire's `retained_uncovered` audit
    * flag (always false in this self-covering composition; meaningful
    * when a caller points the sink at an externally-maintained coarse
@@ -288,19 +289,22 @@ object StreamingOps {
 
   /** The one per-batch fold of both tier sinks: micro-batch `b` of raw
    * points into the `tier` table `table` — and first into the `coverage`
-   * table, which `table` is then compacted-then-expired against. Every
-   * table that still lacks the batch ([[SinkBatch.pendingCommit]]) folds
-   * the same ONE persisted delta
+   * table, which `table` is then compacted-then-expired against. The
+   * coverage stage runs INSIDE the fine table's stage: the coarse tier
+   * still commits first, a batch the fine table holds is a full replay
+   * (its coarse commit came first), and the fine table's rewind check
+   * fires before either table is written. Every table that folds the
+   * batch folds the same ONE persisted delta
    * ([[graft.operators.Rollup.pointState]]; the coverage delta is its
    * [[graft.operators.Rollup.cascadeState]]) with
-   * [[graft.operators.Rollup.foldDelta]]. ONE job over the delta checks
-   * the guard, warms the cache and, when expiring, takes the frontier:
-   * max(window_start) over the delta and the previous snapshot, i.e. over
-   * the folded tier without running the fold. The coverage regime is
-   * picked from the FINE delta's count, an upper bound on the coarse
-   * delta's (a coarse window is a union of fine ones), so the choice is
-   * exact-safe. A stored `retained_uncovered` flag is dropped before the
-   * fold; the expiry re-derives it. */
+   * [[graft.operators.Rollup.foldDelta]]. ONE job over the delta, run by
+   * the first table to fold, checks the guard, warms the cache and, when
+   * expiring, takes the frontier: max(window_start) over the delta and the
+   * previous snapshot, i.e. over the folded tier without running the
+   * fold. The coverage regime is picked from the FINE delta's count, an
+   * upper bound on the coarse delta's (a coarse window is a union of fine
+   * ones), so the choice is exact-safe. A stored `retained_uncovered` flag
+   * is dropped before the fold; the expiry re-derives it. */
   private def foldTierBatch(
       store: SnapshotStore,
       caller: String,
@@ -309,45 +313,37 @@ object StreamingOps {
       tier: String,
       coverage: Option[Coverage]): Unit = {
     val spark = b.rows.sparkSession
-    // Some(previous snapshot, if any) while `t` still lacks this batch
-    def pending(t: String): Option[Option[DataFrame]] =
-      b.pendingCommit(store, t)
-        .map(_.lastOption.map(store.read(spark, _).drop("retained_uncovered")))
-    val coarsePrev = coverage.flatMap(c => pending(c.table).map(c -> _))
-    val finePrev = pending(table)
-    if (coarsePrev.nonEmpty || finePrev.nonEmpty) {
+    def readTier(s: SnapshotInfo): DataFrame = store.read(spark, s).drop("retained_uncovered")
+    // set once the fine stage computes; held until its write has run
+    var persisted: Option[DataFrame] = None
+    try b.commit(store, table) { prev =>
+      val prevTier = prev.map(readTier)
       val delta = Rollup.pointState(b.rows, tier).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val frontierOver = if (coverage.isDefined) finePrev.flatten else None
-        val probe = frontierOver
-          .foldLeft(delta.select(lit(1L).as("_n"), col("window_start"))) { (rows, prev) =>
-            rows.unionByName(prev.select(lit(0L).as("_n"), col("window_start")))
+      persisted = Some(delta)
+      lazy val probe = {
+        val frontierOver = if (coverage.isDefined) prevTier else None
+        val r = frontierOver
+          .foldLeft(delta.select(lit(1L).as("_n"), col("window_start"))) { (rows, p) =>
+            rows.unionByName(p.select(lit(0L).as("_n"), col("window_start")))
           }
           .agg(sum(col("_n")), expr("CAST(max(window_start) AS BIGINT)"))
           .head()
+        Rollup.guardDelta(r.getLong(0), Rollup.DefaultMaxAffectedWindows, caller)
+        r
+      }
+      def fold(prev: Option[DataFrame], state: DataFrame, t: String): DataFrame = {
         val n = probe.getLong(0)
-        Rollup.guardDelta(n, Rollup.DefaultMaxAffectedWindows, caller)
-        def fold(prev: Option[DataFrame], state: DataFrame, t: String): DataFrame =
-          prev.fold(Rollup.finishTier(state, t))(Rollup.foldDelta(_, state, n, t))
+        prev.fold(Rollup.finishTier(state, t))(Rollup.foldDelta(_, state, n, t))
+      }
+      coverage.fold(fold(prevTier, delta, tier)) { c =>
         // coarse first: it is the fine tier's expiry coverage
-        coarsePrev.foreach { case (c, prev) =>
-          b.commit(store, fold(prev, Rollup.cascadeState(delta, c.tier), c.tier), c.table)
-        }
-        finePrev.foreach { prev =>
-          val merged = fold(prev, delta, tier)
-          val out = coverage.fold(merged) { c =>
-            val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
-            val covered = store
-              .latest(c.table)
-              .getOrElse(throw new IllegalStateException(
-                s"$caller: coverage table ${c.table} has no snapshot — the " +
-                  "coarse merge commits first"))
-            Retention.safeExpire(merged, store.read(spark, covered), c.tier, horizon)
-          }
-          b.commit(store, out, table)
-        }
-      } finally delta.unpersist()
-    }
+        val covered = b.commit(store, c.table) { coarsePrev =>
+          fold(coarsePrev.map(readTier), Rollup.cascadeState(delta, c.tier), c.tier)
+        }.snap
+        val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
+        Retention.safeExpire(fold(prevTier, delta, tier), store.read(spark, covered), c.tier, horizon)
+      }
+    } finally persisted.foreach(_.unpersist())
   }
 
   /** One payload-segment row per (source, bucket) of a finalized-window
@@ -587,13 +583,12 @@ object StreamingOps {
       windowWidth: Int,
       k: Int): DataStreamWriter[Row] =
     snapshotSink(points, queryName, checkpointDir) { b =>
-      b.pendingCommit(store, table).foreach { snaps =>
+      b.commit(store, table) { prev =>
         val delta = graft.operators.Sketches.kmvSketch(b.rows, windowWidth, k)
-        val merged = snaps.lastOption.fold(delta) { p =>
+        prev.fold(delta) { p =>
           graft.operators.Sketches.mergeSketches(
             store.read(b.rows.sparkSession, p), delta, Seq("source", "bucket", "window_start"), k)
         }
-        b.commit(store, merged, table)
       }
     }
 

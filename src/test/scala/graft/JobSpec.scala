@@ -151,6 +151,17 @@ class JobSpec extends SparkSpec {
     assert(m("candidates_per_doc") == res.candidatePairs.toDouble / nDocs)
   }
 
+  test("dedup job: no RDD of the LSH chain stays persisted after the run") {
+    val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val res = graft.jobs.DedupJob.run(spark, docs, new SnapshotStore(tmpDir().toString))
+    assert(res.verifiedPairs > 0)
+    // the chain's RDDs: created by this run, in Dedup.scala (their creation site)
+    val held = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, rdd) => !before(id) && rdd.toString.contains("Dedup.scala") }
+    assert(held.isEmpty, s"the chain's shingle sets must be released: $held")
+  }
+
   test("delta dedup job: warm-start labeling equals the full-corpus keep list; resumable") {
     import org.apache.spark.sql.functions._
     val base = tmpDir().toString
@@ -214,13 +225,12 @@ class JobSpec extends SparkSpec {
       s"delta-n3-h64-b16-t0.5-new${fpRow.getLong(0)}-fp${fpRow.getDecimal(1)}"
     val (deltaPairs, release) = graft.operators.Dedup
       .minHashLshDeltaPairs(docs, newIds, "doc_id", "text", 3, 64, 16, 0.5)
-    val (pre, preResumed) =
-      store.getOrCompute("dedup_pairs", "lsh_pairs_delta", params)(deltaPairs)
+    val pre = store.stage("dedup_pairs", "lsh_pairs_delta", params)(deltaPairs)
     release()
-    assert(!preResumed, "the simulated crash run must have computed the pairs")
+    assert(!pre.resumed, "the simulated crash run must have computed the pairs")
     val r = graft.jobs.DedupJob.runDelta(spark, docs, newIds, store)
     assert(!r.resumed, "the keep stage must compute on the retry")
-    assert(r.pairsDelta.uid == pre.uid, "the retry must resume the committed pairs")
+    assert(r.pairsDelta.uid == pre.snap.uid, "the retry must resume the committed pairs")
     assert(r.candidatePairs == -1L, "candidate counter only exists on the computing run")
     assert(r.verifiedPairs == store.read(spark, r.pairsDelta).count())
     val m = store
@@ -243,7 +253,7 @@ class JobSpec extends SparkSpec {
     // commit a 1m tier for the job to monitor
     val tier = graft.operators.Rollup
       .rollupFromPoints(graft.sources.TokenTable.points(spark, dir), graft.core.Tier.OneMinute)
-    store.commit(tier, "tier_1m", "rollup_1m", "test-tier")
+    store.stage("tier_1m", "rollup_1m", "test-tier")(tier)
     val r = graft.jobs.MonitorJob.run(
       spark, store,
       alertThreshold = 25200.0, alertMinRun = 2, windowWidth = 60,
@@ -277,7 +287,7 @@ class JobSpec extends SparkSpec {
       cusumK = 1507710L, cusumH = 150000L)
     assert(r2.resumed && r2.alerts.uid == r.alerts.uid && r2.cusum.uid == r.cusum.uid)
     // a NEW tier version invalidates the monitoring suffix
-    store.commit(tier.filter(col("bucket") === 0), "tier_1m", "rollup_1m", "test-tier-v2")
+    store.stage("tier_1m", "rollup_1m", "test-tier-v2")(tier.filter(col("bucket") === 0))
     val r3 = graft.jobs.MonitorJob.run(
       spark, store,
       alertThreshold = 25200.0, alertMinRun = 2, windowWidth = 60,
@@ -500,7 +510,7 @@ class JobSpec extends SparkSpec {
     import spark.implicits._
     val store = new SnapshotStore(tmpDir().toString)
     def commitRows(n: Int, stage: String) =
-      store.commit((1 to n).toDF("x"), "t", stage, s"fp-$n")
+      store.stage("t", stage, s"fp-$n")((1 to n).toDF("x")).snap
     val v1 = commitRows(10, "s1")
     val v2 = commitRows(20, "s2")
     val v3 = commitRows(30, "s3")
@@ -578,7 +588,7 @@ class JobSpec extends SparkSpec {
     val store = new SnapshotStore(tmpDir().toString)
     val dir = sf("sf0.001")
     val tier = Rollup.rollupFromPoints(TokenTable.points(spark, dir), Tier.OneMinute)
-    store.commit(tier, "tier_1m", "rollup_1m", "test-tier")
+    store.stage("tier_1m", "rollup_1m", "test-tier")(tier)
     def monitor() = graft.jobs.MonitorJob.run(
       spark, store,
       alertThreshold = 25200.0, alertMinRun = 2, windowWidth = 60,
@@ -619,7 +629,7 @@ class JobSpec extends SparkSpec {
     import spark.implicits._
     val base = tmpDir()
     val store = new SnapshotStore(base.toString)
-    val v1 = store.commit((1 to 3).toDF("x"), "t", "s", "fp-1")
+    val v1 = store.stage("t", "s", "fp-1")((1 to 3).toDF("x")).snap
     // the crashed writer's leftovers for v2: its data directory and its
     // unpublished manifest, which claims the very (stage, fingerprint)
     // the retry will ask for

@@ -53,6 +53,14 @@ class PipelineSpec extends SparkSpec {
     assert(pairs == Set((3L, 4L)), s"short docs must not pair: $pairs")
   }
 
+  test("minhash LSH pairs leave no entry in the session's CacheManager") {
+    spark.catalog.clearCache()
+    val pairs = Dedup.minHashLshPairs(docs, "doc_id", "text", 3, 64, 16, 0.5).collect()
+    assert(pairs.nonEmpty, "corpus should contain planted near-dups")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    assert(cache.isEmpty, "the shingle sets must not be left cached for the session")
+  }
+
   test("simhash banded pairing under a hot block: pair set == all-pairs, candidates ~linear") {
     // Fixture-sized blocks are near-uniform; this is the SKEW case the
     // WWW'07 density claim (Dedup.scala) is about: one hot block ~60x the

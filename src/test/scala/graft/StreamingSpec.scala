@@ -163,11 +163,11 @@ class StreamingSpec extends SparkSpec {
     assert(snaps.map(_.fingerprint).distinct.size == snaps.size)
     // a replayed batch (same fingerprint) resumes instead of re-writing
     val before = snaps.size
-    val (snap, resumed) =
-      store.getOrCompute("stream_tier", "stream_snaptest", snaps.head.fingerprint) {
+    val replay =
+      store.stage("stream_tier", "stream_snaptest", snaps.head.fingerprint) {
         fail("replayed batch must not recompute"); null
       }
-    assert(resumed && snap.version == snaps.head.version)
+    assert(replay.resumed && replay.snap.version == snaps.head.version)
     assert(store.snapshots("stream_tier").size == before)
   }
 
@@ -228,11 +228,11 @@ class StreamingSpec extends SparkSpec {
         ("a", epoch + 300, 7.0, 7.0)))
     // exactly-once: a replayed batch (same fingerprint) must not re-encode
     val before = snaps.size
-    val (snap, resumed) =
-      store.getOrCompute("stream_payload", "stream_codectest", snaps.head.fingerprint) {
+    val replay =
+      store.stage("stream_payload", "stream_codectest", snaps.head.fingerprint) {
         fail("replayed batch must not recompute"); null
       }
-    assert(resumed && snap.version == snaps.head.version)
+    assert(replay.resumed && replay.snap.version == snaps.head.version)
     assert(store.snapshots("stream_payload").size == before)
   }
 
@@ -273,11 +273,11 @@ class StreamingSpec extends SparkSpec {
     assert(latest == oneShot, "merged stream state != one-shot batch rollup")
     // exactly-once: a replayed batch must not merge twice
     val before = snaps.size
-    val (snap, resumed) =
-      store.getOrCompute("tier_1m", "stream_mergetest", snaps.head.fingerprint) {
+    val replay =
+      store.stage("tier_1m", "stream_mergetest", snaps.head.fingerprint) {
         fail("replayed batch must not recompute"); null
       }
-    assert(resumed && snap.version == snaps.head.version)
+    assert(replay.resumed && replay.snap.version == snaps.head.version)
     assert(store.snapshots("tier_1m").size == before)
     // a FRESH checkpoint against the populated table renumbers batches
     // from 0; skipping would silently drop the new data — must refuse
@@ -305,11 +305,8 @@ class StreamingSpec extends SparkSpec {
     // is unverifiable: replaying against it must refuse, not re-merge
     val base2 = java.nio.file.Files.createTempDirectory("graft-stream-legacy-").toString
     val store2 = new SnapshotStore(base2)
-    store2.commit(
-      Seq(("a", 0, 1)).toDF("source", "pos", "tok"),
-      "tier_1m",
-      "stream_legacytest",
-      "batch=0")
+    store2.stage("tier_1m", "stream_legacytest", "batch=0")(
+      Seq(("a", 0, 1)).toDF("source", "pos", "tok"))
     val in3 = MemoryStream[(String, Int, Int)]
     val q3 = StreamingOps
       .tierMergeSink(
@@ -403,11 +400,11 @@ class StreamingSpec extends SparkSpec {
     // one snapshot version per batch per table; replayed batch resumes
     val fineSnaps = store.snapshots("tier_1m_live")
     assert(fineSnaps.size == 3 && store.snapshots("tier_1h_cov").size == 3)
-    val (snap, resumed) =
-      store.getOrCompute("tier_1m_live", "stream_mainttest", fineSnaps.head.fingerprint) {
+    val replay =
+      store.stage("tier_1m_live", "stream_mainttest", fineSnaps.head.fingerprint) {
         fail("replayed batch must not recompute"); null
       }
-    assert(resumed && snap.version == fineSnaps.head.version)
+    assert(replay.resumed && replay.snap.version == fineSnaps.head.version)
   }
 
   /** The maintenance sink's one-shot references over every point sent:
@@ -517,6 +514,45 @@ class StreamingSpec extends SparkSpec {
     assert(store.snapshots("tier_1h_cov").size == 2, "coarse replay must be skipped")
     assert(store.snapshots("tier_1m_live").size == 2, "fine must gain exactly one version")
     assertMaintainedTiers(store, (b1 ++ b2).toDF("source", "pos", "tok"), horizon = 3600L)
+  }
+
+  test("tier maintenance sink: a fresh checkpoint on populated tables is refused before any write") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.jobs.SnapshotStore
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-rewind-").toString
+    val store = new SnapshotStore(base)
+    def start(in: MemoryStream[(String, Int, Int)], ckpt: String) = StreamingOps
+      .tierMaintenanceSink(
+        in.toDF().toDF("source", "pos", "tok"),
+        store,
+        "tier_1m_live",
+        "tier_1h_cov",
+        "rewindtest",
+        s"$base/$ckpt",
+        graft.core.Tier.OneMinute,
+        graft.core.Tier.OneHour,
+        keepWindows = 2)
+      .start()
+    val in = MemoryStream[(String, Int, Int)]
+    val q = start(in, "_ckpt")
+    in.addData(("a", 0, 5), ("a", 61, 7)); q.processAllAvailable()
+    q.stop()
+    def versions = (store.snapshots("tier_1m_live").size, store.snapshots("tier_1h_cov").size)
+    assert(versions == (1, 1))
+    // the fresh checkpoint renumbers from batch 0 with different content
+    val in2 = MemoryStream[(String, Int, Int)]
+    val q2 = start(in2, "_ckpt_fresh")
+    in2.addData(("c", 5, 42))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q2.processAllAvailable()
+    }
+    q2.stop()
+    assert(
+      err.getMessage.contains("fresh checkpoint") ||
+        Option(err.getCause).exists(_.getMessage.contains("fresh checkpoint")),
+      s"expected the rewind refusal, got: ${err.getMessage}")
+    assert(versions == (1, 1), "neither table may gain a version from the refused batch")
   }
 
   test("streaming counter rate: matches batch counterRate across micro-batch boundaries") {
