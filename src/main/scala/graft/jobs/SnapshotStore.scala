@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graftshim.SparkInternals
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Iceberg-style snapshot layer over parquet directories (no Iceberg jars
@@ -29,6 +31,11 @@ import org.apache.spark.sql.functions.{count, lit}
  * job stage and every streaming sink batch — compute-or-resume),
  * [[commitMetrics]] (itself a stage of the `metrics` table) and
  * [[rollbackTo]] (a manifest aliasing an older version's data).
+ *
+ * A manifest also records the schema a parquet read of its data returns
+ * (`schema`), so [[SnapshotStore.read]] hands it to the reader instead of
+ * running a Spark job to infer it from a parquet footer. A manifest
+ * written before the field existed has None and is read with inference.
  */
 final case class SnapshotInfo(
     table: String,
@@ -37,7 +44,8 @@ final case class SnapshotInfo(
     stage: String,
     fingerprint: String,
     rowCount: Long,
-    dataPath: String)
+    dataPath: String,
+    schema: Option[StructType] = None)
 
 final class SnapshotStore(base: String) {
 
@@ -47,12 +55,13 @@ final class SnapshotStore(base: String) {
   // string fields are JSON strings: `\` and `"` are escaped on render and
   // unescaped on parse, so a quote in a path or fingerprint round-trips
   private def parse(j: String): SnapshotInfo = {
-    def field(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*(\"((?:[^\"\\\\]|\\\\.)*)\"|(\\d+))").r
-      m.findFirstMatchIn(j)
-        .map(g => Option(g.group(2)).map(unescape).getOrElse(g.group(3)))
-        .getOrElse(sys.error(s"missing $k in manifest"))
+    // possessive quantifiers: a schema string is long, and each
+    // iteration of the value loop costs the matcher a stack frame
+    def opt(k: String): Option[String] = {
+      val m = ("\"" + k + "\"\\s*:\\s*(\"((?:[^\"\\\\]++|\\\\.)*+)\"|(\\d+))").r
+      m.findFirstMatchIn(j).map(g => Option(g.group(2)).map(unescape).getOrElse(g.group(3)))
     }
+    def field(k: String): String = opt(k).getOrElse(sys.error(s"missing $k in manifest"))
     SnapshotInfo(
       field("table"),
       field("version").toInt,
@@ -60,7 +69,8 @@ final class SnapshotStore(base: String) {
       field("stage"),
       field("fingerprint"),
       field("rowCount").toLong,
-      field("dataPath"))
+      field("dataPath"),
+      opt("schema").map(DataType.fromJson(_).asInstanceOf[StructType]))
   }
 
   private def escape(v: String): String = v.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -70,7 +80,8 @@ final class SnapshotStore(base: String) {
   private def render(s: SnapshotInfo): String =
     s"""{"table": "${escape(s.table)}", "version": ${s.version}, "uid": ${s.uid},
        | "stage": "${escape(s.stage)}", "fingerprint": "${escape(s.fingerprint)}",
-       | "rowCount": ${s.rowCount}, "dataPath": "${escape(s.dataPath)}"}""".stripMargin
+       | "rowCount": ${s.rowCount}, "dataPath": "${escape(s.dataPath)}"""".stripMargin +
+      s.schema.fold("")(t => s""", "schema": "${escape(t.json)}"""") + "}"
 
   def snapshots(table: String): Seq[SnapshotInfo] = {
     val d = snapDir(table)
@@ -96,7 +107,9 @@ final class SnapshotStore(base: String) {
   /** The compute half of [[stage]]: write `df` as the next version of
    * `table`, commit its manifest atomically, and return the committed
    * snapshot with the values observed on the write — `rows` (a reserved
-   * name), `counters` and the caller's in-plan `observations`.
+   * name), `counters` and the caller's in-plan `observations` — and the
+   * schema a read of the version returns: the written one, every field
+   * nullable, as parquet hands it back.
    *
    * Two scale/safety properties:
    *  - the counters ride `df.observe` on the write action itself (NOT a
@@ -122,8 +135,9 @@ final class SnapshotStore(base: String) {
     val observed = (observations :+ obs)
       .flatMap(_.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
       .toMap
+    val schema = SparkInternals.asNullable(df.schema)
     val info = publish(
-      SnapshotInfo(table, next, uid, stage, fingerprint, observed("rows"), dataPath.toString))
+      SnapshotInfo(table, next, uid, stage, fingerprint, observed("rows"), dataPath.toString, Some(schema)))
     (info, observed)
   }
 
@@ -144,8 +158,11 @@ final class SnapshotStore(base: String) {
     info
   }
 
+  /** The version's rows. Its recorded schema spares the read a one-task
+   * job that infers it from a parquet footer; a manifest without one
+   * infers. */
   def read(spark: SparkSession, snap: SnapshotInfo): DataFrame =
-    spark.read.parquet(snap.dataPath)
+    snap.schema.fold(spark.read)(spark.read.schema(_)).parquet(snap.dataPath)
 
   /** Time travel: the table as of a committed version (Iceberg
    * `VERSION AS OF` semantics — a version is immutable data + manifest,
@@ -179,7 +196,8 @@ final class SnapshotStore(base: String) {
         stage = "rollback",
         fingerprint = s"rollback-to-v$version-uid${target.uid}",
         rowCount = target.rowCount,
-        dataPath = target.dataPath))
+        dataPath = target.dataPath,
+        schema = target.schema))
   }
 
   /** Expire snapshots older than the newest `keepLast` versions:

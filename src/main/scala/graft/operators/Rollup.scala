@@ -117,24 +117,22 @@ object Rollup {
    * avg derived). Input and output share the (source, bucket) key, so with
    * tier tables bucketed/partitioned on (source, bucket) this is a
    * co-partitioned aggregation. */
-  def reaggregate(finer: DataFrame, toTier: String): DataFrame =
-    finishTier(cascadeState(finer, toTier), toTier)
-
-  /** Cascade kernel: finer tier-state rows merged into the state of the
-   * coarser tier `toTier` (the window truncated to its width). */
-  private[graft] def cascadeState(finer: DataFrame, toTier: String): DataFrame = {
+  def reaggregate(finer: DataFrame, toTier: String): DataFrame = {
     val w = Tier.widths(toTier)
-    mergeState(finer, expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start"))
+    finishTier(mergeState(finer, expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start")), toTier)
   }
 
   /** Incremental late-data reconciliation: fold a (small) delta of
-   * late-arriving points into an existing tier table by recomputing ONLY
-   * the windows the delta touches. At 100 TB a full re-rollup for a
-   * sub-percent late delta is exactly the job this avoids: the existing
-   * tier is split with BROADCAST semi/anti joins on the delta's key set
-   * (row-local over the big table — no shuffle of the tier), and only
-   * the affected slice — bounded by the delta's window count, never the
-   * tier size — is re-merged through one small groupBy.
+   * late-arriving points into an existing, possibly big tier table by
+   * recomputing ONLY the windows the delta touches. At 100 TB a full
+   * re-rollup for a sub-percent late delta is exactly the job this
+   * avoids: the existing tier is split with BROADCAST semi/anti joins on
+   * the delta's key set (row-local over the big table — no shuffle of
+   * the tier), and only the affected slice — bounded by the delta's
+   * window count, never the tier size — is re-merged through one small
+   * groupBy. This split is for callers whose output need not rewrite the
+   * tier; a caller that writes a whole new tier version anyway (the
+   * streaming tier sinks) re-merges with [[remerge]] instead.
    *
    * The merge is exact because every persisted aggregate is a
    * sum/min/max/count over disjoint point sets (the tier invariant);
@@ -144,7 +142,8 @@ object Rollup {
    * Windows that exist only in the delta (entirely-late windows) surface
    * as new rows; `tierTable` must be a single-tier table of the same
    * `tier` (its rows pass through or re-merge keyed on
-   * (source, bucket, window_start) only).
+   * (source, bucket, window_start) only). Output keeps `tierTable`'s
+   * column order.
    *
    * Three cost regimes, picked by the delta's window count (one eager
    * `count()` of the delta aggregate):
@@ -154,13 +153,13 @@ object Rollup {
    *    re-merges. The ceiling is a byte budget (~40-60 MB built
    *    relation at the 1M default), because the key set lands on the
    *    driver and every executor.
-   *  - <= `maxAffectedWindows`: SHUFFLE re-merge — the whole tier
-   *    unions with the delta and re-aggregates in ONE hash shuffle on
-   *    the tier key (cheaper than two shuffle joins; untouched windows
-   *    pass through the merge as single-row groups, bit-equal since
-   *    avg/var re-derive from the same exact integer state). Costs one
-   *    tier shuffle but never touches the (window-width-times-larger)
-   *    raw points.
+   *  - <= `maxAffectedWindows`: SHUFFLE re-merge ([[remerge]]) — the
+   *    whole tier unions with the delta and re-aggregates in ONE hash
+   *    shuffle on the tier key (cheaper than two shuffle joins;
+   *    untouched windows pass through the merge as single-row groups,
+   *    bit-equal since avg/var re-derive from the same exact integer
+   *    state). Costs one tier shuffle but never touches the
+   *    (window-width-times-larger) raw points.
    *  - beyond: loud failure — that delta is a bulk backfill; run a
    *    full re-rollup. Fails with a diagnosis, not a driver OOM.
    *
@@ -188,7 +187,17 @@ object Rollup {
     val delta = rollupFromPoints(latePoints, tier)
     val nAffected = delta.count()
     guardDelta(nAffected, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
-    foldDelta(tierTable, delta, nAffected, tier, maxBroadcastWindows)
+    if (nAffected > maxBroadcastWindows) remerge(tierTable, delta, tier)
+    else {
+      val keys = Seq("source", "bucket", "window_start")
+      val affectedKeys = broadcast(delta.select(keys.map(col): _*))
+      val untouched = tierTable.join(affectedKeys, keys, "left_anti")
+      val affected = tierTable.join(affectedKeys, keys, "left_semi")
+      // the equi-join fronts its keys; the final select restores the tier
+      // table's own order
+      val merged = mergeState(affected.select(stateCols: _*).unionByName(delta.select(stateCols: _*)))
+      untouched.unionByName(finishTier(merged, tier)).select(tierTable.columns.map(col): _*)
+    }
   }
 
   /** Broadcast ceiling for the affected-key split, derived from a BYTE
@@ -210,9 +219,9 @@ object Rollup {
 
   /** The loud ceiling on an incremental fold ([[DefaultMaxAffectedWindows]]
    * unless the caller exposes its own), checked BEFORE anything is
-   * broadcast: `n` is the delta's window count, `caller` names the API
-   * in the message and `knob` says how that caller can move the ceiling
-   * (empty when it cannot). */
+   * broadcast or written: `n` is the delta's window count, `caller` names
+   * the API in the message and `knob` says how that caller can move the
+   * ceiling (empty when it cannot). */
   private[graft] def guardDelta(n: Long, maxAffectedWindows: Long, caller: String, knob: String = ""): Unit =
     require(
       n <= maxAffectedWindows,
@@ -220,38 +229,28 @@ object Rollup {
         "Incremental reconciliation is for late slices; a delta this " +
         s"size is a bulk backfill — run a full re-rollup$knob.")
 
-  /** The one incremental fold: tier-state rows `delta` (at most one per
-   * (source, bucket, window_start); extra tier-row columns are ignored)
-   * merged into `tierTable`, recomputing only the windows the delta
-   * touches, in the regimes of [[mergeLate]]. `nDelta` must
-   * have passed [[guardDelta]]; it picks the regime, and any UPPER bound
-   * on the delta's row count is exact-safe (both regimes return the same
-   * rows, an over-estimate only trades the broadcast split for the
-   * shuffle re-merge). `delta` is read twice on the broadcast path —
-   * persist it. Output keeps `tierTable`'s column order. */
-  private[graft] def foldDelta(
-      tierTable: DataFrame,
-      delta: DataFrame,
-      nDelta: Long,
-      tier: String,
-      maxBroadcastWindows: Long = DefaultMaxBroadcastWindows): DataFrame = {
-    val keys = Seq("source", "bucket", "window_start")
-    val stateCols =
-      (keys ++ Seq("min_tok", "max_tok", "sum_tok", "cnt_tok", "sumsq_tok")).map(col)
-    val state = delta.select(stateCols: _*)
-    val merged =
-      if (nDelta <= maxBroadcastWindows) {
-        val affectedKeys = broadcast(delta.select(keys.map(col): _*))
-        val untouched = tierTable.join(affectedKeys, keys, "left_anti")
-        val affected = tierTable.join(affectedKeys, keys, "left_semi")
-        // the equi-join fronts its keys; the final select below restores
-        // the tier table's own order
-        untouched.unionByName(
-          finishTier(mergeState(affected.select(stateCols: _*).unionByName(state)), tier))
-      } else {
-        finishTier(mergeState(tierTable.select(stateCols: _*).unionByName(state)), tier)
-      }
-    merged.select(tierTable.columns.map(col): _*)
+  /** The tier-state columns a fold reads (extra tier-row columns are
+   * ignored). */
+  private val stateCols =
+    Seq("source", "bucket", "window_start", "min_tok", "max_tok", "sum_tok", "cnt_tok", "sumsq_tok").map(col)
+
+  /** The whole-tier re-merge: tier-state rows `state`, of `tier` or of
+   * any finer tier, folded into `tierTable` (a single-tier table of
+   * `tier`) in ONE aggregate over their union, keyed on (source, bucket,
+   * window_start truncated to `tier`'s width). A finer `state` therefore
+   * cascades inside the same aggregate, with no exchange of its own; the
+   * truncation keeps the column's own integer type, so a BIGINT window
+   * start never wraps. Untouched windows pass through as single-row
+   * groups, bit-equal since avg/var re-derive from the same exact integer
+   * state. The output is the whole new tier, so this is the fold for a
+   * caller that writes the tier back anyway (the streaming tier sinks),
+   * and the shuffle regime of [[mergeLate]]. Output keeps `tierTable`'s
+   * column order. */
+  private[graft] def remerge(tierTable: DataFrame, state: DataFrame, tier: String): DataFrame = {
+    val w = Tier.widths(tier)
+    val window = (col("window_start") - col("window_start") % w).as("window_start")
+    finishTier(mergeState(tierTable.select(stateCols: _*).unionByName(state.select(stateCols: _*)), window), tier)
+      .select(tierTable.columns.map(col): _*)
   }
 
   /** Full ladder from the point view: returns tier name -> tier DataFrame.

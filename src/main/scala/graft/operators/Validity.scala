@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
  *
  * The counters ride on `df.observe`, i.e. they are collected DURING the
  * query's own action with zero extra passes — the scale-correct
- * alternative to a second count() scan (same mechanism as
- * SnapshotStore.commit's row count).
+ * alternative to a second count() scan (same mechanism as the row
+ * count SnapshotStore.stage observes on a commit's write).
  */
 object Validity {
 

@@ -206,9 +206,8 @@ object StreamingOps {
 
   /** Streaming tier maintenance — the continuous face of
    * [[graft.operators.Rollup.mergeLate]]: each micro-batch of raw
-   * points folds into the latest committed tier snapshot, recomputing
-   * only the windows the batch touches (broadcast split of the big
-   * tier, small re-merge; the per-batch fold of [[foldTierBatch]]).
+   * points folds into the latest committed tier snapshot in one
+   * whole-tier re-merge (the per-batch fold of [[foldTierBatch]]).
    * Arrival order does not matter — no watermark, no dropped late
    * data — because the merge is an exact integer reaggregation, so
    * after any sequence of batches the table's latest version is
@@ -238,9 +237,10 @@ object StreamingOps {
    *   1. ONE job over the batch's persisted fine-tier delta state and
    *      the previous fine snapshot's `window_start` yields the guard
    *      count and the fine tier's frontier;
-   *   2. the COARSE tier commits FIRST — its delta is the fine delta's
-   *      cascade, folded into its latest snapshot — because the coarse
-   *      tier is the retention policy's coverage and keeps full history;
+   *   2. the COARSE tier commits FIRST — the fine delta folded into its
+   *      latest snapshot, cascading inside the same aggregate — because
+   *      the coarse tier is the retention policy's coverage and keeps
+   *      full history;
    *   3. the FINE tier commits the fine delta folded into its latest
    *      snapshot, compacted-then-expired against the just-committed
    *      coarse table: the horizon trails the frontier by `keepWindows`
@@ -287,24 +287,26 @@ object StreamingOps {
    * how many fine windows the fine tier keeps behind its frontier. */
   private final case class Coverage(table: String, tier: String, keepWindows: Long)
 
-  /** The one per-batch fold of both tier sinks: micro-batch `b` of raw
+  /** The per-batch fold of both tier sinks: micro-batch `b` of raw
    * points into the `tier` table `table` — and first into the `coverage`
    * table, which `table` is then compacted-then-expired against. The
    * coverage stage runs INSIDE the fine table's stage: the coarse tier
    * still commits first, a batch the fine table holds is a full replay
    * (its coarse commit came first), and the fine table's rewind check
-   * fires before either table is written. Every table that folds the
-   * batch folds the same ONE persisted delta
-   * ([[graft.operators.Rollup.pointState]]; the coverage delta is its
-   * [[graft.operators.Rollup.cascadeState]]) with
-   * [[graft.operators.Rollup.foldDelta]]. ONE job over the delta, run by
-   * the first table to fold, checks the guard, warms the cache and, when
-   * expiring, takes the frontier: max(window_start) over the delta and the
-   * previous snapshot, i.e. over the folded tier without running the
-   * fold. The coverage regime is picked from the FINE delta's count, an
-   * upper bound on the coarse delta's (a coarse window is a union of fine
-   * ones), so the choice is exact-safe. A stored `retained_uncovered` flag
-   * is dropped before the fold; the expiry re-derives it. */
+   * fires before either table is written. Every table folds the same ONE
+   * persisted fine delta ([[graft.operators.Rollup.pointState]]) into its
+   * previous snapshot with ONE aggregate,
+   * [[graft.operators.Rollup.remerge]], which truncates the delta's
+   * windows to the table's width, so the coverage tier's cascade runs in
+   * that aggregate too. A batch writes a whole new copy-on-write tier
+   * version anyway, so a broadcast split of the tier
+   * ([[graft.operators.Rollup.mergeLate]]) would save only the shuffle of
+   * rows the batch scans and writes regardless. ONE job over the delta,
+   * run by the first table to fold, checks the guard, warms the cache
+   * and, when expiring, takes the frontier: max(window_start) over the
+   * delta and the previous snapshot, i.e. over the folded tier without
+   * running the fold. A stored `retained_uncovered` flag is dropped
+   * before the fold; the expiry re-derives it. */
   private def foldTierBatch(
       store: SnapshotStore,
       caller: String,
@@ -331,17 +333,17 @@ object StreamingOps {
         Rollup.guardDelta(r.getLong(0), Rollup.DefaultMaxAffectedWindows, caller)
         r
       }
-      def fold(prev: Option[DataFrame], state: DataFrame, t: String): DataFrame = {
-        val n = probe.getLong(0)
-        prev.fold(Rollup.finishTier(state, t))(Rollup.foldDelta(_, state, n, t))
+      def fold(prev: Option[DataFrame], t: String): DataFrame = {
+        probe // the guard fires before any fold is built, let alone written
+        prev.fold(Rollup.reaggregate(delta, t))(Rollup.remerge(_, delta, t))
       }
-      coverage.fold(fold(prevTier, delta, tier)) { c =>
+      coverage.fold(fold(prevTier, tier)) { c =>
         // coarse first: it is the fine tier's expiry coverage
         val covered = b.commit(store, c.table) { coarsePrev =>
-          fold(coarsePrev.map(readTier), Rollup.cascadeState(delta, c.tier), c.tier)
+          fold(coarsePrev.map(readTier), c.tier)
         }.snap
         val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
-        Retention.safeExpire(fold(prevTier, delta, tier), store.read(spark, covered), c.tier, horizon)
+        Retention.safeExpire(fold(prevTier, tier), store.read(spark, covered), c.tier, horizon)
       }
     } finally persisted.foreach(_.unpersist())
   }

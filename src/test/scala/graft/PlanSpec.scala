@@ -3,6 +3,7 @@ package graft
 import graft.core.Tier
 import graft.operators.Rollup
 import graft.sources.TokenTable
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the properties that keep the engine fast at
@@ -452,6 +453,62 @@ class PlanSpec extends SparkSpec {
     // no join of any kind (the broadcast split is the other branch)
     assert(!plan.contains("Join"), s"shuffle path must be join-free:\n$plan")
     assert(plan.contains("Union"), plan)
+  }
+
+  test("maintenance sink: each tier write is one aggregate exchange over the tier, no anti/semi split") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graft-plan-maint-").toString
+    val store = new graft.jobs.SnapshotStore(base)
+    // every parquet write's final plan, by output path; the stream's
+    // session is a clone of this one and copies the listener at start
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString }
+          .foreach(path => writes.add(path -> qe.executedPlan))
+        if (qe.analyzed.output.exists(_.name == "plan_spec_marker")) markerSeen = true
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val in = MemoryStream[(String, Int, Int)]
+    val q = StreamingOps
+      .tierMaintenanceSink(
+        in.toDF().toDF("source", "pos", "tok"), store, "tier_1m_live", "tier_1h_cov", "plantest",
+        s"$base/_ckpt", Tier.OneMinute, Tier.OneHour, keepWindows = 2)
+      .start()
+    try {
+      in.addData(("a", 0, 5), ("a", 61, 7), ("b", 2, 4)); q.processAllAvailable()
+      // a steady batch: both tables have a previous version; late points
+      in.addData(("a", 3700, 2), ("a", 1, 9), ("b", 62, 6)); q.processAllAvailable()
+    } finally q.stop()
+    // listener calls are asynchronous but ordered: wait for a marker query
+    spark.range(1).toDF("plan_spec_marker").collect()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+    spark.listenerManager.unregister(listener)
+    assert(markerSeen, "the listener never saw the marker query")
+    object aqe extends AdaptiveSparkPlanHelper
+    for (table <- Seq("tier_1h_cov", "tier_1m_live")) {
+      val path = store.latest(table).get.dataPath
+      val plan = writes.toArray.collect { case (p: String, pl: SparkPlan) if p.endsWith(path) => pl }
+        .lastOption.getOrElse(fail(s"no write plan seen for $table"))
+      val text = plan.toString
+      assert(!text.contains("LeftAnti") && !text.contains("LeftSemi"), s"$table must not split the tier:\n$text")
+      // ONE aggregate over the tier: the fine delta (a cached relation,
+      // computed once per batch) cascades inside it, no aggregate of its own
+      assert(aqe.collect(plan) { case e: ShuffleExchangeLike => e }.size == 1, s"$table:\n$text")
+      assert(aqe.collect(plan) { case a: BaseAggregateExec => a }.size == 2, s"$table:\n$text")
+    }
   }
 
   test("PAA/SAX symbolization is a shuffle-free map over the document scan") {

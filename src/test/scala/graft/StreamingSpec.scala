@@ -555,6 +555,80 @@ class StreamingSpec extends SparkSpec {
     assert(versions == (1, 1), "neither table may gain a version from the refused batch")
   }
 
+  test("tier sinks: a late-heavy stream folds bit-equal to one-shot rollups and to per-batch mergeLate") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.core.Tier
+    import graft.jobs.SnapshotStore
+    import graft.operators.{Retention, Rollup}
+    import org.apache.spark.sql.DataFrame
+    val base = java.nio.file.Files.createTempDirectory("graft-stream-fold-").toString
+    val store = new SnapshotStore(base)
+    val (mergeIn, maintIn) = (MemoryStream[(String, Int, Int)], MemoryStream[(String, Int, Int)])
+    val merge = StreamingOps
+      .tierMergeSink(
+        mergeIn.toDF().toDF("source", "pos", "tok"), store, "tier_1m", "foldmerge", s"$base/_ckpt_merge",
+        Tier.OneMinute)
+      .start()
+    val maint = StreamingOps
+      .tierMaintenanceSink(
+        maintIn.toDF().toDF("source", "pos", "tok"), store, "tier_1m_live", "tier_1h_cov", "foldmaint",
+        s"$base/_ckpt_maint", Tier.OneMinute, Tier.OneHour, keepWindows = 3)
+      .start()
+    // b1 opens hours 0 and 1 (horizon 3540: hour 0's fine windows go).
+    // b2 moves the frontier to window 7260 and lands late points in b1's
+    // windows and in window 120, which no batch had: entirely late.
+    // b3 is late-only: it re-creates the expired fine windows 60 and 3660
+    // (expired again at once, merged into the coverage tier) and opens
+    // window 7140, entirely late but inside the horizon. b4 moves on.
+    val batches = Seq(
+      Seq(("a", 0, 5), ("a", 61, 7), ("b", 2, 4), ("a", 3605, 3), ("b", 3661, 8)),
+      Seq(("a", 7250, 1), ("a", 1, 9), ("b", 3, 2), ("a", 130, 6), ("b", 3662, 5), ("c", 7300, 11)),
+      Seq(("a", 62, 4), ("b", 3700, 1), ("c", 7199, 2)),
+      Seq(("a", 7400, 3), ("b", 3601, 7), ("a", 7251, 2), ("c", 70, 1)))
+    def points(b: Seq[(String, Int, Int)]) = b.toDF("source", "pos", "tok")
+    // a reference kept as local rows, so the per-batch chain stays flat
+    def local(df: DataFrame) = spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    def types(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    var folded = Map.empty[String, DataFrame]
+    try batches.indices.foreach { i =>
+      val b = points(batches(i))
+      mergeIn.addData(batches(i): _*); merge.processAllAvailable()
+      maintIn.addData(batches(i): _*); maint.processAllAvailable()
+      // per-batch fold with mergeLate, the broadcast split
+      def mergeLate(table: String, tier: String) =
+        local(folded.get(table).fold(Rollup.rollupFromPoints(b, tier))(Rollup.mergeLate(_, b, tier)))
+      val frontier = batches.take(i + 1).flatten.map(p => p._2 - p._2 % 60).max.toLong
+      val horizon = frontier - 2 * 60
+      val cov = mergeLate("tier_1h_cov", Tier.OneHour)
+      val live = folded.get("tier_1m_live").map(_.drop("retained_uncovered"))
+        .fold(Rollup.rollupFromPoints(b, Tier.OneMinute))(Rollup.mergeLate(_, b, Tier.OneMinute))
+      folded = Map(
+        "tier_1m" -> mergeLate("tier_1m", Tier.OneMinute),
+        "tier_1h_cov" -> cov,
+        "tier_1m_live" -> local(Retention.safeExpire(live, cov, Tier.OneHour, horizon)))
+      // one-shot references over every point sent so far
+      val seen = points(batches.take(i + 1).flatten)
+      val oneShot1m = Rollup.rollupFromPoints(seen, Tier.OneMinute)
+      val oneShot1h = Rollup.rollupFromPoints(seen, Tier.OneHour)
+      val oneShot = Map(
+        "tier_1m" -> oneShot1m,
+        "tier_1h_cov" -> oneShot1h,
+        "tier_1m_live" -> Retention.safeExpire(oneShot1m, oneShot1h, Tier.OneHour, horizon))
+      for (table <- Seq("tier_1m", "tier_1h_cov", "tier_1m_live")) {
+        val got = store.readVersion(spark, table, i + 1)
+        assert(types(got) == types(oneShot(table)), s"$table v${i + 1}: column types")
+        assert(rows(got) == rows(oneShot(table)), s"$table v${i + 1} != one-shot reference")
+        assert(rows(got) == rows(folded(table)), s"$table v${i + 1} != per-batch mergeLate fold")
+      }
+    }
+    finally { merge.stop(); maint.stop() }
+    // the late-only batch kept the entirely-late window 7140, inside the horizon
+    assert(rows(store.readVersion(spark, "tier_1m_live", 3).select("window_start")).map(_.head) ==
+      Seq(7140, 7200, 7260))
+  }
+
   test("streaming counter rate: matches batch counterRate across micro-batch boundaries") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
