@@ -66,6 +66,14 @@ object Tier {
    * `window_start`. */
   def windowStart(width: Int): Column =
     expr(s"CAST(pos - pos % $width AS INT)").as("window_start")
+
+  /** A tier's `window_start` truncated to a coarser `width`,
+   * `window_start - window_start % width`. Keeps the column's own integer
+   * type: the INT position bound is [[windowStart]]'s, and an epoch-scale
+   * BIGINT window start of an externally built tier neither wraps nor
+   * fails an INT cast. */
+  def truncateWindow(width: Int): Column =
+    expr(s"window_start - window_start % $width")
 }
 
 /** One lineage row per input partition per stage (north-rule lineage). */

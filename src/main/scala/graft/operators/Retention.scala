@@ -64,11 +64,8 @@ object Retention {
     fine
       .join(
         cov,
-        // the coverage key keeps the column's own integer type (no INT
-        // cast): an epoch-scale BIGINT window_start must not wrap into a
-        // silently-mismatched coverage key
         col("source") === col("_cs") && col("bucket") === col("_cb") &&
-          expr(s"window_start - window_start % $w") === col("_cw"),
+          Tier.truncateWindow(w) === col("_cw"),
         "left_outer")
       .filter(col("window_start") >= horizonStart || (expired && col("_cw").isNull))
       .withColumn("retained_uncovered", expired)

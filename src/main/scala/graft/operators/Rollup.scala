@@ -116,66 +116,45 @@ object Rollup {
   /** Reaggregate a finer tier into a coarser one (sum/count/min/max compose;
    * avg derived). Input and output share the (source, bucket) key, so with
    * tier tables bucketed/partitioned on (source, bucket) this is a
-   * co-partitioned aggregation. */
-  def reaggregate(finer: DataFrame, toTier: String): DataFrame = {
-    val w = Tier.widths(toTier)
-    finishTier(mergeState(finer, expr(s"CAST(window_start - window_start % $w AS INT)").as("window_start")), toTier)
-  }
+   * co-partitioned aggregation. The window truncates with
+   * [[graft.core.Tier.truncateWindow]], so the output keeps the input's
+   * window_start type (INT for a position tier, BIGINT for an epoch one). */
+  def reaggregate(finer: DataFrame, toTier: String): DataFrame =
+    finishTier(mergeState(finer, Tier.truncateWindow(Tier.widths(toTier)).as("window_start")), toTier)
 
-  /** Incremental late-data reconciliation: fold a (small) delta of
-   * late-arriving points into an existing, possibly big tier table by
-   * recomputing ONLY the windows the delta touches. At 100 TB a full
-   * re-rollup for a sub-percent late delta is exactly the job this
-   * avoids: the existing tier is split with BROADCAST semi/anti joins on
-   * the delta's key set (row-local over the big table — no shuffle of
-   * the tier), and only the affected slice — bounded by the delta's
-   * window count, never the tier size — is re-merged through one small
-   * groupBy. This split is for callers whose output need not rewrite the
-   * tier; a caller that writes a whole new tier version anyway (the
-   * streaming tier sinks) re-merges with [[remerge]] instead.
+  /** Incremental late-data reconciliation: fold a delta of late-arriving
+   * points into an existing tier table with [[remerge]] — ONE aggregate
+   * over the tier's state rows unioned with the delta's, in one hash
+   * shuffle on the tier key. Untouched windows pass through the merge as
+   * single-row groups; windows that exist only in the delta
+   * (entirely-late windows) surface as new rows. The raw points are
+   * never re-read, only the late slice.
    *
    * The merge is exact because every persisted aggregate is a
    * sum/min/max/count over disjoint point sets (the tier invariant);
    * avg/var re-derive from the merged integer state. Result is bit-equal
    * to `rollupFromPoints(onTime UNION late)` under any split — the
    * RollupSpec property and the q_rollup_late full-recompute oracle.
-   * Windows that exist only in the delta (entirely-late windows) surface
-   * as new rows; `tierTable` must be a single-tier table of the same
-   * `tier` (its rows pass through or re-merge keyed on
-   * (source, bucket, window_start) only). Output keeps `tierTable`'s
-   * column order.
+   * `tierTable` must be a single-tier table of the same `tier`. Output
+   * keeps `tierTable`'s column order.
    *
-   * Three cost regimes, picked by the delta's window count (one eager
-   * `count()` of the delta aggregate):
-   *  - <= `maxBroadcastWindows`: BROADCAST split — the affected-key set
-   *    ships to every executor and the big tier is split row-locally
-   *    (anti/semi, zero tier shuffle); only the affected slice
-   *    re-merges. The ceiling is a byte budget (~40-60 MB built
-   *    relation at the 1M default), because the key set lands on the
-   *    driver and every executor.
-   *  - <= `maxAffectedWindows`: SHUFFLE re-merge ([[remerge]]) — the
-   *    whole tier unions with the delta and re-aggregates in ONE hash
-   *    shuffle on the tier key (cheaper than two shuffle joins;
-   *    untouched windows pass through the merge as single-row groups,
-   *    bit-equal since avg/var re-derive from the same exact integer
-   *    state). Costs one tier shuffle but never touches the
-   *    (window-width-times-larger) raw points.
-   *  - beyond: loud failure — that delta is a bulk backfill; run a
-   *    full re-rollup. Fails with a diagnosis, not a driver OOM.
+   * Loud ceiling: a delta touching more than `maxAffectedWindows`
+   * windows (one eager `count()` of the delta aggregate, before the fold
+   * is built) is a bulk backfill — run a full re-rollup; the call fails
+   * with that diagnosis.
    *
    * `latePoints` must be DETERMINISTIC (a table read or pure generator —
-   * every caller in this engine): the count, the affected-key split and
-   * the merge union each derive the delta from it, and a nondeterministic
-   * input would let them disagree (dropped or duplicated key rows). A
-   * plan carrying any nondeterministic expression is rejected up front;
+   * every caller in this engine): the guard's count and the fold each
+   * derive the delta from it, and a nondeterministic input would let them
+   * disagree (the guard would pass a delta the fold never sees). A plan
+   * carrying any nondeterministic expression is rejected up front;
    * `localCheckpoint()` such points first (a plain persist keeps the
    * nondeterministic expression in the analyzed plan). */
   def mergeLate(
       tierTable: DataFrame,
       latePoints: DataFrame,
       tier: String,
-      maxAffectedWindows: Long = DefaultMaxAffectedWindows,
-      maxBroadcastWindows: Long = DefaultMaxBroadcastWindows): DataFrame = {
+      maxAffectedWindows: Long = DefaultMaxAffectedWindows): DataFrame = {
     val nonDet = latePoints.queryExecution.analyzed.collectFirst {
       case p if p.expressions.exists(_.exists(e => !e.deterministic)) => p.nodeName
     }
@@ -184,42 +163,21 @@ object Rollup {
       s"mergeLate: latePoints plan contains a nondeterministic expression " +
         s"(in ${nonDet.getOrElse("?")}); the delta is derived more than once " +
         "and could disagree with itself. localCheckpoint() the late points first.")
-    val delta = rollupFromPoints(latePoints, tier)
-    val nAffected = delta.count()
-    guardDelta(nAffected, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
-    if (nAffected > maxBroadcastWindows) remerge(tierTable, delta, tier)
-    else {
-      val keys = Seq("source", "bucket", "window_start")
-      val affectedKeys = broadcast(delta.select(keys.map(col): _*))
-      val untouched = tierTable.join(affectedKeys, keys, "left_anti")
-      val affected = tierTable.join(affectedKeys, keys, "left_semi")
-      // the equi-join fronts its keys; the final select restores the tier
-      // table's own order
-      val merged = mergeState(affected.select(stateCols: _*).unionByName(delta.select(stateCols: _*)))
-      untouched.unionByName(finishTier(merged, tier)).select(tierTable.columns.map(col): _*)
-    }
+    val delta = pointState(latePoints, tier)
+    guardDelta(delta.count(), maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
+    remerge(tierTable, delta, tier)
   }
 
-  /** Broadcast ceiling for the affected-key split, derived from a BYTE
-   * budget, not row count alone: a key row (source string, bucket int,
-   * window_start int) is ~40-60 B inside a built broadcast hash
-   * relation, so 1M keys is a ~40-60 MB relation on the driver and
-   * every executor — the top of the range where shipping the key set
-   * still beats shuffling the tier. Past it, [[mergeLate]] switches to
-   * the shuffle re-merge path rather than building a multi-hundred-MB
-   * broadcast. */
-  val DefaultMaxBroadcastWindows: Long = 1000000L
-
-  /** Absolute loud ceiling on a reconciliation delta: even the shuffle
-   * path re-merges the tier row-by-row against the delta, and a delta
-   * touching a large fraction of all windows is a bulk backfill — the
-   * economics flip to a full re-rollup from points (one shuffle of the
-   * points REPLACES the tier instead of reconciling it). */
+  /** Absolute loud ceiling on a reconciliation delta: the re-merge
+   * shuffles the whole tier against the delta, and a delta touching a
+   * large fraction of all windows is a bulk backfill — the economics flip
+   * to a full re-rollup from points (one shuffle of the points REPLACES
+   * the tier instead of reconciling it). */
   val DefaultMaxAffectedWindows: Long = 100000000L
 
   /** The loud ceiling on an incremental fold ([[DefaultMaxAffectedWindows]]
    * unless the caller exposes its own), checked BEFORE anything is
-   * broadcast or written: `n` is the delta's window count, `caller` names
+   * folded or written: `n` is the delta's window count, `caller` names
    * the API in the message and `knob` says how that caller can move the
    * ceiling (empty when it cannot). */
   private[graft] def guardDelta(n: Long, maxAffectedWindows: Long, caller: String, knob: String = ""): Unit =
@@ -234,24 +192,19 @@ object Rollup {
   private val stateCols =
     Seq("source", "bucket", "window_start", "min_tok", "max_tok", "sum_tok", "cnt_tok", "sumsq_tok").map(col)
 
-  /** The whole-tier re-merge: tier-state rows `state`, of `tier` or of
-   * any finer tier, folded into `tierTable` (a single-tier table of
-   * `tier`) in ONE aggregate over their union, keyed on (source, bucket,
-   * window_start truncated to `tier`'s width). A finer `state` therefore
-   * cascades inside the same aggregate, with no exchange of its own; the
-   * truncation keeps the column's own integer type, so a BIGINT window
-   * start never wraps. Untouched windows pass through as single-row
+  /** The one fold of new tier state into an existing tier: tier-state
+   * rows `state`, of `tier` or of any finer tier, folded into `tierTable`
+   * (a single-tier table of `tier`) by [[reaggregate]] over their union,
+   * keyed on (source, bucket, window_start truncated to `tier`'s width).
+   * A finer `state` therefore cascades inside the same aggregate, with no
+   * exchange of its own. Untouched windows pass through as single-row
    * groups, bit-equal since avg/var re-derive from the same exact integer
-   * state. The output is the whole new tier, so this is the fold for a
-   * caller that writes the tier back anyway (the streaming tier sinks),
-   * and the shuffle regime of [[mergeLate]]. Output keeps `tierTable`'s
-   * column order. */
-  private[graft] def remerge(tierTable: DataFrame, state: DataFrame, tier: String): DataFrame = {
-    val w = Tier.widths(tier)
-    val window = (col("window_start") - col("window_start") % w).as("window_start")
-    finishTier(mergeState(tierTable.select(stateCols: _*).unionByName(state.select(stateCols: _*)), window), tier)
+   * state. The output is the whole new tier ([[mergeLate]] and both
+   * streaming tier sinks fold with it). Output keeps `tierTable`'s column
+   * order. */
+  private[graft] def remerge(tierTable: DataFrame, state: DataFrame, tier: String): DataFrame =
+    reaggregate(tierTable.select(stateCols: _*).unionByName(state.select(stateCols: _*)), tier)
       .select(tierTable.columns.map(col): _*)
-  }
 
   /** Full ladder from the point view: returns tier name -> tier DataFrame.
    * Only the 1m tier touches the raw points; every coarser tier cascades. */

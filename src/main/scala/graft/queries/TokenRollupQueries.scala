@@ -75,9 +75,10 @@ object TokenRollupQueries {
 
     // Incremental late-data reconciliation: the 1m tier is built WITHOUT
     // a deterministic "late" slice (entirely-late windows + half-late
-    // windows), then mergeLate folds the slice back in, touching only
-    // affected windows. The oracle is the FULL recompute over all points
-    // — a hash match proves the incremental path bit-equals it.
+    // windows), then mergeLate folds the slice back in: one re-merge of
+    // the tier with the slice's state, never re-reading the on-time
+    // points. The oracle is the FULL recompute over all points — a hash
+    // match proves the incremental path bit-equals it.
     "q_rollup_late" -> ((s, dir) => {
       val pts = TokenTable.points(s, dir)
       val lateCond = expr(LateCond)

@@ -298,10 +298,8 @@ object StreamingOps {
    * previous snapshot with ONE aggregate,
    * [[graft.operators.Rollup.remerge]], which truncates the delta's
    * windows to the table's width, so the coverage tier's cascade runs in
-   * that aggregate too. A batch writes a whole new copy-on-write tier
-   * version anyway, so a broadcast split of the tier
-   * ([[graft.operators.Rollup.mergeLate]]) would save only the shuffle of
-   * rows the batch scans and writes regardless. ONE job over the delta,
+   * that aggregate too — the same fold
+   * [[graft.operators.Rollup.mergeLate]] runs. ONE job over the delta,
    * run by the first table to fold, checks the guard, warms the cache
    * and, when expiring, takes the frontier: max(window_start) over the
    * delta and the previous snapshot, i.e. over the folded tier without

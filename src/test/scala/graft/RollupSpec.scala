@@ -3,6 +3,7 @@ package graft
 import graft.core.Tier
 import graft.operators.Rollup
 import graft.sources.TokenTable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rollup tier ladder: correctness vs a naive in-memory oracle, cascade
@@ -109,14 +110,21 @@ class RollupSpec extends SparkSpec {
       lit(false), // empty delta: merge must be identity
       lit(true) // everything late: base tier is empty
     )
-    for (lateCond <- splits) {
+    // bit-exact at any parallelism: the default session, one and seven
+    // shuffle partitions, and AQE off
+    val sessions = Seq(
+      Seq.empty[(String, String)],
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false"))
+    for (confs <- sessions; lateCond <- splits) withConfs(confs: _*) {
       val base = Rollup.rollupFromPoints(points.filter(!lateCond), Tier.OneMinute)
       val merged = Rollup
         .mergeLate(base, points.filter(lateCond), Tier.OneMinute)
         .collect()
         .map(_.toSeq)
         .toSet
-      assert(merged == full, s"mergeLate != full recompute for split $lateCond")
+      assert(merged == full, s"mergeLate != full recompute for split $lateCond under $confs")
     }
     points.unpersist()
   }
@@ -130,51 +138,45 @@ class RollupSpec extends SparkSpec {
     assert(e.getMessage.contains("full re-rollup"), e.getMessage)
   }
 
-  test("mergeLate shuffle middle path bit-equals the broadcast path") {
-    // a delta too big to broadcast but below the absolute guard must take
-    // the shuffle re-merge branch and produce the identical tier; force
-    // the branch by zeroing the broadcast ceiling
-    val points = TokenTable.points(spark, dir).cache()
-    val lateCond = expr("pos % 7 = 3")
-    val base = Rollup.rollupFromPoints(points.filter(!lateCond), Tier.OneMinute)
-    val viaBroadcast = Rollup
-      .mergeLate(base, points.filter(lateCond), Tier.OneMinute)
-      .collect()
-      .map(_.toSeq)
-      .toSet
-    val viaShuffle = Rollup
-      .mergeLate(
-        base,
-        points.filter(lateCond),
-        Tier.OneMinute,
-        maxBroadcastWindows = 0L)
-      .collect()
-      .map(_.toSeq)
-      .toSet
-    val full = Rollup
-      .rollupFromPoints(points, Tier.OneMinute)
-      .collect()
-      .map(_.toSeq)
-      .toSet
-    assert(viaShuffle == viaBroadcast)
-    assert(viaShuffle == full)
-    points.unpersist()
-  }
-
   test("epoch-domain hardening: maintenance chain exact over BIGINT window_starts > 2^31") {
     // Round-7 VERDICT #8: the round-6 fixes removed INT casts / float
     // division on window keys in the tier-MAINTENANCE operators (which
     // accept externally built tiers keyed by epoch seconds); lock that in
-    // with keys past the 32-bit boundary. The position-domain builders
-    // (rollupFromPoints / reaggregate) intentionally emit INT
-    // window_start — their domain is token position, bounded by doc
-    // length — so the chain under test is the epoch-capable surface:
-    // expire / safeExpire (coverage key arithmetic), consecutiveBreaches
-    // (island DIV), counterRate (spacing), gapFill (spine + LOCF).
+    // with keys past the 32-bit boundary. Only the point kernel emits INT
+    // window_start (Tier.windowStart: its domain is token position,
+    // bounded by doc length); the chain under test is the epoch-capable
+    // surface: reaggregate / remerge (window truncation), expire /
+    // safeExpire (coverage key arithmetic), consecutiveBreaches (island
+    // DIV), counterRate (spacing), gapFill (spine + LOCF).
     import spark.implicits._
     val D = 4299955200L // 49768 days * 86400, > 2^31
     val Dm1 = D - 86400L
     val D2 = D + 86400L
+
+    // reaggregate / remerge: epoch-hour state cascades to 1d keeping the
+    // BIGINT key, exact across the 2^31 boundary
+    def hourState(rows: (Long, Int, Int, Long, Long, Long)*) =
+      rows
+        .map { case (w, mn, mx, s, c, sq) => ("src0", 0, w, mn, mx, s, c, sq) }
+        .toDF("source", "bucket", "window_start", "min_tok", "max_tok", "sum_tok", "cnt_tok", "sumsq_tok")
+    def tierRows(df: DataFrame) =
+      df.select("window_start", "min_tok", "max_tok", "sum_tok", "cnt_tok")
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+        .toSet
+    val hours = hourState(
+      (Dm1 + 3600L, 4, 9, 13L, 2L, 97L),
+      (D, 1, 5, 6L, 2L, 26L),
+      (D + 3600L, 2, 7, 9L, 2L, 53L),
+      (D + 82800L, 3, 3, 3L, 1L, 9L))
+    val days = Rollup.reaggregate(hours, Tier.OneDay)
+    val wantDays = Set((Dm1, 4, 9, 13L, 2L), (D, 1, 7, 18L, 5L))
+    assert(tierRows(days) == wantDays, tierRows(days))
+    assert(days.schema("window_start").dataType == org.apache.spark.sql.types.LongType, days.schema)
+    val lateHour = hourState((D2 + 7200L, 8, 8, 8L, 1L, 64L), (D + 7200L, 0, 0, 0L, 1L, 0L))
+    assert(
+      tierRows(Rollup.remerge(days, lateHour, Tier.OneDay)) ==
+        Set((Dm1, 4, 9, 13L, 2L), (D, 0, 7, 18L, 6L), (D2, 8, 8, 8L, 1L)))
 
     // safeExpire: hours of day D are covered by the coarse 1d row at D
     // and expire; the hour in day Dm1 has no coverage and is retained

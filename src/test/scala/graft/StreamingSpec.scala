@@ -596,7 +596,7 @@ class StreamingSpec extends SparkSpec {
       val b = points(batches(i))
       mergeIn.addData(batches(i): _*); merge.processAllAvailable()
       maintIn.addData(batches(i): _*); maint.processAllAvailable()
-      // per-batch fold with mergeLate, the broadcast split
+      // per-batch fold with mergeLate, from the raw batch points
       def mergeLate(table: String, tier: String) =
         local(folded.get(table).fold(Rollup.rollupFromPoints(b, tier))(Rollup.mergeLate(_, b, tier)))
       val frontier = batches.take(i + 1).flatten.map(p => p._2 - p._2 % 60).max.toLong
