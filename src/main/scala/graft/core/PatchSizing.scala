@@ -36,12 +36,6 @@ object PatchSizing {
 
   val DefaultCandidates: Seq[Int] = Seq(8, 16, 32, 64, 128)
 
-  /** Fixed-range constraint (FixedPatchSizeConstraints, patch.py:44-55). */
-  def fixedRange(start: Int, stop: Int): (Int, Int) = {
-    require(start <= stop, s"fixed range start $start > stop $stop")
-    (start, stop)
-  }
-
   def legalRange(freq: String): (Int, Int) =
     DefaultRanges.getOrElse(
       baseAlias(freq),
@@ -143,17 +137,6 @@ object PatchSizing {
       else if (d % 60L == 0) of(60L, "T")
       else of(1L, "S")
     } else None
-  }
-
-  /** End-to-end: infer the freq from timestamps (falling back to
-   * `defaultFreq` when inference fails) and resolve the patch size. */
-  def resolveFromTimestamps(
-      epochSeconds: Seq[Long],
-      minTimePatches: Int,
-      defaultFreq: String = "H",
-      candidateSet: Seq[Int] = DefaultCandidates): Int = {
-    val freq = inferFreq(epochSeconds).getOrElse(defaultFreq)
-    resolve(freq, epochSeconds.length, minTimePatches, candidateSet)
   }
 
   /** All legal candidates for (freq, series length, minTimePatches). */

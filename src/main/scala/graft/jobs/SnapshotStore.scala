@@ -3,6 +3,7 @@ package graft.jobs
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftshim.SparkInternals
@@ -35,7 +36,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * A manifest also records the schema a parquet read of its data returns
  * (`schema`), so [[SnapshotStore.read]] hands it to the reader instead of
  * running a Spark job to infer it from a parquet footer. A manifest
- * written before the field existed has None and is read with inference.
+ * written before the field existed has None; its data is read through
+ * [[graft.sources.Parquet]], which takes the schema from a footer on the
+ * driver.
  */
 final case class SnapshotInfo(
     table: String,
@@ -160,9 +163,10 @@ final class SnapshotStore(base: String) {
 
   /** The version's rows. Its recorded schema spares the read a one-task
    * job that infers it from a parquet footer; a manifest without one
-   * infers. */
+   * reads the footer on the driver ([[graft.sources.Parquet]]). Building
+   * the read runs no job either way. */
   def read(spark: SparkSession, snap: SnapshotInfo): DataFrame =
-    snap.schema.fold(spark.read)(spark.read.schema(_)).parquet(snap.dataPath)
+    snap.schema.fold(Parquet.read(spark, snap.dataPath))(spark.read.schema(_).parquet(snap.dataPath))
 
   /** Time travel: the table as of a committed version (Iceberg
    * `VERSION AS OF` semantics — a version is immutable data + manifest,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.{Eager, Hash}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,18 +65,24 @@ object ConnectedComponents {
       aCol: String,
       bCol: String,
       maxRounds: Int = 25): (DataFrame, Int) = {
+    // the closure runs its actions while the caller builds a DataFrame;
+    // each round's jobs run under a job description naming the round
+    // (round 0: the canonical edge set)
+    val spark = pairs.sparkSession
+    def inRound[T](round: Int)(body: => T): T =
+      Eager.named(spark, s"ConnectedComponents: round $round")(body)
+    def fingerprint(e: DataFrame): (Long, String) = Hash.contentFingerprint(e, col("u"), col("v"))
+
     // canonical directed edges: (u, v) with u > v, no self-loops, distinct
-    var edges = pairs
-      .select(col(aCol).cast("long").as("_a"), col(bCol).cast("long").as("_b"))
-      .filter(col("_a") =!= col("_b"))
-      .select(greatest(col("_a"), col("_b")).as("u"), least(col("_a"), col("_b")).as("v"))
-      .distinct()
-      .localCheckpoint()
-
-    def fingerprint(e: DataFrame): (Long, String) =
-      graft.core.Hash.contentFingerprint(e, col("u"), col("v"))
-
-    var fp = fingerprint(edges)
+    var (edges, fp) = inRound(0) {
+      val e = pairs
+        .select(col(aCol).cast("long").as("_a"), col(bCol).cast("long").as("_b"))
+        .filter(col("_a") =!= col("_b"))
+        .select(greatest(col("_a"), col("_b")).as("u"), least(col("_a"), col("_b")).as("v"))
+        .distinct()
+        .localCheckpoint()
+      (e, fingerprint(e))
+    }
     var rounds = 0
     var converged = fp._1 == 0L // no edges at all -> nothing to close
     while (!converged && rounds < maxRounds) {
@@ -105,17 +112,21 @@ object ConnectedComponents {
       // neighbors, and u itself, re-point at m(u) = min(N-(u)); m < every
       // emitted source so canonical form is again preserved.
       val smallMins = large.groupBy("u").agg(min(col("v")).as("m"))
-      // lazy checkpoint: materialized by the fingerprint action just
-      // below (one Spark job per round instead of two — the per-round
-      // driver overhead, not the data, dominates small closures)
-      val next = large
-        .join(smallMins, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(smallMins.select(col("u"), col("m").as("v")))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val nfp = fingerprint(next)
+      // lazy checkpoint: its final stage is materialized by the
+      // fingerprint action just below (one result stage per round instead
+      // of two — the per-round driver overhead, not the data, dominates
+      // small closures). AQE still runs the round's shuffle stages at the
+      // checkpoint call, when it plans the RDD it hands out.
+      val (next, nfp) = inRound(rounds + 1) {
+        val n = large
+          .join(smallMins, "u")
+          .filter(col("v") =!= col("m"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .union(smallMins.select(col("u"), col("m").as("v")))
+          .distinct()
+          .localCheckpoint(eager = false)
+        (n, fingerprint(n))
+      }
       // `next` is now fully materialized in its own blocks — the previous
       // round's checkpoint can be freed immediately (local checkpoints
       // truncate lineage, so the next round never re-reads it). The FINAL

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.GraftFunctions.call
+import graft.sources.Parquet
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.awt.image.BufferedImage
 
@@ -362,8 +363,8 @@ object Multimodal {
    * [[Avi.framesOf]]. Row-local typed map — zero shuffle. */
   def mediaTable(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.read
-      .parquet(s"$sfDir/documents.parquet")
+    Parquet
+      .read(spark, s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long"))
       .as[Long]
       .mapPartitions(_.map { id =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Tier
+import graft.core.{Eager, Tier}
 import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -140,8 +140,8 @@ object Rollup {
    *
    * Loud ceiling: a delta touching more than `maxAffectedWindows`
    * windows (one eager `count()` of the delta aggregate, before the fold
-   * is built) is a bulk backfill — run a full re-rollup; the call fails
-   * with that diagnosis.
+   * is built, under a named job description) is a bulk backfill — run a
+   * full re-rollup; the call fails with that diagnosis.
    *
    * `latePoints` must be DETERMINISTIC (a table read or pure generator —
    * every caller in this engine): the guard's count and the fold each
@@ -164,7 +164,10 @@ object Rollup {
         s"(in ${nonDet.getOrElse("?")}); the delta is derived more than once " +
         "and could disagree with itself. localCheckpoint() the late points first.")
     val delta = pointState(latePoints, tier)
-    guardDelta(delta.count(), maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
+    val windows = Eager.named(latePoints.sparkSession, "Rollup.mergeLate: guard count of the late delta's windows") {
+      delta.count()
+    }
+    guardDelta(windows, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
     remerge(tierTable, delta, tier)
   }
 

@@ -96,16 +96,6 @@ object Sketches {
       .agg(call("kmv_kmin", col("h"), lit(k)).as("kmin"))
   }
 
-  /** Merge two count-min sketch tables (key + (r, c, cell_cnt) rows,
-   * SAME depth/width/hash family) by cell-wise addition — count-min is
-   * a linear sketch, so cms(A) + cms(B) == cms(A ∪ B) exactly, and a
-   * committed sketch folds a delta batch in one exchange bounded by
-   * keys x depth x width. */
-  def mergeCms(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((keys ++ Seq("r", "c")).map(col): _*)
-      .agg(sum(col("cell_cnt")).as("cell_cnt"))
-
   /** The raw committable count-min sketch: per-(source, r, c) counts.
    * See [[countMinTopK]] for the hash family and scale shape.
    *

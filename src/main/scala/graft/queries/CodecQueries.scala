@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.GraftFunctions.call
-import graft.sources.TokenTable
+import graft.sources.{Parquet, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,8 +62,8 @@ object CodecQueries {
     // scale-killer); at-scale payloads are per-tier-series by design
     // (q_tier_payload is the production shape).
     "q_codec_dod_roundtrip" -> ((s, dir) => {
-      s.read
-        .parquet(s"$dir/events.parquet")
+      Parquet
+        .read(s, s"$dir/events.parquet")
         .select(
           col("user_id"),
           unix_micros(date_trunc("hour", col("ts").cast("timestamp"))).as("ts_us"))

@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Tier
 import graft.functions.GraftFunctions.call
 import graft.operators.Rollup
-import graft.sources.{SimpleIngest, TokenTable}
+import graft.sources.{Parquet, SimpleIngest, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +18,8 @@ object IngestQueries {
     "q_ingest_long" -> ((s, dir) => {
       SimpleIngest
         .longToSeries(
-          s.read
-            .parquet(s"$dir/events.parquet")
+          Parquet
+            .read(s, s"$dir/events.parquet")
             .select(
               col("user_id"),
               // ts is TIMESTAMP_NTZ in the fixture; the session is pinned

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.GraftFunctions.call
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,9 +12,9 @@ import org.apache.spark.sql.functions._
 object PipelineQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Parquet.read(s, s"$dir/embeddings.parquet")
 
   val q: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_dedup_exact" -> ((s, dir) =>
@@ -66,13 +67,14 @@ object PipelineQueries {
       // (ConnectedComponents.scala), so no persist leak outlives the
       // query. Production incremental maintenance reads COMMITTED pair
       // snapshots (DedupJob), where the delta arrives pre-materialized.
-      val pairs =
+      // lazy: the first action fills the blocks, then both branches read
+      // them. AQE still runs the shingle self-join's shuffle stages at the
+      // checkpoint call, so they run under a job description of their own.
+      val pairs = graft.core.Eager.named(s, "q_dedup_incremental: checkpoint the pair set") {
         Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", "source", 3, 0.5)
           .select(col("doc_a"), col("doc_b"))
-          // lazy: materialized by the first action (plan/schema inspection
-          // of the query must not execute the shingle self-join at
-          // DataFrame-build time), then both branches read the blocks
           .localCheckpoint(eager = false)
+      }
       val isNew = (col("doc_a") + col("doc_b")) % 3 === 0
       val prev = ConnectedComponents.components(pairs.filter(!isNew), "doc_a", "doc_b")
       val labels =

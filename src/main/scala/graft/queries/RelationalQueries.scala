@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +14,8 @@ object RelationalQueries {
     // TPC-H Q1-shaped pricing summary. Sums in DECIMAL(18,2)/(38,4): exact,
     // order-insensitive; doubles derived only at the end.
     "q1_pricing" -> ((s, dir) =>
-      s.read
-        .parquet(s"$dir/lineitem.parquet")
+      Parquet
+        .read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") <= lit("1998-09-02"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -32,9 +33,9 @@ object RelationalQueries {
     // small relative to facts → explicit broadcast hints; at production
     // scale orders is the only shuffled side.
     "q_nation_revenue" -> ((s, dir) => {
-      val orders = s.read.parquet(s"$dir/orders.parquet")
-      val customer = broadcast(s.read.parquet(s"$dir/customer.parquet"))
-      val nation = broadcast(s.read.parquet(s"$dir/nation.parquet"))
+      val orders = Parquet.read(s, s"$dir/orders.parquet")
+      val customer = broadcast(Parquet.read(s, s"$dir/customer.parquet"))
+      val nation = broadcast(Parquet.read(s, s"$dir/nation.parquet"))
       orders
         .join(customer, col("o_custkey") === col("c_custkey"))
         .join(nation, col("c_nationkey") === col("n_nationkey"))
@@ -46,8 +47,8 @@ object RelationalQueries {
 
     // Filter + projection pushdown anchor: high-value open orders.
     "q_filter_orders" -> ((s, dir) =>
-      s.read
-        .parquet(s"$dir/orders.parquet")
+      Parquet
+        .read(s, s"$dir/orders.parquet")
         .filter(col("o_orderstatus") === "O" && col("o_totalprice") > 400000.0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))),
 
@@ -56,16 +57,16 @@ object RelationalQueries {
     // order key). customer broadcasts; lineitem⋈orders is the one shuffle.
     "q3_shipping" -> ((s, dir) => {
       val customer = broadcast(
-        s.read
-          .parquet(s"$dir/customer.parquet")
+        Parquet
+          .read(s, s"$dir/customer.parquet")
           .filter(col("c_mktsegment") === "BUILDING")
           .select("c_custkey"))
-      val orders = s.read
-        .parquet(s"$dir/orders.parquet")
+      val orders = Parquet
+        .read(s, s"$dir/orders.parquet")
         .filter(col("o_orderdate") < lit("1998-03-15"))
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      val lineitem = s.read
-        .parquet(s"$dir/lineitem.parquet")
+      val lineitem = Parquet
+        .read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") > lit("1998-03-15"))
         .select("l_orderkey", "l_extendedprice", "l_discount")
       lineitem
@@ -84,14 +85,14 @@ object RelationalQueries {
     // All dimensions broadcast; the single shuffle join is
     // lineitem ⋈ orders (the two fact tables) — the right 100-TB plan.
     "q5_region_supplier" -> ((s, dir) => {
-      val region = s.read.parquet(s"$dir/region.parquet").filter(col("r_name") === "ASIA")
-      val nation = s.read.parquet(s"$dir/nation.parquet")
-      val supplier = s.read.parquet(s"$dir/supplier.parquet")
-      val customer = s.read.parquet(s"$dir/customer.parquet")
-      val orders = s.read
-        .parquet(s"$dir/orders.parquet")
+      val region = Parquet.read(s, s"$dir/region.parquet").filter(col("r_name") === "ASIA")
+      val nation = Parquet.read(s, s"$dir/nation.parquet")
+      val supplier = Parquet.read(s, s"$dir/supplier.parquet")
+      val customer = Parquet.read(s, s"$dir/customer.parquet")
+      val orders = Parquet
+        .read(s, s"$dir/orders.parquet")
         .filter(col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1997-01-01"))
-      val lineitem = s.read.parquet(s"$dir/lineitem.parquet")
+      val lineitem = Parquet.read(s, s"$dir/lineitem.parquet")
       lineitem
         .join(orders, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(customer), col("o_custkey") === col("c_custkey"))
@@ -113,18 +114,18 @@ object RelationalQueries {
     // two broadcast copies of the nation dim, revenue per (supp_nation,
     // cust_nation, year).
     "q7_volume_shipping" -> ((s, dir) => {
-      val lineitem = s.read
-        .parquet(s"$dir/lineitem.parquet")
+      val lineitem = Parquet
+        .read(s, s"$dir/lineitem.parquet")
         .filter(col("l_shipdate") >= lit("1996-01-01") && col("l_shipdate") < lit("1998-01-01"))
         .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate")
-      val orders = s.read.parquet(s"$dir/orders.parquet").select("o_orderkey", "o_custkey")
-      val supplier = s.read.parquet(s"$dir/supplier.parquet").select("s_suppkey", "s_nationkey")
-      val customer = s.read.parquet(s"$dir/customer.parquet").select("c_custkey", "c_nationkey")
-      val n1 = s.read
-        .parquet(s"$dir/nation.parquet")
+      val orders = Parquet.read(s, s"$dir/orders.parquet").select("o_orderkey", "o_custkey")
+      val supplier = Parquet.read(s, s"$dir/supplier.parquet").select("s_suppkey", "s_nationkey")
+      val customer = Parquet.read(s, s"$dir/customer.parquet").select("c_custkey", "c_nationkey")
+      val n1 = Parquet
+        .read(s, s"$dir/nation.parquet")
         .select(col("n_nationkey").as("n1_key"), col("n_name").as("supp_nation"))
-      val n2 = s.read
-        .parquet(s"$dir/nation.parquet")
+      val n2 = Parquet
+        .read(s, s"$dir/nation.parquet")
         .select(col("n_nationkey").as("n2_key"), col("n_name").as("cust_nation"))
       lineitem
         .join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -148,17 +149,17 @@ object RelationalQueries {
     // combine), the HAVING survivors join back to orders, customers
     // broadcast; deterministic top-20.
     "q18_large_orders" -> ((s, dir) => {
-      val bigOrders = s.read
-        .parquet(s"$dir/lineitem.parquet")
+      val bigOrders = Parquet
+        .read(s, s"$dir/lineitem.parquet")
         .select("l_orderkey", "l_quantity")
         .groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("_tq"))
         .filter(col("_tq") > 200)
-      val orders = s.read
-        .parquet(s"$dir/orders.parquet")
+      val orders = Parquet
+        .read(s, s"$dir/orders.parquet")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val customer = broadcast(
-        s.read.parquet(s"$dir/customer.parquet").select("c_custkey", "c_name"))
+        Parquet.read(s, s"$dir/customer.parquet").select("c_custkey", "c_name"))
       orders
         .join(bigOrders, col("o_orderkey") === col("l_orderkey"))
         .join(customer, col("o_custkey") === col("c_custkey"))
@@ -174,7 +175,7 @@ object RelationalQueries {
     // Set op: UNION ALL of two disjoint slices + distinct count per side
     // (ancestor: ConcatDataset union, data/builder/_base.py:71-83).
     "q_union_sources" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Parquet.read(s, s"$dir/events.parquet")
       val a = ev
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), lit("purchase").as("side"))
@@ -194,8 +195,8 @@ object RelationalQueries {
     // (pure fractional subsample).
     "q_union_weighted" -> ((s, dir) => {
       import graft.sources.UnionBuilder
-      val docs = s.read
-        .parquet(s"$dir/documents.parquet")
+      val docs = Parquet
+        .read(s, s"$dir/documents.parquet")
         .select(
           col("doc_id").cast("bigint").as("doc_id"),
           col("source"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.GraftFunctions.call
 import graft.operators.PadResample
-import graft.sources.TokenTable
+import graft.sources.{Parquet, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,8 +102,8 @@ object ResampleQueries {
     "q_variate_index" -> ((s, dir) =>
       graft.operators.Reshape
         .addVariateIndex(
-          s.read
-            .parquet(s"$dir/embeddings.parquet")
+          Parquet
+            .read(s, s"$dir/embeddings.parquet")
             .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("d", "x"))),
           idCol = "vec_id",
           dimCol = "d",

@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Tier
 import graft.functions.GraftFunctions.call
 import graft.operators.{GapFill, Rollup}
-import graft.sources.{LsfCsv, TokenTable}
+import graft.sources.{LsfCsv, Parquet, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -136,8 +136,8 @@ object StatQueries {
     // doc kept iff hash(doc_id) mod 1000 < n_chars/2, i.e. keep probability
     // proportional to series length, reproducible at any parallelism.
     "q_weighted_sample" -> ((s, dir) =>
-      s.read
-        .parquet(s"$dir/documents.parquet")
+      Parquet
+        .read(s, s"$dir/documents.parquet")
         .select(col("doc_id").cast("bigint").as("doc_id"), col("source"), col("n_chars"))
         .withColumn("h", expr(graft.sources.UnionBuilder.permilleBucketSql("doc_id")))
         .filter(col("h") < expr("n_chars DIV 2"))
@@ -206,8 +206,8 @@ object StatQueries {
     // (dim, vec_id)) instead of np.random, so the sample reproduces at any
     // parallelism; ~1/4 of the 64 dims survive.
     "q_sample_dimension" -> ((s, dir) =>
-      s.read
-        .parquet(s"$dir/embeddings.parquet")
+      Parquet
+        .read(s, s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("d", "x")))
         .filter(expr("pmod(d * 2654435761L + vec_id, 4) = 0"))
         .groupBy(col("vec_id"), col("label"))

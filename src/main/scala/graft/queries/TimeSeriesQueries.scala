@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Tier
 import graft.operators.{AsOfJoin, GapFill, Rollup, Sessionize}
-import graft.sources.TokenTable
+import graft.sources.{Parquet, TokenTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object TimeSeriesQueries {
 
   private def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
+    Parquet.read(s, s"$dir/events.parquet")
 
   val q: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Gap-fill on real timestamps: hourly continuous aggregate per user,

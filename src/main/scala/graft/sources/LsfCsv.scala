@@ -36,14 +36,16 @@ object LsfCsv {
    * this helper must NOT be reused for real tables; a large export should
    * write partitioned CSV (drop the coalesce) or parquet. */
   def writeCsv(spark: SparkSession, sfDir: String, outPath: String): Unit =
-    spark.read
-      .parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("long"), col("source"), col("n_chars").cast("long"))
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .option("header", "true")
-      .csv(outPath)
+    graft.core.Eager.named(spark, "LsfCsv.writeCsv: export the documents metadata") {
+      Parquet
+        .read(spark, s"$sfDir/documents.parquet")
+        .select(col("doc_id").cast("long"), col("source"), col("n_chars").cast("long"))
+        .coalesce(1)
+        .write
+        .mode("overwrite")
+        .option("header", "true")
+        .csv(outPath)
+    }
 
   /** Schema-declared CSV read with the LSF variate modes:
    *  - "S"  (single-variate): id + value column only

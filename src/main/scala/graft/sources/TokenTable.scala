@@ -73,8 +73,8 @@ object TokenTable {
       spark: SparkSession,
       sfDir: String,
       balanceFanout: Boolean = false): DataFrame = {
-    val docs = spark.read
-      .parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet
+      .read(spark, s"$sfDir/documents.parquet")
       .select(
         col("doc_id").cast("bigint").as("d"),
         col("source"),
@@ -103,8 +103,8 @@ object TokenTable {
    * interpreted lambda per TOKEN, a constant-factor tax on every
    * raw()-based query at corpus scale. */
   def raw(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read
-      .parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet
+      .read(spark, s"$sfDir/documents.parquet")
       .select(
         col("doc_id").cast("bigint").as("d"),
         col("source"),

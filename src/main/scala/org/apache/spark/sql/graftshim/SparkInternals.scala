@@ -1,16 +1,45 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** The package-private Spark internals the engine needs: the Column ⇄
- * Expression conversions behind `GraftFunctions.call`, and the nullable
- * schema a file-source read returns (`SnapshotStore`'s manifests). */
+ * Expression conversions behind `GraftFunctions.call`, the nullable
+ * schema a file-source read returns (`SnapshotStore`'s manifests), and
+ * the session's Hadoop conf and parquet footer conversion behind
+ * `graft.sources.Parquet`. */
 object SparkInternals {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   // converted now, not deferred to analysis: builders fold literal arguments
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
   def asNullable(s: StructType): StructType = s.asNullable
+
+  private def classic(spark: SparkSession) = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** The Hadoop conf a read in this session sees (session `spark.hadoop.*`
+   * settings included). */
+  def hadoopConf(spark: SparkSession): Configuration = classic(spark).sessionState.newHadoopConf()
+
+  /** The Spark schema of one parquet file, from its footer read here on
+   * the driver: the converter and session settings (binary-as-string,
+   * INT96, TIMESTAMP_NTZ inference, the writer's own Spark schema in the
+   * footer metadata) a schema-inferring read applies to the file it
+   * samples. */
+  def parquetFooterSchema(spark: SparkSession, file: FileStatus, conf: Configuration): StructType = {
+    val options = HadoopReadOptions.builder(conf).withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
+    val meta = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(classic(spark).sessionState.conf))
+  }
 }

@@ -625,34 +625,6 @@ class JobSpec extends SparkSpec {
     assert(again.resumed && again.snap == first.snap)
   }
 
-  /** Spark jobs submitted on this thread while `body` runs. Listener
-   * events arrive asynchronously but in order, so once a marker job run
-   * afterwards has been seen, so has every job before it. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.jobsDuring"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(started.add)
-    }
-    def tagged(tag: String)(f: => Unit): Unit = {
-      sc.setLocalProperty(key, tag)
-      try f
-      finally sc.setLocalProperty(key, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      tagged("body")(body)
-      tagged("marker")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(started.contains("marker"), "the listener never saw the marker job")
-      started.toArray.count(_ == "body")
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("manifest schema: a read runs no job and matches inference; rollback keeps it; legacy infers") {
     import spark.implicits._
     val store = new SnapshotStore(tmpDir().toString)
@@ -667,7 +639,8 @@ class JobSpec extends SparkSpec {
     }
     val back = store.rollbackTo("tier", tier.version)
     assert(back.schema == tier.schema && store.latest("tier").get.schema == tier.schema)
-    // a manifest written before the schema field existed reads by inference
+    // a manifest written before the schema field existed takes the schema
+    // from its data's footer, on the driver: still no job
     val legacy = tmpDir()
     val data = legacy.resolve("t").resolve("data").resolve("v1-7")
     (1 to 3).toDF("x").write.parquet(data.toString)
@@ -679,6 +652,8 @@ class JobSpec extends SparkSpec {
     val legacyStore = new SnapshotStore(legacy.toString)
     val old = legacyStore.latest("t").get
     assert(old.schema.isEmpty)
+    assert(legacyStore.read(spark, old).schema == spark.read.parquet(data.toString).schema)
+    assert(jobsDuring(legacyStore.read(spark, old)) == 0, "building a legacy snapshot read must run no job")
     assert(legacyStore.read(spark, old).as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
   }
 

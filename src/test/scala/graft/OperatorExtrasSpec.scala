@@ -169,11 +169,8 @@ class OperatorExtrasSpec extends SparkSpec {
     assert(inferFreq(Seq(0L, 10, 15, 100)).isEmpty)
     assert(inferFreq(Seq(0L, 60)).isEmpty) // < 3 stamps
     assert(inferFreq(Seq(0L, 60, 60)).isEmpty) // non-increasing
-    // normalization + end-to-end: "5T" resolves through the "T" range
+    // normalization: "5T" resolves through the "T" range
     assert(PatchSizing.legalRange("5T") == PatchSizing.legalRange("T"))
-    assert(
-      PatchSizing.resolveFromTimestamps(grid(300, 577), 4) ==
-        PatchSizing.resolve("T", 577, 4))
   }
 
   test("sampler registry: deterministic, bounded, and distribution-shaped") {
@@ -271,21 +268,6 @@ class OperatorExtrasSpec extends SparkSpec {
     assert(rows.map(_.getInt(1)).sorted.toSeq == Seq(2, 3, 4))
     // and the data values survive as doubles
     assert(rows.map(_.getDouble(2)).sorted.toSeq == Seq(0.0, 1.0, 3.0))
-  }
-
-  test("NOP scaler: loc=0/scale=1 columns, identity under (x - loc) / scale") {
-    // PackedNOPScaler (packed_scaler.py:63-75) — the third scaler, the
-    // "scaling off" switch with the same (loc, scale) interface.
-    val df = spark.range(5).selectExpr("id", "CAST(id * 3 - 7 AS DOUBLE) AS x")
-    val out = graft.operators.Scalers.nop(df)
-    assert(out.columns.toSeq == Seq("id", "x", "loc", "scale"))
-    val rows = out.selectExpr("x", "(x - loc) / scale AS scaled").collect()
-    assert(rows.forall(r => r.getDouble(0) == r.getDouble(1)))
-  }
-
-  test("fixed patch-size constraints behave like the reference's FixedPatchSizeConstraints") {
-    assert(PatchSizing.fixedRange(16, 32) == (16, 32))
-    intercept[IllegalArgumentException](PatchSizing.fixedRange(32, 16))
   }
 
   test("validity filter counts skipped rows via observe (no extra pass)") {
@@ -621,20 +603,6 @@ class OperatorExtrasSpec extends SparkSpec {
         64))
     val full = kmins(Sketches.kmvSketch(pts, 3600, 64))
     assert(merged == full, "incremental merge must equal the full-corpus sketch")
-  }
-
-  test("CMS merge: linear sketch — committed cells + delta cells == full-corpus cells") {
-    import graft.operators.Sketches
-    val pts = graft.sources.TokenTable.points(spark, sf("sf0.001"))
-    val hist = pts.filter(expr("doc_id % 2 = 0"))
-    val delta = pts.filter(expr("doc_id % 2 = 1"))
-    def cells(df: org.apache.spark.sql.DataFrame) = df
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2)) -> r.getLong(3))
-      .toMap
-    val merged = cells(
-      Sketches.mergeCms(Sketches.cmsSketch(hist), Sketches.cmsSketch(delta), Seq("source")))
-    assert(merged == cells(Sketches.cmsSketch(pts)))
   }
 
   test("count-min: never under-counts, exact for a collision-free source") {

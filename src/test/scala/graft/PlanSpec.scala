@@ -437,6 +437,59 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("Union"), plan)
   }
 
+  test("eager build-time actions run under named job descriptions; the caller's is restored") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
+    val pts = TokenTable.points(spark, sf("sf0.001"))
+    val lateCond = expr("pos % 7 = 3")
+    val base = Rollup.rollupFromPoints(pts.filter(!lateCond), Tier.OneMinute)
+    sc.setJobDescription("caller")
+    try {
+      // "<step> at <File>.scala:<line>": the step, and where it was submitted
+      def step(description: String, file: String): String = {
+        val at = s" at $file.scala:"
+        assert(description.contains(at) && description.split(at).last.forall(_.isDigit), description)
+        description.split(at).head
+      }
+      var rounds = -1
+      val cc = jobsOf { rounds = graft.operators.ConnectedComponents.componentsWithRounds(pairs, "a", "b")._2 }
+      assert(rounds >= 1, cc)
+      assert(cc.map(step(_, "ConnectedComponents")).distinct == (0 to rounds).map(r => s"ConnectedComponents: round $r"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      val late = jobsOf(Rollup.mergeLate(base, pts.filter(lateCond), Tier.OneMinute))
+      assert(late.nonEmpty, late)
+      assert(late.map(step(_, "Rollup")).distinct == Seq("Rollup.mergeLate: guard count of the late delta's windows"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
+  /** The catalogue queries whose DataFrame build runs Spark jobs on
+   * purpose, with the job descriptions (prefixes) those jobs carry: the
+   * connected-components closure (one description per round), the
+   * shuffle stages of q_dedup_incremental's pair-set checkpoint,
+   * mergeLate's guard count and q_csv_lsf's CSV export. */
+  private val eagerBuilds: Map[String, Seq[String]] = Map(
+    "q_dedup_clusters" -> Seq("ConnectedComponents: "),
+    "q_dedup_incremental" -> Seq("ConnectedComponents: ", "q_dedup_incremental: checkpoint the pair set"),
+    "q_embed_keep" -> Seq("ConnectedComponents: "),
+    "q_rollup_late" -> Seq("Rollup.mergeLate: "),
+    "q_rollup_late_1h" -> Seq("Rollup.mergeLate: "),
+    "q_csv_lsf" -> Seq("LsfCsv.writeCsv: "))
+
+  test("building a catalogue query runs no Spark job, except the named eager builds") {
+    val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> jobsOf(fn(spark, sf("sf0.001")))
+    }
+    assert(built.size == 139)
+    val eager = built.filter(_._2.nonEmpty).toMap
+    assert(eager.keySet == eagerBuilds.keySet,
+      eager.toSeq.sortBy(_._1).map { case (q, d) => s"$q: ${d.size} jobs ${d.distinct.mkString("; ")}" }.mkString("\n"))
+    assert(eagerBuilds.size == 6)
+    for ((name, descriptions) <- eager)
+      assert(descriptions.forall(d => eagerBuilds(name).exists(d.startsWith)), s"$name: $descriptions")
+  }
+
   test("maintenance sink: each tier write is one aggregate exchange over the tier, no anti/semi split") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -21,6 +21,42 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (r.getLong(0), r.getLong(1))
   }
 
+  /** The Spark jobs `body` submits, one `spark.job.description` each (""
+   * when the job has none), in start order. A listener keeps the jobs
+   * started under a test-only local property; a marker job run afterwards
+   * proves the listener bus has delivered every start event of `body`. */
+  def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsDuring"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty(key)).foreach(tag =>
+            started.add(tag -> Option(p.getProperty("spark.job.description")).getOrElse("")))
+        }
+    }
+    def tagged(tag: String)(f: => Unit): Unit = {
+      sc.setLocalProperty(key, tag)
+      try f
+      finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged("body")(body)
+      tagged("marker")(sc.parallelize(Seq(1), 1).count())
+      def seen = started.toArray(Array.empty[(String, String)]).toSeq
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.exists(_._1 == "marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.exists(_._1 == "marker"), "the listener never saw the marker job")
+      seen.collect { case ("body", description) => description }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** How many Spark jobs `body` runs (see [[jobsOf]]). */
+  def jobsDuring(body: => Unit): Int = jobsOf(body).size
+
   /** Session confs that run every expression through its interpreted
    * `eval`: no whole-stage codegen, no generated projections. */
   val codegenOff: Seq[(String, String)] = Seq(
