@@ -4,6 +4,7 @@ import graft.core.Tier
 import graft.functions.GraftFunctions.call
 import graft.operators.{GapFill, Rollup}
 import graft.sources.{LsfCsv, Parquet, TokenTable}
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -219,10 +220,9 @@ object StatQueries {
     // metadata exported to CSV, read back with a DECLARED schema in mode
     // "M", then the loader's train-stat normalization as exact ppm weights.
     "q_csv_lsf" -> ((s, dir) => {
-      // per-process dir: two concurrent runs (Verify + Bench) must not race
-      // on one overwrite-while-read path
-      val out =
-        s"/tmp/graft_csv_${new java.io.File(dir).getName}_${ProcessHandle.current().pid()}"
+      // under the SparkContext's own temp dir, which SparkEnv.stop deletes:
+      // two concurrent runs (Verify + Bench) never share the path
+      val out = s"${SparkFiles.getRootDirectory()}/graft_csv_${new java.io.File(dir).getName}"
       LsfCsv.writeCsv(s, dir, out)
       LsfCsv
         .read(s, out, "M")

@@ -4,10 +4,11 @@ import graft.core.{Hash, Tier}
 import graft.functions.GraftFunctions.call
 import graft.jobs.{SnapshotInfo, SnapshotStore, StageRun}
 import graft.operators.{Retention, Rollup}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.storage.StorageLevel
+import scala.math.Ordering.Double.TotalOrdering
 
 /**
  * Structured Streaming counterparts of the batch operators. The reference
@@ -367,6 +368,48 @@ object StreamingOps {
           .as("payload_values_chimp"))
   }
 
+  /** The one keyed scan behind the five stateful stream operators
+   * ([[gapFillStream]], [[counterRateStream]], [[cusumStream]],
+   * [[asOfStream]], [[sessionize]]): rows grouped by `key`, one
+   * append-mode group-state scan per key without timeout, O(1) state per
+   * key. The contract all five share:
+   *   - per key, delivery is event-time-ordered ACROSS micro-batches;
+   *     within a batch the key's rows are sorted by `order`, a TOTAL
+   *     order, so ties (same-window duplicates, equal-time rows) resolve
+   *     by value, never by shuffle arrival order;
+   *   - a row for which `late(state, row)` holds is behind the key's
+   *     state: it is dropped, emits nothing and leaves the state where it
+   *     was, so no late row moves a key's state backwards. The window
+   *     operators call a row at or before the state's window late (one
+   *     output row per window: a re-delivered window is a duplicate);
+   *     `sessionize` and as-of right rows call only a strictly earlier
+   *     time late (an equal time stays in the session, and the last
+   *     equal-time right row wins);
+   *   - every other row goes through `step(key, state, row)`, which
+   *     returns the next state (None: still no state) and the rows to emit.
+   * So after any contiguous batching of an in-order stream, the emitted
+   * rows equal the batch twin's over the same rows (without re-delivered
+   * windows, for the window operators). */
+  private def keyedScan[I, K: Encoder, S: Encoder, O: Encoder](in: Dataset[I], key: I => K)(
+      order: Ordering[I],
+      late: (S, I) => Boolean)(
+      step: (K, Option[S], I) => (Option[S], Seq[O])): Dataset[O] =
+    in.groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (k: K, rows: Iterator[I], state: GroupState[S]) =>
+          var st = state.getOption
+          val out = rows.toSeq.sorted(order).flatMap { r =>
+            if (st.exists(late(_, r))) Nil
+            else {
+              val (next, emit) = step(k, st, r)
+              st = next
+              emit
+            }
+          }
+          st.foreach(state.update)
+          out.iterator
+      }
+
   final case class Obs(key: String, window_start: Long, value: Double)
   final case class Filled(key: String, window_start: Long, value: Double, is_gap: Boolean)
   final case class FillState(lastWindow: Long, lastValue: Double)
@@ -375,39 +418,20 @@ object StreamingOps {
    * — per key, every missing `width`-spaced window between consecutive
    * observations is emitted with the last observed value carried forward
    * (LOCF), including gaps that SPAN micro-batch boundaries (the keyed
-   * state remembers the last emitted window). Late/duplicate windows
-   * (<= the state's last window) are dropped, mirroring the watermark
-   * discipline of the windowed rollup. State is O(1) per key. */
+   * state remembers the last emitted window). Rows sort by (window,
+   * value); a window at or before the state's is late ([[keyedScan]]). */
   def gapFillStream(obs: Dataset[Obs], width: Long): Dataset[Filled] = {
     import obs.sparkSession.implicits._
-    obs
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[FillState, Filled](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Obs], state: GroupState[FillState]) =>
-          // (window, value) sort: same-window duplicates inside one batch
-          // resolve to the smallest value deterministically, never by
-          // shuffle arrival order (the counterRateStream discipline)
-          val sorted = rows.toSeq.sortBy(r => (r.window_start, r.value))
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[Filled]
-          sorted.foreach { o =>
-            if (st != null && o.window_start > st.lastWindow + width) {
-              var w = st.lastWindow + width
-              while (w < o.window_start) {
-                out += Filled(key, w, st.lastValue, is_gap = true)
-                w += width
-              }
-            }
-            if (st == null || o.window_start > st.lastWindow) {
-              out += Filled(key, o.window_start, o.value, is_gap = false)
-              st = FillState(o.window_start, o.value)
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
+    keyedScan[Obs, String, FillState, Filled](obs, _.key)(
+      Ordering.by(o => (o.window_start, o.value)),
+      (s, o) => o.window_start <= s.lastWindow) { (key, st, o) =>
+      val gaps = st.toSeq.flatMap { s =>
+        Range.Long(s.lastWindow + width, o.window_start, width)
+          .map(Filled(key, _, s.lastValue, is_gap = true))
       }
+      val seen = Filled(key, o.window_start, o.value, is_gap = false)
+      (Some(FillState(o.window_start, o.value)), gaps :+ seen)
+    }
   }
 
   final case class RateIn(key: String, window_start: Long, value: Long)
@@ -423,45 +447,23 @@ object StreamingOps {
    * [[graft.operators.SeriesAnalytics.counterRate]]: per key, the
    * reset-aware increase and gap-diluted rate against the PREVIOUS
    * window, with the last (window, value) carried in keyed state so the
-   * lag crosses micro-batch boundaries (the gapFillStream O(1)-per-key
-   * state discipline). Within a batch rows sort by (window, value); rows
-   * at or before the state's last window are dropped (late/duplicate —
-   * mirroring the batch operator's strict ordering), so SAME-WINDOW
-   * duplicates inside one batch resolve deterministically to the
-   * smallest value — shuffle arrival order never decides (a
-   * window-alone sort is stable and would keep whichever duplicate
-   * happened to arrive first). A key's first-ever window emits None
-   * increase/rate, exactly as the batch lag does. */
+   * lag crosses micro-batch boundaries. Rows sort by (window, value); a
+   * window at or before the state's is late ([[keyedScan]]), mirroring
+   * the batch operator's strict ordering. A key's first-ever window
+   * emits None increase/rate, exactly as the batch lag does. */
   def counterRateStream(in: Dataset[RateIn]): Dataset[RateOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.key)
-      .flatMapGroupsWithState[RateState, RateOut](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[RateIn], state: GroupState[RateState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.window_start, r.value))
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[RateOut]
-          sorted.foreach { r =>
-            if (st == null) {
-              out += RateOut(key, r.window_start, r.value, None, None)
-              st = RateState(r.window_start, r.value)
-            } else if (r.window_start > st.lastWindow) {
-              val inc =
-                if (r.value >= st.lastValue) r.value - st.lastValue
-                else r.value // counter reset: increase since the restart
-              out += RateOut(
-                key,
-                r.window_start,
-                r.value,
-                Some(inc),
-                Some(inc.toDouble / (r.window_start - st.lastWindow).toDouble))
-              st = RateState(r.window_start, r.value)
-            } // else: late/duplicate window — dropped
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    keyedScan[RateIn, String, RateState, RateOut](in, _.key)(
+      Ordering.by(r => (r.window_start, r.value)),
+      (s, r) => r.window_start <= s.lastWindow) { (key, st, r) =>
+      val (inc, rate) = st.map { s =>
+        val inc =
+          if (r.value >= s.lastValue) r.value - s.lastValue
+          else r.value // counter reset: increase since the restart
+        (inc, inc.toDouble / (r.window_start - s.lastWindow).toDouble)
+      }.unzip
+      (Some(RateState(r.window_start, r.value)), Seq(RateOut(key, r.window_start, r.value, inc, rate)))
+    }
   }
 
   final case class CusumIn(key: String, window_start: Long, value: Long)
@@ -478,35 +480,18 @@ object StreamingOps {
    * identity: keyed state carries (last window, running sum P of
    * (value - k), running min of P seeded at P_0 = 0), so
    * S = P - min(P-so-far) needs O(1) state per key and no replay of
-   * history. Within a batch rows sort by (window, value); rows at or
-   * before the state's last window are dropped (the counterRateStream
-   * late discipline), so same-window duplicates inside one batch
-   * resolve deterministically to the smallest value rather than by
-   * shuffle arrival order. After any batching of a duplicate-free
-   * window sequence the emitted (window, cusum, alarm) rows equal the
-   * batch operator's. */
+   * history. Rows sort by (window, value); a window at or before the
+   * state's is late ([[keyedScan]]). */
   def cusumStream(in: Dataset[CusumIn], k: Long, h: Long): Dataset[CusumOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[CusumIn], state: GroupState[CusumState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.window_start, r.value))
-          var st = state.getOption.getOrElse(CusumState(Long.MinValue, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[CusumOut]
-          sorted.foreach { r =>
-            if (r.window_start > st.lastWindow) {
-              val p = st.p + (r.value - k)
-              val minP = math.min(st.minP, p)
-              st = CusumState(r.window_start, p, minP)
-              val s = p - minP
-              out += CusumOut(key, r.window_start, r.value, s, s > h)
-            } // else: late/duplicate window — dropped
-          }
-          state.update(st)
-          out.iterator
-      }
+    keyedScan[CusumIn, String, CusumState, CusumOut](in, _.key)(
+      Ordering.by(r => (r.window_start, r.value)),
+      (s, r) => r.window_start <= s.lastWindow) { (key, st, r) =>
+      val p = st.fold(0L)(_.p) + (r.value - k)
+      val minP = math.min(st.fold(0L)(_.minP), p)
+      val out = CusumOut(key, r.window_start, r.value, p - minP, p - minP > h)
+      (Some(CusumState(r.window_start, p, minP)), Seq(out))
+    }
   }
 
   final case class AsOfIn(key: String, ts: Long, is_right: Boolean, value: Double)
@@ -517,52 +502,31 @@ object StreamingOps {
    * [[graft.operators.AsOfJoin]]: each left (event) row is joined to the
    * most recent right (quote) row at-or-before its time, per key, with the
    * last right row carried in keyed state so matches SPAN micro-batch
-   * boundaries (the gapFillStream state discipline; state is O(1) per
-   * key). The two streams arrive pre-unioned and tagged (`is_right`) — the
-   * same union-tag construction as the batch operator, which is also how a
-   * caller feeds two source streams: `leftDs.union(rightDs)` keeps this a
-   * single stateful operator instead of a stream-stream join with
-   * watermark-bounded buffers.
+   * boundaries. The two streams arrive pre-unioned and tagged
+   * (`is_right`) — the same union-tag construction as the batch operator,
+   * which is also how a caller feeds two source streams:
+   * `leftDs.union(rightDs)` keeps this a single stateful operator instead
+   * of a stream-stream join with watermark-bounded buffers.
    *
-   * Ordering contract (as sessionize/gapFillStream): per-key delivery is
-   * event-time-ordered ACROSS batches; within a batch rows are sorted
-   * here, right-before-left at equal times ("at or before"), equal-time
-   * right rows resolved max-value-last — the batch operator's tie rule.
+   * Rows sort right-before-left at equal times ("at or before"), equal-time
+   * right rows max-value-last — the batch operator's tie rule. A right
+   * row strictly before the carried one is late ([[keyedScan]]). A left
+   * row before the carried right row is out of contract: the carry is from
+   * its FUTURE, so it gets None (as from the batch operator when no right
+   * row precedes it) rather than a match that breaks at-or-before.
    * `tolerance` mirrors merge_asof: a match older than `tolerance` time
    * units yields None instead of a stale carry. */
   def asOfStream(in: Dataset[AsOfIn], tolerance: Option[Long] = None): Dataset[AsOfOut] = {
     import in.sparkSession.implicits._
-    in.groupByKey(_.key)
-      .flatMapGroupsWithState[AsOfState, AsOfOut](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[AsOfIn], state: GroupState[AsOfState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.ts, r.is_right, r.value))(
-            Ordering.Tuple3(Ordering.Long, Ordering.Boolean.reverse, Ordering.Double.TotalOrdering))
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[AsOfOut]
-          sorted.foreach { r =>
-            if (r.is_right) {
-              // monotonic guard: a late right row older than the carried
-              // state must not regress it
-              if (st == null || r.ts >= st.rightTs) st = AsOfState(r.ts, r.value)
-            } else {
-              val v = st match {
-                case null => None
-                // out-of-contract LATE left row: the carried right state is
-                // from the FUTURE relative to it — emitting the carry would
-                // violate at-or-before (the batch operator yields None for
-                // this row), so refuse the match rather than lie
-                case s if s.rightTs > r.ts => None
-                case s if tolerance.exists(tol => r.ts - s.rightTs > tol) => None
-                case s => Some(s.rightValue)
-              }
-              out += AsOfOut(key, r.ts, v)
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
+    keyedScan[AsOfIn, String, AsOfState, AsOfOut](in, _.key)(
+      Ordering.by(r => (r.ts, !r.is_right, r.value)),
+      (s, r) => r.is_right && r.ts < s.rightTs) { (key, st, r) =>
+      if (r.is_right) (Some(AsOfState(r.ts, r.value)), Nil)
+      else {
+        val v = st.filter(s => s.rightTs <= r.ts && tolerance.forall(r.ts - s.rightTs <= _))
+        (st, Seq(AsOfOut(key, r.ts, v.map(_.rightValue))))
       }
+    }
   }
 
   /** Continuous cardinality maintenance: each micro-batch's per-window
@@ -596,31 +560,24 @@ object StreamingOps {
   final case class SessionState(sessionId: Long, lastTsUs: Long)
   final case class SessionAssignment(user_id: Long, ts_us: Long, session_id: Long)
 
-  /** Streaming sessionization: custom keyed state via
-   * flatMapGroupsWithState — the streaming counterpart of
-   * [[graft.operators.Sessionize]] (same gap rule). Assumes per-user
-   * in-order delivery within a batch (sorted inside the group). */
+  /** Streaming sessionization — the continuous face of
+   * [[graft.operators.Sessionize]] (same gap rule): per user, a new
+   * session starts when an event is more than `gapMicros` after the
+   * previous one, with (session id, last time) in keyed state so sessions
+   * span micro-batches. Rows sort by (time, value); an event strictly
+   * before the state's last time is late and dropped ([[keyedScan]]), so
+   * it cannot rewind the session clock. */
   def sessionize(
       events: Dataset[Ev],
       gapMicros: Long): Dataset[SessionAssignment] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionAssignment](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[SessionState]) =>
-          val sorted = rows.toSeq.sortBy(_.ts_us)
-          var st = state.getOption.getOrElse(SessionState(0L, Long.MinValue))
-          val out = sorted.map { e =>
-            if (st.lastTsUs != Long.MinValue && e.ts_us - st.lastTsUs > gapMicros)
-              st = SessionState(st.sessionId + 1, e.ts_us)
-            else
-              st = SessionState(st.sessionId, e.ts_us)
-            SessionAssignment(user, e.ts_us, st.sessionId)
-          }
-          state.update(st)
-          out.iterator
+    keyedScan[Ev, Long, SessionState, SessionAssignment](events, _.user_id)(
+      Ordering.by(e => (e.ts_us, e.value)),
+      (s, e) => e.ts_us < s.lastTsUs) { (user, st, e) =>
+      val id = st.fold(0L) { s =>
+        if (e.ts_us - s.lastTsUs > gapMicros) s.sessionId + 1 else s.sessionId
       }
+      (Some(SessionState(id, e.ts_us)), Seq(SessionAssignment(user, e.ts_us, id)))
+    }
   }
 }

@@ -490,6 +490,18 @@ class PlanSpec extends SparkSpec {
       assert(descriptions.forall(d => eagerBuilds(name).exists(d.startsWith)), s"$name: $descriptions")
   }
 
+  test("q_csv_lsf exports its CSV under the SparkContext's temp dir, not a per-process /tmp dir") {
+    val pid = ProcessHandle.current().pid()
+    def leftBehind =
+      Option(new java.io.File("/tmp").list()).toSeq.flatten
+        .filter(n => n.startsWith("graft_csv_") && n.endsWith(s"_$pid"))
+    val rows = SparkEntry.queries("q_csv_lsf")(spark, sf("sf0.001")).collect()
+    assert(rows.nonEmpty)
+    assert(leftBehind.isEmpty, leftBehind)
+    // SparkEnv.stop deletes this directory with the SparkContext
+    assert(new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), "graft_csv_sf0.001").isDirectory)
+  }
+
   test("maintenance sink: each tier write is one aggregate exchange over the tier, no anti/semi split") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -2,7 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.util.Random
+
 import graft.streaming.StreamingOps
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -843,6 +846,33 @@ class StreamingSpec extends SparkSpec {
       rows == Seq((1L, 100L, 0L), (1L, 600L, 0L), (1L, 1400L, 0L), (1L, 9999L, 1L)))
   }
 
+  test("streaming sessionize: a late row is dropped and does not rewind the session") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[StreamingOps.Ev]
+    val q = StreamingOps
+      .sessionize(in.toDS(), gapMicros = 1000L)
+      .writeStream
+      .format("memory")
+      .queryName("sessions_late")
+      .outputMode(OutputMode.Append())
+      .start()
+    // 500 arrives a batch after 9999: behind the state, so dropped; 10500
+    // is within the gap of 9999 and stays in session 0, as the batch
+    // operator puts it over the in-order rows {9999, 10500}
+    for (ts <- Seq(9999L, 500L, 10500L)) {
+      in.addData(StreamingOps.Ev(1, ts, 1.0))
+      q.processAllAvailable()
+    }
+    val rows = spark
+      .sql("SELECT user_id, ts_us, session_id FROM sessions_late ORDER BY ts_us")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq
+    q.stop()
+    assert(rows == Seq((1L, 9999L, 0L), (1L, 10500L, 0L)))
+  }
+
   test("streaming KMV sketch: bounded keyed state merges across micro-batches == batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -910,5 +940,155 @@ class StreamingSpec extends SparkSpec {
     val want = kmins(graft.operators.Sketches.kmvSketch(
       (b1 ++ b2).toDF("source", "pos", "tok"), 10, 8))
     assert(got == want, "folded streaming sketch must equal the full-corpus sketch")
+  }
+
+  // Property tests of the keyed-scan operators: a random in-order input
+  // with exact re-deliveries, cut into random contiguous micro-batches
+  // and shuffled inside each, streams to the same rows as the operator's
+  // batch twin, at 1 and 7 shuffle partitions. The seeds are fixed.
+  private val propertySeeds = Seq(11, 12)
+
+  /** Random contiguous micro-batches of the in-order `rows` (2 to 5 of
+   * them, each shuffled), with about a fifth of the rows re-delivered
+   * right after the original, so a copy can land in the next batch. */
+  private def microBatches[T](rnd: Random, rows: Seq[T]): Seq[Seq[T]] = {
+    val delivered = rows.flatMap(r => if (rnd.nextInt(5) == 0) Seq(r, r) else Seq(r))
+    val nBatches = 2 + rnd.nextInt(4)
+    val cuts = rnd.shuffle((1 until delivered.size).toList).take(nBatches - 1).sorted
+    val bounds = 0 +: cuts :+ delivered.size
+    bounds.zip(bounds.tail).map { case (a, b) => rnd.shuffle(delivered.slice(a, b)) }
+  }
+
+  /** Every row `op` emits over `batches` fed to a MemoryStream, one
+   * micro-batch each, at `partitions` shuffle partitions. */
+  private def streamed[I: Encoder](
+      name: String,
+      partitions: Int,
+      batches: Seq[Seq[I]])(op: Dataset[I] => Dataset[_]): Seq[Row] =
+    withConfs("spark.sql.shuffle.partitions" -> partitions.toString) {
+      implicit val sqlCtx = spark.sqlContext
+      val in = MemoryStream[I]
+      val q = op(in.toDS()).writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(OutputMode.Append())
+        .start()
+      try batches.foreach { b =>
+        in.addData(b)
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).collect().toSeq
+    }
+
+  /** Asserts, for each seed and at 1 and 7 partitions, that streaming the
+   * seed's input (`gen`) through `op` emits `twin`'s rows of its distinct
+   * rows (or all rows, with `twinSeesCopies`), compared as sorted rows. */
+  private def streamsLikeTwin[I: Encoder](
+      name: String,
+      gen: Random => Seq[I],
+      twinSeesCopies: Boolean = false)(
+      op: Dataset[I] => Dataset[_])(
+      twin: Seq[I] => DataFrame): Unit =
+    for (seed <- propertySeeds; partitions <- Seq(1, 7)) {
+      val rnd = new Random(seed)
+      val batches = microBatches(rnd, gen(rnd))
+      val all = batches.flatten
+      val got = streamed(s"${name}_${seed}_$partitions", partitions, batches)(op)
+      val want = twin(if (twinSeesCopies) all else all.distinct).collect().toSeq
+      assert(got.map(_.toString).sorted == want.map(_.toString).sorted,
+        s"seed $seed, $partitions partitions, batches $batches")
+    }
+
+  /** Per key `a`..`c`, 6 to 12 strictly increasing `width`-aligned
+   * windows, 1 to 4 widths apart, each value `next(previous value)`;
+   * all keys merged in window order. */
+  private def windowSeries[T](rnd: Random, width: Long)(row: (String, Long, Long) => T)(
+      next: Long => Long): Seq[T] =
+    Seq("a", "b", "c").flatMap { k =>
+      val windows = Iterator.iterate(rnd.nextInt(3) * width)(_ + (1 + rnd.nextInt(4)) * width)
+        .take(6 + rnd.nextInt(7)).toSeq
+      windows.zip(windows.scanLeft(0L)((v, _) => next(v)).tail).map { case (w, v) => (k, w, v) }
+    }.sortBy { case (k, w, _) => (w, k) }.map(row.tupled)
+
+  test("property: streaming gap-fill == batch GapFill.gapFill (LOCF) over random micro-batches") {
+    import spark.implicits._
+    import StreamingOps.Obs
+    streamsLikeTwin[Obs]("prop_gapfill", rnd =>
+      windowSeries(rnd, 60L)((k, w, v) => Obs(k, w, v / 4.0))(_ => rnd.nextInt(100).toLong))(
+      StreamingOps.gapFillStream(_, 60L)) { rows =>
+      graft.operators.GapFill
+        .gapFill(rows.toDF().withColumn("seen", lit(true)), Seq("key"), "window_start", 60L, Seq("value"))
+        .select(col("key"), col("window_start"), col("value"), col("seen").isNull.as("is_gap"))
+    }
+  }
+
+  test("property: streaming counter rate == batch SeriesAnalytics.counterRate over random micro-batches") {
+    import spark.implicits._
+    import StreamingOps.RateIn
+    // a counter that grows, with an occasional reset
+    streamsLikeTwin[RateIn]("prop_rate", rnd =>
+      windowSeries(rnd, 60L)(RateIn) { prev =>
+        if (rnd.nextInt(6) == 0) rnd.nextInt(5).toLong else prev + rnd.nextInt(20)
+      })(
+      StreamingOps.counterRateStream) { rows =>
+      graft.operators.SeriesAnalytics
+        .counterRate(rows.toDF().select(col("key").as("source"), lit(0).as("bucket"),
+          col("window_start"), col("value").as("v")), "v")
+        .drop("bucket")
+    }
+  }
+
+  test("property: streaming CUSUM == batch SeriesAnalytics.cusum over random micro-batches") {
+    import spark.implicits._
+    import StreamingOps.CusumIn
+    streamsLikeTwin[CusumIn]("prop_cusum", rnd =>
+      windowSeries(rnd, 60L)(CusumIn)(_ => rnd.nextInt(25).toLong))(
+      StreamingOps.cusumStream(_, 10L, 15L)) { rows =>
+      graft.operators.SeriesAnalytics
+        .cusum(rows.toDF().select(col("key").as("source"), lit(0).as("bucket"),
+          col("window_start"), col("value").as("v")), "v", 10L, 15L)
+        .drop("bucket")
+    }
+  }
+
+  test("property: streaming as-of join == batch AsOfJoin.asOf over random micro-batches") {
+    import spark.implicits._
+    import StreamingOps.AsOfIn
+    // per key, left and right rows on a 10-unit grid, equal times included,
+    // in the at-or-before order (right before left); one value per right time
+    def gen(rnd: Random): Seq[AsOfIn] =
+      (for {
+        t <- 0L to 200L by 10L
+        k <- Seq("a", "b")
+        right <- Seq(true, false)
+        if rnd.nextInt(5) < (if (right) 2 else 3)
+      } yield AsOfIn(k, t, right, if (right) rnd.nextInt(50).toDouble else 0.0))
+    for (tolerance <- Seq(None, Some(25L)))
+      streamsLikeTwin[AsOfIn](s"prop_asof_${tolerance.size}", gen, twinSeesCopies = true)(
+        StreamingOps.asOfStream(_, tolerance)) { rows =>
+        val ds = rows.toDS()
+        graft.operators.AsOfJoin.asOf(
+          ds.filter(!_.is_right).select(col("key"), col("ts").as("t")),
+          ds.filter(_.is_right).distinct().select(col("key"), col("ts").as("rt"), col("value")),
+          Seq("key"), "t", "rt", Seq("value"), tolerance)
+      }
+  }
+
+  test("property: streaming sessionize == batch Sessionize.assignSessions over random micro-batches") {
+    import spark.implicits._
+    import StreamingOps.Ev
+    // steps of 0, 500, 1000 or 1500 us against a 1000 us gap: equal
+    // times, in-gap steps, the gap edge and splits
+    def gen(rnd: Random): Seq[Ev] =
+      Seq(1L, 2L, 3L).flatMap { u =>
+        Iterator.iterate(0L)(_ + rnd.nextInt(4) * 500L).take(8 + rnd.nextInt(8))
+          .map(t => Ev(u, t, rnd.nextInt(3).toDouble)).toSeq
+      }.sortBy(e => (e.ts_us, e.user_id))
+    streamsLikeTwin[Ev]("prop_sessions", gen, twinSeesCopies = true)(StreamingOps.sessionize(_, 1000L)) {
+      rows =>
+        graft.operators.Sessionize
+          .assignSessions(rows.toDF(), Seq("user_id"), "ts_us", 1000L, tieBreak = Seq("value"))
+          .select(col("user_id"), col("ts_us"), col("session_id"))
+    }
   }
 }
