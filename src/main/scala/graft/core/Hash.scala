@@ -23,9 +23,8 @@ object Hash {
    * order-independent, so equal row multisets fingerprint equally under
    * any partitioning; it rides DECIMAL(38,0) because a BIGINT sum of 64-bit
    * hashes overflows (and ANSI mode rightly throws) at any real row count.
-   * An empty frame is (0, "0"). Keys the streaming sinks' batch commits,
-   * the sketch and dedup delta jobs, and the connected-components
-   * convergence check. */
+   * An empty frame is (0, "0"). Keys the streaming sinks' batch commits
+   * and the sketch and dedup delta jobs. */
   def contentFingerprint(df: DataFrame, cols: Column*): (Long, String) = {
     val r = df
       .agg(

@@ -1,8 +1,15 @@
 package graft.operators
 
 import graft.core.{Eager, Hash}
+import org.apache.spark.{Aggregator, HashPartitioner, Partitioner, ShuffleDependency}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SparkInternals
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.reflect.ClassTag
 
 /**
  * Pairs -> clusters -> keep-list canonicalization for the dedup family.
@@ -21,41 +28,77 @@ import org.apache.spark.sql.functions._
  *    Rastogi & Vassilvitskii, "Connected Components in MapReduce and
  *    Beyond", SoCC 2014) — never a driver-side union-find, which would
  *    serialize the whole edge set through one machine;
- *  - each star op is expressed as groupBy-min PLUS an equi-join back to
- *    the edges, NOT as collect_list adjacency: a hot node (the root of a
- *    million-document duplicate cluster) therefore never materializes a
- *    million-element array inside one task, and AQE's skew handling
- *    applies to the join like any other;
+ *  - the rounds run on an `RDD[(Long, Long)]` of canonical edges
+ *    (u > v), not on DataFrames: a round is a handful of RDD shuffles
+ *    and ONE Spark job, with no Catalyst plan, no AQE re-planning (which
+ *    submits one job per shuffle stage) and no generated classes per
+ *    round. The pair frame is read once (round 0) and the labels re-enter
+ *    SQL once, as a two-column LONG frame;
+ *  - each star op is a min aggregate (map-side combined, like
+ *    `reduceByKey`) PLUS a merge-walk join ([[mergeWalk]]) of the edges
+ *    against that one-row-per-key side over co-partitioned, key-sorted
+ *    partitions — NOT collect_list adjacency and NOT an RDD join, whose
+ *    co-group buffers every row of a key: the root of a million-document
+ *    duplicate cluster therefore never materializes a million-element
+ *    array inside one task. The walk streams a hot key's rows past its one
+ *    right value, so the unique side needs no skew split (AQE's remedy
+ *    for a hot key in a SQL join);
+ *  - large-star needs only each node's SMALLER neighbours:
+ *    m(x) = min(x, min v over edges (x, v)), since every larger neighbour
+ *    exceeds x;
  *  - rounds converge in O(log^2 n) (2-4 in practice on dedup graphs,
  *    whose components are near-cliques from band-collision pairing);
- *  - each round ends in localCheckpoint: iterative self-joins otherwise
- *    grow the logical plan (and any recomputation) exponentially. On a
- *    real cluster prefer `spark.sparkContext.setCheckpointDir` +
- *    `checkpoint()` for fault-tolerant truncation; local checkpoints
- *    trade executor-loss recovery for speed, the right trade in this
- *    single-JVM harness;
+ *  - each round ends in localCheckpoint: iterative rewrites otherwise
+ *    grow the lineage (and any recomputation) without bound. Once it is
+ *    written, the previous round's checkpoint blocks and this round's
+ *    shuffle files are deleted, so a closure holds one round's state on
+ *    disk, not every round's until a driver GC. On a real cluster prefer
+ *    `spark.sparkContext.setCheckpointDir` + `checkpoint()` for
+ *    fault-tolerant truncation; local checkpoints trade executor-loss
+ *    recovery for speed, the right trade in this single-JVM harness;
  *  - convergence is detected by an order-independent fingerprint
- *    (count + sum of xxhash64(u, v)) — one cheap action per round
- *    instead of a set-equality anti-join.
+ *    (count + wrapping sum of a 64-bit hash of (u, v)), computed by the
+ *    same job that materializes the round's checkpoint — no set-equality
+ *    anti-join and no second action.
  */
 object ConnectedComponents {
-
-  /** Frees the block-storage copy behind a `localCheckpoint`ed frame
-   * (idempotent). Without it the blocks stay in the block manager until
-   * GC happens to collect the RDD reference — per closure round, and per
-   * LSH chain ([[Dedup.lshChain]]'s release hook). */
-  private[operators] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** (node, rep) for every node appearing in `pairs`; rep is the MINIMUM
    * id of the node's connected component (a deterministic cluster
    * representative under any execution order). */
   def components(pairs: DataFrame, aCol: String, bCol: String, maxRounds: Int = 25): DataFrame =
     componentsWithRounds(pairs, aCol, bCol, maxRounds)._1
+
+  /** Left-outer merge join of `left` with `right`, two RDDs partitioned
+   * by one partitioner and key-sorted within each partition, where
+   * `right` holds at most one row per key: `f` sees every left row with
+   * its key's right value, if any. Both sides stream, so a key with a
+   * million left rows holds none of them in memory. */
+  private[graft] def mergeWalk[V, W, O: ClassTag](left: RDD[(Long, V)], right: RDD[(Long, W)])(
+      f: (Long, V, Option[W]) => O): RDD[O] =
+    left.zipPartitions(right) { (ls, rs) =>
+      val r = rs.buffered
+      ls.map { case (k, v) =>
+        while (r.hasNext && r.head._1 < k) r.next()
+        f(k, v, if (r.hasNext && r.head._1 == k) Some(r.head._2) else None)
+      }
+    }
+
+  /** The minimum value per key, partitioned by `part` and key-sorted
+   * within each partition: `reduceByKey(min)` (combined on the map side)
+   * with the sort done by the same shuffle's reader. */
+  private def minByKey(edges: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
+    new ShuffledRDD[Long, Long, Long](edges, part)
+      .setAggregator(Aggregator[Long, Long, Long](v => v, math.min, math.min))
+      .setMapSideCombine(true)
+      .setKeyOrdering(Ordering.Long)
+
+  /** The shuffles in `rdd`'s lineage, down to the first checkpointed RDDs. */
+  private def shuffleIds(rdd: RDD[_]): Seq[Int] =
+    rdd.dependencies.flatMap {
+      case s: ShuffleDependency[_, _, _] => s.shuffleId +: shuffleIds(s.rdd)
+      case d => shuffleIds(d.rdd)
+    }.distinct
 
   /** As [[components]], also returning the number of full
    * large-star+small-star rounds executed before the edge set reached its
@@ -71,69 +114,65 @@ object ConnectedComponents {
     val spark = pairs.sparkSession
     def inRound[T](round: Int)(body: => T): T =
       Eager.named(spark, s"ConnectedComponents: round $round")(body)
-    def fingerprint(e: DataFrame): (Long, String) = Hash.contentFingerprint(e, col("u"), col("v"))
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // checkpoints `e` and fingerprints it in ONE job: the job computes
+    // every partition, so the checkpoint finds all its blocks written
+    def checkpointed(e: RDD[(Long, Long)]): (RDD[(Long, Long)], (Long, Long)) = {
+      e.localCheckpoint()
+      val fp = e
+        .mapPartitions { it =>
+          var n, sum = 0L
+          it.foreach { case (u, v) => n += 1; sum += Hash.mix64(Hash.mix64(u) ^ v) }
+          Iterator((n, sum))
+        }
+        .fold((0L, 0L)) { case ((n1, s1), (n2, s2)) => (n1 + n2, s1 + s2) }
+      (e, fp)
+    }
 
     // canonical directed edges: (u, v) with u > v, no self-loops, distinct
     var (edges, fp) = inRound(0) {
-      val e = pairs
-        .select(col(aCol).cast("long").as("_a"), col(bCol).cast("long").as("_b"))
-        .filter(col("_a") =!= col("_b"))
-        .select(greatest(col("_a"), col("_b")).as("u"), least(col("_a"), col("_b")).as("v"))
-        .distinct()
-        .localCheckpoint()
-      (e, fingerprint(e))
+      val rows = pairs.select(col(aCol).cast("long"), col(bCol).cast("long")).queryExecution.toRdd
+      checkpointed(
+        rows
+          .flatMap { r =>
+            if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None
+            else Some((math.max(r.getLong(0), r.getLong(1)), math.min(r.getLong(0), r.getLong(1))))
+          }
+          .distinct(part.numPartitions))
     }
     var rounds = 0
     var converged = fp._1 == 0L // no edges at all -> nothing to close
     while (!converged && rounds < maxRounds) {
-      // LARGE-STAR: for each node u, every STRICTLY LARGER neighbor is
-      // re-pointed at the minimum of u's closed neighborhood
-      // m(u) = min(N(u) + {u}). Output edges (v, m) keep u>v canonical
-      // form automatically (v > u >= m).
-      val nbrs = edges
-        .select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-      val largeMins = nbrs
-        .groupBy("u")
-        .agg(min(col("v")).as("_mn"))
-        .select(col("u"), least(col("u"), col("_mn")).as("m"))
-      // The rows of `nbrs` with v > u are exactly the reversed canonical
-      // edges, so the join probes |E| rows (not 2|E|) — and each canonical
-      // edge yields exactly ONE output row, so no intermediate distinct is
-      // needed (duplicate (v, m) rows from sibling edges are collapsed by
-      // `next`'s distinct below; they never exceed |E|). Saves one full
-      // shuffle and halves the join's shuffled volume per round.
-      val large = edges
-        .select(col("v").as("u"), col("u").as("v"))
-        .join(largeMins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-      // SMALL-STAR over the (larger -> smaller) edges: all of u's smaller
-      // neighbors, and u itself, re-point at m(u) = min(N-(u)); m < every
-      // emitted source so canonical form is again preserved.
-      val smallMins = large.groupBy("u").agg(min(col("v")).as("m"))
-      // lazy checkpoint: its final stage is materialized by the
-      // fingerprint action just below (one result stage per round instead
-      // of two — the per-round driver overhead, not the data, dominates
-      // small closures). AQE still runs the round's shuffle stages at the
-      // checkpoint call, when it plans the RDD it hands out.
-      val (next, nfp) = inRound(rounds + 1) {
-        val n = large
-          .join(smallMins, "u")
-          .filter(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .union(smallMins.select(col("u"), col("m").as("v")))
-          .distinct()
-          .localCheckpoint(eager = false)
-        (n, fingerprint(n))
+      // LARGE-STAR: every neighbour u > v of node v is re-pointed at
+      // m(v) = min(v, v's smaller neighbours); v > m keeps (u, m)
+      // canonical. Each edge yields exactly ONE output row, so no
+      // intermediate distinct is needed (duplicate rows from sibling
+      // edges are collapsed by the round's distinct below).
+      val mins = minByKey(edges, part)
+      val large = mergeWalk(edges.map(_.swap).repartitionAndSortWithinPartitions(part), mins) {
+        (v, u, m) => (u, m.getOrElse(v))
       }
+      // SMALL-STAR over the (larger -> smaller) edges: all of u's smaller
+      // neighbours, and u itself, re-point at m(u) = min(N-(u)); m < every
+      // emitted source so canonical form is again preserved. Every key of
+      // `large` has its row in `smallMins`.
+      val smallMins = minByKey(large, part)
+      val star = mergeWalk(large.repartitionAndSortWithinPartitions(part), smallMins) { (_, v, m) => (v, m.get) }
+        .filter { case (v, m) => v != m }
+        .union(smallMins)
+        .distinct(part.numPartitions)
+      val shuffles = shuffleIds(star)
+      val (next, nfp) = inRound(rounds + 1)(checkpointed(star))
       // `next` is now fully materialized in its own blocks — the previous
-      // round's checkpoint can be freed immediately (local checkpoints
-      // truncate lineage, so the next round never re-reads it). The FINAL
+      // round's checkpoint and this round's shuffle files can be freed
+      // immediately (local checkpoints truncate lineage, so the next round
+      // never re-reads them; left to the ContextCleaner, every round's
+      // shuffle files would stay on disk until a driver GC). The FINAL
       // edge set is deliberately NOT freed: the returned labels read it
       // lazily; its blocks are reclaimed by the ContextCleaner once the
       // caller drops the labels DataFrame.
-      unpersistCheckpoint(edges)
+      edges.unpersist(blocking = false)
+      shuffles.foreach(SparkInternals.removeShuffle(spark, _))
       converged = nfp == fp
       fp = nfp
       edges = next
@@ -146,9 +185,10 @@ object ConnectedComponents {
     // fixed point = disjoint stars rooted at each component minimum:
     // every non-root u carries exactly one edge (u, root)
     val labels = edges
-      .select(col("u").as("node"), col("v").as("rep"))
-      .union(edges.select(col("v").as("node"), col("v").as("rep")).distinct())
-    (labels, rounds)
+      .union(edges.map(_._2).distinct(part.numPartitions).map(v => (v, v)))
+      .map { case (node, rep) => InternalRow(node, rep) }
+    val schema = StructType(Seq("node", "rep").map(StructField(_, LongType, nullable = false)))
+    (SparkInternals.dataFrame(spark, labels, schema), rounds)
   }
 
   /** The keep/drop verdict per document: every doc with its cluster

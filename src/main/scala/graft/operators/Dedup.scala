@@ -178,8 +178,8 @@ object Dedup {
    * the banding rests on, monitored with zero extra scans.
    *
    * Returns the verified pairs plus the release hook that frees the
-   * checkpoint blocks ([[ConnectedComponents.unpersistCheckpoint]]); call
-   * it once the pairs are materialized (idempotent). Without it the
+   * checkpoint blocks (`unpersistCheckpoint`); call it once the pairs are
+   * materialized (idempotent). Without it the
    * blocks live until the ContextCleaner collects the dropped pairs
    * DataFrame — the lifetime [[minHashLshPairs]] leaves them, as its
    * caller holds no hook. */
@@ -214,8 +214,18 @@ object Dedup {
     val verified = obs
       .map { case (_, v) => verified0.observe(v, count(lit(1)).as("verified_pairs")) }
       .getOrElse(verified0)
-    (verified, () => ConnectedComponents.unpersistCheckpoint(sets))
+    (verified, () => unpersistCheckpoint(sets))
   }
+
+  /** Frees the block-storage copy behind a `localCheckpoint`ed frame
+   * (idempotent). Without it the blocks stay in the block manager until
+   * GC happens to collect the RDD reference. */
+  private def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Band-bucket candidate pairs over (_id, sig) signature rows: one
    * SplitMix64 chain bucket id per band (`lsh_bands` kernel), then ONE

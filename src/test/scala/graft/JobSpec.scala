@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import graft.core.Tier
 import graft.jobs.{RollupJob, SnapshotStore}
@@ -10,8 +10,6 @@ import graft.sources.TokenTable
 /** Resumability, lineage and salt-skew correctness of the production job. */
 class JobSpec extends SparkSpec {
 
-  private def tmpDir(): Path = Files.createTempDirectory("graft-job-")
-
   private def tierRows(dir: String, store: SnapshotStore, table: String) =
     store
       .read(spark, store.latest(table).get)
@@ -20,7 +18,7 @@ class JobSpec extends SparkSpec {
       .toSet
 
   test("job computes the full ladder and matches the in-memory cascade bit-exactly") {
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val dir = sf("sf0.001")
     val results = RollupJob.run(spark, dir, base)
     assert(results.size == 5 && results.values.forall(!_.resumed))
@@ -34,7 +32,7 @@ class JobSpec extends SparkSpec {
   }
 
   test("re-run resumes every stage; invalidated suffix recomputes identically") {
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val dir = sf("sf0.001")
     RollupJob.run(spark, dir, base)
     val store = new SnapshotStore(base)
@@ -57,7 +55,7 @@ class JobSpec extends SparkSpec {
   }
 
   test("lineage covers all rows; metrics emitted per computed stage") {
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     RollupJob.run(spark, sf("sf0.001"), base)
     val store = new SnapshotStore(base)
     val lineage = store.read(spark, store.latest("lineage").get)
@@ -115,7 +113,7 @@ class JobSpec extends SparkSpec {
   }
 
   test("dedup job: observe-collected candidate telemetry lands in the metrics table") {
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val store = new SnapshotStore(base)
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     val res = graft.jobs.DedupJob.run(spark, docs, store)
@@ -154,7 +152,7 @@ class JobSpec extends SparkSpec {
   test("dedup job: no RDD of the LSH chain stays persisted after the run") {
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val res = graft.jobs.DedupJob.run(spark, docs, new SnapshotStore(tmpDir().toString))
+    val res = graft.jobs.DedupJob.run(spark, docs, new SnapshotStore(tmpDir("graft-job-").toString))
     assert(res.verifiedPairs > 0)
     // the chain's RDDs: created by this run, in Dedup.scala (their creation site)
     val held = spark.sparkContext.getPersistentRDDs
@@ -164,7 +162,7 @@ class JobSpec extends SparkSpec {
 
   test("delta dedup job: warm-start labeling equals the full-corpus keep list; resumable") {
     import org.apache.spark.sql.functions._
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val store = new SnapshotStore(base)
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     val isNew = col("doc_id") % 3 === 0
@@ -202,7 +200,7 @@ class JobSpec extends SparkSpec {
 
   test("delta dedup job: crash-retry (pairs committed, keep lost) still records metrics") {
     import org.apache.spark.sql.functions._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     val isNew = col("doc_id") % 3 === 0
     graft.jobs.DedupJob.run(spark, docs.filter(!isNew), store)
@@ -248,7 +246,7 @@ class JobSpec extends SparkSpec {
 
   test("monitor job: alerts + cusum alarms == direct operators; resumes on unchanged tier") {
     import org.apache.spark.sql.functions._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val dir = sf("sf0.001")
     // commit a 1m tier for the job to monitor
     val tier = graft.operators.Rollup
@@ -296,7 +294,7 @@ class JobSpec extends SparkSpec {
   }
 
   test("retention stage: survivors bit-exact, observed counters in metrics, resumable") {
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val dir = sf("sf0.001")
     val results = RollupJob.run(spark, dir, base, retentionHorizon = Some(300L))
     assert(results.contains("retention_1m"))
@@ -335,7 +333,7 @@ class JobSpec extends SparkSpec {
   }
 
   test("ladder retention stages: per-level survivors bit-exact vs the operator, resumable") {
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val dir = sf("sf0.001")
     // nonincreasing fine -> coarse: finer tiers keep less history
     val horizons = Seq(120L, 60L, 0L)
@@ -375,7 +373,7 @@ class JobSpec extends SparkSpec {
   test("curation job: funnel counters partition the corpus and match the labeled table") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val store = new SnapshotStore(base)
     // one unscannable doc (NULL text): it must be LABELED dropped-quality,
     // not silently lost by the signal stages' word explode
@@ -425,7 +423,7 @@ class JobSpec extends SparkSpec {
   test("sketch job: delta folds == full-corpus sketch; replayed delta resumes") {
     import graft.jobs.SketchJob
     import graft.operators.Sketches
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val pts = TokenTable.points(spark, sf("sf0.001"))
     val hist = pts.filter(org.apache.spark.sql.functions.expr("doc_id % 2 = 0"))
     val delta = pts.filter(org.apache.spark.sql.functions.expr("doc_id % 2 = 1"))
@@ -466,7 +464,7 @@ class JobSpec extends SparkSpec {
 
   test("metrics: every job writes rows in the one (stage, snapshot_id, metric, value) schema") {
     import org.apache.spark.sql.functions._
-    val base = tmpDir().toString
+    val base = tmpDir("graft-job-").toString
     val store = new SnapshotStore(base)
     val dir = sf("sf0.001")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -508,7 +506,7 @@ class JobSpec extends SparkSpec {
 
   test("snapshot lifecycle: time travel, zero-copy rollback, reachability-safe expiry") {
     import spark.implicits._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     def commitRows(n: Int, stage: String) =
       store.stage("t", stage, s"fp-$n")((1 to n).toDF("x")).snap
     val v1 = commitRows(10, "s1")
@@ -543,7 +541,7 @@ class JobSpec extends SparkSpec {
 
   test("curation job: a re-run on identical input resumes with the first run's snapshots and counters") {
     import org.apache.spark.sql.functions._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val docs = spark.read
       .parquet(s"${sf("sf0.001")}/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
@@ -564,7 +562,7 @@ class JobSpec extends SparkSpec {
 
   test("dedup job: a re-run on identical input resumes with the first run's snapshots and counters") {
     import org.apache.spark.sql.functions._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
     def versions = Seq("dedup_pairs", "dedup_keep", "metrics").map(store.snapshots(_).size)
     val r1 = graft.jobs.DedupJob.run(spark, docs, store)
@@ -585,7 +583,7 @@ class JobSpec extends SparkSpec {
 
   test("resumed monitor and delta dedup runs return the computing run's counters") {
     import org.apache.spark.sql.functions._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val dir = sf("sf0.001")
     val tier = Rollup.rollupFromPoints(TokenTable.points(spark, dir), Tier.OneMinute)
     store.stage("tier_1m", "rollup_1m", "test-tier")(tier)
@@ -613,7 +611,7 @@ class JobSpec extends SparkSpec {
 
   test("manifest: quotes in the store path and fingerprint round-trip; the stage resumes") {
     import spark.implicits._
-    val base = Files.createDirectories(tmpDir().resolve("store \"quoted\""))
+    val base = Files.createDirectories(tmpDir("graft-job-").resolve("store \"quoted\""))
     val store = new SnapshotStore(base.toString)
     val fp = "src=/data/\"sf\"\\x;col=\"v\""
     val first = store.stage("t", "stage \"s\"", fp)((1 to 5).toDF("x"))
@@ -627,7 +625,7 @@ class JobSpec extends SparkSpec {
 
   test("manifest schema: a read runs no job and matches inference; rollback keeps it; legacy infers") {
     import spark.implicits._
-    val store = new SnapshotStore(tmpDir().toString)
+    val store = new SnapshotStore(tmpDir("graft-job-").toString)
     val dir = sf("sf0.001")
     val tier = store.stage("tier", "rollup", "fp-tier")(
       Rollup.rollupFromPoints(TokenTable.points(spark, dir), Tier.OneMinute)).snap
@@ -641,7 +639,7 @@ class JobSpec extends SparkSpec {
     assert(back.schema == tier.schema && store.latest("tier").get.schema == tier.schema)
     // a manifest written before the schema field existed takes the schema
     // from its data's footer, on the driver: still no job
-    val legacy = tmpDir()
+    val legacy = tmpDir("graft-job-")
     val data = legacy.resolve("t").resolve("data").resolve("v1-7")
     (1 to 3).toDF("x").write.parquet(data.toString)
     Files.createDirectories(legacy.resolve("t").resolve("_snapshots"))
@@ -659,7 +657,7 @@ class JobSpec extends SparkSpec {
 
   test("crash between data write and manifest publish: the orphan stays invisible and unread") {
     import spark.implicits._
-    val base = tmpDir()
+    val base = tmpDir("graft-job-")
     val store = new SnapshotStore(base.toString)
     val v1 = store.stage("t", "s", "fp-1")((1 to 3).toDF("x")).snap
     // the crashed writer's leftovers for v2: its data directory and its

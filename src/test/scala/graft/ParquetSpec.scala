@@ -10,8 +10,6 @@ import org.apache.spark.sql.types.TimestampNTZType
  * Spark job. */
 class ParquetSpec extends SparkSpec {
 
-  private def tmpDir(): Path = Files.createTempDirectory("graft-parquet-")
-
   private val tables = Seq(
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings")
@@ -31,7 +29,7 @@ class ParquetSpec extends SparkSpec {
 
   test("input reader: a multi-part directory reads whole; _SUCCESS, .crc and hidden files are skipped") {
     import spark.implicits._
-    val dir = tmpDir().resolve("t")
+    val dir = tmpDir("graft-parquet-").resolve("t")
     (1 to 40).map(i => (i, s"v$i", i * 0.5)).toDF("k", "s", "x").repartition(3).write.parquet(dir.toString)
     val listed = Files.list(dir).toArray.map(_.asInstanceOf[Path].getFileName.toString)
     assert(listed.count(_.startsWith("part-")) == 3 && listed.contains("_SUCCESS") && listed.exists(_.endsWith(".crc")),
@@ -47,10 +45,10 @@ class ParquetSpec extends SparkSpec {
   }
 
   test("input reader: a missing path or a directory with no data file fails, naming the path") {
-    val missing = tmpDir().resolve("nope.parquet").toString
+    val missing = tmpDir("graft-parquet-").resolve("nope.parquet").toString
     val e1 = intercept[java.io.FileNotFoundException](Parquet.read(spark, missing))
     assert(e1.getMessage.contains(missing), e1.getMessage)
-    val empty = tmpDir().resolve("empty")
+    val empty = tmpDir("graft-parquet-").resolve("empty")
     Files.createDirectories(empty)
     Files.writeString(empty.resolve("_SUCCESS"), "")
     Files.writeString(empty.resolve(".part-0.parquet.crc"), "")

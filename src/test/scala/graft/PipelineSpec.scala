@@ -405,9 +405,9 @@ class PipelineSpec extends SparkSpec {
     (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
   }
 
-  test("connected components == naive union-find on generated graphs") {
-    // deterministic graph family: cliques, paths, stars, cross-links,
-    // duplicate and reversed edges, plus SplitMix64-pseudorandom graphs
+  /** Deterministic graph family: cliques, paths, stars, cross-links,
+   * duplicate and reversed edges, plus SplitMix64-pseudorandom graphs. */
+  private lazy val generatedGraphs: Seq[Seq[(Long, Long)]] = {
     val fixed = Seq(
       Seq((1L, 2L)),
       Seq((2L, 1L), (1L, 2L), (2L, 2L)), // dup + reversed + self-loop
@@ -425,7 +425,11 @@ class PipelineSpec extends SparkSpec {
         (a + 1, b + 1)
       }.filter { case (a, b) => a != b }
     }
-    for (edges <- fixed ++ random) {
+    fixed ++ random
+  }
+
+  test("connected components == naive union-find on generated graphs") {
+    for (edges <- generatedGraphs) {
       val expected = unionFind(edges)
       val (got, _) = ccOf(edges)
       assert(got == expected, s"edges=$edges")
@@ -480,6 +484,59 @@ class PipelineSpec extends SparkSpec {
     val (got, rounds) = ccOf(chain)
     assert(got == expected)
     assert(rounds >= 3, s"chain converged suspiciously fast ($rounds rounds)")
+  }
+
+  test("connected components: maxRounds is a hard limit, exact at the rounds a chain needs") {
+    val chain = (1L to 63L).map(i => (i, i + 1))
+    val (_, needed) = ccOf(chain)
+    import spark.implicits._
+    val pairs = chain.toDF("doc_a", "doc_b")
+    val err = intercept[IllegalArgumentException] {
+      graft.operators.ConnectedComponents.componentsWithRounds(pairs, "doc_a", "doc_b", needed - 1)
+    }
+    assert(err.getMessage.contains("did not converge within"), err.getMessage)
+    val (labels, rounds) =
+      graft.operators.ConnectedComponents.componentsWithRounds(pairs, "doc_a", "doc_b", needed)
+    assert(rounds == needed)
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == unionFind(chain))
+  }
+
+  test("differential: closure labels and rounds agree at 1 and 7 shuffle partitions and with AQE off") {
+    // a hot star rooted at the MAXIMUM id: every one of its leaves is
+    // re-pointed, and the root's key carries 100 000 rows through each walk
+    val root = 100001L
+    val hotStar = (1L until root).map(leaf => (root, leaf))
+    for (edges <- generatedGraphs :+ hotStar) {
+      val expected = unionFind(edges)
+      val (base, baseRounds) = ccOf(edges)
+      assert(base == expected, s"edges=${edges.take(20)}")
+      for (confs <- Seq(
+          Seq("spark.sql.shuffle.partitions" -> "1"),
+          Seq("spark.sql.shuffle.partitions" -> "7"),
+          Seq("spark.sql.adaptive.enabled" -> "false"))) {
+        val (got, rounds) = withConfs(confs: _*)(ccOf(edges))
+        assert(got == base && rounds == baseRounds, s"$confs edges=${edges.take(20)}")
+      }
+    }
+  }
+
+  test("merge-walk join == a reference left-outer join") {
+    // key 3 has many left rows; keys 5 and 11 have no right row; seven
+    // partitions over five keys leave some partitions empty on both sides
+    val part = new org.apache.spark.HashPartitioner(7)
+    val leftRows = (1 to 5000).map(i => 3L -> i) ++ Seq(1L -> -1, 5L -> -5, 11L -> -11, 1L -> -2)
+    val rightRows = Seq(1L -> "one", 3L -> "three", 8L -> "eight")
+    val sc = spark.sparkContext
+    val left = sc.parallelize(leftRows, 3).repartitionAndSortWithinPartitions(part)
+    val right = sc.parallelize(rightRows, 2).repartitionAndSortWithinPartitions(part)
+    assert(left.glom().collect().exists(_.isEmpty) && right.glom().collect().exists(_.isEmpty))
+    val got = graft.operators.ConnectedComponents
+      .mergeWalk(left, right)((k, v, w) => (k, v, w))
+      .collect()
+      .toSeq
+    val rightMap = rightRows.toMap
+    val want = leftRows.map { case (k, v) => (k, v, rightMap.get(k)) }
+    assert(got.sortBy(t => (t._1, t._2)) == want.sortBy(t => (t._1, t._2)))
   }
 
   test("keep-list: representatives are component minima; singletons keep themselves") {

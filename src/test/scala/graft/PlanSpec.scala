@@ -327,7 +327,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("source-partitioned tier table: filters become partition pruning at the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part-").toString
+    val tmp = tmpDir("graft-part-").toString
     Rollup
       .rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
       .write
@@ -353,7 +353,7 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed tier table reaggregates with ZERO exchanges (co-partitioned cascade)") {
     import graft.jobs.BucketedTiers
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed-").toString
+    val tmp = tmpDir("graft-bucketed-").toString
     val t1m = Rollup.rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
     spark.sql("DROP TABLE IF EXISTS tier_1m_bucketed")
     BucketedTiers.writeBucketed(t1m, "tier_1m_bucketed", s"$tmp/tier_1m", numBuckets = 4)
@@ -464,6 +464,19 @@ class PlanSpec extends SparkSpec {
     } finally sc.setJobDescription(null)
   }
 
+  test("each connected-components round after the first is one Spark job") {
+    import spark.implicits._
+    // a 64-node chain needs several rounds
+    val chain = (1L to 63L).map(i => (i, i + 1)).toDF("a", "b")
+    var rounds = -1
+    val jobs = jobsOf { rounds = graft.operators.ConnectedComponents.componentsWithRounds(chain, "a", "b")._2 }
+    assert(rounds >= 3, jobs)
+    val perRound = jobs.map(_.split(" at ConnectedComponents.scala:").head).groupBy(identity).map {
+      case (d, js) => d -> js.size
+    }
+    for (r <- 1 to rounds) assert(perRound.get(s"ConnectedComponents: round $r").contains(1), jobs)
+  }
+
   /** The catalogue queries whose DataFrame build runs Spark jobs on
    * purpose, with the job descriptions (prefixes) those jobs carry: the
    * connected-components closure (one description per round), the
@@ -512,7 +525,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.util.QueryExecutionListener
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-plan-maint-").toString
+    val base = tmpDir("graft-plan-maint-").toString
     val store = new graft.jobs.SnapshotStore(base)
     // every parquet write's final plan, by output path; the stream's
     // session is a clone of this one and copies the listener at start
@@ -645,7 +658,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("retention expiry pushes its horizon predicate into the tier scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ret-").toString
+    val dir = tmpDir("graft-ret-").toString
     Rollup
       .rollupFromPoints(TokenTable.points(spark, sf("sf0.001")), Tier.OneMinute)
       .write
@@ -661,8 +674,8 @@ class PlanSpec extends SparkSpec {
 
   test("safeExpire reads the fine tier once: one scan, no union, horizon pushed to coverage") {
     val pts = TokenTable.points(spark, sf("sf0.001"))
-    val fineDir = java.nio.file.Files.createTempDirectory("graft-ret-fine-").toString
-    val coarseDir = java.nio.file.Files.createTempDirectory("graft-ret-coarse-").toString
+    val fineDir = tmpDir("graft-ret-fine-").toString
+    val coarseDir = tmpDir("graft-ret-coarse-").toString
     Rollup.rollupFromPoints(pts, Tier.OneMinute).write.mode("overwrite").parquet(fineDir)
     Rollup.rollupFromPoints(pts, Tier.FiveMinutes).write.mode("overwrite").parquet(coarseDir)
     val df = graft.operators.Retention.safeExpire(

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, hash, lit, sum}
 import org.scalatest.BeforeAndAfterAll
@@ -9,6 +11,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A fresh temp directory named `<prefix><random>`, deleted with its
+   * contents when the suite ends. */
+  def tmpDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tmpDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tmpDirs.forEach { dir =>
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
 
   /** (row count, sum of row hashes over every column): equal for two
    * DataFrames holding the same rows in any order. */

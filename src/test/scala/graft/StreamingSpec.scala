@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-snap-").toString
+    val base = tmpDir("graft-stream-snap-").toString
     val store = new SnapshotStore(base)
     val in = MemoryStream[StreamingOps.Obs]
     val q = StreamingOps
@@ -178,7 +178,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-codec-").toString
+    val base = tmpDir("graft-stream-codec-").toString
     val store = new SnapshotStore(base)
     val in = MemoryStream[(Timestamp, String, Double)]
     // the composition under test: watermarked 1m tier agg -> append-mode
@@ -243,7 +243,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-merge-").toString
+    val base = tmpDir("graft-stream-merge-").toString
     val store = new SnapshotStore(base)
     val in = MemoryStream[(String, Int, Int)]
     val q = StreamingOps
@@ -306,7 +306,7 @@ class StreamingSpec extends SparkSpec {
     assert(store.snapshots("tier_1m").size == before, "no snapshot from refused batch")
     // a LEGACY batch-id-only fingerprint (pre-content-fingerprint commit)
     // is unverifiable: replaying against it must refuse, not re-merge
-    val base2 = java.nio.file.Files.createTempDirectory("graft-stream-legacy-").toString
+    val base2 = tmpDir("graft-stream-legacy-").toString
     val store2 = new SnapshotStore(base2)
     store2.stage("tier_1m", "stream_legacytest", "batch=0")(
       Seq(("a", 0, 1)).toDF("source", "pos", "tok"))
@@ -335,7 +335,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-maint-").toString
+    val base = tmpDir("graft-stream-maint-").toString
     val store = new SnapshotStore(base)
     val in = MemoryStream[(String, Int, Int)]
     val q = StreamingOps
@@ -435,7 +435,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-late-").toString
+    val base = tmpDir("graft-stream-late-").toString
     val store = new SnapshotStore(base)
     val in = MemoryStream[(String, Int, Int)]
     val q = StreamingOps
@@ -474,7 +474,7 @@ class StreamingSpec extends SparkSpec {
   test("tier maintenance sink: a crash between the two commits replays into the fine table only") {
     import spark.implicits._
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-crash-").toString
+    val base = tmpDir("graft-stream-crash-").toString
     val store = new SnapshotStore(base)
     val src = s"$base/points"
     val schema = Seq(("", 0, 0)).toDF("source", "pos", "tok").schema
@@ -523,7 +523,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.jobs.SnapshotStore
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-rewind-").toString
+    val base = tmpDir("graft-stream-rewind-").toString
     val store = new SnapshotStore(base)
     def start(in: MemoryStream[(String, Int, Int)], ckpt: String) = StreamingOps
       .tierMaintenanceSink(
@@ -565,7 +565,7 @@ class StreamingSpec extends SparkSpec {
     import graft.jobs.SnapshotStore
     import graft.operators.{Retention, Rollup}
     import org.apache.spark.sql.DataFrame
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-fold-").toString
+    val base = tmpDir("graft-stream-fold-").toString
     val store = new SnapshotStore(base)
     val (mergeIn, maintIn) = (MemoryStream[(String, Int, Int)], MemoryStream[(String, Int, Int)])
     val merge = StreamingOps
@@ -915,8 +915,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val store = new graft.jobs.SnapshotStore(
-      java.nio.file.Files.createTempDirectory("graft-sketch-sink-").toString)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sketch-ckpt-").toString
+      tmpDir("graft-sketch-sink-").toString)
+    val ckpt = tmpDir("graft-sketch-ckpt-").toString
     val in = MemoryStream[(String, Int, Int)]
     val q = StreamingOps
       .sketchMaintenanceSink(
