@@ -43,20 +43,20 @@ object RollupJob {
 
   /** Run the full ladder; returns per-stage results.
    *
-   * `retentionHorizon` enforces retention on the 1m tier only;
-   * `ladderHorizons` (one horizonStart per non-coarsest tier, fine ->
-   * coarse) runs a compact-then-expire stage per ladder level instead —
-   * the TimescaleDB per-tier-policy shape. Mutually exclusive. */
+   * `ladderHorizons` (a fine -> coarse prefix of the non-coarsest tiers,
+   * one horizonStart each) adds a compact-then-expire stage per ladder
+   * level it names — the TimescaleDB per-tier-policy shape; `Seq(h)`
+   * enforces retention on the 1m tier only. */
   def run(
       spark: SparkSession,
       sfDir: String,
       storeDir: String,
       salt: Int = 0,
-      retentionHorizon: Option[Long] = None,
       ladderHorizons: Seq[Long] = Seq.empty): Map[String, StageResult] = {
     require(
-      retentionHorizon.isEmpty || ladderHorizons.isEmpty,
-      "RollupJob: pass retentionHorizon (1m only) OR ladderHorizons (per tier), not both")
+      ladderHorizons.size < Tier.ladder.size,
+      s"RollupJob: a ${Tier.ladder.size}-tier ladder takes at most ${Tier.ladder.size - 1} " +
+        s"horizons (fine -> coarse), got ${ladderHorizons.size}")
     val store = new SnapshotStore(storeDir)
     var results = Map.empty[String, StageResult]
 
@@ -117,62 +117,36 @@ object RollupJob {
       }
       tierSnaps += (tierName -> prev)
     }
-    val t5m = tierSnaps(Tier.FiveMinutes)
 
-    // ONE compact-then-expire stage for a (fine, coarse) tier pair: the
-    // survivor snapshot replaces the fine tier for readers;
-    // uncovered-but-expired rows are retained and COUNTED (riding the
-    // stage's own write via observe — zero extra scans), so a cascade
-    // that has not caught up is visible in the metrics table, not
-    // silently truncated. Shared by Stage 5 and every Stage 5' level —
-    // table/stage/metric names must stay identical between the two paths.
-    def retentionStage(
-        fineName: String,
-        fine: StageResult,
-        coarse: StageResult,
-        coarseName: String,
-        horizon: Long): Unit = {
-      stage(
-        s"tier_${fineName}_retained",
-        s"retention_$fineName",
-        s"fine=${fine.snap.uid};coarse=${coarse.snap.uid};h=$horizon",
-        counters = Seq(
-          coalesce(sum(expr("CAST(retained_uncovered AS LONG)")), lit(0L))
-            .as("retained_uncovered_rows"),
-          count(lit(1)).as("survivor_rows"))) {
-        graft.operators.Retention.safeExpire(
-          store.read(spark, fine.snap),
-          store.read(spark, coarse.snap),
-          coarseName,
-          horizon)
-      }
-      ()
-    }
-
-    // Stage 5 (opt-in): retention enforcement on the 1m tier against the
-    // committed 5m snapshot — the single-level case of the helper.
-    retentionHorizon.foreach { horizon =>
-      retentionStage(Tier.OneMinute, t1m, t5m, Tier.FiveMinutes, horizon)
-    }
-
-    // Stage 5' (opt-in alternative): retention across the FULL ladder —
-    // one compact-then-expire stage PER (fine, coarse) tier pair with its
-    // own horizon, each verdict against the coarse tier's COMMITTED
-    // snapshot (Retention.ladderExpire's coverage-as-given semantics: a
-    // fine window expires once the coarser aggregate EXISTS; whether the
-    // coarse tier later expires it is the next level's question). The
-    // coarsest tier is pure history and gets no stage.
-    if (ladderHorizons.nonEmpty) {
-      val tiers = Tier.ladder.map(_._1)
-      require(
-        ladderHorizons.size == tiers.size - 1,
-        s"RollupJob: ${tiers.size}-tier ladder needs ${tiers.size - 1} horizons, " +
-          s"got ${ladderHorizons.size}")
-      tiers.init.zip(tiers.tail).zip(ladderHorizons).foreach {
-        case ((fineName, coarseName), horizon) =>
-          retentionStage(
-            fineName, tierSnaps(fineName), tierSnaps(coarseName), coarseName, horizon)
-      }
+    // Stage 5 (opt-in): retention down the ladder — one compact-then-expire
+    // stage PER (fine, coarse) tier pair that `ladderHorizons` reaches, each
+    // verdict against the coarse tier's COMMITTED snapshot
+    // (Retention.ladderExpire's coverage-as-given semantics: a fine window
+    // expires once the coarser aggregate EXISTS; whether the coarse tier
+    // later expires it is the next level's question). The survivor
+    // snapshot replaces the fine tier for readers; uncovered-but-expired
+    // rows are retained and COUNTED (riding the stage's own write via
+    // observe — zero extra scans), so a cascade that has not caught up is
+    // visible in the metrics table, not silently truncated. The coarsest
+    // tier is pure history and gets no stage.
+    val tiers = Tier.ladder.map(_._1)
+    tiers.zip(tiers.tail).zip(ladderHorizons).foreach {
+      case ((fineName, coarseName), horizon) =>
+        val (fine, coarse) = (tierSnaps(fineName), tierSnaps(coarseName))
+        stage(
+          s"tier_${fineName}_retained",
+          s"retention_$fineName",
+          s"fine=${fine.snap.uid};coarse=${coarse.snap.uid};h=$horizon",
+          counters = Seq(
+            coalesce(sum(expr("CAST(retained_uncovered AS LONG)")), lit(0L))
+              .as("retained_uncovered_rows"),
+            count(lit(1)).as("survivor_rows"))) {
+          graft.operators.Retention.safeExpire(
+            store.read(spark, fine.snap),
+            store.read(spark, coarse.snap),
+            coarseName,
+            horizon)
+        }
     }
     results
   }

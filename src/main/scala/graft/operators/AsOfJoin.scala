@@ -91,7 +91,7 @@ object AsOfJoin {
     // even when null — filling payload columns independently would pair an
     // old value with a fresh row's timestamp AND diverge from DuckDB's
     // ASOF JOIN (the oracle's semantics). Per-column LOCF imputation is a
-    // different operator (GapFill.locf).
+    // different operator (GapFill.gapFill's `fillCols`).
     // Struct field order = tie order: tieBreak columns first (caller-chosen
     // rule), remaining payload after (struct comparison falls through in
     // field order). Extraction below is by NAME, so reordering is safe.

@@ -1,67 +1,77 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /**
- * Gap-fill: dense time spine + last-observation-carried-forward.
+ * Gap-fill: every `width`-spaced window of each series, with the missing
+ * windows imputed (LOCF, constant default, causal mean, linear).
  *
  * Semantic ancestors in the reference:
- *  - dense spine: `AddTimeIndex` (0..T-1 index per series,
+ *  - dense time index: `AddTimeIndex` (0..T-1 index per series,
  *    uni2ts/src/uni2ts/transform/feature.py:74-104) + `EvalPad` NaN-padding
  *    (transform/pad.py:83-104);
  *  - LOCF: `LastValueImputation` forward-fill
  *    (transform/imputation.py:43-62).
  *
- * Scale design: the spine is GENERATED per key with `sequence()` + `explode`
- * from that key's own [min, max] window range — no cross join, no driver
- * loop; per-key spine length is bounded by retention-span/width. LOCF is a
- * running `last(_, ignoreNulls)` window, which is one shuffle on the series
- * key followed by an in-partition sort — fill never crosses a series
- * boundary because the window is partitioned by the key (the reference's
- * series-boundary rule, transform/precondition.py:269-274).
+ * Gap rule, the same as the streaming twin
+ * [[graft.streaming.StreamingOps.gapFillStream]]: per key, in window
+ * order, an observation at window `w` emits itself plus the windows
+ * `w + k*width` (k >= 1) that come before the key's next observation. On
+ * a key whose windows lie on one `width` grid that is the dense grid from
+ * the key's first to its last window. An off-grid observation is kept and
+ * steps from its own window (0, 90, 180 at width 60 give 0, 60, 90, 150,
+ * 180). A null key is one more series.
+ *
+ * Scale design: one keyed pass ([[densify]]). One shuffle on the key and
+ * one in-partition sort by window feed a single `Window` operator, whose
+ * frames give each observation its key's next window and the strategy's
+ * carried values; a `Generate` over `sequence()` then emits the missing
+ * windows, which inherit those values. No spine, no join and no second
+ * read of the input; a key's output is bounded by its span / width.
+ * Fill never crosses a series boundary because the window is partitioned
+ * by the key (the reference's series-boundary rule,
+ * transform/precondition.py:269-274).
  */
 object GapFill {
 
-  /** Dense spine: one row per (keys, window) for every `width`-spaced window
-   * between each key's min and max observed window value (inclusive). */
-  def denseSpine(
+  private def byWindow(keys: Seq[String], windowCol: String): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy(col(windowCol))
+
+  /** From the key's first observation to the current one. */
+  private def upTo(keys: Seq[String], windowCol: String): WindowSpec =
+    byWindow(keys, windowCol).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The gap rule in one keyed pass. Output: keys, the window as BIGINT,
+   * the other input columns in input order, then the `carry` columns that
+   * are not input columns. A `carry` column is evaluated per observation
+   * over the key's window order and inherited by the windows that
+   * observation generates (one named like an input column replaces it);
+   * every other input column is null on a generated window. */
+  private def densify(
       obs: DataFrame,
       keys: Seq[String],
       windowCol: String,
-      width: Long): DataFrame = {
-    val keyCols = keys.map(col)
+      width: Long,
+      carry: Seq[(String, Column)]): DataFrame = {
+    val w = col(windowCol).cast("long")
+    // the last window to emit is one before the key's next observation;
+    // greatest skips the null `lead` of the key's last observation
+    val beforeNext = greatest(w, lead(w, 1).over(byWindow(keys, windowCol)) - 1L)
+    val carried = carry.toMap
+    val others = obs.columns.toSeq.filterNot((keys :+ windowCol).contains)
+    val extra = carry.map(_._1).filterNot(others.contains)
     obs
-      .groupBy(keyCols: _*)
-      .agg(min(col(windowCol)).as("_w0"), max(col(windowCol)).as("_w1"))
       .select(
-        keyCols :+ explode(sequence(col("_w0"), col("_w1"), lit(width)))
-          .as(windowCol): _*)
+        keys.map(col) ++ others.map(c => carried.getOrElse(c, col(c)).as(c)) ++
+          extra.map(c => carried(c).as(c)) :+ sequence(w, beforeNext, lit(width)).as("_ws"): _*)
+      .select(col("*"), posexplode(col("_ws")).as(Seq("_k", "_w")))
+      .select(
+        keys.map(col) ++ Seq(col("_w").as(windowCol)) ++
+          others.map(c => if (carried.contains(c)) col(c) else when(col("_k") === 0, col(c)).as(c)) ++
+          extra.map(col): _*)
   }
-
-  /** Forward-fill every column in `fillCols` with the last non-null value
-   * within the key partition ordered by `windowCol`. */
-  def locf(
-      df: DataFrame,
-      keys: Seq[String],
-      windowCol: String,
-      fillCols: Seq[String]): DataFrame = {
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(windowCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    fillCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
-  }
-
-  /** Constant-value imputation (DummyValueImputation,
-   * transform/imputation.py:32-40): every missing slot takes a fixed
-   * value. Row-local coalesce — the cheapest strategy, and the reference's
-   * training default (value 0.0). */
-  def fillConstant(df: DataFrame, fillCols: Seq[String], value: Column): DataFrame =
-    fillCols.foldLeft(df)((d, c) => d.withColumn(c, coalesce(col(c), value)))
 
   /** Causal-mean gap-fill — the third imputation strategy of the reference
    * (CausalMeanImputation, transform/imputation.py:65-108): a missing
@@ -84,15 +94,10 @@ object GapFill {
       width: Long,
       sumCol: String,
       cntCol: String): DataFrame = {
-    val spine = denseSpine(obs, keys, windowCol, width)
-    val joined = spine.join(obs, keys :+ windowCol, "left")
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(windowCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    joined
-      .withColumn("_cum_sum", sum(col(sumCol)).over(w)) // nulls skipped: observed only
-      .withColumn("_cum_cnt", sum(col(cntCol)).over(w))
+    val running = upTo(keys, windowCol)
+    densify(obs, keys, windowCol, width, Seq(
+      "_cum_sum" -> sum(col(sumCol)).over(running), // nulls skipped: observed only
+      "_cum_cnt" -> sum(col(cntCol)).over(running)))
       .withColumn(
         "avg_filled",
         when(
@@ -117,42 +122,28 @@ object GapFill {
    * milli value hash-matches cross-engine even when the segment
    * decreases (negative numerator). Observed windows carry value*1000.
    *
-   * Scale shape: identical to [[gapFill]] — per-key spine generation
-   * (no cross join), one shuffle on the series key, and the four
-   * neighbor lookups are two frames (unbounded-preceding last +
-   * unbounded-following first) over that one in-partition sort. */
+   * The four neighbor lookups are frames of the one keyed pass: the last
+   * non-null value/window up to the observation and the first after it,
+   * which are also the neighbors of every window it generates. */
   def linearInterpolate(
       obs: DataFrame,
       keys: Seq[String],
       windowCol: String,
       width: Long,
       valueCol: String): DataFrame = {
-    val spine = denseSpine(obs, keys, windowCol, width)
-    val joined = spine.join(obs, keys :+ windowCol, "left")
-    val back = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(windowCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(windowCol))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    joined
-      .withColumn("_pv", last(col(valueCol), ignoreNulls = true).over(back))
-      .withColumn(
-        "_pw",
-        last(when(col(valueCol).isNotNull, col(windowCol)), ignoreNulls = true)
-          .over(back))
-      .withColumn("_nv", first(col(valueCol), ignoreNulls = true).over(fwd))
-      .withColumn(
-        "_nw",
-        first(when(col(valueCol).isNotNull, col(windowCol)), ignoreNulls = true)
-          .over(fwd))
+    val back = upTo(keys, windowCol)
+    val fwd = byWindow(keys, windowCol).rowsBetween(1, Window.unboundedFollowing)
+    val seenAt = when(col(valueCol).isNotNull, col(windowCol).cast("long"))
+    densify(obs, keys, windowCol, width, Seq(
+      "_pv" -> last(col(valueCol), ignoreNulls = true).over(back),
+      "_pw" -> last(seenAt, ignoreNulls = true).over(back),
+      "_nv" -> first(col(valueCol), ignoreNulls = true).over(fwd),
+      "_nw" -> first(seenAt, ignoreNulls = true).over(fwd)))
       .withColumn(
         "_numer",
         (col("_nv").cast("long") - col("_pv").cast("long")) * 1000L *
-          (col(windowCol).cast("long") - col("_pw").cast("long")))
-      .withColumn("_denom", col("_nw").cast("long") - col("_pw").cast("long"))
+          (col(windowCol) - col("_pw")))
+      .withColumn("_denom", col("_nw") - col("_pw"))
       .withColumn(
         "interp_milli",
         when(col(valueCol).isNotNull, col(valueCol).cast("long") * 1000L)
@@ -163,9 +154,11 @@ object GapFill {
       .drop("_pv", "_pw", "_nv", "_nw", "_numer", "_denom")
   }
 
-  /** Full gap-fill: spine ⟕ observations, then LOCF on `fillCols` and
-   * constant defaults on `zeroCols` (the reference's DummyValueImputation
-   * default for leading gaps, transform/imputation.py:32-40). */
+  /** Full gap-fill: LOCF (a running `last(_, ignoreNulls)`) on `fillCols`,
+   * then constant defaults on `zeroCols` — the reference's
+   * DummyValueImputation (transform/imputation.py:32-40): with no
+   * `fillCols` every missing slot takes the fixed value, and a LOCF column
+   * also named in `zeroCols` takes its default where nothing precedes. */
   def gapFill(
       obs: DataFrame,
       keys: Seq[String],
@@ -173,9 +166,9 @@ object GapFill {
       width: Long,
       fillCols: Seq[String],
       zeroCols: Map[String, Column] = Map.empty): DataFrame = {
-    val spine = denseSpine(obs, keys, windowCol, width)
-    val joined = spine.join(obs, keys :+ windowCol, "left")
-    val filled = locf(joined, keys, windowCol, fillCols)
+    val running = upTo(keys, windowCol)
+    val filled = densify(obs, keys, windowCol, width,
+      fillCols.map(c => c -> last(col(c), ignoreNulls = true).over(running)))
     zeroCols.foldLeft(filled) { case (d, (c, default)) =>
       d.withColumn(c, coalesce(col(c), default))
     }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Tier
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -51,7 +51,19 @@ object Retention {
       fine: DataFrame,
       coarse: DataFrame,
       coarseTier: String,
-      horizonStart: Long): DataFrame = {
+      horizonStart: Long): DataFrame =
+    safeExpire(fine, coarse, coarseTier, lit(horizonStart))
+
+  /** [[safeExpire]] with the horizon as a BIGINT column. A literal reaches
+   * the coverage scan as a pushed filter. A
+   * [[graft.functions.expressions.BigintParam]] (the maintenance sink's
+   * per-batch horizon) is read by the generated code instead of compiled
+   * into it, so batches that differ only in the horizon share classes. */
+  def safeExpire(
+      fine: DataFrame,
+      coarse: DataFrame,
+      coarseTier: String,
+      horizonStart: Column): DataFrame = {
     val w = Tier.widths(coarseTier)
     // coverage key set, pruned to the expired range before the join
     val cov = coarse

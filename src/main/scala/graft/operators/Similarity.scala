@@ -113,14 +113,15 @@ object Similarity {
    * (corpus x centroids) pair rows: max over struct(c_cos, -c_id) is a
    * partial-aggregable groupBy — map-side combine collapses to one row per
    * vector before the exchange (a row_number window here would shuffle
-   * N x C rows: quadratic). Input columns: (_vid, v, n2). */
+   * N x C rows: quadratic). Ties break to the smallest centroid id.
+   * Input columns: (_vid, v, n2); output: (_vid, c_id, c_cos). */
   private def assignToCentroids(corpus: DataFrame, centroids: DataFrame): DataFrame =
     corpus
       .join(broadcast(centroids))
       .select(col("_vid"), cCos.as("c_cos"), (-col("c_id")).as("_nc"))
       .groupBy(col("_vid"))
       .agg(max(struct(col("c_cos"), col("_nc"))).as("_b"))
-      .select(col("_vid"), (-col("_b._nc")).as("c_id"))
+      .select(col("_vid"), (-col("_b._nc")).as("c_id"), col("_b.c_cos").as("c_cos"))
 
   /** One Lloyd (k-means) iteration over cosine assignments: each centroid
    * moves to the exact fixed-point mean of its assigned vectors — sums run
@@ -164,16 +165,10 @@ object Similarity {
     val centroids = base
       .filter(col(idCol) % centroidRate === 0)
       .select(col(idCol).as("c_id"), col(vecCol).as("cv"), col("norm2").as("cn"))
-    base
-      .select(col(idCol).as("_vid"), col(vecCol).as("v"), col("norm2").as("n2"))
-      .join(broadcast(centroids))
-      .select(col("_vid"), cCos.as("c_cos"), (-col("c_id")).as("_nc"))
-      .groupBy(col("_vid"))
-      .agg(max(struct(col("c_cos"), col("_nc"))).as("_b"))
-      .select(
-        col("_vid").as("vec_id"),
-        (-col("_b._nc")).as("c_id"),
-        col("_b.c_cos").as("c_cos"))
+    assignToCentroids(
+      base.select(col(idCol).as("_vid"), col(vecCol).as("v"), col("norm2").as("n2")),
+      centroids)
+      .select(col("_vid").as("vec_id"), col("c_id"), col("c_cos"))
   }
 
   /** The ANN hyperplane ASSIGNMENT stage as a first-class oracle-checkable
@@ -252,26 +247,24 @@ object Similarity {
       k)
   }
 
-  /** Multiprobe ANN: like [[annTopK]] but each query additionally probes
-   * every bucket at Hamming distance 1 from its own signature (nPlanes+1
-   * probes total — the standard multiprobe-LSH recall upgrade over
-   * single-probe, which has a recall ceiling from boundary vectors).
-   * Cost scales only with the QUERY side (queries x (nPlanes+1) probe
-   * rows); the corpus is bucketed once. Probe buckets are distinct, so a
-   * (query, neighbor) pair matches at most one probe — no dedup shuffle. */
-  def annTopKMultiprobe(
+  /** ANN via LSH: exact cosine ranking restricted to the candidates in
+   * the query's probe buckets, its own signature XOR each of `probes`.
+   * Probe masks are distinct, so a (query, neighbor) pair matches at most
+   * one probe — no dedup shuffle. Cost scales only with the QUERY side
+   * (queries x probes rows); the corpus is bucketed once. */
+  private def probedTopK(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       queryPred: org.apache.spark.sql.Column,
       nPlanes: Int,
-      k: Int): DataFrame = {
+      k: Int,
+      probes: Seq[Long]): DataFrame = {
     val b = lshBucketed(emb, idCol, vecCol, nPlanes)
-    val probes = array((lit(0L) +: (0 until nPlanes).map(i => lit(1L << i))): _*)
     val queries = b
       .filter(queryPred)
       .select(col(idCol).as("query_id"), col(vecCol).as("va"), col("norm2").as("na"), col("lsh_bucket"))
-      .withColumn("_probe", explode(probes))
+      .withColumn("_probe", explode(array(probes.map(lit): _*)))
       .withColumn("probe_bucket", col("lsh_bucket").bitwiseXOR(col("_probe")))
     val corpus = b
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("vb"), col("norm2").as("nb"), col("lsh_bucket").as("_cb"))
@@ -282,26 +275,28 @@ object Similarity {
       k)
   }
 
-  /** ANN via LSH: exact cosine ranking restricted to same-bucket candidates.
-   * Returns (query_id, neighbor_id, cos, rank<=k). Recall vs the exact
-   * baseline is asserted in PipelineSpec. */
+  /** Multiprobe ANN: like [[annTopK]] but each query additionally probes
+   * every bucket at Hamming distance 1 from its own signature (nPlanes+1
+   * probes total — the standard multiprobe-LSH recall upgrade over
+   * single-probe, which has a recall ceiling from boundary vectors). */
+  def annTopKMultiprobe(
+      emb: DataFrame,
+      idCol: String,
+      vecCol: String,
+      queryPred: org.apache.spark.sql.Column,
+      nPlanes: Int,
+      k: Int): DataFrame =
+    probedTopK(emb, idCol, vecCol, queryPred, nPlanes, k, 0L +: (0 until nPlanes).map(1L << _))
+
+  /** ANN via LSH: exact cosine ranking restricted to same-bucket candidates
+   * (the single probe 0). Returns (query_id, neighbor_id, cos, rank<=k).
+   * Recall vs the exact baseline is asserted in PipelineSpec. */
   def annTopK(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       queryPred: org.apache.spark.sql.Column,
       nPlanes: Int,
-      k: Int): DataFrame = {
-    val b = lshBucketed(emb, idCol, vecCol, nPlanes)
-    val queries = b
-      .filter(queryPred)
-      .select(col(idCol).as("query_id"), col(vecCol).as("va"), col("norm2").as("na"), col("lsh_bucket"))
-    val corpus = b
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("vb"), col("norm2").as("nb"), col("lsh_bucket").as("_cb"))
-    rankTopKByCos(
-      queries.join(
-        corpus,
-        col("lsh_bucket") === col("_cb") && col("query_id") =!= col("neighbor_id")),
-      k)
-  }
+      k: Int): DataFrame =
+    probedTopK(emb, idCol, vecCol, queryPred, nPlanes, k, Seq(0L))
 }

@@ -63,14 +63,13 @@ object StatQueries {
       val obs = Rollup
         .rollupFromPoints(sparse, Tier.OneMinute)
         .select("source", "bucket", "window_start", "sum_tok", "cnt_tok")
-      val spine =
-        GapFill.denseSpine(obs, Seq("source", "bucket"), "window_start", 60L)
-      GapFill
-        .fillConstant(
-          spine.join(obs, Seq("source", "bucket", "window_start"), "left"),
-          Seq("sum_tok", "cnt_tok"),
-          lit(0L))
-        .select("source", "bucket", "window_start", "sum_tok", "cnt_tok")
+      GapFill.gapFill(
+        obs,
+        keys = Seq("source", "bucket"),
+        windowCol = "window_start",
+        width = 60L,
+        fillCols = Nil,
+        zeroCols = Map("sum_tok" -> lit(0L), "cnt_tok" -> lit(0L)))
     }),
 
     // Median + argmax per group (reference: median-of-samples point

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Time-series operators over the events table and the token tiers:
- * gap-fill (dense spine + LOCF), as-of join, sessionization, running
+ * gap-fill (dense window grid + LOCF), as-of join, sessionization, running
  * windows, per-group top-k.
  *
  * Float discipline: every cross-row sum goes through DECIMAL(18,2) (values
@@ -21,7 +21,7 @@ object TimeSeriesQueries {
 
   val q: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Gap-fill on real timestamps: hourly continuous aggregate per user,
-    // dense hour spine from each user's first to last hour, LOCF on the
+    // every hour from each user's first to last hour, LOCF on the
     // summed value, zero-fill on the count.
     "q_gapfill_hourly" -> ((s, dir) => {
       val obs = events(s, dir)
@@ -42,7 +42,7 @@ object TimeSeriesQueries {
 
     // Gap-fill on the 1m token tier itself: every 4th window is dropped at
     // the source level (mask depends only on position, so the gap survives
-    // the cross-doc aggregation), then the dense spine restores it with
+    // the cross-doc aggregation), then gap-fill restores it with
     // LOCF-filled avg and zero count (north-rule gap-fill semantics).
     "q_gapfill_tier" -> ((s, dir) => {
       val sparse = TokenTable

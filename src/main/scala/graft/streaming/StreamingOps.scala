@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.core.{Hash, Tier}
 import graft.functions.GraftFunctions.call
+import graft.functions.expressions.BigintParam
 import graft.jobs.{SnapshotInfo, SnapshotStore, StageRun}
 import graft.operators.{Retention, Rollup}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
@@ -342,7 +343,10 @@ object StreamingOps {
           fold(coarsePrev.map(readTier), c.tier)
         }.snap
         val horizon = probe.getLong(1) - (c.keepWindows - 1) * Tier.widths(tier)
-        Retention.safeExpire(fold(prevTier, tier), store.read(spark, covered), c.tier, horizon)
+        // a parameter, not a literal: the horizon moves every batch, and
+        // batches that differ only in it reuse their compiled classes
+        Retention.safeExpire(
+          fold(prevTier, tier), store.read(spark, covered), c.tier, BigintParam.column(horizon))
       }
     } finally persisted.foreach(_.unpersist())
   }

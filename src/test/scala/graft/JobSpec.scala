@@ -296,7 +296,7 @@ class JobSpec extends SparkSpec {
   test("retention stage: survivors bit-exact, observed counters in metrics, resumable") {
     val base = tmpDir("graft-job-").toString
     val dir = sf("sf0.001")
-    val results = RollupJob.run(spark, dir, base, retentionHorizon = Some(300L))
+    val results = RollupJob.run(spark, dir, base, ladderHorizons = Seq(300L))
     assert(results.contains("retention_1m"))
     val store = new SnapshotStore(base)
 
@@ -325,10 +325,10 @@ class JobSpec extends SparkSpec {
     assert(m("retained_uncovered_rows") == 0.0)
 
     // the stage is snapshot-fingerprinted like every other: re-run resumes
-    val r2 = RollupJob.run(spark, dir, base, retentionHorizon = Some(300L))
+    val r2 = RollupJob.run(spark, dir, base, ladderHorizons = Seq(300L))
     assert(r2("retention_1m").resumed)
     // a different horizon is a different fingerprint: recomputes
-    val r3 = RollupJob.run(spark, dir, base, retentionHorizon = Some(240L))
+    val r3 = RollupJob.run(spark, dir, base, ladderHorizons = Seq(240L))
     assert(!r3("retention_1m").resumed)
   }
 
@@ -368,6 +368,14 @@ class JobSpec extends SparkSpec {
     // all three stages are snapshot-fingerprinted: a re-run resumes each
     val r2 = RollupJob.run(spark, dir, base, ladderHorizons = horizons)
     assert(stages.forall(r2(_).resumed))
+  }
+
+  test("ladder horizons: more than one per non-coarsest tier fails before any stage runs") {
+    val base = tmpDir("graft-job-").toString
+    val e = intercept[IllegalArgumentException](
+      RollupJob.run(spark, sf("sf0.001"), base, ladderHorizons = Seq(120L, 60L, 0L, 0L)))
+    assert(e.getMessage.contains("at most 3 horizons"), e.getMessage)
+    assert(new SnapshotStore(base).latest("raw").isEmpty)
   }
 
   test("curation job: funnel counters partition the corpus and match the labeled table") {
@@ -468,7 +476,7 @@ class JobSpec extends SparkSpec {
     val store = new SnapshotStore(base)
     val dir = sf("sf0.001")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    RollupJob.run(spark, dir, base, retentionHorizon = Some(300L))
+    RollupJob.run(spark, dir, base, ladderHorizons = Seq(300L))
     graft.jobs.DedupJob.run(spark, docs, store)
     graft.jobs.CurationJob.run(
       spark, docs.select("doc_id", "text", "source"), docs.filter(col("doc_id") % 53 === 0), store)

@@ -800,4 +800,16 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("partial_max"), plan)
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, s"expected 1 hash exchange:\n$plan")
   }
+
+  test("gap-fill queries read their input table once and join nothing") {
+    for (name <- Seq(
+        "q_gapfill_tier", "q_gapfill_causal", "q_gapfill_const", "q_gapfill_linear", "q_gapfill_hourly")) {
+      val plan = planOf(SparkEntry.queries(name)(spark, sf("sf0.001")))
+      // one keyed pass over the observations: no spine built from a second
+      // read of the input and joined back to it
+      assert(plan.linesIterator.count(_.contains("FileScan")) == 1, s"$name:\n$plan")
+      for (join <- Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"))
+        assert(!plan.contains(join), s"$name:\n$plan")
+    }
+  }
 }

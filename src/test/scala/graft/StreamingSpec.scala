@@ -471,6 +471,41 @@ class StreamingSpec extends SparkSpec {
     assertMaintainedTiers(store, (b1 ++ b2 ++ b3).toDF("source", "pos", "tok"), horizon = 3600L)
   }
 
+  test("tier maintenance sink: steady batches that only move the horizon compile no new classes") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.jobs.SnapshotStore
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val base = tmpDir("graft-stream-codegen-").toString
+    val store = new SnapshotStore(base)
+    val in = MemoryStream[(String, Int, Int)]
+    val q = StreamingOps
+      .tierMaintenanceSink(
+        in.toDF().toDF("source", "pos", "tok"),
+        store,
+        "tier_1m_live",
+        "tier_1h_cov",
+        "codegentest",
+        s"$base/_ckpt",
+        graft.core.Tier.OneMinute,
+        graft.core.Tier.OneHour,
+        keepWindows = 2)
+      .start()
+    // batch k holds windows 120k and 120k + 60 of the same two sources, so
+    // every batch from the second on has the same plan shape and a horizon
+    // (frontier 120k + 60, minus one window) 120 further on
+    val batches = (0 until 5).map(k => Seq(("a", 120 * k, 5 + k), ("b", 120 * k + 61, 7), ("a", 120 * k + 62, 1)))
+    val compiles = batches.map { b =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      in.addData(b: _*); q.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    q.stop()
+    // batches 0-2 compile the first and the steady classes; 3 and 4 reuse them
+    assert(compiles.drop(3).forall(_ == 0), s"classes compiled per batch: $compiles")
+    assertMaintainedTiers(store, batches.flatten.toDF("source", "pos", "tok"), horizon = 480L)
+  }
+
   test("tier maintenance sink: a crash between the two commits replays into the fine table only") {
     import spark.implicits._
     import graft.jobs.SnapshotStore
@@ -1016,6 +1051,24 @@ class StreamingSpec extends SparkSpec {
     streamsLikeTwin[Obs]("prop_gapfill", rnd =>
       windowSeries(rnd, 60L)((k, w, v) => Obs(k, w, v / 4.0))(_ => rnd.nextInt(100).toLong))(
       StreamingOps.gapFillStream(_, 60L)) { rows =>
+      graft.operators.GapFill
+        .gapFill(rows.toDF().withColumn("seen", lit(true)), Seq("key"), "window_start", 60L, Seq("value"))
+        .select(col("key"), col("window_start"), col("value"), col("seen").isNull.as("is_gap"))
+    }
+  }
+
+  test("property: streaming gap-fill == batch GapFill.gapFill (LOCF) over off-grid windows") {
+    import spark.implicits._
+    import StreamingOps.Obs
+    // windowSeries with a step offset: each step is 1 to 4 widths plus 0 to
+    // 59, so a key's windows leave the grid of its first window
+    def offGrid(rnd: Random): Seq[Obs] =
+      Seq("a", "b", "c").flatMap { k =>
+        Iterator.iterate(rnd.nextInt(3) * 60L)(_ + (1 + rnd.nextInt(4)) * 60L + rnd.nextInt(60))
+          .take(6 + rnd.nextInt(7)).toList
+          .map(w => Obs(k, w, rnd.nextInt(100) / 4.0))
+      }.sortBy(o => (o.window_start, o.key))
+    streamsLikeTwin[Obs]("prop_gapfill_offgrid", offGrid)(StreamingOps.gapFillStream(_, 60L)) { rows =>
       graft.operators.GapFill
         .gapFill(rows.toDF().withColumn("seen", lit(true)), Seq("key"), "window_start", 60L, Seq("value"))
         .select(col("key"), col("window_start"), col("value"), col("seen").isNull.as("is_gap"))

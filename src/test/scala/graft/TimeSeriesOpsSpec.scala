@@ -38,6 +38,82 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(got.toSeq == want.toSeq)
   }
 
+  private def rowsOf(d: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    d.collect().map(_.toSeq).toSet
+
+  /** Every gap-fill strategy over `obs` (k, w, v, c) at width 60: LOCF
+   * with zero-filled `c`, causal mean, linear. */
+  private def strategies(obs: org.apache.spark.sql.DataFrame) = (
+    rowsOf(GapFill.gapFill(obs, Seq("k"), "w", 60L, Seq("v"), Map("c" -> lit(0L)))),
+    rowsOf(GapFill.gapFillCausalMean(obs, Seq("k"), "w", 60L, "v", "c")),
+    rowsOf(GapFill.linearInterpolate(obs, Seq("k"), "w", 60L, "v")))
+
+  test("gapFill, causal mean, linear: a null key is one more series") {
+    val obs = df(
+      Seq(Row(null, 0L, 10L, 2L), Row(null, 180L, 40L, 1L), Row("a", 60L, 7L, 1L)),
+      "k STRING, w BIGINT, v BIGINT, c BIGINT")
+    val (locf, causal, linear) = strategies(obs)
+    assert(locf == Set(
+      Seq(null, 0L, 10L, 2L),
+      Seq(null, 60L, 10L, 0L),
+      Seq(null, 120L, 10L, 0L),
+      Seq(null, 180L, 40L, 1L),
+      Seq("a", 60L, 7L, 1L)))
+    assert(causal == Set(
+      Seq(null, 0L, 10L, 2L, 5.0),
+      Seq(null, 60L, null, 0L, 5.0), // observed mean so far: 10 / 2
+      Seq(null, 120L, null, 0L, 5.0),
+      Seq(null, 180L, 40L, 1L, 40.0),
+      Seq("a", 60L, 7L, 1L, 7.0)))
+    assert(linear == Set(
+      Seq(null, 0L, 10L, 2L, 10000L, false),
+      Seq(null, 60L, null, null, 20000L, true), // 10 -> 40 over 180
+      Seq(null, 120L, null, null, 30000L, true),
+      Seq(null, 180L, 40L, 1L, 40000L, false),
+      Seq("a", 60L, 7L, 1L, 7000L, false)))
+  }
+
+  test("gapFill, causal mean, linear: an off-grid observation is kept and steps from its own window") {
+    // 90 is off the 60-wide grid of 0 and 180: the stream's rule emits
+    // 60 after 0 and 150 after 90 (StreamingOps.gapFillStream)
+    val obs = df(
+      Seq(Row("a", 0L, 10L, 1L), Row("a", 90L, 20L, 1L), Row("a", 180L, 50L, 1L)),
+      "k STRING, w BIGINT, v BIGINT, c BIGINT")
+    val (locf, causal, linear) = strategies(obs)
+    assert(locf == Set(
+      Seq("a", 0L, 10L, 1L),
+      Seq("a", 60L, 10L, 0L),
+      Seq("a", 90L, 20L, 1L),
+      Seq("a", 150L, 20L, 0L),
+      Seq("a", 180L, 50L, 1L)))
+    assert(causal == Set(
+      Seq("a", 0L, 10L, 1L, 10.0),
+      Seq("a", 60L, null, 0L, 10.0),
+      Seq("a", 90L, 20L, 1L, 20.0),
+      Seq("a", 150L, null, 0L, 15.0), // (10 + 20) / 2
+      Seq("a", 180L, 50L, 1L, 50.0)))
+    assert(linear == Set(
+      Seq("a", 0L, 10L, 1L, 10000L, false),
+      Seq("a", 60L, null, null, 16666L, true), // 10000 + 10000 * 60 DIV 90
+      Seq("a", 90L, 20L, 1L, 20000L, false),
+      Seq("a", 150L, null, null, 40000L, true), // 20000 + 30000 * 60 DIV 90
+      Seq("a", 180L, 50L, 1L, 50000L, false)))
+  }
+
+  test("differential: the gap-fill queries agree at 1 and 7 shuffle partitions and with AQE off") {
+    for (name <- Seq(
+        "q_gapfill_tier", "q_gapfill_causal", "q_gapfill_const", "q_gapfill_linear", "q_gapfill_hourly")) {
+      def run() = countHash(SparkEntry.queries(name)(spark, sf("sf0.001")))
+      val base = run()
+      assert(base._1 > 0, name)
+      for (confs <- Seq(
+          Seq("spark.sql.shuffle.partitions" -> "1"),
+          Seq("spark.sql.shuffle.partitions" -> "7"),
+          Seq("spark.sql.adaptive.enabled" -> "false")))
+        assert(withConfs(confs: _*)(run()) == base, s"$name $confs")
+    }
+  }
+
   test("asOf: at-or-before semantics, exact-tie takes right row, no match -> null") {
     val left = df(
       Seq(Row(1L, "u", 100L), Row(2L, "u", 50L), Row(3L, "v", 10L)),
