@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Eager, Hash}
+import graft.core.{Deferred, Hash}
 import org.apache.spark.{Aggregator, HashPartitioner, Partitioner, ShuffleDependency}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.DataFrame
@@ -32,8 +32,10 @@ import scala.reflect.ClassTag
  *    (u > v), not on DataFrames: a round is a handful of RDD shuffles
  *    and ONE Spark job, with no Catalyst plan, no AQE re-planning (which
  *    submits one job per shuffle stage) and no generated classes per
- *    round. The pair frame is read once (round 0) and the labels re-enter
- *    SQL once, as a two-column LONG frame;
+ *    round. The rounds are one [[graft.core.Deferred]] plan step: they
+ *    run when the query executes, over the pair subplan's rows (read once,
+ *    round 0), and hand the labels on as the step's two LONG columns, so
+ *    building the labels frame runs no job;
  *  - each star op is a min aggregate (map-side combined, like
  *    `reduceByKey`) PLUS a merge-walk join ([[mergeWalk]]) of the edges
  *    against that one-row-per-key side over co-partitioned, key-sorted
@@ -100,21 +102,16 @@ object ConnectedComponents {
       case d => shuffleIds(d.rdd)
     }.distinct
 
-  /** As [[components]], also returning the number of full
-   * large-star+small-star rounds executed before the edge set reached its
-   * fixed point (exposed for the convergence tests). */
+  /** As [[components]], also returning a reader of the number of full
+   * large-star+small-star rounds the last execution of the labels ran
+   * before the edge set reached its fixed point (exposed for the
+   * convergence tests; -1 before the labels have executed). */
   private[graft] def componentsWithRounds(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxRounds: Int = 25): (DataFrame, Int) = {
-    // the closure runs its actions while the caller builds a DataFrame;
-    // each round's jobs run under a job description naming the round
-    // (round 0: the canonical edge set)
-    val spark = pairs.sparkSession
-    def inRound[T](round: Int)(body: => T): T =
-      Eager.named(spark, s"ConnectedComponents: round $round")(body)
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      maxRounds: Int = 25): (DataFrame, () => Int) = {
+    val part = new HashPartitioner(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     // checkpoints `e` and fingerprints it in ONE job: the job computes
     // every partition, so the checkpoint finds all its blocks written
     def checkpointed(e: RDD[(Long, Long)]): (RDD[(Long, Long)], (Long, Long)) = {
@@ -128,68 +125,73 @@ object ConnectedComponents {
         .fold((0L, 0L)) { case ((n1, s1), (n2, s2)) => (n1 + n2, s1 + s2) }
       (e, fp)
     }
-
-    // canonical directed edges: (u, v) with u > v, no self-loops, distinct
-    var (edges, fp) = inRound(0) {
-      val rows = pairs.select(col(aCol).cast("long"), col(bCol).cast("long")).queryExecution.toRdd
-      checkpointed(
+    var executedRounds = -1
+    val labels = Deferred(pairs.select(col(aCol).cast("long"), col(bCol).cast("long")), LabelSchema) { (rows, describe) =>
+      // each round's job runs under a description naming the round
+      // (round 0: the canonical edge set)
+      describe("ConnectedComponents: round 0")
+      // canonical directed edges: (u, v) with u > v, no self-loops, distinct
+      var (edges, fp) = checkpointed(
         rows
           .flatMap { r =>
             if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None
             else Some((math.max(r.getLong(0), r.getLong(1)), math.min(r.getLong(0), r.getLong(1))))
           }
           .distinct(part.numPartitions))
-    }
-    var rounds = 0
-    var converged = fp._1 == 0L // no edges at all -> nothing to close
-    while (!converged && rounds < maxRounds) {
-      // LARGE-STAR: every neighbour u > v of node v is re-pointed at
-      // m(v) = min(v, v's smaller neighbours); v > m keeps (u, m)
-      // canonical. Each edge yields exactly ONE output row, so no
-      // intermediate distinct is needed (duplicate rows from sibling
-      // edges are collapsed by the round's distinct below).
-      val mins = minByKey(edges, part)
-      val large = mergeWalk(edges.map(_.swap).repartitionAndSortWithinPartitions(part), mins) {
-        (v, u, m) => (u, m.getOrElse(v))
+      var rounds = 0
+      var converged = fp._1 == 0L // no edges at all -> nothing to close
+      while (!converged && rounds < maxRounds) {
+        // LARGE-STAR: every neighbour u > v of node v is re-pointed at
+        // m(v) = min(v, v's smaller neighbours); v > m keeps (u, m)
+        // canonical. Each edge yields exactly ONE output row, so no
+        // intermediate distinct is needed (duplicate rows from sibling
+        // edges are collapsed by the round's distinct below).
+        val mins = minByKey(edges, part)
+        val large = mergeWalk(edges.map(_.swap).repartitionAndSortWithinPartitions(part), mins) {
+          (v, u, m) => (u, m.getOrElse(v))
+        }
+        // SMALL-STAR over the (larger -> smaller) edges: all of u's smaller
+        // neighbours, and u itself, re-point at m(u) = min(N-(u)); m < every
+        // emitted source so canonical form is again preserved. Every key of
+        // `large` has its row in `smallMins`.
+        val smallMins = minByKey(large, part)
+        val star = mergeWalk(large.repartitionAndSortWithinPartitions(part), smallMins) { (_, v, m) => (v, m.get) }
+          .filter { case (v, m) => v != m }
+          .union(smallMins)
+          .distinct(part.numPartitions)
+        val shuffles = shuffleIds(star)
+        describe(s"ConnectedComponents: round ${rounds + 1}")
+        val (next, nfp) = checkpointed(star)
+        // `next` is now fully materialized in its own blocks — the previous
+        // round's checkpoint and this round's shuffle files can be freed
+        // immediately (local checkpoints truncate lineage, so the next round
+        // never re-reads them; left to the ContextCleaner, every round's
+        // shuffle files would stay on disk until a driver GC). The FINAL
+        // edge set is deliberately NOT freed: the returned labels read it
+        // lazily; its blocks are reclaimed by the ContextCleaner once the
+        // executed query is dropped.
+        edges.unpersist(blocking = false)
+        shuffles.foreach(SparkInternals.removeShuffle(rows.sparkContext, _))
+        converged = nfp == fp
+        fp = nfp
+        edges = next
+        rounds += 1
       }
-      // SMALL-STAR over the (larger -> smaller) edges: all of u's smaller
-      // neighbours, and u itself, re-point at m(u) = min(N-(u)); m < every
-      // emitted source so canonical form is again preserved. Every key of
-      // `large` has its row in `smallMins`.
-      val smallMins = minByKey(large, part)
-      val star = mergeWalk(large.repartitionAndSortWithinPartitions(part), smallMins) { (_, v, m) => (v, m.get) }
-        .filter { case (v, m) => v != m }
-        .union(smallMins)
-        .distinct(part.numPartitions)
-      val shuffles = shuffleIds(star)
-      val (next, nfp) = inRound(rounds + 1)(checkpointed(star))
-      // `next` is now fully materialized in its own blocks — the previous
-      // round's checkpoint and this round's shuffle files can be freed
-      // immediately (local checkpoints truncate lineage, so the next round
-      // never re-reads them; left to the ContextCleaner, every round's
-      // shuffle files would stay on disk until a driver GC). The FINAL
-      // edge set is deliberately NOT freed: the returned labels read it
-      // lazily; its blocks are reclaimed by the ContextCleaner once the
-      // caller drops the labels DataFrame.
-      edges.unpersist(blocking = false)
-      shuffles.foreach(SparkInternals.removeShuffle(spark, _))
-      converged = nfp == fp
-      fp = nfp
-      edges = next
-      rounds += 1
+      require(
+        converged,
+        s"connected components did not converge within $maxRounds rounds — " +
+          "raise maxRounds (components this deep indicate a pathological pair graph)")
+      executedRounds = rounds
+      // fixed point = disjoint stars rooted at each component minimum:
+      // every non-root u carries exactly one edge (u, root)
+      edges
+        .union(edges.map(_._2).distinct(part.numPartitions).map(v => (v, v)))
+        .map { case (node, rep) => InternalRow(node, rep) }
     }
-    require(
-      converged,
-      s"connected components did not converge within $maxRounds rounds — " +
-        "raise maxRounds (components this deep indicate a pathological pair graph)")
-    // fixed point = disjoint stars rooted at each component minimum:
-    // every non-root u carries exactly one edge (u, root)
-    val labels = edges
-      .union(edges.map(_._2).distinct(part.numPartitions).map(v => (v, v)))
-      .map { case (node, rep) => InternalRow(node, rep) }
-    val schema = StructType(Seq("node", "rep").map(StructField(_, LongType, nullable = false)))
-    (SparkInternals.dataFrame(spark, labels, schema), rounds)
+    (labels, () => executedRounds)
   }
+
+  private val LabelSchema = StructType(Seq("node", "rep").map(StructField(_, LongType, nullable = false)))
 
   /** The keep/drop verdict per document: every doc with its cluster
    * representative (`rep_id` = component minimum; singletons represent

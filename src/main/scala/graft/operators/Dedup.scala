@@ -164,9 +164,9 @@ object Dedup {
    * cannot deduplicate — without materializing it the whole corpus is
    * re-read and re-shingled per consumer (measured 3 scans end-to-end).
    * The set table (~50 longs/doc, far smaller than the corpus text) is a
-   * lazy `localCheckpoint` — the q_dedup_incremental and closure-round
-   * idiom: the first action materializes it and both consumers read its
-   * blocks, with no entry in the session's CacheManager.
+   * lazy `localCheckpoint`: the first action materializes it and both
+   * consumers read its blocks, with no entry in the session's
+   * CacheManager.
    *
    * With `newIds` (a one-column id frame) only the candidates touching
    * one of those ids go on to verification — the delta chain

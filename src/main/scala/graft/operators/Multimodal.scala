@@ -182,16 +182,6 @@ object Multimodal {
       require(data != null, "no data chunk")
       data
     }
-
-    /** Sample view of [[decodePcm16Bytes]] (tests / downstream DSP). */
-    def decodePcm16(wav: Array[Byte]): Array[Short] = {
-      val bytes = decodePcm16Bytes(wav)
-      val out = new Array[Short](bytes.length / 2)
-      val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var i = 0
-      while (i < out.length) { out(i) = bb.getShort(); i += 1 }
-      out
-    }
   }
 
   /** Real RIFF/AVI codec for the video modality — uncompressed 8-bit DIB

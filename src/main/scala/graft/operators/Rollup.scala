@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Eager, Tier}
+import graft.core.{Deferred, Tier}
 import graft.functions.GraftFunctions.call
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -139,36 +139,27 @@ object Rollup {
    * keeps `tierTable`'s column order.
    *
    * Loud ceiling: a delta touching more than `maxAffectedWindows`
-   * windows (one eager `count()` of the delta aggregate, before the fold
-   * is built, under a named job description) is a bulk backfill — run a
-   * full re-rollup; the call fails with that diagnosis.
-   *
-   * `latePoints` must be DETERMINISTIC (a table read or pure generator —
-   * every caller in this engine): the guard's count and the fold each
-   * derive the delta from it, and a nondeterministic input would let them
-   * disagree (the guard would pass a delta the fold never sees). A plan
-   * carrying any nondeterministic expression is rejected up front;
-   * `localCheckpoint()` such points first (a plain persist keeps the
-   * nondeterministic expression in the analyzed plan). */
+   * windows is a bulk backfill — run a full re-rollup; the query fails
+   * with that diagnosis at the consumer's action, before anything is
+   * folded or written. The guard is a [[graft.core.Deferred]] step: when
+   * the query executes, one job (under a named job description)
+   * materializes the delta aggregate and counts its windows, and the fold
+   * reads those materialized rows, so the delta is derived once and any
+   * `latePoints` plan, nondeterministic ones included, is folded exactly
+   * as counted. */
   def mergeLate(
       tierTable: DataFrame,
       latePoints: DataFrame,
       tier: String,
       maxAffectedWindows: Long = DefaultMaxAffectedWindows): DataFrame = {
-    val nonDet = latePoints.queryExecution.analyzed.collectFirst {
-      case p if p.expressions.exists(_.exists(e => !e.deterministic)) => p.nodeName
-    }
-    require(
-      nonDet.isEmpty,
-      s"mergeLate: latePoints plan contains a nondeterministic expression " +
-        s"(in ${nonDet.getOrElse("?")}); the delta is derived more than once " +
-        "and could disagree with itself. localCheckpoint() the late points first.")
     val delta = pointState(latePoints, tier)
-    val windows = Eager.named(latePoints.sparkSession, "Rollup.mergeLate: guard count of the late delta's windows") {
-      delta.count()
+    val guarded = Deferred(delta, delta.schema) { (state, describe) =>
+      describe("Rollup.mergeLate: guard count of the late delta's windows")
+      val rows = state.map(_.copy()).localCheckpoint()
+      guardDelta(rows.count(), maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
+      rows
     }
-    guardDelta(windows, maxAffectedWindows, "mergeLate", ", or raise maxAffectedWindows")
-    remerge(tierTable, delta, tier)
+    remerge(tierTable, guarded, tier)
   }
 
   /** Absolute loud ceiling on a reconciliation delta: the re-merge

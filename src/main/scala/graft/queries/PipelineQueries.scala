@@ -59,22 +59,13 @@ object PipelineQueries {
     // recursive closure — incremental must equal never-having-batched.
     "q_dedup_incremental" -> ((s, dir) => {
       import graft.operators.ConnectedComponents
-      // the pair set feeds both batches: materialize it ONCE (narrow id
-      // pairs only) instead of re-running the shingle self-join per
-      // filtered branch. localCheckpoint blocks are reclaimed by the
-      // ContextCleaner when the result DataFrame is dropped — the same
-      // lifetime contract as the closure's own per-round checkpoints
-      // (ConnectedComponents.scala), so no persist leak outlives the
-      // query. Production incremental maintenance reads COMMITTED pair
-      // snapshots (DedupJob), where the delta arrives pre-materialized.
-      // lazy: the first action fills the blocks, then both branches read
-      // them. AQE still runs the shingle self-join's shuffle stages at the
-      // checkpoint call, so they run under a job description of their own.
-      val pairs = graft.core.Eager.named(s, "q_dedup_incremental: checkpoint the pair set") {
-        Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", "source", 3, 0.5)
-          .select(col("doc_a"), col("doc_b"))
-          .localCheckpoint(eager = false)
-      }
+      // the pair set feeds both batches: both closures read one pair
+      // subplan, and AQE's exchange reuse runs the shingle self-join's
+      // shuffles once for both. Production incremental maintenance reads
+      // COMMITTED pair snapshots (DedupJob), where the delta arrives
+      // pre-materialized.
+      val pairs = Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", "source", 3, 0.5)
+        .select(col("doc_a"), col("doc_b"))
       val isNew = (col("doc_a") + col("doc_b")) % 3 === 0
       val prev = ConnectedComponents.components(pairs.filter(!isNew), "doc_a", "doc_b")
       val labels =

@@ -6,11 +6,11 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.rdd.RDD
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.StructType
  * Expression conversions behind `GraftFunctions.call`, the nullable
  * schema a file-source read returns (`SnapshotStore`'s manifests), the
  * session's Hadoop conf and parquet footer conversion behind
- * `graft.sources.Parquet`, and, for the connected-components rounds, the
- * eager removal of a round's shuffles and the frame over an RDD of
- * internal rows that carries the labels back into SQL. */
+ * `graft.sources.Parquet`, the frame over a logical plan that
+ * `graft.core.Deferred` builds, and, for the connected-components rounds,
+ * the eager removal of a round's shuffles. */
 object SparkInternals {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   // converted now, not deferred to analysis: builders fold literal arguments
@@ -32,13 +32,11 @@ object SparkInternals {
   /** Deletes shuffle `shuffleId`'s files and map outputs now, returning
    * when they are gone (the ContextCleaner does it only once a driver GC
    * collects the shuffle's dependency). */
-  def removeShuffle(spark: SparkSession, shuffleId: Int): Unit =
-    spark.sparkContext.cleaner.foreach(_.doCleanupShuffle(shuffleId, blocking = true))
+  def removeShuffle(sc: SparkContext, shuffleId: Int): Unit =
+    sc.cleaner.foreach(_.doCleanupShuffle(shuffleId, blocking = true))
 
-  /** A DataFrame over `rows`, read as `schema` with no per-row
-   * conversion (`createDataFrame` would encode each external `Row`). */
-  def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    classic(spark).internalCreateDataFrame(rows, schema)
+  /** The DataFrame of `plan`. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = Dataset.ofRows(classic(spark), plan)
 
   /** The Hadoop conf a read in this session sees (session `spark.hadoop.*`
    * settings included). */

@@ -276,12 +276,18 @@ class PipelineSpec extends SparkSpec {
 
   test("WAV PCM decode: bit-exact round-trip; chunk walk; non-PCM rejected") {
     import graft.operators.Multimodal.Wav
+    // the data chunk's bytes: the samples, 16-bit little-endian
+    def pcm(samples: Array[Short]): Seq[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(2 * samples.length).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      samples.foreach(bb.putShort)
+      bb.array().toSeq
+    }
     // round-trip over deterministic and extreme sample patterns
     for (samples <- Seq(
         Wav.samplesOf(7L),
         Array[Short](0, 1, -1, Short.MaxValue, Short.MinValue, 12345),
         Array.empty[Short])) {
-      assert(Wav.decodePcm16(Wav.encodePcm16(samples)).toSeq == samples.toSeq)
+      assert(Wav.decodePcm16Bytes(Wav.encodePcm16(samples)).toSeq == pcm(samples))
     }
     // decode must WALK chunks, not skip a fixed 44 bytes: splice a LIST
     // chunk (odd-sized, so word padding is exercised) between fmt and data
@@ -292,7 +298,7 @@ class PipelineSpec extends SparkSpec {
     // patch the RIFF size field (bytes 4-7, little-endian)
     val riffSize = spliced.length - 8
     for (k <- 0 until 4) spliced(4 + k) = ((riffSize >> (8 * k)) & 0xff).toByte
-    assert(Wav.decodePcm16(spliced).toSeq == Wav.samplesOf(3L).toSeq)
+    assert(Wav.decodePcm16Bytes(spliced).toSeq == pcm(Wav.samplesOf(3L)))
     // a float-format (fmt=3) container must be rejected, not mis-read
     val bad = plain.clone()
     bad(20) = 3 // audioFormat lives at offset 20 in the canonical layout
@@ -402,7 +408,7 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     val (labels, rounds) = graft.operators.ConnectedComponents
       .componentsWithRounds(edges.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
-    (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds())
   }
 
   /** Deterministic graph family: cliques, paths, stars, cross-links,
@@ -491,14 +497,14 @@ class PipelineSpec extends SparkSpec {
     val (_, needed) = ccOf(chain)
     import spark.implicits._
     val pairs = chain.toDF("doc_a", "doc_b")
-    val err = intercept[IllegalArgumentException] {
-      graft.operators.ConnectedComponents.componentsWithRounds(pairs, "doc_a", "doc_b", needed - 1)
-    }
+    // the rounds run when the labels execute, so the limit fails the action
+    val (short, _) = graft.operators.ConnectedComponents.componentsWithRounds(pairs, "doc_a", "doc_b", needed - 1)
+    val err = causeOf[IllegalArgumentException](intercept[Exception](short.collect()))
     assert(err.getMessage.contains("did not converge within"), err.getMessage)
     val (labels, rounds) =
       graft.operators.ConnectedComponents.componentsWithRounds(pairs, "doc_a", "doc_b", needed)
-    assert(rounds == needed)
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == unionFind(chain))
+    assert(rounds() == needed)
   }
 
   test("differential: closure labels and rounds agree at 1 and 7 shuffle partitions and with AQE off") {

@@ -437,7 +437,7 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("Union"), plan)
   }
 
-  test("eager build-time actions run under named job descriptions; the caller's is restored") {
+  test("deferred steps run under named job descriptions; the caller's is restored") {
     import spark.implicits._
     val sc = spark.sparkContext
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
@@ -446,18 +446,25 @@ class PlanSpec extends SparkSpec {
     val base = Rollup.rollupFromPoints(pts.filter(!lateCond), Tier.OneMinute)
     sc.setJobDescription("caller")
     try {
-      // "<step> at <File>.scala:<line>": the step, and where it was submitted
+      // "<step> at <File>.scala:<line>": the step, and where it was built
       def step(description: String, file: String): String = {
         val at = s" at $file.scala:"
         assert(description.contains(at) && description.split(at).last.forall(_.isDigit), description)
         description.split(at).head
       }
+      // the action's own jobs keep the caller's description; the rest are
+      // the steps' jobs
+      def stepJobs(action: => Unit): Seq[String] = jobsOf(action).filterNot(_ == "caller")
       var rounds = -1
-      val cc = jobsOf { rounds = graft.operators.ConnectedComponents.componentsWithRounds(pairs, "a", "b")._2 }
+      val cc = stepJobs {
+        val (labels, executed) = graft.operators.ConnectedComponents.componentsWithRounds(pairs, "a", "b")
+        labels.collect()
+        rounds = executed()
+      }
       assert(rounds >= 1, cc)
       assert(cc.map(step(_, "ConnectedComponents")).distinct == (0 to rounds).map(r => s"ConnectedComponents: round $r"))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
-      val late = jobsOf(Rollup.mergeLate(base, pts.filter(lateCond), Tier.OneMinute))
+      val late = stepJobs(Rollup.mergeLate(base, pts.filter(lateCond), Tier.OneMinute).collect())
       assert(late.nonEmpty, late)
       assert(late.map(step(_, "Rollup")).distinct == Seq("Rollup.mergeLate: guard count of the late delta's windows"))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
@@ -469,7 +476,11 @@ class PlanSpec extends SparkSpec {
     // a 64-node chain needs several rounds
     val chain = (1L to 63L).map(i => (i, i + 1)).toDF("a", "b")
     var rounds = -1
-    val jobs = jobsOf { rounds = graft.operators.ConnectedComponents.componentsWithRounds(chain, "a", "b")._2 }
+    val jobs = jobsOf {
+      val (labels, executed) = graft.operators.ConnectedComponents.componentsWithRounds(chain, "a", "b")
+      labels.collect()
+      rounds = executed()
+    }
     assert(rounds >= 3, jobs)
     val perRound = jobs.map(_.split(" at ConnectedComponents.scala:").head).groupBy(identity).map {
       case (d, js) => d -> js.size
@@ -478,17 +489,10 @@ class PlanSpec extends SparkSpec {
   }
 
   /** The catalogue queries whose DataFrame build runs Spark jobs on
-   * purpose, with the job descriptions (prefixes) those jobs carry: the
-   * connected-components closure (one description per round), the
-   * shuffle stages of q_dedup_incremental's pair-set checkpoint,
-   * mergeLate's guard count and q_csv_lsf's CSV export. */
-  private val eagerBuilds: Map[String, Seq[String]] = Map(
-    "q_dedup_clusters" -> Seq("ConnectedComponents: "),
-    "q_dedup_incremental" -> Seq("ConnectedComponents: ", "q_dedup_incremental: checkpoint the pair set"),
-    "q_embed_keep" -> Seq("ConnectedComponents: "),
-    "q_rollup_late" -> Seq("Rollup.mergeLate: "),
-    "q_rollup_late_1h" -> Seq("Rollup.mergeLate: "),
-    "q_csv_lsf" -> Seq("LsfCsv.writeCsv: "))
+   * purpose, with the job descriptions (prefixes) those jobs carry:
+   * q_csv_lsf's CSV export, which must exist before the declared-schema
+   * CSV read lists its files. */
+  private val eagerBuilds: Map[String, Seq[String]] = Map("q_csv_lsf" -> Seq("LsfCsv.writeCsv: "))
 
   test("building a catalogue query runs no Spark job, except the named eager builds") {
     val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -498,9 +502,19 @@ class PlanSpec extends SparkSpec {
     val eager = built.filter(_._2.nonEmpty).toMap
     assert(eager.keySet == eagerBuilds.keySet,
       eager.toSeq.sortBy(_._1).map { case (q, d) => s"$q: ${d.size} jobs ${d.distinct.mkString("; ")}" }.mkString("\n"))
-    assert(eagerBuilds.size == 6)
+    assert(eagerBuilds.size == 1)
     for ((name, descriptions) <- eager)
       assert(descriptions.forall(d => eagerBuilds(name).exists(d.startsWith)), s"$name: $descriptions")
+  }
+
+  test("explain() of a built catalogue query runs no Spark job") {
+    val built = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) => name -> fn(spark, sf("sf0.001")) }
+    assert(built.size == 139)
+    val quiet = new java.io.PrintStream(java.io.OutputStream.nullOutputStream())
+    val explained = built.map { case (name, df) =>
+      name -> jobsOf(Console.withOut(quiet) { df.explain(); df.explain("formatted") })
+    }
+    assert(explained.forall(_._2.isEmpty), explained.filter(_._2.nonEmpty).mkString("\n"))
   }
 
   test("q_csv_lsf exports its CSV under the SparkContext's temp dir, not a per-process /tmp dir") {

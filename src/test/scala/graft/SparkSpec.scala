@@ -74,6 +74,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The first `E` in `e`'s cause chain (`e` itself when none is): a
+   * failure raised while a query executes may reach the action wrapped. */
+  def causeOf[E <: Throwable: scala.reflect.ClassTag](e: Throwable): E =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst { case c: E => c }.getOrElse(throw e)
+
   /** How many Spark jobs `body` runs (see [[jobsOf]]). */
   def jobsDuring(body: => Unit): Int = jobsOf(body).size
 
